@@ -28,7 +28,9 @@ object Tables {
     * which deliberately ignores nullability — parquet footers don't
     * carry the registry's NOT NULL, that's the write path's job — and
     * undeclared extra columns pass (additive evolution is not drift).
-    * Cost: a driver-side footer comparison, no job. */
+    * Cost: the comparison itself is driver-side, but the `df.schema` it
+    * reads comes from `spark.read.parquet`'s schema inference, which runs
+    * one Spark job per load. */
   private def validateAgainstRegistry(name: String, df: DataFrame): DataFrame = {
     SchemaRegistry.default.get(name).foreach { spec =>
       val actual = df.schema.map(f => f.name -> f.dataType).toMap

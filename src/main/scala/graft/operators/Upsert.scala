@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -91,9 +92,16 @@ object Upsert {
     *
     * The touched-partition list is a driver-side read of partition VALUES
     * (bounded by the number of touched partitions — partition metadata,
-    * same category as a cursor read, never row data). The SOURCE is staged
-    * once (graft.core.Staging) so the touched-partition read and the merge
-    * don't each re-execute the upstream extract.
+    * same category as a cursor read, never row data). Each value is named
+    * the way Spark's file writer names its directory, and only the touched
+    * directories that already exist (one existence probe each) are listed
+    * and read: no step lists or scans the whole snapshot, so a merge's
+    * cost follows the delta, not the table. The target's partition column
+    * takes the source's type instead of one inferred from the touched
+    * directory names, which could differ from the whole table's (a subset
+    * of numeric-looking string values would read back as integers). The
+    * SOURCE is staged once (graft.core.Staging) so the touched-partition
+    * read and the merge don't each re-execute the upstream extract.
     *
     * Crash consistency: the merged slice is written to a private staging
     * directory beside the snapshot (which also keeps the write plan's
@@ -107,10 +115,11 @@ object Upsert {
     * swapped. (The reference gets the same guarantee from BigQuery's
     * transactional MERGE, config/bigquery/bigquery.py:259-262.)
     *
-    * @return the post-merge snapshot re-read from `snapshotPath`
+    * Returns nothing: a caller that wants the merged snapshot reads
+    * `snapshotPath` itself (a whole-table listing this method never pays).
     */
   def partitioned(snapshotPath: String, source: DataFrame, pk: Seq[String],
-                  cursor: String, partCol: String, partOf: Column): DataFrame = {
+                  cursor: String, partCol: String, partOf: Column): Unit = {
     val spark = source.sparkSession
     val checkedPart = when(partOf.isNull,
       raise_error(lit(s"NULL partition value ('$partCol') in partitioned upsert source")))
@@ -145,10 +154,19 @@ object Upsert {
       // replay — reclaim them before writing a fresh one
       fs.globStatus(new Path(s"${snapshotPath}__stage-*"))
         .foreach(st => fs.delete(st.getPath, true))
-      val touched = src.select(partCol).distinct().collect()
-        .map(_.get(0)).toIndexedSeq
-      val target = spark.read.parquet(snapshotPath)
-        .filter(col(partCol).isin(touched: _*))
+      // touched partitions as the writer names their dirs (the cast to
+      // string is the writer's own); new partitions have no dir yet
+      val existing = src.select(col(partCol).cast("string")).distinct().collect()
+        .map(r => s"$snapshotPath/${getPartitionPathString(partCol, r.getString(0))}")
+        .filter(d => fs.exists(new Path(d))).toIndexedSeq
+      // the target's columns come from one partition dir's footer (the
+      // root only if no partition dir exists, which fails as before)
+      val probe = existing.headOption.getOrElse(anyPartitionDir(fs, snapshotPath, partCol))
+      val schema = spark.read.parquet(probe).schema.add(src.schema(partCol))
+      val reader = spark.read.schema(schema).option("basePath", snapshotPath)
+      val target =
+        if (existing.nonEmpty) reader.parquet(existing: _*)
+        else reader.parquet(probe).limit(0)
       val stagedPath = s"${snapshotPath}__stage-${java.util.UUID.randomUUID()}"
       apply(target, src, pk, cursor)
         .write.partitionBy(partCol).mode("error").parquet(stagedPath)
@@ -164,6 +182,16 @@ object Upsert {
           .map(_.getPath.getName).toSeq)
       Sinks.swapPartitions(spark, stagedPath, snapshotPath)
     }
-    spark.read.parquet(snapshotPath)
+  }
+
+  /** The first partition dir found under `root` (stopping there, not
+    * listing the rest), or `root` itself when it holds none. */
+  private def anyPartitionDir(fs: FileSystem, root: String, partCol: String): String = {
+    val it = fs.listStatusIterator(new Path(root))
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.isDirectory && st.getPath.getName.startsWith(s"$partCol=")) return st.getPath.toString
+    }
+    root
   }
 }

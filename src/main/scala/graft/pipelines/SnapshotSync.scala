@@ -93,8 +93,8 @@ object SnapshotSync {
       .withColumn("archived", lit(true))
       // cursor bump so the MERGE cursor-change guard applies the tombstone
       .withColumn(cursorCol, col(cursorCol) + expr("INTERVAL 1 SECOND"))
-    val finalSnapshot =
-      Upsert.partitioned(snapPath, archived, pk, cursorCol, partCol, partOf)
+    Upsert.partitioned(snapPath, archived, pk, cursorCol, partCol, partOf)
+    val finalSnapshot = spark.read.parquet(snapPath)
 
     cursorStore.advance("orders", batchTs, runId, batchTs)
 

@@ -116,7 +116,6 @@ object StreamingSync {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Upsert.partitioned(snapshotPath, batch, pk, cursor, partCol, partOf)
-        ()
       }
       .start()
 }

@@ -2,7 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit, substring, year}
+import org.apache.spark.sql.types.StringType
 import graft.operators.Upsert
 
 /** MERGE semantics of config/bigquery/bigquery.py:245-256 (see Upsert). */
@@ -100,7 +107,8 @@ class UpsertSpec extends SparkSpec {
       ("c", ts("2024-07-01 00:00:00"), 30.0),
       ("d", ts("2024-08-01 00:00:00"), 4.0)
     ).toDF("id", "updated_at", "v")
-    val out = Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
+    Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
+    val out = spark.read.parquet(snap)
 
     // merged content matches the full-table MERGE semantics
     val got = out.select("id", "updated_at", "v").collect()
@@ -166,7 +174,8 @@ class UpsertSpec extends SparkSpec {
 
     // replaying the whole batch (the un-advanced cursor's behavior)
     // converges: already-swapped partition is a no-op, the rest applies
-    val out = Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
+    Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
+    val out = spark.read.parquet(snap)
       .select("id", "v").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(out === Map("a" -> 10.0, "b" -> 20.0))
   }
@@ -209,10 +218,119 @@ class UpsertSpec extends SparkSpec {
     val seed = Seq(("a", ts("2024-01-01 00:00:00"), 1.0)).toDF("id", "updated_at", "v")
     Upsert.partitioned(snap, seed, Seq("id"), "updated_at", "y", partOf)
     val batch = Seq(("a", ts("2024-02-01 00:00:00"), 10.0)).toDF("id", "updated_at", "v")
-    val once = Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
-      .collect().toSet
-    val twice = Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
-      .collect().toSet
+    Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
+    val once = spark.read.parquet(snap).collect().toSet
+    Upsert.partitioned(snap, batch, Seq("id"), "updated_at", "y", partOf)
+    val twice = spark.read.parquet(snap).collect().toSet
     assert(once === twice)
+  }
+
+  // ---- touched-partition reads ------------------------------------------
+
+  /** Runs the partitioned MERGE and checks the snapshot it leaves equals
+    * the pure MERGE over a whole-table read taken just before it. */
+  private def mergeMatchesWholeTable(snap: String, batch: DataFrame,
+                                     partCol: String, partOf: Column): Unit = {
+    val whole = spark.read.parquet(snap)
+    val expected = Upsert(whole, batch.withColumn(partCol, partOf), Seq("id"), "updated_at")
+      .collect().toSet
+    Upsert.partitioned(snap, batch, Seq("id"), "updated_at", partCol, partOf)
+    val got = spark.read.parquet(snap).select(whole.columns.toIndexedSeq.map(col): _*)
+      .collect().toSet
+    assert(got === expected)
+  }
+
+  private def yearSeed(snap: String): Unit =
+    Upsert.partitioned(snap, Seq(
+      ("a", ts("2022-06-01 00:00:00"), 1.0),
+      ("b", ts("2023-06-01 00:00:00"), 2.0)
+    ).toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "y", year($"updated_at"))
+
+  test("partitioned upsert lists only the touched partitions, never the whole snapshot") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partlist").toString + "/snap"
+    // more partitions than the parallel-discovery threshold, so a listing
+    // of the whole snapshot would run as a job with one task per partition
+    val parts = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt + 8
+    val partOf = substring($"id", 2, 4).cast("int") // "k7" -> p=7
+    Upsert.partitioned(snap, (0 until parts).map(i => (s"k$i", ts("2024-01-01 00:00:00"), i.toDouble))
+      .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
+    val before = partFileHashes(snap)
+
+    val taskCounts = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        taskCounts.add(j.stageInfos.map(_.numTasks).max)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Upsert.partitioned(snap, Seq(("k7", ts("2024-02-01 00:00:00"), 70.0))
+        .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
+      // listener events arrive async: wait until no new job shows up
+      var prev = -1
+      while (taskCounts.size != prev) { prev = taskCounts.size; Thread.sleep(400) }
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val counts = taskCounts.asScala.toSeq
+    assert(counts.nonEmpty, "the merge must run jobs")
+    assert(counts.forall(_ < parts),
+      s"a merge touching 1 of $parts partitions ran a job sized by the table: $counts")
+    val got = spark.read.parquet(snap).select("id", "v").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got === (0 until parts).map(i => s"k$i" -> (if (i == 7) 70.0 else i.toDouble)).toMap)
+    val after = partFileHashes(snap)
+    assert(before.filter(!_._1.startsWith("p=7/")) === after.filter(!_._1.startsWith("p=7/")),
+      "untouched partitions must not be rewritten")
+  }
+
+  test("partitioned upsert into partitions that do not exist yet") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partnew").toString + "/snap"
+    yearSeed(snap)
+    mergeMatchesWholeTable(snap, Seq(
+      ("c", ts("2030-06-01 00:00:00"), 3.0),
+      ("d", ts("2031-06-01 00:00:00"), 4.0)
+    ).toDF("id", "updated_at", "v"), "y", year($"updated_at"))
+    assert(spark.read.parquet(snap).count() === 4)
+  }
+
+  test("partitioned upsert of an empty source leaves the snapshot untouched") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partempty").toString + "/snap"
+    yearSeed(snap)
+    val before = partFileHashes(snap)
+    // the archived pass of a batch with no tombstones
+    val empty = Seq(("z", ts("2022-07-01 00:00:00"), 9.0)).toDF("id", "updated_at", "v")
+      .filter(lit(false))
+    mergeMatchesWholeTable(snap, empty, "y", year($"updated_at"))
+    assert(partFileHashes(snap) === before)
+  }
+
+  test("partitioned upsert keeps a string partition column's type and dir names") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partstr").toString + "/snap"
+    // the touched values look numeric, the untouched one does not: only
+    // the whole table says the column is a string
+    val partOf = $"tag"
+    Upsert.partitioned(snap, Seq(
+      ("a", ts("2024-01-01 00:00:00"), 1.0, "01"),
+      ("b", ts("2024-01-01 00:00:00"), 2.0, "02"),
+      ("c", ts("2024-01-01 00:00:00"), 3.0, "x")
+    ).toDF("id", "updated_at", "v", "tag"), Seq("id"), "updated_at", "p", partOf)
+    mergeMatchesWholeTable(snap, Seq(
+      ("a", ts("2024-02-01 00:00:00"), 10.0, "01"),
+      ("d", ts("2024-02-01 00:00:00"), 4.0, "02")
+    ).toDF("id", "updated_at", "v", "tag"), "p", partOf)
+    assert(spark.read.parquet(snap).schema("p").dataType === StringType)
+    assert(new java.io.File(snap).list().filter(_.startsWith("p=")).toSet ===
+      Set("p=01", "p=02", "p=x"))
+  }
+
+  test("partitioned upsert updates an existing partition and inserts a new one in one batch") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partmix").toString + "/snap"
+    yearSeed(snap)
+    mergeMatchesWholeTable(snap, Seq(
+      ("a", ts("2022-07-01 00:00:00"), 10.0),
+      ("d", ts("2035-01-01 00:00:00"), 4.0)
+    ).toDF("id", "updated_at", "v"), "y", year($"updated_at"))
+    val got = spark.read.parquet(snap).select("id", "v").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(got === Map("a" -> 10.0, "b" -> 2.0, "d" -> 4.0))
   }
 }
