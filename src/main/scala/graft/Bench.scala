@@ -94,7 +94,7 @@ object Bench {
     * plan). Dropping them between passes keeps each measurement
     * isolated; the call sits OUTSIDE the timed window and
     * unpersist(blocking = false) costs microseconds. */
-  private def releaseQueryScratch(spark: SparkSession): Unit =
+  private[graft] def releaseQueryScratch(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
 

@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.core.JobTrace
+
 /** One materializing action of a run: what ran, how many rows the root
   * operator emitted, how long it took. */
 final case class RunReport(runId: String, action: String, rows: Long, elapsedMs: Long)
@@ -85,17 +87,8 @@ final class RunTelemetry private (spark: SparkSession, runId: String)
   /** Listener events arrive asynchronously; wait until the captured set
     * has been stable for `stableMs` (or `maxMs` elapsed) so an
     * end-of-run report includes the trailing actions. */
-  def awaitQuiesce(stableMs: Long = 200, maxMs: Long = 3000): Unit = {
-    val deadline = System.currentTimeMillis() + maxMs
-    var last = -1
-    var stableSince = System.currentTimeMillis()
-    while (System.currentTimeMillis() < deadline) {
-      val n = captured.size()
-      if (n != last) { last = n; stableSince = System.currentTimeMillis() }
-      else if (System.currentTimeMillis() - stableSince >= stableMs) return
-      Thread.sleep(25)
-    }
-  }
+  def awaitQuiesce(stableMs: Long = 200, maxMs: Long = 3000): Unit =
+    JobTrace.awaitQuiet(() => captured.size(), stableMs = stableMs, maxMs = maxMs)
 
   /** The run report as a DataFrame, elapsed formatted the way the
     * reference's chat card shows it (exercises F.durationPretty / F19). */

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
@@ -32,22 +31,11 @@ import graft.sinks.Sinks
   */
 object Upsert {
 
-  /** Source dedup by pk, latest-cursor-wins (deterministic stand-in for
-    * the reference's duplicate pre-check, bigquery.py:227-229). */
-  private def dedupLatest(source: DataFrame, pk: Seq[String],
-                          cursor: String): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col(cursor).desc_nulls_last)
-    source.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
   /** Pure-plan upsert: returns the post-MERGE snapshot DataFrame. */
   def apply(target: DataFrame, source: DataFrame,
             pk: Seq[String], cursor: String): DataFrame = {
     val keyCols = pk.map(col)
-    val dedupedSrc = dedupLatest(source, pk, cursor)
+    val dedupedSrc = Dedup.latestWins(source, pk, cursor)
       .select(target.columns.toIndexedSeq.map(col): _*) // align column order with target
     // WHEN MATCHED AND t.cursor != s.cursor / WHEN NOT MATCHED:
     // keep only source rows that are new, or whose cursor changed. The
@@ -138,7 +126,7 @@ object Upsert {
         "layout (snapshotSwapMarker); the partitioned MERGE requires the partition-dir layout")
     if (!fs.exists(new Path(snapshotPath))) {
       // bootstrap: no target yet — the deduped source IS the snapshot
-      Sinks.overwritePartitions(dedupLatest(src, pk, cursor), snapshotPath,
+      Sinks.overwritePartitions(Dedup.latestWins(src, pk, cursor), snapshotPath,
         Seq(partCol))
       // seed the write-side manifest from the bootstrap's own output (a
       // one-time root listing at table creation, when the listing is the

@@ -1092,12 +1092,13 @@ object Relational {
     * existing checkpoint keeps its own value by Spark's contract —
     * restarting deployments are unaffected by construction). It is
     * derived from the landed input's byte size (state ∝ input for these
-    * one-shot AvailableNow streams), `spark.graft.stream.
-    * statePartitionBytes` per partition (default 32 MiB), capped at the
+    * one-shot AvailableNow streams), 32 MiB per partition, capped at the
     * session's shuffle parallelism — scale-adaptive, never a constant
     * tuned to either local mode or the cluster. The session conf is set
     * only for the window the stream CLONES its conf in (start()) and
     * restored immediately after termination. */
+  private val statePartitionBytes = 32L << 20
+
   private def runStream(out: DataFrame, tmp: String,
                         mode: String): Unit = {
     val spark = out.sparkSession
@@ -1107,9 +1108,8 @@ object Relational {
       val in = new org.apache.hadoop.fs.Path(s"$tmp/in")
       val bytes = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(in).getLength
-      val per = spark.conf.get("spark.graft.stream.statePartitionBytes",
-        (32L << 20).toString).toLong
-      math.max(1L, math.min(prev.toLong, (bytes + per - 1) / per))
+      math.max(1L, math.min(prev.toLong,
+        (bytes + statePartitionBytes - 1) / statePartitionBytes))
     }.toOption
     scoped.foreach(n => spark.conf.set(key, n.toString))
     try {

@@ -293,9 +293,8 @@ object StateStore {
     * without touching the session confs the bench's comparability (and
     * every non-state scan) rides on. 8 MiB on-disk ≈ a few tens of MB
     * decompressed per task — the same memory class the broadcast-side
-    * policy above commits to. Ops knob: `spark.graft.state.readPackBytes`. */
-  private def readPackBytes(spark: SparkSession): Long = spark.conf
-    .get("spark.graft.state.readPackBytes", (8L << 20).toString).toLong
+    * policy above commits to. */
+  private val readPackBytes = 8L << 20
 
   /** Files per packed scan task ([[readPacked]]'s second bound): a task
     * pays a parquet footer read + stream open PER FILE, sequentially —
@@ -317,7 +316,7 @@ object StateStore {
   def readPacked(spark: SparkSession, path: String): DataFrame = {
     val cs = fs(spark, path).getContentSummary(new Path(path))
     val byBytes =
-      (cs.getLength + readPackBytes(spark) - 1) / readPackBytes(spark)
+      (cs.getLength + readPackBytes - 1) / readPackBytes
     val byFiles =
       (cs.getFileCount + readPackFilesPerTask - 1) / readPackFilesPerTask
     val parts = math.max(1L, math.max(byBytes, byFiles))

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
-import graft.core.GraftSession
+import graft.{Bench, SparkEntry}
+import graft.core.{GraftSession, JobTrace}
 
 /** One-off per-query timing harness for local iteration: run the named
   * queries (all of them when none are named) N passes each against an
@@ -22,70 +22,41 @@ object QTime {
     val names = args.filterNot(_ == "-trace").drop(1).toSeq
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    // -trace: per-job wall times on the LAST timed pass of each query
-    // (callsite + elapsed), for attributing a slow query to its jobs
-    @volatile var trace = false
-    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val epoch = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
-    if (doTrace) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (trace) jobStarts.put(js.jobId,
-            (System.nanoTime(), js.stageInfos.headOption.map(_.name).getOrElse("?")))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          if (trace) Option(jobStarts.remove(je.jobId)).foreach { case (t0, site) =>
-            val at = (t0 - epoch.get) / 1e9
-            println(f"[job] @$at%7.2f ${(System.nanoTime() - t0) / 1e9}%6.2f s  $site")
-          }
-        // slow-stage detail for the jobs the [job] lines can't explain:
-        // stage name + task count + wall, only when it cost ≥ 0.2 s
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          if (trace) {
-            val si = sc.stageInfo
-            val wall = (for {s <- si.submissionTime; c <- si.completionTime}
-              yield (c - s) / 1e3).getOrElse(-1.0)
-            if (wall >= 0.2)
-              println(f"[stage]   ${wall}%6.2f s  ${si.numTasks}%4d tasks  ${si.name}")
-          }
-      })
-    // CPU attribution: co-tenant load inflates wall-clock but barely
-    // touches the task CPU sum, so cpu= is the comparison-stable signal
-    // on a shared box (wall minus cpu/cores ≈ driver gaps + contention)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-        }
-      })
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
     val picked = if (names.isEmpty) all
       else all.filter { case (n, _) => names.exists(n.startsWith) }
-    def release(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
     picked.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }
-      release()
+      Bench.releaseQueryScratch(spark)
     }
     picked.foreach { case (name, fn) =>
       val passes = (1 to 3).map { pass =>
-        if (doTrace && pass == 3) {
-          trace = true; epoch.set(System.nanoTime())
-          println(s"[job] ==== $name pass 3 ====")
-        }
-        val t0 = System.nanoTime()
-        val c0 = cpuNs.get
-        val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        val traced = doTrace && pass == 3
+        if (traced) println(s"[job] ==== $name pass 3 ====")
+        val passStartMs = System.currentTimeMillis()
+        val (t, rec) = JobTrace.measure(spark) {
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
           catch { case e: Throwable =>
             System.err.println(s"[qtime] $name failed: ${e.getMessage}"); -1.0 }
-        trace = false
-        release()
-        // listener events are async; settle briefly so the pass's tasks land
-        Thread.sleep(150)
-        (t, (cpuNs.get - c0) / 1e9)
+        }
+        Bench.releaseQueryScratch(spark)
+        // -trace: per-job wall times on the LAST timed pass (call site +
+        // elapsed, @ from the pass start), for attributing a slow query to
+        // its jobs; then the stages that cost >= 0.2 s, for the jobs the
+        // [job] lines can't explain
+        if (traced) {
+          for (j <- rec.jobs; end <- j.endMs)
+            println(f"[job] @${(j.startMs - passStartMs) / 1e3}%7.2f " +
+              f"${(end - j.startMs) / 1e3}%6.2f s  ${j.site}")
+          for (st <- rec.stages if st.wallMs >= 200)
+            println(f"[stage]   ${st.wallMs / 1e3}%6.2f s  ${st.tasks}%4d tasks  ${st.name}")
+        }
+        // CPU attribution: co-tenant load inflates wall-clock but barely
+        // touches the task CPU sum, so cpu= is the comparison-stable signal
+        // on a shared box (wall minus cpu/cores ≈ driver gaps + contention)
+        (t, rec.totals.cpuNs / 1e9)
       }
       val ts = passes.map(_._1).sorted
       val cpu = passes.map(_._2).sorted.apply(1)

@@ -1,12 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
-import graft.core.Tables
+import graft.core.{JobTrace, Tables}
 
 /** One-off scale-slope sanity harness: replicate the documents/events
   * fixtures k× (replica i offsets ids and perturbs tokens, so shingle
@@ -146,25 +143,6 @@ object ScaleSanity {
     // -stages: per-stage shuffle-write attribution (stage name + records)
     // for decomposing a superlinear aggregate into the stage that grew
     val stageDetail = args.contains("-stages")
-    val records = new AtomicLong
-    val bytes = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageDetail) {
-          val si = sc.stageInfo
-          val w = si.taskMetrics.shuffleWriteMetrics.recordsWritten
-          if (w >= 10000)
-            println(s"[shuffle] rec=$w tasks=${si.numTasks} ${si.name.take(90)}")
-        }
-    }
     val bodies: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)] =
       queries.map(n => n -> SparkEntry.queries(n)) :+
@@ -173,17 +151,17 @@ object ScaleSanity {
         ("q82_wide_banding" -> (q82WideBanding _))
     bodies.filter(b => only.forall(_.contains(b._1))).foreach {
       case (name, body) =>
-      records.set(0); bytes.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val n = body(spark, outDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are async; settle before reading
-      var prev = -1L
-      while (records.get != prev) { prev = records.get; Thread.sleep(300) }
-      spark.sparkContext.removeSparkListener(listener)
+      val ((n, sec), rec) = JobTrace.measure(spark) {
+        val t0 = System.nanoTime()
+        val n = body(spark, outDir).count()
+        (n, (System.nanoTime() - t0) / 1e9)
+      }
+      if (stageDetail)
+        for (st <- rec.stages if st.shuffleWriteRecords >= 10000)
+          println(s"[shuffle] rec=${st.shuffleWriteRecords} tasks=${st.tasks} ${st.name.take(90)}")
+      val tot = rec.totals
       println(f"""{"query":"$name","k":$k,"rows":$n,"sec":$sec%.2f,""" +
-        s""""shuffle_records":${records.get},"shuffle_mb":${bytes.get / 1048576}}""")
+        s""""shuffle_records":${tot.shuffleWriteRecords},"shuffle_mb":${tot.shuffleWriteBytes / 1048576}}""")
     }
     spark.stop()
   }

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.JobTrace
 import graft.streaming.Bm25Index
 
 /** Streaming BM25 index maintenance (q129's machinery): the folded
@@ -174,23 +172,8 @@ class Bm25IndexSpec extends SparkSpec {
     // same buckets, so with the maintained summary the query path's
     // input bytes barely move; the round-12 df re-derivation would have
     // re-scanned the whole (now 8x) posting store per query.
-    def measureRead(body: => Unit): Long = {
-      val bytes = new AtomicLong
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) bytes.addAndGet(m.inputMetrics.bytesRead)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        var prev = -1L
-        var cur = bytes.get
-        while (cur != prev) { Thread.sleep(400); prev = cur; cur = bytes.get }
-        cur
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def measureRead(body: => Unit): Long =
+      JobTrace.measure(spark)(body)._2.totals.inputBytes
     val state = java.nio.file.Files.createTempDirectory("bm_flat").toString
     Bm25Index.foldBatch(docs, "b0", state)
     // workload term buckets, from the maintained summary (same hash the

@@ -1,12 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{JobTrace, Tables}
 import graft.operators.Components
 import graft.queries.Llm
 
@@ -27,27 +24,8 @@ class ShuffleGrowthSpec extends SparkSpec {
 
   /** Sum of shuffle write records/bytes across all tasks of `body`. */
   private def measureShuffle(body: => Unit): (Long, Long) = {
-    val records = new AtomicLong
-    val bytes = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener events are delivered async: poll until the counters are
-      // stable across a full interval (no private-API bus draining)
-      var prev = (-1L, -1L)
-      var cur = (records.get, bytes.get)
-      while (cur != prev) { Thread.sleep(400); prev = cur; cur = (records.get, bytes.get) }
-      cur
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val t = JobTrace.measure(spark)(body)._2.totals
+    (t.shuffleWriteRecords, t.shuffleWriteBytes)
   }
 
   /** `k` disjoint replicas of the fixture: replica i offsets doc_ids and

@@ -2,14 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, substring, year}
 import org.apache.spark.sql.types.StringType
+import graft.core.JobTrace
 import graft.operators.Upsert
 
 /** MERGE semantics of config/bigquery/bigquery.py:245-256 (see Upsert). */
@@ -256,21 +252,12 @@ class UpsertSpec extends SparkSpec {
       .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
     val before = partFileHashes(snap)
 
-    val taskCounts = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        taskCounts.add(j.stageInfos.map(_.numTasks).max)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, rec) = JobTrace.measure(spark) {
       Upsert.partitioned(snap, Seq(("k7", ts("2024-02-01 00:00:00"), 70.0))
         .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
-      // listener events arrive async: wait until no new job shows up
-      var prev = -1
-      while (taskCounts.size != prev) { prev = taskCounts.size; Thread.sleep(400) }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
 
-    val counts = taskCounts.asScala.toSeq
+    val counts = rec.jobs.map(_.maxTasks)
     assert(counts.nonEmpty, "the merge must run jobs")
     assert(counts.forall(_ < parts),
       s"a merge touching 1 of $parts partitions ran a job sized by the table: $counts")

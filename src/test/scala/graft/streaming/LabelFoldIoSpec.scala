@@ -1,13 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.core.JobTrace
 
 /** The member lookup's READ-IO claim: with the comp-bucketed projection,
   * a delta label fold reads only the id- and comp-buckets its delta
@@ -24,25 +23,8 @@ class LabelFoldIoSpec extends SparkSpec {
 
   /** Sum of task input bytes/records across all tasks of `body`. */
   private def measureInput(body: => Unit): (Long, Long) = {
-    val bytes = new AtomicLong
-    val records = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          bytes.addAndGet(m.inputMetrics.bytesRead)
-          records.addAndGet(m.inputMetrics.recordsRead)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var prev = (-1L, -1L)
-      var cur = (bytes.get, records.get)
-      while (cur != prev) { Thread.sleep(400); prev = cur; cur = (bytes.get, records.get) }
-      cur
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val t = JobTrace.measure(spark)(body)._2.totals
+    (t.inputBytes, t.inputRecords)
   }
 
   test("delta fold input bytes ignore labeling growth outside the touched buckets") {
