@@ -63,8 +63,9 @@ object Bench {
     * fastest valid pass times ascending, padded with the -1.0 failure
     * sentinel at the END (a flake must neither displace a valid time nor
     * hide); `spiky` marks a >3× max/min spread that triggered the extra
-    * retry pass. */
-  private[graft] final case class QueryStats(name: String, times: Seq[Double], spiky: Boolean) {
+    * retry pass; `error` is the first failing pass's [[causeOf]]. */
+  private[graft] final case class QueryStats(name: String, times: Seq[Double], spiky: Boolean,
+                                             error: Option[String] = None) {
     def min: Double = times.head
     def med: Double = times(1)
     def max: Double = times(2)
@@ -98,13 +99,35 @@ object Bench {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
 
+  /** A failure's class and the first line of its message — one line,
+    * unescaped (the writer escapes). */
+  private def causeOf(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+
+  /** One timed pass of one query: its seconds, or the -1.0 failure
+    * sentinel with the failure's cause, which also goes to stderr. */
+  private def timedPass(name: String,
+                        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                        spark: SparkSession, sfDir: String): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val r = try { fn(spark, sfDir).count(); ((System.nanoTime() - t0) / 1e9, None) }
+            catch { case e: Throwable =>
+              val cause = causeOf(e)
+              System.err.println(s"[bench] $name failed: $cause")
+              (-1.0, Some(cause))
+            }
+    releaseQueryScratch(spark)
+    r
+  }
+
   /** One full timed section: 3 passes per query (4 when spiky), plus the
     * machine-context sampling that makes the section self-adjudicating.
     * `loadPreSampled` carries the pre-warmup loadavg for the FIRST
     * section; a re-run section cannot use a fresh loadavg start sample —
     * the 1-minute loadavg is still saturated by the bench's own first
     * section — so re-runs rely on the slow-spike signal alone. */
-  private def timedSection(
+  private[graft] def timedSection(
       sorted: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
       spark: SparkSession, sfDir: String, cpus: Int,
       loadPreSampled: Option[Double]): Section = {
@@ -114,11 +137,10 @@ object Bench {
       // a failing pass records -1.0, not its time-to-fail: sorted, a single
       // flake doesn't poison the median, while a consistently broken query
       // surfaces as a negative number in the JSON instead of a fake win
+      var error: Option[String] = None
       def pass(): Double = {
-        val t0 = System.nanoTime()
-        val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-                catch { case _: Throwable => -1.0 }
-        releaseQueryScratch(spark)
+        val (t, cause) = timedPass(name, fn, spark, sfDir)
+        if (error.isEmpty) error = cause
         t
       }
       val first = Seq.fill(3)(pass())
@@ -133,7 +155,7 @@ object Bench {
         valid.nonEmpty && valid.max / valid.min > 3.0
       }
       val passes = if (spiky) first :+ pass() else first
-      QueryStats(name, passes.filter(_ >= 0).sorted.take(3).padTo(3, -1.0), spiky)
+      QueryStats(name, passes.filter(_ >= 0).sorted.take(3).padTo(3, -1.0), spiky, error)
     }
     val loadEnd = os.getSystemLoadAverage
     // spike-retries on SLOW queries corroborate contention; sub-half-second
@@ -159,17 +181,22 @@ object Bench {
   /** The cheap second sample for a budget-blown contended section: ONE
     * timed pass per query. Feeds the floor only — never the record. A
     * failing query contributes the -1.0 sentinel, which `floorOf`
-    * filters (it must not subtract from the floor). */
+    * filters (it must not subtract from the floor); its cause goes to
+    * stderr only, since the kept section records its own. */
   private[graft] def probeSection(
       sorted: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
       spark: SparkSession, sfDir: String): Map[String, Double] =
-    sorted.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-              catch { case _: Throwable => -1.0 }
-      releaseQueryScratch(spark)
-      name -> t
-    }.toMap
+    sorted.map { case (name, fn) => name -> timedPass(name, fn, spark, sfDir)._1 }.toMap
+
+  // Locale.ROOT: default-locale format renders a comma decimal
+  // separator on comma-locale JVMs, which breaks the JSON line
+  private def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** One `query_stats` entry of BENCH_DETAIL.json. */
+  private[graft] def statJson(s: QueryStats): String =
+    s"""${Verify.jsonString(s.name)}:{"min":${f(s.min)},"med":${f(s.med)},"max":${f(s.max)}""" +
+      (if (s.spiky) ""","retried":true""" else "") +
+      s.error.map(e => s""","error":${Verify.jsonString(e)}""").getOrElse("") + "}"
 
   /** The official record: fewest failed queries first (a section where a
     * query flaked to -1 must not "win" by measuring less), then the
@@ -284,10 +311,6 @@ object Bench {
     val kept = keepBest(sections)
     val floor = floorOf(sorted.map(_._1), sections, probe)
 
-    // Locale.ROOT: default-locale format renders a comma decimal
-    // separator on comma-locale JVMs, which breaks the JSON line
-    def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-
     // The harness that records this line keeps only the LAST ~2000 chars
     // of the run's output and parses the metric line out of that window:
     // round 5's line (per-query min/med/max for 78 queries, ~3.5 KB)
@@ -305,12 +328,9 @@ object Bench {
     // per-query numbers themselves are unchanged and none were dropped:
     // every query's min/med/max is in the detail file, which is where
     // the round drivers have demonstrably read them from since round 5.
-    val stats = kept.stats.map { s =>
-      s"""\"${s.name}\":{"min":${f(s.min)},"med":${f(s.med)},"max":${f(s.max)}""" +
-        (if (s.spiky) ""","retried":true}""" else "}")
-    }.mkString("{", ",", "}")
+    val stats = kept.stats.map(statJson).mkString("{", ",", "}")
     val machine = s""""loadavg_start":${f(loadStart)},"loadavg_end":${f(kept.loadEnd)}""" +
-      s""","available_processors":${Runtime.getRuntime.availableProcessors}""" +
+      s""","cores":$cpus,"available_processors":${Runtime.getRuntime.availableProcessors}""" +
       s""","timed_passes":3,"aggregation":"median","timed_sections":${sections.size}""" +
       s""","contended":${kept.contended},"spike_retries":${kept.retried},"failed":${kept.failed}""" +
       (if (probe.nonEmpty) s""","probe_section":true""" else "") +

@@ -24,21 +24,9 @@ object F {
     try_to_timestamp(c, lit("yyyy-MM-dd'T'HH:mm:ss'Z'")),
     when(c.rlike("^\\d{10,}$"), timestamp_millis(c.cast("long"))))
 
-  /** F2 — epoch-millis to timestamp
-    * (ref: pipeline/hubspot_deal_logs/hubspot_deal_log_pipeline.py:90-92). */
-  def fromEpochMillis(c: Column): Column = timestamp_millis(c)
-
   /** F3 — GMT+7 reporting shift
     * (ref: pipeline/hubspot_deal_logs/hubspot_deal_log_pipeline.py:37-41). */
   def toGmt7(c: Column): Column = c + expr("INTERVAL 7 HOURS")
-
-  /** F4 — drop sub-second precision
-    * (ref: pipeline/hubspot_deal_logs/hubspot_deal_log_pipeline.py:117-121). */
-  def truncSeconds(c: Column): Column = date_trunc("second", c)
-
-  /** F5 — ISO-millis formatting (ref: pipeline/functions/functions.py:83). */
-  def formatIsoMillis(c: Column): Column =
-    date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
 
   /** F8 — md5 surrogate key over concatenated parts
     * (ref: pipeline/hubspot_association_bigquery/hubspot_association_bigquery.py:72-73). */

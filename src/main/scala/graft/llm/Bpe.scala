@@ -149,7 +149,8 @@ object Bpe {
       if (n > gate) Left(wh)
       else {
         val rows = wh.collect().map { r =>
-          (r.getString(r.fieldIndex("word")), r.getLong(r.fieldIndex("cnt")))
+          (r.getString(r.fieldIndex("word")),
+            r.getAs[Number](r.fieldIndex("cnt")).longValue)
         }
         Staging.release(wh)
         Right(rows)

@@ -85,4 +85,11 @@ object Sketches {
     val linear = lit(m.toDouble) * log(lit(m.toDouble) / emptyRegs)
     round(when(raw <= lit(2.5 * m) && emptyRegs > 0, linear).otherwise(raw), 4)
   }
+
+  // shared with streaming/SketchStream — the streamed state and these
+  // oracle-generating constants must agree or the driver gate diverges
+  private[graft] val kmvK = 256
+  private[graft] val hllP = 9 // 512 registers
+  private[graft] val cmsD = 4
+  private[graft] val cmsW = 8192
 }

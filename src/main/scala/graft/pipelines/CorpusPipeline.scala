@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Staging
 import graft.functions.F
+import graft.llm.{MinHash, Shingles}
 import graft.operators.Components
-import graft.queries.Llm
 
 /** End-to-end training-corpus preparation: the LLM-data stages the engine
   * verifies individually (q60–q77) composed into ONE pipeline, the way a
@@ -61,7 +61,7 @@ object CorpusPipeline {
           cfg.stopwordDivisor > size(col("toks"))
       }
     docs
-      .withColumn("toks", expr(Llm.toksExpr))
+      .withColumn("toks", expr(Shingles.toksExpr))
       .filter(col("n_chars").between(cfg.minChars, cfg.maxChars) && stopGate)
       .withColumn("text", F.redactPii(col("text")))
       .drop("toks")
@@ -119,7 +119,7 @@ object CorpusPipeline {
     // 6. per-source sequence packing at the token budget
     val wp = Window.partitionBy("source").orderBy("doc_id")
     staged("seq_packing", sampled
-      .withColumn("n_toks", expr(s"CAST(size(${Llm.toksExpr}) AS BIGINT)"))
+      .withColumn("n_toks", expr(s"CAST(size(${Shingles.toksExpr}) AS BIGINT)"))
       .withColumn("seq_id",
         floor((sum(col("n_toks")).over(wp) - col("n_toks")) /
           lit(cfg.packBudget)).cast("long")))
@@ -144,14 +144,14 @@ object CorpusPipeline {
 
     // near-dup clusters: verified edges → components, in-plan
     val clusters = Components.connected(
-        Llm.jaccardEdgesOf(exact), src = "doc_a", dst = "doc_b")
+        MinHash.jaccardEdgesOf(exact), src = "doc_a", dst = "doc_b")
       .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
 
     // decontamination via the broadcast benchmark shingle set (the q65
     // batch gate — right for any benchmark that fits a broadcast)
     val decontaminate: DataFrame => DataFrame = { corpus =>
-      val benchSet = Llm.shingleHashes(benchmark).select("h").distinct()
-      val contaminated = Llm.shingleHashes(corpus)
+      val benchSet = Shingles.shingleHashes(benchmark).select("h").distinct()
+      val contaminated = Shingles.shingleHashes(corpus)
         .join(broadcast(benchSet), Seq("h"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= cfg.contaminationShared)

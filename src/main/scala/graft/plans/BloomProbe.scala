@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   *
   * Spark ships the expression for its internal runtime join-filter
   * rewrite but does not expose it in the public function registry; the
-  * Bloom decontamination gate (`Llm.bloomDecontaminationKept`) probes it
+  * Bloom decontamination gate
+  * (`graft.llm.BloomDecontam.bloomDecontaminationKept`) probes it
   * directly against a filter built with
   * `DataFrameStatFunctions.bloomFilter` — both sides are the same
   * spark-sketch `BloomFilter` implementation, so the build's `putLong`

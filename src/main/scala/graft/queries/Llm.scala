@@ -1,16 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.core.Staging
-import graft.functions.F
-import graft.operators.{Components, GlobalRank}
-import Q.t
-
-/** LLM-training-data pipeline operators over `documents` / `embeddings`
-  * (builder brief + VERDICT.md "LLM-data-pipeline operators").
+/** The LLM-training-data query registry over `documents` / `embeddings`:
+  * one `Seq[Q]` per family, whose operators live in `graft.llm`.
   *
   * Scale design notes (the 100 TB story):
   *  - near-dup detection is LSH-bucketed — MinHash band join for Jaccard
@@ -34,4994 +25,6 @@ import Q.t
   *    zero UDFs).
   */
 object Llm {
-
-  /** Per-invocation scratch state for the incremental oracle rows (the
-    * q82/q126 family): create a temp dir, run the body, EAGERLY
-    * materialize the result (after which it no longer reads from the
-    * state), then delete the dir — without the cleanup each invocation
-    * leaks a corpus-derived state dir to /tmp, and Bench/Verify invoke
-    * each query several times per run (ADVICE r12). The delete runs in
-    * `finally` so an aborted invocation doesn't leak either. */
-  /** Bodies that end in a global ORDER BY stage the result FIRST
-    * (`Staging.stage(result).orderBy(...)`): the eager stage below
-    * otherwise materializes the sort, whose range partitioner SAMPLES
-    * the child — executing the body's whole final plan twice (measured:
-    * q144's re-rank plan paid ~2 s once for the sampling pass and again
-    * for the sort). Staged first, the sampling reads checkpointed
-    * blocks. A `.count()`-shaped consumer never sees this (the
-    * optimizer eliminates sorts under aggregation), which is exactly
-    * why it hid from the phase profiles. */
-  private def withTempState(prefix: String)(body: String => DataFrame): DataFrame = {
-    // per-invocation scratch is EPHEMERAL by construction (deleted in
-    // the finally below), so it goes on the fastest local scratch —
-    // the durability story of a real deployment's state path is the
-    // caller's, not this demo harness's
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.core.GraftSession.fastScratch), prefix)
-    try Staging.stage(body(dir.toString))
-    finally {
-      val st = java.nio.file.Files.walk(dir)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally st.close()
-    }
-  }
-
-  // Tokenization shared by the text operators: lowercase, split on
-  // non-space runs, drop empties. Pure built-ins.
-  private[graft] val toksExpr = "filter(split(lower(text), '\\\\s+'), x -> x <> '')"
-  private val toksSql = "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')"
-
-  // ---- text statistics / quality scoring -------------------------------
-  private val docStats = Q(
-    "q40_doc_stats",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("toks", expr(toksExpr))
-        .select(col("doc_id"), col("n_chars"),
-          length(col("text")).cast("long").as("char_len"),
-          size(col("toks")).cast("long").as("word_cnt"),
-          size(array_distinct(col("toks"))).cast("long").as("uniq_word_cnt"))
-        .orderBy("doc_id"),
-    Some(s"""WITH b AS (SELECT doc_id, n_chars, text, $toksSql AS toks FROM documents)
-            SELECT doc_id, n_chars, CAST(length(text) AS BIGINT) AS char_len,
-              CAST(len(toks) AS BIGINT) AS word_cnt,
-              CAST(len(list_distinct(toks)) AS BIGINT) AS uniq_word_cnt
-            FROM b ORDER BY doc_id"""))
-
-  // ---- token counting (whitespace + BPE-ish regex) ---------------------
-  private val tokenCount = Q(
-    "q41_token_count",
-    (s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        expr(s"CAST(size($toksExpr) AS BIGINT)").as("n_ws_tokens"),
-        expr("CAST(size(filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS BIGINT)")
-          .as("n_tokens"))
-        .orderBy("doc_id"),
-    Some(s"""SELECT doc_id,
-              CAST(len($toksSql) AS BIGINT) AS n_ws_tokens,
-              CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                x -> x <> '')) AS BIGINT) AS n_tokens
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- language-ID heuristic (stopword-ratio n-gram stand-in) ----------
-  private val langHeuristic = Q(
-    "q42_lang_heuristic",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("toks", expr(toksExpr))
-        .select(col("doc_id"), col("lang"),
-          expr("CAST(size(filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to'))) AS BIGINT)")
-            .as("stop_cnt"),
-          size(col("toks")).cast("long").as("tok_cnt"))
-        .withColumn("is_en_like", col("stop_cnt") * 4 > col("tok_cnt"))
-        .orderBy("doc_id"),
-    Some(s"""WITH b AS (SELECT doc_id, lang, $toksSql AS toks FROM documents)
-            SELECT doc_id, lang,
-              CAST(len(list_filter(toks, x -> list_contains(['the', 'a', 'of', 'and', 'to'], x))) AS BIGINT) AS stop_cnt,
-              CAST(len(toks) AS BIGINT) AS tok_cnt,
-              CAST(len(list_filter(toks, x -> list_contains(['the', 'a', 'of', 'and', 'to'], x))) AS BIGINT) * 4
-                > CAST(len(toks) AS BIGINT) AS is_en_like
-            FROM b ORDER BY doc_id"""))
-
-  // ---- document fingerprinting (normalized-content hash) ---------------
-  private val fingerprint = Q(
-    "q43_fingerprint",
-    (s, dir) =>
-      t(s, dir, "documents").select(col("doc_id"),
-        md5(regexp_replace(lower(col("text")), "\\s+", " ")).as("fingerprint"))
-        .orderBy("doc_id"),
-    Some("""SELECT doc_id, md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fingerprint
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- exact dedup by content hash, first-doc-id-wins ------------------
-  private val exactDedup = Q(
-    "q44_exact_dedup",
-    (s, dir) => {
-      val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      t(s, dir, "documents")
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id, lang, source, n_chars FROM documents
-            QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
-            ORDER BY doc_id"""))
-
-  // ---- MinHash signatures + LSH bands ----------------------------------
-  // 3-word shingles -> ONE md5 per shingle, sliced into four disjoint
-  // 8-hex-char (32-bit) sub-hashes -> 4 min-hashes (hex slices are
-  // uniform and independent, so lexicographic min of each slice is a
-  // valid MinHash; one digest instead of four cuts the dominant hashing
-  // cost 4×) -> 2 bands of 2 rows each. Documents colliding on a band
-  // hash are near-dup candidates — candidate generation is an equi-join
-  // on the band value.
-  // `tk` is bound ONCE via the single-element transform(array(...)) —
-  // referencing the tokenizer output directly inside the position lambda
-  // would re-evaluate the whole split/filter per element_at once Catalyst
-  // inlines the column (O(words²) per doc; measured 10× on the bench).
-  // A lambda variable is an O(1) bound reference, immune to inlining.
-  /** Space-joined word k-grams over a `toks` column, Spark side. The
-    * bind-once idiom above lives ONLY here — shingles (k=3) and bigrams
-    * (k=2) are instantiations, so a fix to the inlining-sensitive shape
-    * cannot drift between them. `short` supplies the result for docs
-    * with fewer than k tokens (`tk` is the bound token array). */
-  private def kGramSparkExpr(k: Int, short: String, src: String = "toks"): String = {
-    val parts = (0 until k).map(j => s"element_at(tk, i + $j)").mkString(", ")
-    s"""flatten(transform(array($src), tk ->
-          CASE WHEN size(tk) >= $k
-            THEN transform(sequence(1, size(tk) - ${k - 1}),
-                   i -> concat_ws(' ', $parts))
-            ELSE $short END))"""
-  }
-
-  /** DuckDB twin of [[kGramSparkExpr]] — same k-gram text, same
-    * short-doc fallback hook (over `toks`). */
-  private def kGramSql(k: Int, short: String): String = {
-    val parts = (0 until k)
-      .map(j => if (j == 0) "toks[i]" else s"toks[i + $j]").mkString(" || ' ' || ")
-    s"""CASE WHEN len(toks) >= $k
-          THEN list_transform(generate_series(1, len(toks) - ${k - 1}), i -> $parts)
-          ELSE $short END"""
-  }
-
-  // shingles: short docs fall back to one whole-doc shingle (a 2-word
-  // doc still near-dup-matches its copies)
-  private[graft] val shingleSparkExpr = kGramSparkExpr(3, "array(array_join(tk, ' '))")
-  private val shingleSql = kGramSql(3, "[array_to_string(toks, ' ')]")
-
-  /** (doc_id, h): one row per DISTINCT shingle md5 of each doc — the
-    * contamination-detection unit shared by q65, the corpus pipeline,
-    * and the streaming gates. One definition so shingle hashing cannot
-    * drift between the batch and streaming contamination paths. */
-  private[graft] def shingleHashes(docs: DataFrame): DataFrame =
-    Staging.spread(docs)
-      .withColumn("toks", expr(toksExpr))
-      .select(col("doc_id"),
-        explode(expr(s"array_distinct($shingleSparkExpr)")).as("sh"))
-      .select(col("doc_id"), md5(col("sh")).as("h"))
-
-  /** Self-contained per-row form of [[shingleHashes]] (distinct shingle
-    * md5s as one array, computed straight off `text` with no helper
-    * columns) — for streaming stages that must not clobber caller
-    * columns. */
-  private[graft] val shingleHashArrayExpr: String =
-    s"""transform(array_distinct(${kGramSparkExpr(3,
-        "array(array_join(tk, ' '))", src = toksExpr)}), sh -> md5(sh))"""
-
-  // Explode + hash-aggregate rather than per-row array lambdas: the
-  // exploded form computes exactly one md5 per shingle (array-lambda
-  // variants re-inline the digest via CollapseProject, quadrupling the
-  // hashing), does the mins map-side (partial_min before the shuffle,
-  // 4 short strings per doc on the wire), and is the shape that scales —
-  // shingle explosion is linear and the shuffle is per-doc, not per-pair.
-  // `spread` fans the input out before the shingle explode (the
-  // single-row-group-file fix) — right for the band-index consumers
-  // whose downstream self-joins amortize it, skipped for the
-  // signature-only projection (q45), where the pre-expansion text
-  // shuffle costs more than the explode it unblocks buys back.
-  private def minhashSigOf(docs: DataFrame, spread: Boolean = true): DataFrame =
-    (if (spread) Staging.spread(docs) else docs)
-      .withColumn("toks", expr(toksExpr))
-      .withColumn("shingles", expr(shingleSparkExpr))
-      .select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .withColumn("h", md5(col("sh")))
-      .groupBy("doc_id")
-      .agg(
-        min(expr("substring(h, 1, 8)")).as("mh0"),
-        min(expr("substring(h, 9, 8)")).as("mh1"),
-        min(expr("substring(h, 17, 8)")).as("mh2"),
-        min(expr("substring(h, 25, 8)")).as("mh3"))
-      .withColumn("band0", md5(concat_ws("|", col("mh0"), col("mh1"))))
-      .withColumn("band1", md5(concat_ws("|", col("mh2"), col("mh3"))))
-
-  private def minhashSig(s: SparkSession, dir: String): DataFrame =
-    minhashSigOf(t(s, dir, "documents"), spread = false)
-
-  private val minhashSigSqlCte =
-    s"""b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-        shl AS (SELECT doc_id, $shingleSql AS shingles FROM b),
-        shx AS (SELECT doc_id, unnest(shingles) AS sh FROM shl),
-        hx AS (SELECT doc_id, md5(sh) AS h FROM shx),
-        sig AS (SELECT doc_id,
-          min(substr(h, 1, 8)) AS mh0,
-          min(substr(h, 9, 8)) AS mh1,
-          min(substr(h, 17, 8)) AS mh2,
-          min(substr(h, 25, 8)) AS mh3
-        FROM hx GROUP BY doc_id),
-        sigb AS (SELECT doc_id, mh0, mh1, mh2, mh3,
-          md5(mh0 || '|' || mh1) AS band0, md5(mh2 || '|' || mh3) AS band1
-        FROM sig)"""
-
-  private val minhashSignatures = Q(
-    "q45_minhash_sig",
-    (s, dir) => minhashSig(s, dir).orderBy("doc_id"),
-    Some(s"""WITH $minhashSigSqlCte
-            SELECT doc_id, mh0, mh1, mh2, mh3, band0, band1 FROM sigb ORDER BY doc_id"""))
-
-  /** The UNSTAGED band-index plan: (doc_id, band, bucket) rows, one per
-    * LSH band, plus the doc's band-0 bucket on every row (`b0`) so pair
-    * joins can decide exactly-once emission without a dedup pass. Public
-    * seam for PERSISTING the index (q76's architecture, and the static
-    * side of the streaming near-dup join — streaming/NearDup.scala): an
-    * ingest pipeline writes this once per dedup run and every later
-    * delta joins against the stored table instead of re-shingling the
-    * corpus. In-engine consumers that self-join the index within one
-    * query go through [[minhashBandsOf]], which stages this plan so the
-    * shingle+minhash aggregation runs once per query, not per branch. */
-  def bandIndexOf(docs: DataFrame): DataFrame =
-    minhashSigOf(docs).select(col("doc_id"), col("band0").as("b0"),
-      explode(array(
-        struct(lit(0).as("band"), col("band0").as("bucket")),
-        struct(lit(1).as("band"), col("band1").as("bucket")))).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bucket").as("bucket"),
-        col("b0"))
-
-  /** [[bandIndexOf]] materialized via Staging.stage: in the default local
-    * mode its blocks are reclaimed by the ContextCleaner when the frame
-    * goes out of scope; `spark.graft.staging=reliable` switches to a
-    * recomputable parquet staging write (executor loss survivable) —
-    * the classic signature-staging step of MinHash-LSH dedup. */
-  private def minhashBandsOf(docs: DataFrame): DataFrame =
-    Staging.stage(bandIndexOf(docs))
-
-  private def minhashBands(s: SparkSession, dir: String): DataFrame =
-    minhashBandsOf(t(s, dir, "documents"))
-
-  /** Candidate near-dup pairs from the band equi-join — never all-pairs,
-    * and exactly-once: a pair colliding on BOTH bands is emitted only from
-    * band 0 (`band = 0 OR b0_a <> b0_b`), so no `.distinct()` —
-    * previously the dedup shuffle over the candidate rows dominated the
-    * pair queries on dense near-dup corpora (round-3 verdict, clean-run
-    * top-5).
-    */
-  private[graft] def minhashCandidatesOf(docs: DataFrame): DataFrame = {
-    val bands = minhashBandsOf(docs)
-    val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("bucket"),
-      col("b0").as("b0_a"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("bucket"),
-      col("b0").as("b0_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") === 0 || col("b0_a") =!= col("b0_b"))
-      .select("doc_a", "doc_b")
-  }
-
-  private def minhashCandidates(s: SparkSession, dir: String): DataFrame =
-    minhashCandidatesOf(t(s, dir, "documents"))
-
-  private val minhashBandsSqlCte =
-    """bands AS (
-         SELECT doc_id, 0 AS band, band0 AS bucket FROM sigb
-         UNION ALL
-         SELECT doc_id, 1 AS band, band1 AS bucket FROM sigb),
-       cand AS (
-         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM bands a JOIN bands b
-           ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)"""
-
-  private val minhashPairs = Q(
-    "q46_minhash_pairs",
-    (s, dir) => minhashCandidates(s, dir).orderBy("doc_a", "doc_b"),
-    Some(s"""WITH $minhashSigSqlCte, $minhashBandsSqlCte
-            SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b"""))
-
-  // ---- exact n-gram Jaccard, MinHash-band candidate generation ---------
-  // Round-2 joined on (lang, n_chars/64) buckets, whose population is
-  // unbounded at scale (VERDICT "What's wrong" #2). Candidates now come
-  // from the MinHash band equi-join (the q46 staging table): exact Jaccard
-  // is computed only on band-colliding pairs, so pair count scales with
-  // true near-dup density, not with bucket occupancy. Missing a J≈0.5 pair
-  // whose bands never collide is the standard LSH recall trade — the
-  // band/row parameters are the recall knob (SURVEY §2; MMDS ch.3).
-  /** Verified near-dup edges: MinHash-band candidates with exact Jaccard
-    * ≥ 0.5 — the edge list q49 reports and q73/q74 cluster. */
-  /** The exact-Jaccard verification core shared by every near-dup path
-    * (batch q49/q73/q74, incremental q76, streaming NearDup): score
-    * candidate rows already carrying both DISTINCT token arrays, keep
-    * pairs at/above `threshold`. One definition means the threshold,
-    * rounding, and set semantics cannot drift between paths. */
-  private[graft] def jaccardScore(
-      pairs: DataFrame, aToks: String, bToks: String,
-      threshold: Double): DataFrame =
-    pairs
-      .withColumn("inter",
-        size(array_intersect(col(aToks), col(bToks))).cast("double"))
-      .withColumn("uni",
-        (size(col(aToks)) + size(col(bToks))).cast("double") - col("inter"))
-      .withColumn("jaccard", round(col("inter") / col("uni"), 6))
-      .filter(col("jaccard") >= threshold)
-
-  private[graft] def jaccardEdgesOf(docs: DataFrame): DataFrame = {
-    // token table staged ONCE: both join sides below scan the staged
-    // (doc_id, toks) frame instead of re-running the tokenizer per side
-    // (the plan otherwise tokenized three times — once in minhashSig,
-    // once per join side; round-4 verdict "What's wrong" #3)
-    val toks = Staging.stage(docs
-      .select(col("doc_id"), expr(s"array_distinct($toksExpr)").as("toks")))
-    val cand = minhashCandidatesOf(docs)
-      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), Seq("doc_a"))
-      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), Seq("doc_b"))
-    jaccardScore(cand, "toks_a", "toks_b", 0.5)
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
-  private def jaccardEdges(s: SparkSession, dir: String): DataFrame =
-    jaccardEdgesOf(t(s, dir, "documents"))
-
-  /** CTEs `d`/`p`/`jp`: the oracle-side twin of [[jaccardEdges]]
-    * (composes after `$minhashSigSqlCte, $minhashBandsSqlCte`). */
-  private val jaccardEdgesSqlCte =
-    s"""d AS (SELECT doc_id, list_distinct($toksSql) AS toks FROM documents),
-        p AS (
-          SELECT c.doc_a, c.doc_b,
-            CAST(len(list_intersect(da.toks, db.toks)) AS DOUBLE) AS inter,
-            CAST(len(da.toks) + len(db.toks) AS DOUBLE) AS tot
-          FROM cand c
-          JOIN d da ON c.doc_a = da.doc_id
-          JOIN d db ON c.doc_b = db.doc_id),
-        jp AS (
-          SELECT doc_a, doc_b, round(inter / (tot - inter), 6) AS jaccard
-          FROM p WHERE round(inter / (tot - inter), 6) >= 0.5)"""
-
-  private val jaccardPairs = Q(
-    "q49_jaccard_pairs",
-    (s, dir) => jaccardEdges(s, dir).orderBy("doc_a", "doc_b"),
-    Some(s"""WITH $minhashSigSqlCte, $minhashBandsSqlCte, $jaccardEdgesSqlCte
-            SELECT doc_a, doc_b, jaccard FROM jp ORDER BY doc_a, doc_b"""))
-
-  // ---- SimHash (nibble-decomposed md5, zero UDFs) ----------------------
-  // Bit b of a word's hash comes from hex digit b/4 of md5(word); the
-  // per-doc simhash is the sign-aggregated bit vector. The hex-nibble
-  // decomposition keeps the whole computation in built-ins both engines
-  // evaluate identically. `bits` is the signature width (≤ 63 so the
-  // BIGINT value stays sign-free in both engines; md5's 32 nibbles supply
-  // up to 128 independent bits).
-  private val hexDigits = "0123456789abcdef"
-
-  private[graft] def simhashFrame(s: SparkSession, dir: String, bits: Int): DataFrame =
-    simhashOf(t(s, dir, "documents"), bits)
-
-  /** The simhash signature frame of an arbitrary (doc_id, lang, text)
-    * frame — per-doc and map-only up to the per-doc bit-sum
-    * aggregation, so a micro-batch signs exactly like the full corpus
-    * (the streaming graph fold relies on this). */
-  private[graft] def simhashOf(docs: DataFrame, bits: Int): DataFrame = {
-    // NOT spread (unlike the shingle-md5 passes): the word explode does
-    // no per-element hashing until after the per-doc sign sums collapse
-    // it, so its work-per-input-byte is LOW — measured at sf0.1, a
-    // pre-explode Staging.spread round trip costs more CPU serializing
-    // the text column than the fan-out stage it parallelizes (q51 task
-    // CPU 1.5 → 3.7 s, q144 25 → 32 s, wall a wash), the opposite of
-    // the 200-md5s-per-doc shingle passes where spread wins 2–4×.
-    val words = docs
-      .select(col("doc_id"), col("lang"),
-        explode(expr(s"array_distinct($toksExpr)")).as("w"))
-      .withColumn("h", md5(col("w")))
-    val bitSums: Seq[Column] = (0 until bits).map { bit =>
-      val ci = 1 + bit / 4
-      val sh = bit % 4
-      expr(s"sum(CASE WHEN (shiftright(instr('$hexDigits', substring(h, $ci, 1)) - 1, $sh) & 1) = 1 THEN 1 ELSE -1 END)")
-        .as(s"s$bit")
-    }
-    val sums = words.groupBy(col("doc_id"), col("lang"))
-      .agg(bitSums.head, bitSums.tail: _*)
-    val simhashExpr = (0 until bits)
-      .map(b => s"(CASE WHEN s$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
-    sums.select(col("doc_id"), col("lang"), expr(s"CAST($simhashExpr AS BIGINT)").as("simhash"))
-  }
-
-  private def simhashSqlCte(bits: Int): String = {
-    val bitSums = (0 until bits).map { bit =>
-      val ci = 1 + bit / 4
-      val sh = bit % 4
-      s"sum(CASE WHEN (((strpos('$hexDigits', substr(h, $ci, 1)) - 1) >> $sh) & 1) = 1 THEN 1 ELSE -1 END) AS s$bit"
-    }.mkString(", ")
-    val simhashExpr = (0 until bits)
-      .map(b => s"(CASE WHEN s$b > 0 THEN CAST(${1L << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
-    s"""w AS (SELECT doc_id, lang, unnest(list_distinct($toksSql)) AS w FROM documents),
-        h AS (SELECT doc_id, lang, md5(w) AS h FROM w),
-        sums AS (SELECT doc_id, lang, $bitSums FROM h GROUP BY doc_id, lang),
-        sim AS (SELECT doc_id, lang, CAST($simhashExpr AS BIGINT) AS simhash FROM sums)"""
-  }
-
-  private val simhash = Q(
-    "q50_simhash",
-    (s, dir) => simhashFrame(s, dir, 32).select("doc_id", "simhash").orderBy("doc_id"),
-    Some(s"WITH ${simhashSqlCte(32)} SELECT doc_id, simhash FROM sim ORDER BY doc_id"))
-
-  /** SimHash near-dup pairs via LSH segment banding.
-    *
-    * Pigeonhole: `maxHamming` differing bits touch at most `maxHamming`
-    * segments, so with `numSegs > maxHamming` every qualifying pair agrees
-    * exactly on ≥ 1 segment — candidate generation is an equi-join on
-    * `(seg, seg_val, lang)`, never a per-language cross product (the
-    * round-2 lang-only join was quadratic per language; VERDICT #1).
-    * Hamming distance is then verified exactly on the candidates, and
-    * exactly-once emission (below) collapses multi-segment matches, so the
-    * result is
-    * IDENTICAL to the naive all-pairs definition (the oracle still states
-    * it that way). At production scale the signature widens (more bits →
-    * wider segments → finer buckets) with the same code path — see
-    * q56_simhash_wide_pairs for the 56-bit/7-bit-segment parameterization.
-    * (Measured alternative: banding on segment PAIRS (≥2 intact segments
-    * by the same pigeonhole) cuts FALSE candidates ~4× but multiplies the
-    * per-TRUE-pair band collisions 8→28; on corpora with dense near-dup
-    * clusters — like this testdata — the distinct stage dominates and
-    * pair banding is a net loss, so single-segment stays.)
-    */
-  private[graft] def simhashBandPairs(sim: DataFrame, numSegs: Int, segBits: Int,
-                                      maxHamming: Int): DataFrame = {
-    require(numSegs > maxHamming, "pigeonhole needs more segments than allowed errors")
-    val mask = (1L << segBits) - 1
-    val bands = sim.select(col("doc_id"), col("lang"), col("simhash"),
-      explode(expr(
-        s"transform(sequence(0, ${numSegs - 1}), i -> named_struct('seg', i, 'seg_val', shiftright(simhash, i * $segBits) & $mask))")).as("sb"))
-      .select(col("doc_id"), col("lang"),
-        col("sb.seg").as("seg"), col("sb.seg_val").as("seg_val"), col("simhash"))
-    val a = bands.select(col("doc_id").as("doc_a"), col("lang"),
-      col("seg"), col("seg_val"), col("simhash").as("sim_a"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("lang"),
-      col("seg"), col("seg_val"), col("simhash").as("sim_b"))
-    // Exactly-once emission (no `.distinct()`): a pair agreeing on k
-    // segments collides in k band joins; emit it only from its LOWEST
-    // agreeing segment. Both signatures are in the joined row, so "lowest
-    // agreeing" is pure literal-mask arithmetic on sim_a ^ sim_b (a zero
-    // segBits-wide slice of the xor = an agreeing segment) — codegen'd
-    // integer ops per candidate row, replacing the dedup shuffle that
-    // dominated the pair queries on dense near-dup corpora (round-3
-    // verdict: q51/q56/q46/q49 were the 4 slowest clean-run queries, all
-    // bottlenecked on this distinct).
-    val firstAgreeingSeg = (0 until numSegs)
-      .map(j => s"WHEN ((sim_a ^ sim_b) & ${mask << (j * segBits)}L) = 0 THEN $j")
-      .mkString("CASE ", " ", " END")
-    a.join(b, Seq("seg", "seg_val", "lang"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(col("seg") === expr(firstAgreeingSeg))
-      .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-  }
-
-  private val simhashPairs = Q(
-    "q51_simhash_pairs",
-    (s, dir) =>
-      // signature staged once (the bit-sum aggregation is the expensive
-      // part); 8 segments × 4 bits cover the 32-bit signature
-      simhashBandPairs(Staging.stage(simhashFrame(s, dir, 32)), 8, 4, 6)
-        .orderBy("doc_a", "doc_b"),
-    Some(s"""WITH ${simhashSqlCte(32)}
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-              CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-            FROM sim a JOIN sim b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
-            ORDER BY doc_a, doc_b"""))
-
-  // ---- 56-bit simhash at production banding parameters -----------------
-  // The scale-path variant: 7-bit segments give 128 buckets per segment
-  // (vs 16 at 4 bits), so same-segment candidate populations shrink ~8×
-  // while the pigeonhole guarantee (8 segs > 6 errors) is unchanged.
-  private val simhashWidePairs = Q(
-    "q56_simhash_wide_pairs",
-    (s, dir) =>
-      simhashBandPairs(Staging.stage(simhashFrame(s, dir, 56)), 8, 7, 6)
-        .orderBy("doc_a", "doc_b"),
-    Some(s"""WITH ${simhashSqlCte(56)}
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-              CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-            FROM sim a JOIN sim b ON a.lang = b.lang AND a.doc_id < b.doc_id
-            WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
-            ORDER BY doc_a, doc_b"""))
-
-  // ---- brute-force cosine top-k (ANN baseline) -------------------------
-  // Query vector broadcast (1 row); dot products fold left-to-right in
-  // double on both engines, so scores are bit-identical. At cluster scale
-  // this is one scan + TakeOrderedAndProject — no shuffle of the big side.
-  // The dot product is the native codegen'd graft.plans.VectorDot — one
-  // primitive loop per pair instead of interpreted zip_with/aggregate
-  // lambdas (same fold order, bit-identical result).
-  private val dotExpr = "vector_dot(%s, %s)"
-
-  private val cosineTopK = Q(
-    "q47_cosine_topk",
-    (s, dir) => {
-      graft.plans.VectorDot.register(s)
-      val emb = t(s, dir, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      emb.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(qv))
-        .withColumn("dot", expr(dotExpr.format("embedding", "qvec")))
-        .withColumn("na", sqrt(expr(dotExpr.format("embedding", "embedding"))))
-        .withColumn("nb", sqrt(expr(dotExpr.format("qvec", "qvec"))))
-        .withColumn("score", round(col("dot") / (col("na") * col("nb")), 6))
-        .select("vec_id", "score")
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
-    },
-    Some("""WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qvec
-                       FROM embeddings WHERE vec_id = 0),
-            e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings WHERE vec_id <> 0)
-            SELECT vec_id,
-              round(list_dot_product(v, qvec) /
-                    (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qvec, qvec))), 6) AS score
-            FROM e, q ORDER BY score DESC, vec_id LIMIT 10"""))
-
-  // ---- random-projection LSH buckets (the ANN scale path) --------------
-  // Data-derived hyperplanes -> sign bits -> bucket id. ANN lookups then
-  // only scan the query bucket (and its near-Hamming neighbors), turning
-  // top-k into a bucket-equi-join instead of a full scan.
-
-  /** The nPlanes hyperplane vectors, read once driver-side. This is a
-    * bounded scalar read (nPlanes rows of one 64-float column — the same
-    * category as the cursor read, SURVEY §3.1), NOT a data collect; it
-    * lets bucket assignment fold the planes into the projection as
-    * literals so the bucket stage is ONE scan of embeddings with no
-    * shuffle and no re-join on vec_id (round 2 went crossJoin → groupBy →
-    * join-back; VERDICT "Next round" #7).
-    */
-  private def planeVectors(s: SparkSession, dir: String, nPlanes: Int): Seq[Array[Double]] =
-    t(s, dir, "embeddings").filter(col("vec_id").between(1, nPlanes))
-      .orderBy("vec_id").select("embedding").collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray).toSeq
-
-  /** Sign-bit bucket of `embedding` against literal planes; plane i (row
-    * vec_id = i+1) contributes bit 2^i, matching the oracle's
-    * pow(2, plane_id - 1) weighting. Dot products go through the native
-    * vector_dot expression — fold left-to-right in double, bit-identical
-    * to DuckDB's list_dot_product. */
-  private def bucketCol(planes: Seq[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val pl = array(p.toIndexedSeq.map(lit): _*)
-      val dot = call_function("vector_dot", col("embedding"), pl)
-      when(dot > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _).cast("long")
-
-  /** Multi-probe masks: the vector's own bucket (mask 0) plus every
-    * neighbor within Hamming distance 2 (sign flips on up to two
-    * planes). Probing neighbors recovers the recall lost to
-    * near-boundary sign flips, which is what makes a higher plane count
-    * (finer buckets, smaller candidate sets) usable — the standard
-    * multi-probe LSH trade. Depth 2 is what holds the measured
-    * recall@5 ≥ 0.8 floor on this fixture (AnnRecallSpec; depth 1 gave
-    * 0.6): probe count grows O(planes²) while candidate scoring stays
-    * bounded by bucket occupancy × probes.
-    */
-  // masks generated directly — Σ_{d≤depth} C(planes, d) of them — so the
-  // probe set grows polynomially in the plane count (which is log N),
-  // never a 2^planes enumeration. Probe depth itself scales with the
-  // plane count: finer buckets put more true neighbors one extra sign
-  // flip away, and a fixed depth measurably loses them (recall@5 at
-  // 7 planes: 0.68 with depth 2, ≥ 0.8 with depth 3 — AnnRecallSpec).
-  // This is the standard multi-probe LSH trade: probe-sequence length
-  // grows with signature bits while candidate count stays ≈ probes ×
-  // target occupancy.
-  // named so the oracle CTE interpolates the SAME constants — a tuned
-  // breakpoint or depth must move engine and oracle together or the
-  // correctness gate compares different indexes
-  private val probeDepthBreak = 5
-  private val probeDepthShallow = 2
-  private val probeDepthDeep = 3
-  private def probeDepth(nPlanes: Int): Int =
-    if (nPlanes <= probeDepthBreak) probeDepthShallow else probeDepthDeep
-
-  private def probeMasks(nPlanes: Int): Seq[Long] = {
-    def subsets(from: Int, size: Int): Seq[Long] =
-      if (size == 0) Seq(0L)
-      else (from until nPlanes).flatMap(i =>
-        subsets(i + 1, size - 1).map(m => m | (1L << i)))
-    (0 to probeDepth(nPlanes)).flatMap(d => subsets(0, d))
-  }
-
-  private def probeArray(nPlanes: Int): Column =
-    array(probeMasks(nPlanes).map(m => col("bucket").bitwiseXOR(lit(m))): _*)
-
-  private val embedBuckets = Q(
-    "q48_embed_buckets",
-    (s, dir) => {
-      graft.plans.VectorDot.register(s)
-      t(s, dir, "embeddings")
-        .select(col("vec_id"), bucketCol(planeVectors(s, dir, 8)).as("bucket"))
-        .orderBy("vec_id")
-    },
-    Some("""WITH p AS (SELECT vec_id AS plane_id,
-                         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS pvec
-                       FROM embeddings WHERE vec_id BETWEEN 1 AND 8),
-            e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings)
-            SELECT e.vec_id,
-              CAST(SUM(CASE WHEN list_dot_product(v, pvec) > 0
-                            THEN CAST(pow(2, plane_id - 1) AS BIGINT)
-                            ELSE 0 END) AS BIGINT) AS bucket
-            FROM e, p GROUP BY e.vec_id ORDER BY e.vec_id"""))
-
-  // ---- ANN: bucket join + bounded top-k Aggregator (the scale path) ----
-  // Plane count is the scale knob, derived from corpus size so bucket
-  // occupancy ≈ N / 2^planes holds near a fixed target as the corpus
-  // grows (multi-probe keeps recall as buckets get finer). The target is
-  // set against MEASURED recall (AnnRecallSpec: recall@5 vs exact brute
-  // force ≥ 0.8 at BOTH sf0.01 and sf0.1 — a fixed plane count can't do
-  // that: 6 planes over 500 vectors left buckets too sparse, recall
-  // 0.36, while 4 planes over 50 M vectors would mean 3 M-row buckets).
-  // Selection still goes through the bounded-heap TopKAgg so a bucket
-  // with millions of candidates only shuffles k rows per group.
-  private val annOccupancyTarget = 32.0
-
-  // one count per scale-factor dir, memoized: the plane knob must not
-  // cost a scan per query invocation
-  private val annPlaneCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  /** Planes for this corpus: occupancy N/2^planes ≈ annOccupancyTarget,
-    * floored at 2. The oracle SQL derives the SAME knob from the same
-    * count (`annSqlCte`'s np/npd CTEs mirror this formula and
-    * `probeDepth` in DuckDB), so q53/q54 bit-equality holds at every
-    * scale factor the gate might run, not just sf0.01 — and
-    * AnnRecallSpec separately pins the measured recall floor at both
-    * sf0.01 and sf0.1. */
-  private[graft] def annPlanesFor(s: SparkSession, dir: String): Int =
-    annPlaneCache.computeIfAbsent(dir, _ => {
-      val n = t(s, dir, "embeddings").count()
-      math.max(2, math.round(math.log(n / annOccupancyTarget) / math.log(2)).toInt)
-    }).intValue()
-
-  // The staged frame carries each vector's norm so candidate scoring does
-  // one dot product per pair instead of three (norms were recomputed
-  // per-pair in round 2 — at bucket occupancy c that is 2c extra
-  // 64-dim folds per candidate).
-  private def bucketedEmbeddings(s: SparkSession, dir: String, nPlanes: Int): DataFrame = {
-    graft.plans.VectorDot.register(s)
-    t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"),
-        bucketCol(planeVectors(s, dir, nPlanes)).as("bucket"),
-        sqrt(expr(dotExpr.format("embedding", "embedding"))).as("norm"))
-  }
-
-  /** Shared q53/q54 oracle CTE. Derives the plane count and probe depth
-    * from the corpus count with the SAME formulas as `annPlanesFor` /
-    * `probeDepth` (ln/ln(2) rather than log2, mirroring the Scala
-    * arithmetic to the ulp), then enumerates the probe-mask set as all
-    * bit patterns of popcount ≤ depth — so engine/oracle bit-equality
-    * holds at any scale factor. The 2^planes mask enumeration is
-    * oracle-only (planes is O(log N), a few thousand rows at most);
-    * the engine generates the O(planes^depth) subsets directly. */
-  private val annSqlCte: String =
-    s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       np AS (SELECT GREATEST(2, CAST(round(ln(count(*) / $annOccupancyTarget) / ln(2)) AS INTEGER)) AS planes FROM e),
-       npd AS (SELECT planes, CASE WHEN planes <= $probeDepthBreak THEN $probeDepthShallow ELSE $probeDepthDeep END AS depth FROM np),
-       p AS (SELECT vec_id AS plane_id, v AS pvec FROM e, np WHERE vec_id BETWEEN 1 AND planes),
-       b AS (SELECT e.vec_id,
-               CAST(SUM(CASE WHEN list_dot_product(v, pvec) > 0
-                             THEN CAST(pow(2, plane_id - 1) AS BIGINT) ELSE 0 END) AS BIGINT) AS bucket
-             FROM e, p GROUP BY e.vec_id),
-       eb AS (SELECT e.vec_id, e.v, sqrt(list_dot_product(e.v, e.v)) AS norm, b.bucket
-              FROM e JOIN b ON e.vec_id = b.vec_id),
-       masks AS (SELECT u.m FROM npd, unnest(range(0, CAST(pow(2, planes) AS BIGINT))) AS u(m)
-                 WHERE bit_count(u.m) <= npd.depth),
-       ebp AS (SELECT vec_id, v, norm, bucket, xor(bucket, masks.m) AS probe FROM eb, masks)"""
-
-  private val annTopK = Q(
-    "q53_ann_topk",
-    (s, dir) => {
-      val planes = annPlanesFor(s, dir)
-      val e = Staging.stage(bucketedEmbeddings(s, dir, planes))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-          col("norm").as("qnorm"), explode(probeArray(planes)).as("bucket"))
-      val scored = queries.join(e, Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("score",
-          expr(dotExpr.format("embedding", "qvec")) / (col("norm") * col("qnorm")))
-      val topk = graft.llm.TopK.topK(5)
-      scored.groupBy("query_id")
-        .agg(topk(col("vec_id"), col("score")).as("nn"))
-        .select(col("query_id"), explode(col("nn")).as("n"))
-        .select(col("query_id"), col("n.id").as("vec_id"),
-          round(col("n.score"), 6).as("score"))
-        .orderBy(col("query_id"), col("score").desc, col("vec_id"))
-    },
-    Some(s"""WITH ${annSqlCte},
-            q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm, probe
-                  FROM ebp WHERE vec_id < 5),
-            scored AS (
-              SELECT q.query_id, c.vec_id,
-                list_dot_product(c.v, q.qv) / (c.norm * q.qnorm) AS score
-              FROM q JOIN eb c ON q.probe = c.bucket AND c.vec_id <> q.query_id)
-            SELECT query_id, vec_id, round(score, 6) AS score FROM scored
-            QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) <= 5
-            ORDER BY query_id, score DESC, vec_id"""))
-
-  // ---- embedding-cosine near-dup pairs over LSH buckets ----------------
-  // Same-bucket pairs plus Hamming-distance neighbor buckets (multi-probe): a
-  // true near-dup straddling one hyperplane is still found. Each pair is
-  // matched exactly once — XOR adjacency is symmetric and only side `a`
-  // explodes its probe set.
-  private val embedNearDup = Q(
-    "q54_embed_neardup",
-    (s, dir) => {
-      val planes = annPlanesFor(s, dir)
-      val e = Staging.stage(bucketedEmbeddings(s, dir, planes))
-      val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
-        col("norm").as("norm_a"), explode(probeArray(planes)).as("bucket"))
-      val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("vb"),
-        col("norm").as("norm_b"), col("bucket"))
-      a.join(b, Seq("bucket")).filter(col("vec_a") < col("vec_b"))
-        .withColumn("score",
-          expr(dotExpr.format("va", "vb")) / (col("norm_a") * col("norm_b")))
-        .filter(col("score") >= 0.35)
-        .select(col("vec_a"), col("vec_b"), round(col("score"), 6).as("score"))
-        .orderBy("vec_a", "vec_b")
-    },
-    Some(s"""WITH ${annSqlCte},
-            pr AS (
-              SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                list_dot_product(a.v, b.v) / (a.norm * b.norm) AS score
-              FROM ebp a JOIN eb b ON a.probe = b.bucket AND a.vec_id < b.vec_id)
-            SELECT vec_a, vec_b, round(score, 6) AS score FROM pr
-            WHERE score >= 0.35 ORDER BY vec_a, vec_b"""))
-
-  // ---- IVF-style ANN: centroid cells + nprobe=2 ------------------------
-  // The inverted-file layout: every vector assigns to its nearest
-  // centroid (sampled centroids here — production would refine them with
-  // Lloyd iterations, the assignment/probe machinery is identical), a
-  // query probes its 2 nearest cells, and scoring touches only those
-  // cells' vectors. Complements the random-projection path (q53): IVF
-  // cells adapt to the data distribution where hyperplane buckets are
-  // oblivious to it. Assignment is a broadcast of the tiny centroid set
-  // against one scan; the probe join is a cell equi-join; selection is
-  // the bounded-heap TopK — the same k-rows-per-group shuffle bound.
-  /** The IVF probe oracle, shared VERBATIM by q57 (batch build) and
-    * q126 (streamed index) - the q126 contract is that the streamed
-    * index answers THIS query, so one constant keeps it true by
-    * construction. */
-  private val ivfOracleSql =
-    """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                       FROM embeddings),
-            en AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-            c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-                  FROM en WHERE vec_id BETWEEN 1 AND 8),
-            r AS (SELECT en.vec_id, en.v, en.norm, c.cent_id,
-                    row_number() OVER (PARTITION BY en.vec_id
-                      ORDER BY list_dot_product(en.v, c.cv) / (en.norm * c.cnorm) DESC,
-                               c.cent_id) AS rk
-                  FROM en, c),
-            cells AS (SELECT vec_id, v, norm, cent_id AS cell FROM r WHERE rk = 1),
-            q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm, cent_id AS cell
-                  FROM r WHERE rk <= 2 AND vec_id < 5),
-            scored AS (
-              SELECT q.query_id, cand.vec_id,
-                list_dot_product(cand.v, q.qv) / (cand.norm * q.qnorm) AS score
-              FROM q JOIN cells cand ON q.cell = cand.cell AND cand.vec_id <> q.query_id)
-            SELECT query_id, vec_id, round(score, 6) AS score FROM scored
-            QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) <= 5
-            ORDER BY query_id, score DESC, vec_id"""
-
-  private val ivfTopK = Q(
-    "q57_ivf_topk",
-    (s, dir) => {
-      graft.plans.VectorDot.register(s)
-      val emb = t(s, dir, "embeddings")
-        .withColumn("norm", sqrt(expr(dotExpr.format("embedding", "embedding"))))
-      val cents = emb.filter(col("vec_id").between(1, 8))
-        .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"),
-          col("norm").as("cnorm"))
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cent_id"))
-      val ranked = Staging.stage(emb.crossJoin(broadcast(cents))
-        .withColumn("sim",
-          expr(dotExpr.format("embedding", "cvec")) / (col("norm") * col("cnorm")))
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cent_id"),
-          row_number().over(w).as("rk")))
-      val cells = ranked.filter(col("rk") === 1)
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cent_id").as("cell"))
-      val probes = ranked.filter(col("rk") <= 2 && col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-          col("norm").as("qnorm"), col("cent_id").as("cell"))
-      val scored = probes.join(cells, Seq("cell"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("score",
-          expr(dotExpr.format("embedding", "qvec")) / (col("norm") * col("qnorm")))
-      val topk = graft.llm.TopK.topK(5)
-      scored.groupBy("query_id")
-        .agg(topk(col("vec_id"), col("score")).as("nn"))
-        .select(col("query_id"), explode(col("nn")).as("n"))
-        .select(col("query_id"), col("n.id").as("vec_id"),
-          round(col("n.score"), 6).as("score"))
-        .orderBy(col("query_id"), col("score").desc, col("vec_id"))
-    },
-    Some(ivfOracleSql))
-
-  // ---- product-quantization ANN (ADC over packed codes) ----------------
-  // The compression tier of similarity search at 100 TB (Jégou et al.,
-  // "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
-  // vectors are stored as m per-subspace codebook indices — here m=4
-  // subspaces of 16 dims over the 64-dim embeddings, k=8 centroids per
-  // subspace — and a query scans CODES, never raw floats, via
-  // asymmetric distance computation (ADC): one lookup table of
-  // query-to-centroid sub-distances per query, approx distance = sum of
-  // m table entries. 256 bytes of floats become m small ints per vector;
-  // the corpus pass reads the packed code table only.
-  //
-  // Codebook: the per-subspace slices of 8 fixed corpus vectors —
-  // deterministic the same way q57's centroids and q48's planes are, so
-  // the DuckDB oracle replays it exactly. Production trains codebooks
-  // with k-means over a sample offline (k=256, m=d/8); the encode/ADC
-  // machinery here is unchanged by where the codebook came from. No
-  // AnnRecallSpec floor covers q94, deliberately: on this fixture
-  // recall@5 sits at ~0.2 regardless of codebook size (k=8..128) or
-  // k-means training (measured through 10 Lloyd iterations) — at m=4
-  // codes the quantization error dominates the fixture's neighbor
-  // gaps, so recall here measures the fixture, not the operator. The
-  // oracle pins the encode/ADC machinery exactly instead.
-  //
-  // Scale shape: encoding is one keyed window over (vector, subspace)
-  // groups of k rows against the BROADCAST codebook, paid once at index
-  // build; the packed table (vec_id, m codes) is built by one groupBy.
-  // At query time the per-query LUT (m*k entries each) broadcasts as a
-  // map column, the scan is map-only (aggregate lambda over the m codes
-  // — no join, no shuffle touches the corpus), and the N x Q candidate
-  // stream collapses map-side in the bounded-heap TopK aggregator:
-  // shuffle volume is queries x k rows, independent of corpus size.
-  private val pqTopK = Q(
-    "q94_pq_topk",
-    (s, dir) => {
-      graft.plans.VectorDot.register(s)
-      val sub = t(s, dir, "embeddings")
-        .select(col("vec_id"), explode(expr(
-          "transform(sequence(0, 3), i -> struct(i AS s, slice(embedding, 16*i+1, 16) AS sv))"))
-          .as("x"))
-        .select(col("vec_id"), col("x.s").as("sub"), col("x.sv").as("sv"))
-      val cb = sub.filter(col("vec_id").between(1, 8))
-        .select(col("sub"), col("vec_id").as("cent_id"), col("sv").as("cv"))
-      // ||a-b||^2 via dot products only — the identical float path the
-      // oracle's list_dot_product takes
-      val dists = Staging.stage(
-        sub.join(broadcast(cb), Seq("sub"))
-          .withColumn("d2",
-            expr(dotExpr.format("sv", "sv"))
-              - lit(2) * expr(dotExpr.format("sv", "cv"))
-              + expr(dotExpr.format("cv", "cv")))
-          .select(col("vec_id"), col("sub"), col("cent_id"), col("d2")))
-      val wc = Window.partitionBy("vec_id", "sub").orderBy(col("d2"), col("cent_id"))
-      val encoded = dists
-        .withColumn("rk", row_number().over(wc)).filter(col("rk") === 1)
-        .groupBy("vec_id")
-        .agg(sort_array(collect_list(struct(col("sub"), col("cent_id").as("code"))))
-          .as("codes"))
-      val lut = dists.filter(col("vec_id") < 5)
-        .groupBy(col("vec_id").as("query_id"))
-        .agg(map_from_entries(collect_list(
-          struct(col("sub") * lit(8) + col("cent_id"), col("d2")))).as("lutmap"))
-      val topk = graft.llm.TopK.topK(5)
-      // the rank cut runs on the ROUNDED distance: the 4-term double sum
-      // has no specified accumulation order on the oracle side (hash-agg
-      // arrival order), so two equal-code candidates can land 1 ULP
-      // apart there while this side's sorted-array lambda makes them
-      // bit-identical — rounding before the cut collapses ULP noise so
-      // both engines break the tie on vec_id, not on summation order
-      encoded.crossJoin(broadcast(lut))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("nscore", -round(expr(
-          "aggregate(codes, 0D, (acc, c) -> acc + element_at(lutmap, c.sub * 8 + c.code))"), 6))
-        .groupBy("query_id")
-        .agg(topk(col("vec_id"), col("nscore")).as("nn"))
-        .select(col("query_id"), explode(col("nn")).as("n"))
-        .select(col("query_id"), col("n.id").as("vec_id"),
-          (-col("n.score")).as("approx_dist"))
-        .orderBy(col("query_id"), col("approx_dist"), col("vec_id"))
-    },
-    Some("""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                       FROM embeddings),
-            st AS (SELECT unnest(generate_series(0, 3)) AS s),
-            sub AS (SELECT vec_id, s, v[16*s+1 : 16*s+16] AS sv FROM e CROSS JOIN st),
-            cb AS (SELECT s, vec_id AS cent_id, sv AS cv FROM sub
-                   WHERE vec_id BETWEEN 1 AND 8),
-            d AS (SELECT sub.vec_id, sub.s, cb.cent_id,
-                    list_dot_product(sub.sv, sub.sv)
-                      - 2 * list_dot_product(sub.sv, cb.cv)
-                      + list_dot_product(cb.cv, cb.cv) AS d2
-                  FROM sub JOIN cb ON sub.s = cb.s),
-            codes AS (SELECT vec_id, s, cent_id AS code FROM d
-                      QUALIFY row_number() OVER (PARTITION BY vec_id, s
-                        ORDER BY d2, cent_id) = 1),
-            adc AS (SELECT l.vec_id AS query_id, c.vec_id,
-                      round(sum(l.d2), 6) AS approx_dist
-                    FROM codes c JOIN d l
-                      ON c.s = l.s AND c.code = l.cent_id AND l.vec_id < 5
-                        AND c.vec_id <> l.vec_id
-                    GROUP BY l.vec_id, c.vec_id)
-            SELECT query_id, vec_id, approx_dist FROM adc
-            QUALIFY row_number() OVER (PARTITION BY query_id
-              ORDER BY approx_dist, vec_id) <= 5
-            ORDER BY query_id, approx_dist, vec_id"""))
-
-  // ---- native-Expression rolling-hash fingerprint ----------------------
-  // Exercises graft.plans.RollingFingerprint — the codegen'd Catalyst
-  // Expression — end to end through SQL function resolution.
-  private val rollingFp = Q(
-    "q55_rolling_fp",
-    (s, dir) => {
-      graft.plans.RollingFingerprint.register(s)
-      t(s, dir, "documents")
-        .select(col("doc_id"), expr("rolling_fingerprint(lower(text), 8)").as("fp"))
-        .orderBy("doc_id")
-    },
-    Some("""WITH t AS (SELECT doc_id, lower(text) AS s FROM documents)
-            SELECT doc_id,
-              CAST(CASE WHEN length(s) = 0 THEN 0
-                   WHEN length(s) >= 8 THEN
-                     list_min(list_transform(generate_series(1, length(s) - 7),
-                       i -> list_sum(list_transform(generate_series(0, 7),
-                         j -> ascii(substr(s, i + j, 1)) * CAST(pow(31, 7 - j) AS BIGINT)))))
-                   ELSE
-                     list_sum(list_transform(generate_series(0, length(s) - 1),
-                       j -> ascii(substr(s, 1 + j, 1)) * CAST(pow(31, length(s) - 1 - j) AS BIGINT)))
-              END AS BIGINT) AS fp
-            FROM t ORDER BY doc_id"""))
-
-  // ---- composite quality score (length/punct/stopword, brief §text) ----
-  // The filter stage of a training-data pipeline: per-doc quality in
-  // [0, 1] from punctuation density, stopword ratio, and mean word
-  // length. Pure single-pass column arithmetic — at 100 TB this is a
-  // map-only stage that fuses into the scan.
-  /** Per-doc quality signals + composite score (map-only; the
-    * ratio columns are UNROUNDED — consumers round at emission). The
-    * `quality` column is rounded 6 dp so rankings over it tie-break
-    * identically cross-engine. Shared by q60 (the report) and q101
-    * (quality-ranked survivor selection). */
-  private def qualityCols(docs: DataFrame): DataFrame =
-    Staging.spread(docs)
-      .withColumn("toks", expr(toksExpr))
-      .withColumn("tok_cnt", size(col("toks")).cast("double"))
-      .withColumn("punct_ratio",
-        length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", "")).cast("double") /
-          greatest(length(col("text")).cast("double"), lit(1.0)))
-      .withColumn("stop_ratio",
-        when(col("tok_cnt") > 0,
-          expr("CAST(size(filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to'))) AS DOUBLE)")
-            / col("tok_cnt")).otherwise(lit(0.0)))
-      .withColumn("mean_word_len",
-        when(col("tok_cnt") > 0,
-          length(array_join(col("toks"), "")).cast("double") / col("tok_cnt"))
-          .otherwise(lit(0.0)))
-      .withColumn("quality",
-        round(lit(0.4) * (lit(1.0) - col("punct_ratio")) +
-          lit(0.3) * least(col("stop_ratio") * 4, lit(1.0)) +
-          lit(0.3) * least(col("mean_word_len") / 8, lit(1.0)), 6))
-
-  /** DuckDB twin of [[qualityCols]]'s ratio stage (`qb`/`qm` names — the
-    * minhash CTE chain owns `b`, so queries composing both can share one
-    * WITH). Consumers compute/round `quality` at their emission site. */
-  private val qualitySqlCte =
-    s"""qb AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
-        qm AS (SELECT doc_id,
-          CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) /
-            greatest(CAST(length(text) AS DOUBLE), 1.0) AS punct_ratio,
-          CASE WHEN len(toks) > 0
-            THEN CAST(len(list_filter(toks, x -> list_contains(['the', 'a', 'of', 'and', 'to'], x))) AS DOUBLE)
-              / CAST(len(toks) AS DOUBLE) ELSE 0.0 END AS stop_ratio,
-          CASE WHEN len(toks) > 0
-            THEN CAST(length(array_to_string(toks, '')) AS DOUBLE) / CAST(len(toks) AS DOUBLE)
-            ELSE 0.0 END AS mean_word_len,
-          CAST(len(toks) AS DOUBLE) AS tok_cnt
-        FROM qb)"""
-
-  private val qualityScore = Q(
-    "q60_quality_score",
-    (s, dir) =>
-      qualityCols(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          round(col("punct_ratio"), 6).as("punct_ratio"),
-          round(col("stop_ratio"), 6).as("stop_ratio"),
-          round(col("mean_word_len"), 6).as("mean_word_len"),
-          col("quality"))
-        .orderBy("doc_id"),
-    Some(s"""WITH $qualitySqlCte
-            SELECT doc_id,
-              round(punct_ratio, 6) AS punct_ratio,
-              round(stop_ratio, 6) AS stop_ratio,
-              round(mean_word_len, 6) AS mean_word_len,
-              round(0.4 * (1.0 - punct_ratio) +
-                    0.3 * least(stop_ratio * 4, 1.0) +
-                    0.3 * least(mean_word_len / 8, 1.0), 6) AS quality
-            FROM qm ORDER BY doc_id"""))
-
-  // ---- PII scrubbing (map-only redaction pass) -------------------------
-  // The redaction stage of a training-data pipeline: emails and long
-  // digit runs are replaced with typed placeholder tokens (graft.
-  // functions.F.redactPii — Column API only; `expr()` string literals
-  // would unescape the regex). Output carries the redaction counts and a
-  // fingerprint of the scrubbed text (not the text itself — the compare
-  // stays small and the md5 proves byte-identical scrubbing). Map-only:
-  // fuses into the scan at any scale. This fixture contains no PII-shaped
-  // strings (the oracle pins the no-op path); the redaction semantics
-  // themselves are pinned on synthetic text in FunctionsSpec.
-  private val piiScrub = Q(
-    "q62_pii_scrub",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          F.matchCount(col("text"), F.emailRe).as("n_emails"),
-          F.matchCount(col("text"), F.longNumRe).as("n_long_nums"),
-          md5(F.redactPii(col("text"))).as("clean_fp"))
-        .orderBy("doc_id"),
-    Some(s"""SELECT doc_id,
-              CAST(len(regexp_extract_all(text, '${F.emailRe}')) AS BIGINT) AS n_emails,
-              CAST(len(regexp_extract_all(text, '${F.longNumRe}')) AS BIGINT) AS n_long_nums,
-              md5(regexp_replace(regexp_replace(text, '${F.emailRe}', '<EMAIL>', 'g'),
-                  '${F.longNumRe}', '<NUM>', 'g')) AS clean_fp
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- composed corpus-cleaning chain ----------------------------------
-  // The canonical training-data filter pipeline as ONE declarative plan:
-  // exact dedup (first-doc-wins on content hash) -> length band ->
-  // stopword-based language gate. Each stage is an operator proven
-  // elsewhere (q44, q40, q42); composing them shows the stages fuse —
-  // the dedup window is the only shuffle, the filters ride the same scan.
-  private val corpusFilter = Q(
-    "q63_corpus_filter",
-    (s, dir) => {
-      val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      t(s, dir, "documents")
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .withColumn("toks", expr(toksExpr))
-        .withColumn("stop_cnt",
-          expr("size(filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'to')))"))
-        .filter(col("n_chars").between(150, 450) &&
-          col("stop_cnt") * 16 > size(col("toks")))
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH d AS (
-              SELECT doc_id, lang, n_chars, text FROM documents
-              QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1),
-            b AS (SELECT doc_id, lang, n_chars, $toksSql AS toks FROM d)
-            SELECT doc_id, lang, n_chars FROM b
-            WHERE n_chars BETWEEN 150 AND 450
-              AND len(list_filter(toks, x -> list_contains(['the', 'a', 'of', 'and', 'to'], x))) * 16
-                  > len(toks)
-            ORDER BY doc_id"""))
-
-  // ---- multimodal: opaque binary payload + typed metadata --------------
-  // Image/audio decode itself is stubbed (no media libs in-container;
-  // see graft.llm.Multimodal for the mapPartitions plumbing) — the
-  // Spark-side schema/hash/metadata path is real and oracle-checked.
-  private val multimodalMeta = Q(
-    "q52_multimodal_meta",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("payload", encode(col("text"), "UTF-8"))
-        .select(col("doc_id"),
-          octet_length(col("payload")).cast("long").as("byte_len"),
-          md5(col("payload")).as("content_hash"))
-        .orderBy("doc_id"),
-    Some("""SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-              md5(text) AS content_hash
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- multimodal: REAL header decode (PNG IHDR / JPEG SOF) ------------
-  // Closes the round-9 stub: dimensions come out of the payload bytes
-  // (graft.llm.Multimodal.parseDims — PNG's fixed-offset big-endian
-  // IHDR fields, ITU T.81's marker walk to SOF for JPEG), not a
-  // synthesized formula. The fixture ships no real media, so the query
-  // manufactures it deterministically: each doc becomes a valid PNG
-  // (even doc_id) or JPEG (odd) whose header encodes dimensions derived
-  // from doc_id, with the doc's UTF-8 text as the body. The oracle
-  // recomputes the expected dimensions arithmetically — any byte-level
-  // disagreement between builder and parser breaks the round-trip and
-  // the hash diverges. (A bug symmetric in builder AND parser is the
-  // one thing this oracle can't see; MultimodalSpec's golden fixtures —
-  // hand-written byte literals straight from the specs — pin byte order
-  // and the marker walk against that.) The declared kind is a sentinel
-  // ('media/raw'): the output kind comes from magic-byte DETECTION, so
-  // a parse failure surfaces as a kind mismatch, not silence. Scale
-  // shape: one typed mapPartitions over the corpus, map-only, no
-  // shuffle before the presentation sort.
-  private val multimodalDecode = Q(
-    "q97_multimodal_decode",
-    (s, dir) => {
-      import s.implicits._
-      import graft.llm.Multimodal
-      val media = t(s, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val body = Option(text).getOrElse("").getBytes("UTF-8")
-          val w = (id * 37 % 2000 + 16).toInt
-          val h = (id * 59 % 1200 + 16).toInt
-          if (id % 2 == 0)
-            Multimodal.MediaRow(id, "media/raw", Multimodal.pngPayload(w, h, body))
-          else
-            Multimodal.MediaRow(id, "media/raw", Multimodal.jpegPayload(w, h, body))
-        }
-      Multimodal.decodeMeta(media)
-        .select(col("media_id").as("doc_id"), col("kind"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("byte_len"))
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id,
-              CASE WHEN doc_id % 2 = 0 THEN 'image/png' ELSE 'image/jpeg' END AS kind,
-              CAST(doc_id * 37 % 2000 + 16 AS BIGINT) AS width,
-              CAST(doc_id * 59 % 1200 + 16 AS BIGINT) AS height,
-              CAST(33 + COALESCE(octet_length(encode(text)), 0) AS BIGINT) AS byte_len
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- multimodal: audio/video header decode (WAV fmt / MP4 mvhd) ------
-  // q97's pattern for the time-based containers: each doc becomes a
-  // complete PCM WAV (even doc_id — format fields and duration ride the
-  // canonical 44-byte header, little-endian) or an ISO-BMFF header with
-  // a spec-complete v0 mvhd (odd — movie duration via the box walk,
-  // big-endian), parameters derived from doc_id so the oracle recomputes
-  // them arithmetically; every derivation divides exactly, so no
-  // floor-rounding seam exists between engines. Golden byte literals in
-  // MultimodalSpec again cover the builder/parser-symmetric blind spot.
-  // Scale shape: identical to q97 — one typed mapPartitions, map-only.
-  private val multimodalAv = Q(
-    "q98_multimodal_av",
-    (s, dir) => {
-      import s.implicits._
-      import graft.llm.Multimodal
-      val media = t(s, dir, "documents")
-        .select(col("doc_id")).as[Long]
-        .map { id =>
-          if (id % 2 == 0) {
-            val k = (id % 3 + 1).toInt
-            val ch = if (id % 4 == 0) 1 else 2
-            val n = (8 * k * (id % 50 + 1)).toInt
-            Multimodal.MediaRow(id, "media/raw",
-              Multimodal.wavPayload(8000 * k, ch, 16, n))
-          } else {
-            val units = (id * 7) % 10000 + 600
-            Multimodal.MediaRow(id, "media/raw", Multimodal.mp4Payload(500, units))
-          }
-        }
-      Multimodal.decodeAvMeta(media)
-        .select(col("media_id").as("doc_id"), col("kind"), col("byte_len"),
-          col("sample_rate").cast("long").as("sample_rate"),
-          col("channels").cast("long").as("channels"),
-          col("duration_ms"))
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id,
-              CASE WHEN doc_id % 2 = 0 THEN 'audio/wav' ELSE 'video/mp4' END AS kind,
-              CAST(CASE WHEN doc_id % 2 = 0
-                THEN 44 + 8*(doc_id%3+1)*(doc_id%50+1)
-                     * (CASE WHEN doc_id%4=0 THEN 1 ELSE 2 END) * 2
-                ELSE 132 END AS BIGINT) AS byte_len,
-              CAST(CASE WHEN doc_id % 2 = 0 THEN 8000*(doc_id%3+1)
-                ELSE -1 END AS BIGINT) AS sample_rate,
-              CAST(CASE WHEN doc_id % 2 = 0
-                THEN (CASE WHEN doc_id%4=0 THEN 1 ELSE 2 END)
-                ELSE -1 END AS BIGINT) AS channels,
-              CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id%50+1
-                ELSE ((doc_id*7)%10000+600)*2 END AS BIGINT) AS duration_ms
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- vocabulary building: document frequency, top-N ------------------
-  // The vocab/BPE-prep stage of a training-data pipeline: distinct tokens
-  // per doc, document frequency across the corpus, top-N. The classic
-  // map-reduce: explode is linear, the count aggregates map-side
-  // (partial_count before the shuffle — one row per distinct token per
-  // partition on the wire), and selection is TakeOrderedAndProject. At
-  // 100 TB the shuffle is bounded by vocabulary size, not corpus size.
-  private val vocabDf = Q(
-    "q64_vocab_df",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .select(explode(expr(s"array_distinct($toksExpr)")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("df"))
-        .orderBy(col("df").desc, col("token"))
-        .limit(200),
-    Some(s"""WITH b AS (SELECT doc_id, list_distinct($toksSql) AS toks FROM documents),
-            x AS (SELECT doc_id, unnest(toks) AS token FROM b)
-            SELECT token, count(*) AS df FROM x GROUP BY token
-            ORDER BY df DESC, token LIMIT 200"""))
-
-  // ---- train/test decontamination: shingle overlap vs a benchmark set --
-  // The contamination check every training corpus needs: documents
-  // sharing >= 2 distinct 3-word shingles with any benchmark document
-  // (here: doc_id < 10 plays the held-out benchmark). The benchmark
-  // shingle set is tiny relative to the corpus and broadcasts; the
-  // corpus side is one linear shingle explode and a broadcast hash
-  // equi-join on the shingle md5 (fixed-width key, not the string) —
-  // no shuffle of the 100 TB side, and the per-doc count aggregates
-  // map-side. Overlap is counted on DISTINCT shingles per doc, so a
-  // repeated phrase can't inflate past the threshold.
-  private val decontaminate = Q(
-    "q65_decontaminate",
-    (s, dir) => {
-      val sh = shingleHashes(t(s, dir, "documents"))
-      val bench = sh.filter(col("doc_id") < 10).select("h").distinct()
-      sh.filter(col("doc_id") >= 10)
-        .join(broadcast(bench), Seq("h"))
-        .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            shl AS (SELECT doc_id, list_distinct($shingleSql) AS shingles FROM b),
-            shx AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM shl),
-            bench AS (SELECT DISTINCT h FROM shx WHERE doc_id < 10)
-            SELECT s.doc_id, count(*) AS n_shared
-            FROM shx s JOIN bench USING (h)
-            WHERE s.doc_id >= 10
-            GROUP BY s.doc_id HAVING count(*) >= 2
-            ORDER BY doc_id"""))
-
-  /** Bloom-filter decontamination — the scale path when the exclusion
-    * set outgrows q65's broadcast. q65 hash-joins the corpus's shingles
-    * against a broadcast benchmark set, which is right while the
-    * benchmark is an eval suite (10³–10⁴ shingles) but wrong once the
-    * exclusion set outgrows it (held-out training splits, licensed-
-    * content blocklists — the broadcast would be GBs of strings). The
-    * trade: a Bloom filter over xxhash64'd shingle hashes (~1.2 bytes
-    * per excluded item at 1% fpp) probed per corpus shingle by Spark's
-    * own codegen'd `BloomFilterMightContain`
-    * ([[graft.plans.BloomProbe]]) — the whole gate is ONE map-only
-    * filter over the corpus scan: no join, no shuffle, no broadcast of
-    * the exclusion strings. The serialized filter rides the plan as a
-    * folded binary constant, which is the right shape up to ~10⁷
-    * excluded items (tens of MB of plan constant); past that use
-    * [[bloomDecontaminationKeptLarge]], whose filter never enters the
-    * plan text at all.
-    *
-    * Error is one-sided: a doc the exact gate drops is ALWAYS dropped
-    * here too (a Bloom filter has no false negatives, so every truly
-    * shared shingle probes true), while a clean doc is over-dropped only
-    * if ≥ `minShared` of its shingles false-positive independently.
-    * The textbook bound P ≲ C(n_shingles, minShared) · fpp^minShared
-    * does NOT hold below ~1e-4, because spark-sketch's realized fpp has
-    * a STRUCTURAL FLOOR the requested fpp cannot buy through: its
-    * Kirsch-Mitzenmacher probe sequence (h1 + i·h2 over two 32-bit
-    * Murmur3 halves) collides pairwise at small bit-array sizes —
-    * measured 5·10⁻⁵ at n=800 for a requested 1e-8, flipping
-    * threshold-boundary docs (exactly minShared-1 real shared shingles)
-    * at corpus scale. So for `fpp` below [[SketchFloorFpp]] the gate
-    * builds TWO filters over independently-salted keys
-    * (`xxhash64(h)` and `xxhash64(h, 1)`) and requires BOTH to hit:
-    * the errors multiply across the independent hash spaces (measured 0
-    * in 5·10⁶ probes at every tested size), at 2× the filter bytes and
-    * one extra codegen'd probe per shingle. The filters are built
-    * DISTRIBUTED (partial filters OR-merged on the driver by
-    * `stat.bloomFilter`) in one pass each over the benchmark; both
-    * build and probe go through the same spark-sketch implementation so
-    * putLong/mightContainLong agree bit-for-bit.
-    *
-    * @return the docs KEPT (complement of the dropped set), like the
-    *         streaming gate — the corpus pipeline's consumption shape */
-  def bloomDecontaminationKept(docs: DataFrame, benchmark: DataFrame,
-                               minShared: Int = 2,
-                               fpp: Double = 0.001): DataFrame = {
-    val spark = docs.sparkSession
-    graft.plans.BloomProbe.register(spark)
-    val hs = shingleHashes(benchmark).filter(col("h").isNotNull)
-      .select("h").distinct()
-    val expected = math.max(1L, hs.count())
-    // each serialized filter rides the plan as ONE folded binary
-    // constant (unbase64 of a literal), evaluated zero times per row
-    def filterCol(key: Column): Column = {
-      val bf = hs.select(key.as("hl")).stat.bloomFilter("hl", expected, fpp)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
-      unbase64(lit(java.util.Base64.getEncoder.encodeToString(bos.toByteArray)))
-    }
-    val bf1 = filterCol(xxhash64(col("h")))
-    val probe: Column => Column =
-      if (fpp < SketchFloorFpp) {
-        val bf2 = filterCol(xxhash64(col("h"), lit(1)))
-        h => call_function("bloom_might_contain", bf1, xxhash64(h)) &&
-          call_function("bloom_might_contain", bf2, xxhash64(h, lit(1)))
-      } else h => call_function("bloom_might_contain", bf1, xxhash64(h))
-    // count the doc's DISTINCT shingles that might be excluded (same
-    // distinct-shingle semantics as q65); a doc with no shingles (null
-    // text) cannot be contaminated — coalesce keeps it
-    val shared = size(filter(expr(shingleHashArrayExpr), probe))
-    docs.filter(coalesce(shared < minShared, lit(true)))
-  }
-
-  /** Requested-fpp threshold below which one spark-sketch filter cannot
-    * deliver (the 32-bit double-hashing floor, see
-    * [[bloomDecontaminationKept]]); both gates switch to the
-    * AND-of-two-salted-filters probe under it. */
-  private val SketchFloorFpp = 1e-4
-
-  /** [[bloomDecontaminationKept]] for exclusion sets too large to ride
-    * the plan as a constant (10⁸+ shingles): the filter is built by the
-    * DISTRIBUTED `bloom_filter_agg` (per-partition partial filters
-    * OR-merged upward) and reaches the probe as an uncorrelated scalar
-    * subquery — exactly the mechanism Spark's own runtime join-filter
-    * rewrite uses at this scale, evaluated once per query, never
-    * embedded in the plan text and never round-tripped through a
-    * `collect`. Spark rejects subqueries inside higher-order-function
-    * lambdas, so the probe runs at exploded (doc_id, shingle) rows:
-    * one linear map-side explode, the probe filter drops all but true
-    * hits + fpp noise, the per-doc count aggregates map-side, and the
-    * flagged-doc list anti-joins back (small side — flagged docs).
-    * Same one-sided error as the literal variant — including the
-    * AND-of-two-salted-filters probe below [[SketchFloorFpp]], where a
-    * single spark-sketch filter cannot realize the requested fpp; fpp
-    * also bounds the shuffled probe-survivor volume at corpus scale.
-    * Spark's
-    * `BloomFilterAggregate` silently `Math.min`-clamps the requested
-    * numItems/numBits to the session's
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`/`maxNumBits`
-    * (4M / 67M by default) — at the exclusion-set scale this tier
-    * exists for, a clamped filter saturates (<1 bit per item), nearly
-    * every doc accrues ≥ `minShared` false positives, and the gate
-    * would silently drop most of the CLEAN corpus. So the maxima are
-    * raised (upward only, session-scoped) to the sizes the fpp math
-    * computed, BEFORE the lazily-evaluated aggregate can read them. */
-  def bloomDecontaminationKeptLarge(docs: DataFrame, benchmark: DataFrame,
-                                    minShared: Int = 2,
-                                    fpp: Double = 0.001): DataFrame = {
-    val spark = docs.sparkSession
-    graft.plans.BloomProbe.register(spark)
-    val hl = shingleHashes(benchmark).filter(col("h").isNotNull)
-      .select("h").distinct()
-      .select(xxhash64(col("h")).as("hl"), xxhash64(col("h"), lit(1)).as("hl2"))
-    val n = math.max(1L, hl.count())
-    val numBits = math.max(64L,
-      math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    // the clamp is applied inside BloomFilterAggregate via SQLConf.get
-    // at execution time, so the raised values must outlive this call
-    // (the returned frame is lazy) — upward-only, never tightened
-    val itemsConf = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsConf = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    if (spark.conf.get(itemsConf).toLong < n) spark.conf.set(itemsConf, n.toString)
-    if (spark.conf.get(bitsConf).toLong < numBits)
-      spark.conf.set(bitsConf, numBits.toString)
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val benchView = s"graft_bloom_bench_$tag"
-    val shView = s"graft_bloom_sh_$tag"
-    hl.createOrReplaceTempView(benchView)
-    shingleHashes(docs).filter(col("h").isNotNull)
-      .createOrReplaceTempView(shView)
-    // below the spark-sketch floor one filter cannot deliver the
-    // requested fpp (see bloomDecontaminationKept) — AND a second
-    // subquery-built filter over the salted key; the two aggregate
-    // builds share the benchmark scan plan, and the probes stay inside
-    // the same codegen'd filter stage
-    val probe =
-      if (fpp < SketchFloorFpp)
-        s"""bloom_might_contain(
-              (SELECT bloom_filter_agg(hl, CAST($n AS BIGINT), CAST($numBits AS BIGINT))
-               FROM $benchView),
-              xxhash64(h))
-            AND bloom_might_contain(
-              (SELECT bloom_filter_agg(hl2, CAST($n AS BIGINT), CAST($numBits AS BIGINT))
-               FROM $benchView),
-              xxhash64(h, 1))"""
-      else
-        s"""bloom_might_contain(
-              (SELECT bloom_filter_agg(hl, CAST($n AS BIGINT), CAST($numBits AS BIGINT))
-               FROM $benchView),
-              xxhash64(h))"""
-    // temp views are inlined into the plan at analysis time, so they
-    // can be dropped as soon as the frame is built
-    val flagged = spark.sql(
-      s"""SELECT doc_id FROM $shView
-          WHERE $probe
-          GROUP BY doc_id
-          HAVING count(*) >= $minShared""")
-    spark.catalog.dropTempView(benchView)
-    spark.catalog.dropTempView(shView)
-    // a doc with no shingle rows (null text) never reaches `flagged`
-    // and is kept by the anti-join — q65 parity without a coalesce
-    docs.join(flagged, Seq("doc_id"), "left_anti")
-  }
-
-  // Oracle rows for both Bloom tiers. At fpp = 1e-8 a false positive is
-  // vanishingly unlikely (~2·10⁴ probes × 1e-8 per run) and the
-  // spark-sketch build is seed-fixed, so the kept set deterministically
-  // equals the exact gate's complement (BloomDecontaminationSpec pins
-  // the equality on this fixture) — the exact-gate SQL is therefore a
-  // valid DuckDB oracle for the probabilistic operator.
-  private val bloomKeptOracleSql =
-    s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-        shl AS (SELECT doc_id, list_distinct($shingleSql) AS shingles FROM b),
-        shx AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM shl),
-        bench AS (SELECT DISTINCT h FROM shx WHERE doc_id < 10),
-        flagged AS (
-          SELECT s.doc_id FROM shx s JOIN bench USING (h)
-          WHERE s.doc_id >= 10
-          GROUP BY s.doc_id HAVING count(*) >= 2)
-        SELECT doc_id, lang, n_chars FROM documents
-        WHERE doc_id >= 10 AND doc_id NOT IN (SELECT doc_id FROM flagged)
-        ORDER BY doc_id"""
-
-  private val bloomDecontam = Q(
-    "q80_bloom_decontam",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      bloomDecontaminationKept(docs.filter(col("doc_id") >= 10),
-          docs.filter(col("doc_id") < 10), fpp = 1e-8)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    },
-    Some(bloomKeptOracleSql))
-
-  private val bloomDecontamLarge = Q(
-    "q81_bloom_decontam_large",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      bloomDecontaminationKeptLarge(docs.filter(col("doc_id") >= 10),
-          docs.filter(col("doc_id") < 10), fpp = 1e-8)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy("doc_id")
-    },
-    Some(bloomKeptOracleSql))
-
-  // Contamination PROVENANCE: q65 answers "is this doc contaminated";
-  // audit and takedown need "leaked from WHICH benchmark doc, how
-  // badly" — the (corpus doc, benchmark doc, shared-shingle count)
-  // pair table. Same plan shape as q65 (broadcast benchmark side, the
-  // corpus side never shuffles before the map-side partial count), just
-  // grouped by the pair instead of the corpus doc alone; output volume
-  // is bounded by true contamination, not corpus size.
-  private val decontamProvenance = Q(
-    "q83_decontam_provenance",
-    (s, dir) => {
-      val sh = shingleHashes(t(s, dir, "documents"))
-      val bench = sh.filter(col("doc_id") < 10)
-        .select(col("doc_id").as("bench_id"), col("h"))
-      sh.filter(col("doc_id") >= 10)
-        .join(broadcast(bench), Seq("h"))
-        .groupBy("doc_id", "bench_id").agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-        .orderBy("doc_id", "bench_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            shl AS (SELECT doc_id, list_distinct($shingleSql) AS shingles FROM b),
-            shx AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM shl)
-            SELECT s.doc_id, x.doc_id AS bench_id, count(*) AS n_shared
-            FROM shx s JOIN shx x ON s.h = x.h
-            WHERE s.doc_id >= 10 AND x.doc_id < 10
-            GROUP BY s.doc_id, x.doc_id HAVING count(*) >= 2
-            ORDER BY s.doc_id, bench_id"""))
-
-  // ---- streaming decontamination as an oracle row -----------------------
-  // The q126 discipline applied to the exclusion-set gate: the BENCHMARK
-  // arrives incrementally (eval suites land over time), folding in two
-  // batches into the persisted 256-way bucketed shingle-hash state, and
-  // gating the corpus against the ACCUMULATED state must answer the
-  // batch q80 kept-set oracle verbatim — the state's distinct-hash union
-  // equals the one-shot benchmark set (novelty appends dedup across
-  // folds), and `gate`'s distinct-shared-shingle threshold is exactly
-  // q65/q80's ≥ 2 rule. Completes the stream == batch matrix for the
-  // decontamination family (DecontamStreamSpec holds the replay /
-  // shuffle-flatness properties; this row puts the equality under the
-  // driver's oracle gate).
-  private val decontamIncremental = Q(
-    "q148_incremental_decontam",
-    (s, dir) => withTempState("graft_q148_state") { state =>
-      val docs = t(s, dir, "documents")
-      graft.streaming.Decontam.foldBenchmark(
-        docs.filter(col("doc_id") < 5), state)
-      graft.streaming.Decontam.foldBenchmark(
-        docs.filter(col("doc_id") >= 5 && col("doc_id") < 10), state)
-      Staging.stage(graft.streaming.Decontam.gate(
-          docs.filter(col("doc_id") >= 10), state)
-        .select(col("doc_id"), col("lang"), col("n_chars")))
-        .orderBy("doc_id")
-    },
-    Some(bloomKeptOracleSql))
-
-  // ---- deterministic stratified sampling --------------------------------
-  // Per-stratum downsampling at reproducible rates: keep a doc when the
-  // first hex digit of md5(text) falls under the stratum's digit budget
-  // (hex digits are uniform; ASCII order '0'-'9' < 'a'-'f' matches hex
-  // value order, so a string compare IS the rate threshold). Here 'en'
-  // keeps 8/16, everything else 4/16. Map-only — fuses into the scan,
-  // no RNG state, and re-running selects the SAME rows: the property
-  // that makes a 100 TB sample reproducible and joinable against
-  // downstream artifacts built from it.
-  private val stratifiedSample = Q(
-    "q66_stratified_sample",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .filter(substring(md5(col("text")), 1, 1) <
-          when(col("lang") === "en", lit("8")).otherwise(lit("4")))
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id"),
-    Some("""SELECT doc_id, lang, source, n_chars FROM documents
-            WHERE substr(md5(text), 1, 1) <
-              (CASE WHEN lang = 'en' THEN '8' ELSE '4' END)
-            ORDER BY doc_id"""))
-
-  // Exact-COUNT sampling: q66 keeps a deterministic RATE; a training
-  // run often needs exactly N examples ("take 100k docs, uniformly,
-  // reproducibly"). Ordering by a per-row hash and taking N is a
-  // uniform sample that re-selects the SAME rows on re-run (the hash
-  // input includes the unique doc_id, so the order is a total order
-  // with no ties) and is plan-cheap: hash-order + limit is
-  // TakeOrderedAndProject — a bounded per-partition heap merged once
-  // at the driver, never a global sort of the corpus.
-  private val exactSample = Q(
-    "q85_exact_sample",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("h",
-          md5(concat_ws("|", col("doc_id").cast("string"), col("text"))))
-        .orderBy("h")
-        .limit(120)
-        .select("doc_id", "lang", "source", "h")
-        .orderBy("doc_id"),
-    Some("""WITH hx AS (
-              SELECT doc_id, lang, source,
-                md5(concat_ws('|', CAST(doc_id AS VARCHAR), text)) AS h
-              FROM documents ORDER BY h LIMIT 120)
-            SELECT doc_id, lang, source, h FROM hx ORDER BY doc_id"""))
-
-  // ---- source-mix balancing: rates to hit a target distribution --------
-  // The mixing stage: per-source doc counts and the per-source sampling
-  // rate that equalizes the mix (rate = min_count / count). The aggregate
-  // collapses 100 TB to one row per source BEFORE the whole-frame window,
-  // so the window runs over a handful of rows; the emitted rates feed the
-  // deterministic sampler (q66's predicate, parameterized per source).
-  private val sourceMix = Q(
-    "q67_source_mix",
-    (s, dir) => {
-      val counts = t(s, dir, "documents")
-        .groupBy("source").agg(count(lit(1)).as("n_docs"))
-      counts
-        .withColumn("rate", round(
-          min(col("n_docs")).over(Window.partitionBy()).cast("double") / col("n_docs"), 6))
-        .orderBy("source")
-    },
-    Some("""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source)
-            SELECT source, n_docs,
-              round(CAST(min(n_docs) OVER () AS DOUBLE) / n_docs, 6) AS rate
-            FROM c ORDER BY source"""))
-
-  // ---- sequence packing: concat-and-chunk into training sequences ------
-  // Pretraining packs documents back-to-back and chunks the stream at a
-  // fixed token budget; `seq_id` is the chunk containing the document's
-  // first token. Packing runs INSIDE each source partition (window
-  // partitioned by source), so the running sum parallelizes across
-  // sources and no global sort exists — the per-source order is the
-  // deterministic doc_id order, which is what makes the packing
-  // reproducible run-over-run at any scale.
-  private val seqPacking = Q(
-    "q68_seq_packing",
-    (s, dir) => {
-      val w = Window.partitionBy("source").orderBy("doc_id")
-      t(s, dir, "documents")
-        .withColumn("n_toks", expr(s"CAST(size($toksExpr) AS BIGINT)"))
-        .withColumn("seq_id",
-          floor((sum(col("n_toks")).over(w) - col("n_toks")) / lit(512)).cast("long"))
-        .select("doc_id", "source", "n_toks", "seq_id")
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, source, CAST(len($toksSql) AS BIGINT) AS n_toks
-                        FROM documents)
-            SELECT doc_id, source, n_toks,
-              CAST(floor((sum(n_toks) OVER (PARTITION BY source ORDER BY doc_id) - n_toks)
-                   / 512) AS BIGINT) AS seq_id
-            FROM b ORDER BY doc_id"""))
-
-  // ---- curriculum binning: per-language length deciles ------------------
-  // Curriculum schedules order training data by difficulty proxies; the
-  // canonical cheap proxy is length. percent_rank inside each language
-  // (ties broken by doc_id — deterministic) maps to a decile bin. The
-  // window partitions by language, so no global sort; at 100 TB exact
-  // per-stratum ranks would come from approx_percentile thresholds +
-  // a map-only bin assignment — the decile SEMANTICS pinned here are
-  // the contract either implementation must meet.
-  private val lengthCurriculum = Q(
-    "q69_length_curriculum",
-    (s, dir) => {
-      val w = Window.partitionBy("lang").orderBy(col("n_chars"), col("doc_id"))
-      t(s, dir, "documents")
-        .withColumn("bin",
-          least(floor(percent_rank().over(w) * 10), lit(9)).cast("long"))
-        .select("doc_id", "lang", "n_chars", "bin")
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id, lang, n_chars,
-              CAST(least(floor(percent_rank() OVER (
-                PARTITION BY lang ORDER BY n_chars, doc_id) * 10), 9) AS BIGINT) AS bin
-            FROM documents ORDER BY doc_id"""))
-
-  // ---- TF-IDF keyword extraction ----------------------------------------
-  // Top-3 tokens per document by tf·ln(N/df). The term-frequency table
-  // aggregates map-side off one explode; document frequency reduces THAT
-  // table (already one row per distinct doc-token pair). The df join back
-  // onto tf is deliberately UNHINTED: vocabulary size follows Heaps' law,
-  // so at web scale the distinct-token table runs to 10⁸–10⁹ rows and a
-  // forced broadcast would OOM the driver — AQE broadcasts it exactly when
-  // its measured size fits, and otherwise the join stays a shuffled hash
-  // join keyed on token (both sides already token-clustered by their
-  // aggregations). Only N, a 1-row aggregate, is hint-broadcast. Selection
-  // is a per-doc window over ≤ |doc's vocab| rows; nothing is quadratic.
-  private val tfidfTopTerms = Q(
-    "q70_tfidf_terms",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val tf = docs
-        .select(col("doc_id"), explode(expr(toksExpr)).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      val df_ = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      val n = docs.agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy("doc_id")
-        .orderBy(col("tfidf").desc, col("token"))
-      tf.join(df_, Seq("token"))
-        .crossJoin(broadcast(n))
-        .withColumn("tfidf",
-          round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("token"), col("tf"), col("tfidf"),
-          col("rk").cast("long").as("rk"))
-        .orderBy("doc_id", "rk")
-    },
-    Some(s"""WITH x AS (SELECT doc_id, unnest($toksSql) AS token FROM documents),
-            tf AS (SELECT doc_id, token, count(*) AS tf FROM x GROUP BY doc_id, token),
-            df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-            n AS (SELECT count(*) AS n_docs FROM documents),
-            sc AS (SELECT tf.doc_id, tf.token, tf.tf,
-                     round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 6) AS tfidf
-                   FROM tf JOIN df USING (token) CROSS JOIN n)
-            SELECT doc_id, token, tf, tfidf,
-              CAST(row_number() OVER (PARTITION BY doc_id
-                ORDER BY tfidf DESC, token) AS BIGINT) AS rk
-            FROM sc
-            QUALIFY rk <= 3
-            ORDER BY doc_id, rk"""))
-
-  // ---- repetition signals (Gopher-style quality rules) ------------------
-  // Excess repetition is the classic low-quality marker a corpus filter
-  // gates on: the fraction of the doc occupied by its single most common
-  // word bigram, and the duplicate-word fraction. Bigrams instantiate the
-  // shared k-gram machinery (k=2, empty fallback — see kGramSparkExpr's
-  // bind-once note); counting is one explode + hash aggregation keyed
-  // (doc_id, gram) with map-side partials, and both per-doc windows share
-  // the doc_id shuffle. Docs with fewer than two tokens have no bigram
-  // and are absent by definition — both engines agree because unnesting
-  // an empty list yields no rows.
-  private val bigramFromToks = kGramSparkExpr(2, "array()")
-  private val bigramSql = kGramSql(2, "CAST([] AS VARCHAR[])")
-
-  private val repetition = Q(
-    "q75_repetition",
-    (s, dir) => {
-      val grams = t(s, dir, "documents")
-        .select(col("doc_id"), expr(toksExpr).as("toks"))
-        .select(col("doc_id"),
-          round(lit(1) - size(array_distinct(col("toks"))).cast("double") /
-            size(col("toks")), 6).as("dwf"),
-          explode(expr(bigramFromToks)).as("gram"))
-      // dwf is functionally determined by doc_id; max() carries it through
-      // the gram aggregation without a second scan or a join-back
-      val counts = grams.groupBy("doc_id", "gram")
-        .agg(count(lit(1)).as("cnt"), max(col("dwf")).as("dup_word_frac"))
-      val wTot = Window.partitionBy("doc_id")
-      val wRk = Window.partitionBy("doc_id").orderBy(col("cnt").desc, col("gram"))
-      counts
-        .withColumn("n_bigrams", sum(col("cnt")).over(wTot))
-        .withColumn("rk", row_number().over(wRk))
-        .filter(col("rk") === 1)
-        .select(col("doc_id"), col("gram").as("top_bigram"),
-          col("cnt").as("top_cnt"), col("n_bigrams").cast("long").as("n_bigrams"),
-          round(col("cnt").cast("double") / col("n_bigrams"), 6).as("top_bigram_frac"),
-          col("dup_word_frac"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            g AS (SELECT doc_id,
-                    round(1 - CAST(len(list_distinct(toks)) AS DOUBLE)/len(toks), 6) AS dwf,
-                    unnest($bigramSql) AS gram
-                  FROM b),
-            c AS (SELECT doc_id, gram, count(*) AS cnt, max(dwf) AS dup_word_frac
-                  FROM g GROUP BY 1, 2),
-            t AS (SELECT doc_id, gram, cnt, dup_word_frac,
-                    sum(cnt) OVER (PARTITION BY doc_id) AS n_bigrams,
-                    row_number() OVER (PARTITION BY doc_id
-                      ORDER BY cnt DESC, gram) AS rk
-                  FROM c)
-            SELECT doc_id, gram AS top_bigram, CAST(cnt AS BIGINT) AS top_cnt,
-              CAST(n_bigrams AS BIGINT) AS n_bigrams,
-              round(CAST(cnt AS DOUBLE)/n_bigrams, 6) AS top_bigram_frac,
-              dup_word_frac
-            FROM t WHERE rk = 1 ORDER BY doc_id"""))
-
-  // ---- unigram log-probability scoring ---------------------------------
-  // The oracle-able form of LM-based quality filtering (CCNet-style
-  // perplexity gates): score each doc by the average log-probability of
-  // its tokens under the corpus unigram distribution — gibberish and
-  // rare-token soup score low, fluent common text scores high. The
-  // count-table join back onto the token stream is UNHINTED (the q70
-  // rationale: Heaps'-law vocabularies reach 10⁸–10⁹ distinct tokens at
-  // web scale, so a forced broadcast is a driver OOM — AQE broadcasts
-  // only when the measured aggregate fits, else a token-keyed shuffled
-  // join). Corpus mass arrives as a hint-broadcast 1-row aggregate.
-  // Everything heavier than the vocab shuffle is map-side.
-  private val unigramLogprob = Q(
-    "q78_unigram_logprob",
-    (s, dir) => {
-      val toksTbl = t(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toksExpr)).as("token"))
-      val cnts = toksTbl.groupBy("token").agg(count(lit(1)).as("cnt"))
-      val n = cnts.agg(sum(col("cnt")).as("n_total"))
-      toksTbl
-        .join(cnts, Seq("token"))
-        .crossJoin(broadcast(n))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_toks"),
-          round(avg(log(col("cnt").cast("double") / col("n_total"))), 6)
-            .as("avg_logp"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH x AS (SELECT doc_id, unnest($toksSql) AS token FROM documents),
-            c AS (SELECT token, count(*) AS cnt FROM x GROUP BY token),
-            n AS (SELECT sum(cnt) AS n_total FROM c)
-            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-              round(avg(ln(CAST(cnt AS DOUBLE) / n_total)), 6) AS avg_logp
-            FROM x JOIN c USING (token) CROSS JOIN n
-            GROUP BY doc_id ORDER BY doc_id"""))
-
-  // Bigram conditional log-probability — the n>1 step past q78's
-  // unigram model, the score behind fluency/perplexity-style quality
-  // filters: avg log p(w_i | w_{i-1}) with MLE counts estimated from
-  // the corpus itself (every doc bigram exists in the corpus counts by
-  // construction, so the estimate needs no smoothing and stays
-  // oracle-exact). Scale shape: the bigram table is staged ONCE and
-  // feeds all three consumers; both count aggregations are map-side
-  // partial (one row per distinct bigram/context per partition on the
-  // wire); the joins are keyed equi-joins with NO mandated broadcast —
-  // at corpus scale the bigram vocabulary dwarfs memory and must be
-  // allowed to hash-join. Docs with fewer than 2 tokens have no bigrams
-  // and drop out, exactly as the oracle's join semantics do.
-  /** Per-doc bigram-LM score (doc_id, n_bigrams, avg_logp) — the shared
-    * producer behind q84 (the raw scores) and q93 (CCNet-style
-    * perplexity bucketing over them). */
-  private def bigramScores(s: SparkSession, dir: String): DataFrame = {
-    val bi = Staging.stage(t(s, dir, "documents")
-      .withColumn("toks", expr(toksExpr))
-      .select(col("doc_id"), explode(expr(
-        """zip_with(slice(toks, 1, greatest(size(toks)-1, 0)),
-                    slice(toks, 2, greatest(size(toks)-1, 0)),
-                    (a, b) -> struct(a AS w1, b AS w2))""")).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")))
-    val cnts = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
-    val ctx = bi.groupBy("w1").agg(count(lit(1)).as("ctx_cnt"))
-    bi.join(cnts, Seq("w1", "w2")).join(ctx, Seq("w1"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        round(avg(log(col("cnt").cast("double") / col("ctx_cnt"))), 6)
-          .as("avg_logp"))
-  }
-
-  /** The q84 score pipeline as oracle CTEs, ending in
-    * `sc(doc_id, n_bigrams, avg_logp)`. */
-  private val bigramScoreSqlCte =
-    s"""b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       x AS (SELECT doc_id, unnest(toks) AS w,
-               generate_subscripts(toks, 1) AS i FROM b),
-       g AS (SELECT a.doc_id, a.w AS w1, c.w AS w2
-             FROM x a JOIN x c ON a.doc_id = c.doc_id AND c.i = a.i + 1),
-       cn AS (SELECT w1, w2, count(*) AS cnt FROM g GROUP BY w1, w2),
-       cx AS (SELECT w1, count(*) AS ctx_cnt FROM g GROUP BY w1),
-       sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-                round(avg(ln(CAST(cnt AS DOUBLE) / ctx_cnt)), 6) AS avg_logp
-              FROM g JOIN cn USING (w1, w2) JOIN cx USING (w1)
-              GROUP BY doc_id)"""
-
-  private val bigramLogprob = Q(
-    "q84_bigram_logprob",
-    (s, dir) => bigramScores(s, dir).orderBy("doc_id"),
-    Some(s"""WITH $bigramScoreSqlCte
-            SELECT doc_id, n_bigrams, avg_logp FROM sc ORDER BY doc_id"""))
-
-  // ---- CCNet-style perplexity bucketing --------------------------------
-  // Head/middle/tail corpus tiers by language-model score per language
-  // (Wenzek et al., "CCNet", arXiv:1911.00359 §4.3 — CCNet ranks each
-  // language's documents by Wikipedia-LM perplexity and cuts the corpus
-  // into thirds; the head feeds high-quality training mixes). The
-  // in-corpus bigram LM (q84) stands in for the external KenLM.
-  //
-  // Scale shape — the naive form is `ntile(3) OVER (PARTITION BY lang
-  // ORDER BY score)`, a per-language GLOBAL sort whose biggest language
-  // is most of the corpus in one reducer. Instead the cutoffs come from
-  // a bounded deterministic sample (q85's md5-order machinery, N per
-  // language), where the tercile boundary values are read off by rank —
-  // a DISCRETE percentile, chosen over interpolation so both engines
-  // compare against bit-identical cutoff values. The cutoff table is one
-  // row per language — bounded by the language inventory, broadcastable
-  // by construction (q88's argument) — and the corpus-wide pass is a
-  // broadcast join + two comparisons, map-only. Only scored docs (≥2
-  // tokens, q84's domain) are bucketed.
-  private val pplSampleN = 300
-
-  private val perplexityBuckets = Q(
-    "q93_perplexity_buckets",
-    (s, dir) => {
-      val scored = Staging.stage(
-        bigramScores(s, dir)
-          .join(t(s, dir, "documents").select("doc_id", "lang"), Seq("doc_id")))
-      val wh = Window.partitionBy("lang").orderBy("h")
-      val sample = scored
-        .withColumn("h", md5(col("doc_id").cast("string")))
-        .withColumn("srk", row_number().over(wh))
-        .filter(col("srk") <= pplSampleN)
-      val wr = Window.partitionBy("lang")
-        .orderBy(col("avg_logp").desc, col("doc_id"))
-      val cuts = sample
-        .withColumn("r", row_number().over(wr))
-        .withColumn("c", count(lit(1)).over(Window.partitionBy("lang")))
-        .groupBy("lang")
-        .agg(
-          max(when(col("r") === ceil(col("c") / lit(3.0)), col("avg_logp")))
-            .as("head_cut"),
-          max(when(col("r") === ceil(col("c") * 2 / lit(3.0)), col("avg_logp")))
-            .as("mid_cut"))
-      scored.join(broadcast(cuts), Seq("lang"))
-        .withColumn("bucket",
-          when(col("avg_logp") >= col("head_cut"), lit("head"))
-            .when(col("avg_logp") >= col("mid_cut"), lit("middle"))
-            .otherwise(lit("tail")))
-        .select("doc_id", "lang", "avg_logp", "bucket")
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH $bigramScoreSqlCte,
-            sl AS (SELECT sc.doc_id, d.lang, sc.avg_logp
-                   FROM sc JOIN documents d USING (doc_id)),
-            smp AS (SELECT lang, doc_id, avg_logp,
-                      row_number() OVER (PARTITION BY lang
-                        ORDER BY md5(CAST(doc_id AS VARCHAR))) AS srk
-                    FROM sl),
-            rk AS (SELECT lang, avg_logp,
-                     row_number() OVER (PARTITION BY lang
-                       ORDER BY avg_logp DESC, doc_id) AS r,
-                     count(*) OVER (PARTITION BY lang) AS c
-                   FROM smp WHERE srk <= $pplSampleN),
-            cuts AS (SELECT lang,
-                       max(CASE WHEN r = CAST(ceil(c / 3.0) AS BIGINT)
-                             THEN avg_logp END) AS head_cut,
-                       max(CASE WHEN r = CAST(ceil(c * 2 / 3.0) AS BIGINT)
-                             THEN avg_logp END) AS mid_cut
-                     FROM rk GROUP BY lang)
-            SELECT sl.doc_id, sl.lang, sl.avg_logp,
-              CASE WHEN sl.avg_logp >= c.head_cut THEN 'head'
-                   WHEN sl.avg_logp >= c.mid_cut THEN 'middle'
-                   ELSE 'tail' END AS bucket
-            FROM sl JOIN cuts c USING (lang) ORDER BY doc_id"""))
-
-  // ---- near-dup clustering: pairs → connected components → survivors ---
-  // The pair queries (q46/q49/q51) stop at edges, but dedup needs the
-  // TRANSITIVE closure: A~B and B~C must collapse into one cluster even
-  // when A and C never collide in any band. q73 labels every paired doc
-  // with its cluster's canonical (minimum) doc_id via min-label
-  // contraction (operators/Components.scala — the full edge list is
-  // touched a constant number of times and each level runs on the
-  // contracted residue; level count tracks cluster diameter, a handful
-  // because near-dup clusters are shallow); q74 is the corpus a
-  // training run actually reads: one
-  // survivor per cluster plus every unpaired doc. The oracle walks the
-  // same closure with a recursive CTE — both sides agree because "min
-  // reachable id" is evaluation-order-free.
-  private val clusterSqlCte =
-    """sym AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-               UNION ALL
-               SELECT doc_b AS src, doc_a AS dst FROM jp),
-       walk AS (
-         SELECT src AS doc_id, src AS comp FROM sym
-         UNION
-         SELECT s.dst AS doc_id, w.comp AS comp
-         FROM walk w JOIN sym s ON s.src = w.doc_id),
-       clusters AS (
-         SELECT doc_id, min(comp) AS cluster_id FROM walk GROUP BY doc_id)"""
-
-  /** Edge frame (doc_a, doc_b) → (doc_id, cluster_id) collapse — the one
-    * mapping shared by every clustering query regardless of which pair
-    * generator produced the edges. */
-  private def clustersOf(edges: DataFrame): DataFrame =
-    Components.connected(edges, src = "doc_a", dst = "doc_b")
-      .select(col("id").as("doc_id"), col("comp").as("cluster_id"))
-
-  private def docClusters(s: SparkSession, dir: String): DataFrame =
-    clustersOf(jaccardEdges(s, dir))
-
-  // Streamed cluster maintenance as an oracle row: two successive
-  // foldBatch ingests over a doc_id split of the corpus must land on
-  // EXACTLY the labels of one batch re-cluster of the full verified
-  // edge set. StreamingSpec pins stream == batch in-process; this row
-  // makes the same equality driver-visible against the DuckDB
-  // recursive-CTE clustering oracle (q73's CTE chain — the fold and
-  // the batch path share band values, exactly-once emission, and the
-  // Jaccard threshold, so the edge SETS are identical and clustering
-  // a star over ingest 1's labels plus ingest 2's edges converges to
-  // the same min-label fixpoint). Each invocation folds into a FRESH
-  // temp state dir so the query is re-runnable (bench passes) without
-  // replay semantics entering the comparison.
-  private val incrementalClusters = Q(
-    "q82_incremental_clusters",
-    (s, dir) => withTempState("graft_q82_state") { state =>
-      val docs = t(s, dir, "documents")
-      graft.streaming.ClusterMaintenance.foldBatch(
-        docs.filter(col("doc_id") < 250), state)
-      graft.streaming.ClusterMaintenance.foldBatch(
-        docs.filter(col("doc_id") >= 250), state)
-      Staging.stage(graft.streaming.ClusterMaintenance.labels(s, state)
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id")))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH RECURSIVE $minhashSigSqlCte, $minhashBandsSqlCte,
-            $jaccardEdgesSqlCte, $clusterSqlCte
-            SELECT doc_id, cluster_id FROM clusters ORDER BY doc_id"""))
-
-  private val dupClusters = Q(
-    "q73_dup_clusters",
-    (s, dir) => docClusters(s, dir).orderBy("doc_id"),
-    Some(s"""WITH RECURSIVE $minhashSigSqlCte, $minhashBandsSqlCte,
-            $jaccardEdgesSqlCte, $clusterSqlCte
-            SELECT doc_id, cluster_id FROM clusters ORDER BY doc_id"""))
-
-  // Survivors: drop every clustered doc except its cluster's canonical.
-  // `dominated` is tiny relative to the corpus (near-dup members only), so
-  // AQE resolves the anti-join to a broadcast; at worst it is a hash
-  // anti-join keyed on doc_id — never a scan-vs-scan nested loop.
-  private val dedupSurvivors = Q(
-    "q74_dedup_survivors",
-    (s, dir) => {
-      val dominated = docClusters(s, dir)
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select("doc_id")
-      t(s, dir, "documents")
-        .join(dominated, Seq("doc_id"), "left_anti")
-        .select("doc_id", "lang", "source", "n_chars")
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH RECURSIVE $minhashSigSqlCte, $minhashBandsSqlCte,
-            $jaccardEdgesSqlCte, $clusterSqlCte
-            SELECT doc_id, lang, source, n_chars FROM documents
-            WHERE doc_id NOT IN
-              (SELECT doc_id FROM clusters WHERE doc_id <> cluster_id)
-            ORDER BY doc_id"""))
-
-  // ---- incremental dedup: delta batch vs the corpus band index ---------
-  // The production shape of MinHash dedup at 100 TB: the corpus is never
-  // re-shingled per ingest. Its band table (doc_id, band, bucket) is a
-  // PERSISTED byproduct of the last dedup run; each new batch shingles
-  // only itself and equi-joins its bands against the index, so per-ingest
-  // cost scales with the delta, not the corpus. The query models the
-  // split with a doc_id threshold (corpus < 400, delta ≥ 400) and the
-  // index side's staging stands in for the persisted table. The exact-
-  // Jaccard verification reuses the linear map-only token table (q49's);
-  // both verification joins are keyed equi-joins, and emission is
-  // exactly-once via the same lowest-agreeing-band filter as q46.
-  private val deltaSplit = 400L
-
-  private val incrementalDedup = Q(
-    "q76_incremental_dedup",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val idx = minhashBandsOf(docs.filter(col("doc_id") < deltaSplit))
-      val delta = minhashBandsOf(docs.filter(col("doc_id") >= deltaSplit))
-      val cand = delta.select(col("doc_id").as("delta_id"), col("band"),
-          col("bucket"), col("b0").as("b0_d"))
-        .join(idx.select(col("doc_id").as("corpus_id"), col("band"),
-          col("bucket"), col("b0").as("b0_c")), Seq("band", "bucket"))
-        .filter(col("band") === 0 || col("b0_d") =!= col("b0_c"))
-        .select("delta_id", "corpus_id")
-      val toks = Staging.stage(docs
-        .select(col("doc_id"), expr(s"array_distinct($toksExpr)").as("toks")))
-      val scored = cand
-        .join(toks.select(col("doc_id").as("delta_id"), col("toks").as("toks_d")),
-          Seq("delta_id"))
-        .join(toks.select(col("doc_id").as("corpus_id"), col("toks").as("toks_c")),
-          Seq("corpus_id"))
-      jaccardScore(scored, "toks_d", "toks_c", 0.5)
-        .select("delta_id", "corpus_id", "jaccard")
-        .orderBy("delta_id", "corpus_id")
-    },
-    Some(s"""WITH $minhashSigSqlCte,
-            bands AS (
-              SELECT doc_id, 0 AS band, band0 AS bucket FROM sigb
-              UNION ALL
-              SELECT doc_id, 1 AS band, band1 AS bucket FROM sigb),
-            cand AS (
-              SELECT DISTINCT d.doc_id AS delta_id, c.doc_id AS corpus_id
-              FROM bands d JOIN bands c
-                ON d.band = c.band AND d.bucket = c.bucket
-              WHERE d.doc_id >= $deltaSplit AND c.doc_id < $deltaSplit),
-            tk AS (SELECT doc_id, list_distinct($toksSql) AS toks FROM documents),
-            p AS (
-              SELECT cand.delta_id, cand.corpus_id,
-                CAST(len(list_intersect(td.toks, tc.toks)) AS DOUBLE) AS inter,
-                CAST(len(td.toks) + len(tc.toks) AS DOUBLE) AS tot
-              FROM cand
-              JOIN tk td ON cand.delta_id = td.doc_id
-              JOIN tk tc ON cand.corpus_id = tc.doc_id)
-            SELECT delta_id, corpus_id, round(inter / (tot - inter), 6) AS jaccard
-            FROM p WHERE round(inter / (tot - inter), 6) >= 0.5
-            ORDER BY delta_id, corpus_id"""))
-
-  // ---- temperature-based source mixing ---------------------------------
-  // The standard multilingual/multi-source sampling formula (q_i ∝ p_i^α,
-  // α = 0.7): flattens the source distribution toward uniform without
-  // inverting it — high-resource sources are down-weighted, low-resource
-  // ones up-weighted. Like q67, the corpus collapses to one row per
-  // source BEFORE the whole-frame windows, so they run over a handful of
-  // rows; p/q stay unrounded through the arithmetic and round only at
-  // emission (both engines compute the same IEEE-754 chain).
-  private val temperatureMix = Q(
-    "q77_temperature_mix",
-    (s, dir) => {
-      val tot = Window.partitionBy()
-      t(s, dir, "documents")
-        .groupBy("source").agg(count(lit(1)).as("n_docs"))
-        .withColumn("p", col("n_docs").cast("double") / sum(col("n_docs")).over(tot))
-        .withColumn("pa", pow(col("p"), lit(0.7)))
-        .withColumn("q", col("pa") / sum(col("pa")).over(tot))
-        .select(col("source"), col("n_docs"),
-          round(col("p"), 6).as("p"), round(col("q"), 6).as("q"))
-        .orderBy("source")
-    },
-    Some("""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-            w AS (SELECT source, n_docs,
-                    CAST(n_docs AS DOUBLE) / sum(n_docs) OVER () AS p
-                  FROM c),
-            a AS (SELECT source, n_docs, p, power(p, 0.7) AS pa FROM w)
-            SELECT source, n_docs, round(p, 6) AS p,
-              round(pa / sum(pa) OVER (), 6) AS q
-            FROM a ORDER BY source"""))
-
-  // ---- token-budget epoch allocation -----------------------------------
-  // The data-recipe step after q77's weights: given a training token
-  // budget B, turn per-source token counts and temperature weights into
-  // per-source REPEAT factors — epochs_i = (q_i * B) / tokens_i, capped
-  // at 4 epochs (repeating data much past ~4 epochs stops buying loss:
-  // Muennighoff et al., "Scaling Data-Constrained Language Models",
-  // arXiv:2305.16264). This is the table a sampler actually consumes
-  // when the budget exceeds low-resource sources: >1 means upsample by
-  // repetition, the cap is where repetition is acknowledged exhausted,
-  // and effective_tokens is the contribution after capping. Same scale
-  // shape as q67/q77: the corpus collapses to one row per source BEFORE
-  // the whole-frame windows, which then run over a handful of rows; the
-  // p -> q arithmetic stays unrounded through the identical IEEE-754
-  // chain in both engines and rounds only at emission.
-  private val budgetTokens = 200000
-  private val budgetEpochs = Q(
-    "q95_budget_epochs",
-    (s, dir) => {
-      val tot = Window.partitionBy()
-      t(s, dir, "documents")
-        .withColumn("n_toks", expr(s"size($toksExpr)").cast("long"))
-        .groupBy("source").agg(sum(col("n_toks")).as("n_tokens"))
-        .withColumn("p", col("n_tokens").cast("double") / sum(col("n_tokens")).over(tot))
-        .withColumn("pa", pow(col("p"), lit(0.7)))
-        .withColumn("q", col("pa") / sum(col("pa")).over(tot))
-        .withColumn("target_tokens", col("q") * lit(budgetTokens.toDouble))
-        .withColumn("epochs",
-          least(col("target_tokens") / col("n_tokens"), lit(4.0)))
-        .select(col("source"), col("n_tokens"),
-          round(col("q"), 6).as("q"),
-          round(col("target_tokens"), 2).as("target_tokens"),
-          round(col("epochs"), 6).as("epochs"),
-          round(col("epochs") * col("n_tokens"), 2).as("effective_tokens"))
-        .orderBy("source")
-    },
-    Some(s"""WITH d AS (SELECT source, $toksSql AS toks FROM documents),
-            c AS (SELECT source, CAST(sum(len(toks)) AS BIGINT) AS n_tokens
-                  FROM d GROUP BY source),
-            w AS (SELECT source, n_tokens,
-                    CAST(n_tokens AS DOUBLE) / sum(n_tokens) OVER () AS p
-                  FROM c),
-            a AS (SELECT source, n_tokens, power(p, 0.7) AS pa FROM w),
-            qq AS (SELECT source, n_tokens, pa / sum(pa) OVER () AS q FROM a),
-            tt AS (SELECT source, n_tokens, q, q * $budgetTokens AS target_tokens
-                   FROM qq)
-            SELECT source, n_tokens, round(q, 6) AS q,
-              round(target_tokens, 2) AS target_tokens,
-              round(least(target_tokens / n_tokens, 4.0), 6) AS epochs,
-              round(least(target_tokens / n_tokens, 4.0) * n_tokens, 2)
-                AS effective_tokens
-            FROM tt ORDER BY source"""))
-
-  // ---- Gopher quality-rule battery --------------------------------------
-  // The published rule set behind large-corpus document filtering (Rae et
-  // al., "Scaling Language Models: ... Gopher", arXiv:2112.11446 §A1.1),
-  // reported per rule rather than as q60's blended score — production
-  // pipelines tune and audit rules individually, so the per-rule flags
-  // are the useful artifact: word count in [50, 100k], mean word length
-  // in [3, 10], symbol-to-word ratio (# and ...) < 0.1, < 90% of lines
-  // bullet-started, < 30% of lines ellipsis-ended, >= 80% of words with
-  // an alphabetic character, and >= 2 distinct common-English stopwords
-  // present. Map-only single-pass column arithmetic — at 100 TB this
-  // fuses into the scan like q60/q62. Lines are non-empty newline splits
-  // in BOTH engines (the engines disagree on trailing empty splits;
-  // filtering empties pins one definition).
-  private val gopherStops = "'the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'"
-  private val gopherRules = Q(
-    "q96_gopher_rules",
-    (s, dir) =>
-      t(s, dir, "documents")
-        .withColumn("toks", expr(toksExpr))
-        .withColumn("n_words", size(col("toks")).cast("long"))
-        .withColumn("mean_wl",
-          when(col("n_words") > 0,
-            length(array_join(col("toks"), "")).cast("double") / col("n_words"))
-            .otherwise(lit(0.0)))
-        .withColumn("n_sym",
-          (length(col("text")) - length(replace(col("text"), lit("#"), lit("")))).cast("double")
-            + (length(col("text")) - length(replace(col("text"), lit("..."), lit("")))) / lit(3.0))
-        .withColumn("lines",
-          expr("filter(split(text, '\\n'), x -> x <> '')"))
-        .withColumn("n_lines", greatest(size(col("lines")).cast("double"), lit(1.0)))
-        .withColumn("bullet_frac",
-          expr("CAST(size(filter(lines, x -> x LIKE '-%' OR x LIKE '*%')) AS DOUBLE)")
-            / col("n_lines"))
-        .withColumn("ellipsis_frac",
-          expr("CAST(size(filter(lines, x -> x LIKE '%...')) AS DOUBLE)") / col("n_lines"))
-        .withColumn("alpha_frac",
-          when(col("n_words") > 0,
-            expr("CAST(size(filter(toks, x -> x rlike '[a-zA-Z]')) AS DOUBLE)")
-              / col("n_words")).otherwise(lit(0.0)))
-        .withColumn("n_stops",
-          expr(s"size(filter(array($gopherStops), w -> array_contains(toks, w)))").cast("long"))
-        .withColumn("g_word_count", col("n_words").between(50, 100000))
-        .withColumn("g_mean_word_len", col("mean_wl") >= 3.0 && col("mean_wl") <= 10.0)
-        .withColumn("g_symbol_ratio",
-          when(col("n_words") > 0, col("n_sym") / col("n_words")).otherwise(lit(0.0)) < 0.1)
-        .withColumn("g_bullet_lines", col("bullet_frac") < 0.9)
-        .withColumn("g_ellipsis_lines", col("ellipsis_frac") < 0.3)
-        .withColumn("g_alpha_words", col("alpha_frac") >= 0.8)
-        .withColumn("g_stopwords", col("n_stops") >= 2)
-        .select(col("doc_id"), col("n_words"),
-          round(col("mean_wl"), 6).as("mean_word_len"),
-          col("g_word_count"), col("g_mean_word_len"), col("g_symbol_ratio"),
-          col("g_bullet_lines"), col("g_ellipsis_lines"), col("g_alpha_words"),
-          col("g_stopwords"),
-          (col("g_word_count") && col("g_mean_word_len") && col("g_symbol_ratio") &&
-            col("g_bullet_lines") && col("g_ellipsis_lines") && col("g_alpha_words") &&
-            col("g_stopwords")).as("gopher_pass"))
-        .orderBy("doc_id"),
-    Some(s"""WITH b AS (SELECT doc_id, text, $toksSql AS toks FROM documents),
-            m AS (SELECT doc_id,
-                    CAST(len(toks) AS BIGINT) AS n_words,
-                    CASE WHEN len(toks) > 0
-                      THEN CAST(length(array_to_string(toks, '')) AS DOUBLE) / len(toks)
-                      ELSE 0.0 END AS mean_wl,
-                    CAST(length(text) - length(replace(text, '#', '')) AS DOUBLE)
-                      + (length(text) - length(replace(text, '...', ''))) / 3.0 AS n_sym,
-                    list_filter(string_split(text, chr(10)), x -> x <> '') AS lines,
-                    list_filter(toks, x -> regexp_matches(x, '[a-zA-Z]')) AS alpha_toks,
-                    len(list_filter([$gopherStops],
-                      w -> list_contains(toks, w))) AS n_stops
-                  FROM b),
-            r AS (SELECT doc_id, n_words, mean_wl,
-                    n_words BETWEEN 50 AND 100000 AS g_word_count,
-                    mean_wl >= 3.0 AND mean_wl <= 10.0 AS g_mean_word_len,
-                    (CASE WHEN n_words > 0 THEN n_sym / n_words ELSE 0.0 END) < 0.1
-                      AS g_symbol_ratio,
-                    CAST(len(list_filter(lines, x -> x LIKE '-%' OR x LIKE '*%'))
-                        AS DOUBLE) / greatest(len(lines), 1) < 0.9 AS g_bullet_lines,
-                    CAST(len(list_filter(lines, x -> x LIKE '%...')) AS DOUBLE)
-                      / greatest(len(lines), 1) < 0.3 AS g_ellipsis_lines,
-                    (CASE WHEN n_words > 0
-                       THEN CAST(len(alpha_toks) AS DOUBLE) / n_words
-                       ELSE 0.0 END) >= 0.8 AS g_alpha_words,
-                    n_stops >= 2 AS g_stopwords
-                  FROM m)
-            SELECT doc_id, n_words, round(mean_wl, 6) AS mean_word_len,
-              g_word_count, g_mean_word_len, g_symbol_ratio, g_bullet_lines,
-              g_ellipsis_lines, g_alpha_words, g_stopwords,
-              (g_word_count AND g_mean_word_len AND g_symbol_ratio AND
-               g_bullet_lines AND g_ellipsis_lines AND g_alpha_words AND
-               g_stopwords) AS gopher_pass
-            FROM r ORDER BY doc_id"""))
-
-  // ---- clustering over the SimHash edge set ----------------------------
-  // Same collapse as q73, different edge generator: Hamming-verified
-  // simhash pairs instead of Jaccard-verified MinHash pairs. The fixture
-  // is deliberately near-dup dense, so this also exercises the
-  // contraction on a DENSE graph — a dense cluster's quadratic edge
-  // mass maps into one representative and vanishes in the first
-  // contraction level, so the collapse is cheap even though the edge
-  // join itself is the expensive stage.
-  private val simhashClusters = Q(
-    "q79_simhash_clusters",
-    (s, dir) =>
-      clustersOf(simhashBandPairs(Staging.stage(simhashFrame(s, dir, 32)), 8, 4, 6))
-        .orderBy("doc_id"),
-    Some(s"""WITH RECURSIVE ${simhashSqlCte(32)},
-            jp AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM sim a JOIN sim b ON a.lang = b.lang AND a.doc_id < b.doc_id
-              WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-            $clusterSqlCte
-            SELECT doc_id, cluster_id FROM clusters ORDER BY doc_id"""))
-
-  // ---- SemDeDup: semantic dedup over centroid cells --------------------
-  // Embedding-space deduplication in the published SemDeDup shape (Abbas
-  // et al. 2023, arXiv:2303.09540): partition the corpus into centroid
-  // cells (q57's IVF assignment — broadcast tiny centroids against one
-  // scan), find cosine-≥-τ pairs WITHIN each cell, collapse them into
-  // groups (transitive closure, the same Components machinery as q73),
-  // and keep one representative per group — the member FARTHEST from its
-  // cell centroid (the paper's choice: the least-typical exemplar
-  // carries the most information; ties break on vec_id). Differs from
-  // q54 (LSH-bucket near-dup) in both candidate generation — cells adapt
-  // to the data distribution, buckets are oblivious — and in emitting a
-  // per-group survivor decision, not just pairs. Scale shape: the
-  // all-pairs term is CONFINED to a cell (occupancy ≈ N/k, the k knob
-  // makes it bounded — production k grows with N), the pair join is a
-  // cell equi-join, never corpus-wide all-pairs; clustering pays
-  // contracted-residue costs only; survivor choice is one window over
-  // group_id, partitioned by a high-cardinality key.
-  private val semDedupTau = 0.4
-
-  /** Cell assignment, staged: every vector labeled with its nearest
-    * centroid cell and its similarity to that centroid. Exposed to
-    * PlanSpec separately from q86 because staging truncates the final
-    * frame's lineage — the pair join's plan shape is only assertable on
-    * the sub-pipeline. */
-  private[graft] def semDedupCells(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorDot.register(s)
-    val emb = t(s, dir, "embeddings")
-      .withColumn("norm", sqrt(expr(dotExpr.format("embedding", "embedding"))))
-    val cents = emb.filter(col("vec_id").between(1, 8))
-      .select(col("vec_id").as("cent_id"), col("embedding").as("cvec"),
-        col("norm").as("cnorm"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cent_id"))
-    Staging.stage(emb.crossJoin(broadcast(cents))
-      .withColumn("sim",
-        expr(dotExpr.format("embedding", "cvec")) / (col("norm") * col("cnorm")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        col("cent_id").as("cell"), col("sim").as("cent_sim")))
-  }
-
-  /** Within-cell cosine-≥-τ pairs off the staged cell table — a cell
-    * equi-join, never corpus-wide all-pairs (PlanSpec pins it). */
-  private[graft] def semDedupPairs(cells: DataFrame): DataFrame = {
-    val a = cells.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
-      col("norm").as("na"), col("cell"))
-    val b = cells.select(col("vec_id").as("vec_b"), col("embedding").as("vb"),
-      col("norm").as("nb"), col("cell"))
-    a.join(b, Seq("cell")).filter(col("vec_a") < col("vec_b"))
-      .withColumn("score", expr(dotExpr.format("va", "vb")) / (col("na") * col("nb")))
-      .filter(col("score") >= semDedupTau)
-      .select("vec_a", "vec_b")
-  }
-
-  private val semDedup = Q(
-    "q86_semdedup",
-    (s, dir) => {
-      val cells = semDedupCells(s, dir)
-      val comps = Components.connected(semDedupPairs(cells), src = "vec_a", dst = "vec_b")
-        .select(col("id").as("vec_id"), col("comp"))
-      val kw = Window.partitionBy(col("group_id")).orderBy(col("cent_sim").asc, col("vec_id"))
-      cells.join(comps, Seq("vec_id"), "left")
-        .withColumn("group_id", coalesce(col("comp"), col("vec_id")))
-        .withColumn("rn", row_number().over(kw))
-        .select(col("vec_id"), col("cell"), col("group_id"),
-          (col("rn") === 1).as("kept"))
-        .orderBy("vec_id")
-    },
-    Some(s"""WITH RECURSIVE
-            e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                  FROM embeddings),
-            en AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-            c AS (SELECT vec_id AS cent_id, v AS cv, norm AS cnorm
-                  FROM en WHERE vec_id BETWEEN 1 AND 8),
-            r AS (SELECT en.vec_id, en.v, en.norm, c.cent_id,
-                    list_dot_product(en.v, c.cv) / (en.norm * c.cnorm) AS sim,
-                    row_number() OVER (PARTITION BY en.vec_id
-                      ORDER BY list_dot_product(en.v, c.cv) / (en.norm * c.cnorm) DESC,
-                               c.cent_id) AS rk
-                  FROM en, c),
-            cells AS (SELECT vec_id, v, norm, cent_id AS cell, sim AS cent_sim
-                      FROM r WHERE rk = 1),
-            jp AS (SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-                   FROM cells a JOIN cells b
-                     ON a.cell = b.cell AND a.vec_id < b.vec_id
-                   WHERE list_dot_product(a.v, b.v) / (a.norm * b.norm) >= $semDedupTau),
-            $clusterSqlCte,
-            g AS (SELECT cells.vec_id, cells.cell, cells.cent_sim,
-                    COALESCE(clusters.cluster_id, cells.vec_id) AS group_id
-                  FROM cells LEFT JOIN clusters ON cells.vec_id = clusters.doc_id)
-            SELECT vec_id, cell, group_id,
-              (row_number() OVER (PARTITION BY group_id
-                 ORDER BY cent_sim, vec_id) = 1) AS kept
-            FROM g ORDER BY vec_id"""))
-
-  // ---- duplicated-substring span coverage ------------------------------
-  // The span-level view of exact duplication (Lee et al. 2021,
-  // "Deduplicating Training Data Makes Language Models Better",
-  // arXiv:2107.06499): a doc that survives document-level dedup can
-  // still be 40% boilerplate shared with other docs. Per doc, the
-  // fraction of token positions covered by some k-token gram that also
-  // appears in ANOTHER document (cross-doc duplication — within-doc
-  // repetition is q75's axis). The suffix-array construction the paper
-  // uses is replaced by the production-distributable equivalent:
-  // positional k-gram explode + gram equi-join (the Dolma/CCNet-family
-  // shape). Scale: the gram table is linear in corpus tokens and
-  // map-generated; "appears in >1 doc" is min(doc_id) ≠ max(doc_id) —
-  // a map-side-partial aggregate, NOT a count-distinct; coverage
-  // re-explodes only the DUPLICATED gram hits (near-dup-bounded, not
-  // corpus-bounded) and the k× position fan-out is a constant factor.
-  private val spanK = 5
-
-  private val dupSpans = Q(
-    "q87_dup_spans",
-    (s, dir) => {
-      // spread BEFORE staging: the staged blocks inherit the input's
-      // partitioning, so a single-split corpus file would run the k-gram
-      // explode below on one core (Staging.spread's contract)
-      val toks = Staging.stage(Staging.spread(t(s, dir, "documents"))
-        .select(col("doc_id"), expr(toksExpr).as("toks")))
-      val grams = toks
-        .select(col("doc_id"), explode(expr(
-          s"""CASE WHEN size(toks) >= $spanK
-                THEN transform(sequence(1, size(toks) - ${spanK - 1}),
-                  i -> struct(i AS pos, concat_ws(' ', slice(toks, i, $spanK)) AS gram))
-                ELSE array() END""")).as("g"))
-        .select(col("doc_id"), col("g.pos").as("pos"), col("g.gram").as("gram"))
-      val dupGrams = grams.groupBy("gram")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-        .select("gram")
-      val covered = grams.join(dupGrams, Seq("gram"))
-        .select(col("doc_id"),
-          explode(expr(s"sequence(pos, pos + ${spanK - 1})")).as("p"))
-        .groupBy("doc_id")
-        .agg(countDistinct(col("p")).as("dup_positions"))
-      toks.select(col("doc_id"), size(col("toks")).cast("long").as("n_toks"))
-        .join(covered, Seq("doc_id"), "left")
-        .withColumn("dup_positions", coalesce(col("dup_positions"), lit(0L)))
-        .withColumn("dup_frac",
-          when(col("n_toks") > 0,
-            round(col("dup_positions").cast("double") / col("n_toks"), 6))
-            .otherwise(lit(0.0)))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            g AS (SELECT doc_id, u.i AS pos,
-                    array_to_string(list_slice(toks, u.i, u.i + ${spanK - 1}), ' ') AS gram
-                  FROM b, unnest(range(1, len(toks) - ${spanK - 2})) AS u(i)),
-            d AS (SELECT gram FROM g GROUP BY gram
-                  HAVING min(doc_id) <> max(doc_id)),
-            cov AS (SELECT g.doc_id, u2.p
-                    FROM g JOIN d USING (gram),
-                      unnest(range(g.pos, g.pos + $spanK)) AS u2(p)),
-            cp AS (SELECT doc_id, count(DISTINCT p) AS dup_positions
-                   FROM cov GROUP BY doc_id)
-            SELECT b.doc_id, CAST(len(toks) AS BIGINT) AS n_toks,
-              CAST(COALESCE(cp.dup_positions, 0) AS BIGINT) AS dup_positions,
-              CASE WHEN len(toks) > 0
-                THEN round(CAST(COALESCE(cp.dup_positions, 0) AS DOUBLE) / len(toks), 6)
-                ELSE 0.0 END AS dup_frac
-            FROM b LEFT JOIN cp ON b.doc_id = cp.doc_id
-            ORDER BY b.doc_id"""))
-
-  // ---- DSIR-style hashed-feature importance weights --------------------
-  // Data selection by importance resampling (Xie et al. 2023,
-  // arXiv:2302.03169): score each doc by how much more likely its
-  // content is under a TARGET-domain n-gram model than under the raw
-  // corpus model, estimated over HASHED bigram features. The hashing is
-  // the scale move that separates this from q78/q84's open-vocabulary
-  // LMs: both models live in a FIXED 256-bucket table regardless of
-  // corpus size (web-scale bigram vocabularies are 10⁹+ rows and must
-  // hash-join; these stay broadcastable forever — the explicit
-  // broadcast below is safe by construction, not by measurement).
-  // Target domain = the `lang = 'en'` slice; add-1 smoothing over the
-  // bucket space keeps every log defined; docs with < 2 tokens have no
-  // features and drop out, the same join semantics as q84. `selected`
-  // thresholds the ROUNDED score at 0 (doc looks more target-like than
-  // raw-like) so the boolean compares stably across engines.
-  private val dsirBuckets = 256
-
-  private val dsirWeights = Q(
-    "q88_dsir_weights",
-    (s, dir) => {
-      val feats = Staging.stage(t(s, dir, "documents")
-        .withColumn("toks", expr(toksExpr))
-        .select(col("doc_id"), col("lang"), explode(expr(
-          """zip_with(slice(toks, 1, greatest(size(toks)-1, 0)),
-                      slice(toks, 2, greatest(size(toks)-1, 0)),
-                      (a, b) -> concat(a, ' ', b))""")).as("bg"))
-        .select(col("doc_id"), col("lang"),
-          substring(md5(col("bg")), 1, 2).as("b")))
-      val tgt = feats.filter(col("lang") === "en")
-        .groupBy("b").agg(count(lit(1)).as("cnt_t"))
-      val raw = feats.groupBy("b").agg(count(lit(1)).as("cnt_r"))
-      val nt = tgt.agg(sum(col("cnt_t")).as("n_t"))
-      val nr = raw.agg(sum(col("cnt_r")).as("n_r"))
-      feats
-        .join(broadcast(raw), Seq("b"))
-        .join(broadcast(tgt), Seq("b"), "left")
-        .crossJoin(broadcast(nt)).crossJoin(broadcast(nr))
-        .withColumn("lr",
-          log((coalesce(col("cnt_t"), lit(0L)) + lit(1.0)) /
-              (col("n_t") + lit(dsirBuckets.toDouble))) -
-          log((col("cnt_r") + lit(1.0)) / (col("n_r") + lit(dsirBuckets.toDouble))))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_feats"),
-          round(avg(col("lr")), 6).as("avg_logratio"))
-        .withColumn("selected", col("avg_logratio") > 0)
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH t0 AS (SELECT doc_id, lang, $toksSql AS toks FROM documents),
-            x AS (SELECT doc_id, lang, unnest(toks) AS w,
-                    generate_subscripts(toks, 1) AS i FROM t0),
-            f AS (SELECT a.doc_id, a.lang,
-                    substr(md5(a.w || ' ' || c.w), 1, 2) AS b
-                  FROM x a JOIN x c ON a.doc_id = c.doc_id AND c.i = a.i + 1),
-            tc AS (SELECT b, count(*) AS cnt_t FROM f WHERE lang = 'en' GROUP BY b),
-            rc AS (SELECT b, count(*) AS cnt_r FROM f GROUP BY b),
-            nt AS (SELECT sum(cnt_t) AS n_t FROM tc),
-            nr AS (SELECT sum(cnt_r) AS n_r FROM rc),
-            sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-                     round(avg(
-                       ln((COALESCE(cnt_t, 0) + 1.0) / (n_t + $dsirBuckets.0)) -
-                       ln((cnt_r + 1.0) / (n_r + $dsirBuckets.0))), 6) AS avg_logratio
-                   FROM f JOIN rc USING (b) LEFT JOIN tc USING (b)
-                   CROSS JOIN nt CROSS JOIN nr
-                   GROUP BY doc_id)
-            SELECT doc_id, n_feats, avg_logratio, (avg_logratio > 0) AS selected
-            FROM sc ORDER BY doc_id"""))
-
-  // ---- reproducible corpus shuffle (contiguous global rank) ------------
-  // Training reads the corpus in a shuffled-but-reproducible order: rank
-  // every doc by a seeded hash (doc_id in the hash input makes the order
-  // total, so re-runs rank identically) and emit a CONTIGUOUS global
-  // position. The naive row_number() OVER (ORDER BY h) is a
-  // single-partition window — the one shape this engine bans on data
-  // rows — so the rank comes from operators/GlobalRank: distributed
-  // range-partition sort + per-partition count offsets + a window keyed
-  // on the range-partition id. The oracle IS the naive window (DuckDB
-  // can afford it); both sides agree because offset + local position
-  // reconstructs exactly the global order position.
-  private val corpusShuffle = Q(
-    "q89_corpus_shuffle",
-    (s, dir) =>
-      GlobalRank.withRank(
-        t(s, dir, "documents").withColumn("h",
-          md5(concat_ws("|", col("doc_id").cast("string"), col("text")))),
-        col("h"), "rank")
-        .select(col("doc_id"), col("h"), col("rank"))
-        .orderBy("doc_id"),
-    Some("""WITH hx AS (SELECT doc_id,
-                md5(concat_ws('|', CAST(doc_id AS VARCHAR), text)) AS h
-              FROM documents)
-            SELECT doc_id, h,
-              CAST(row_number() OVER (ORDER BY h) AS BIGINT) AS rank
-            FROM hx ORDER BY doc_id"""))
-
-  // ---- per-stratum exact-count sampling --------------------------------
-  // q85 takes exactly N docs corpus-wide; a training mixture more often
-  // needs exactly N PER SOURCE ("10k docs from each feed, uniformly,
-  // reproducibly"). Hash-order row_number per source — the window is
-  // partitioned on a high-cardinality-enough key (one state counter per
-  // source per task, never a global collapse), the sample is
-  // deterministic for the same reason q85's is (doc_id seeds the hash),
-  // and the filter discards everything past N before any further stage.
-  private val perSourceN = 12
-
-  private val perSourceSample = Q(
-    "q90_per_source_sample",
-    (s, dir) => {
-      val w = Window.partitionBy("source").orderBy("h")
-      t(s, dir, "documents")
-        .withColumn("h",
-          md5(concat_ws("|", col("doc_id").cast("string"), col("text"))))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= perSourceN)
-        .select("doc_id", "source", "h", "rk")
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH hx AS (SELECT doc_id, source,
-                md5(concat_ws('|', CAST(doc_id AS VARCHAR), text)) AS h
-              FROM documents),
-            r AS (SELECT doc_id, source, h,
-                    CAST(row_number() OVER (PARTITION BY source ORDER BY h)
-                      AS BIGINT) AS rk
-                  FROM hx)
-            SELECT doc_id, source, h, rk FROM r
-            WHERE rk <= $perSourceN ORDER BY doc_id"""))
-
-  // ---- leakage-safe split assignment -----------------------------------
-  // Train/valid/test assignment that can never leak a near-duplicate
-  // across splits: the split is a deterministic hash of the doc's
-  // near-dup CLUSTER id (q73's collapse), not of the doc itself, so
-  // every member of a cluster lands in the same split by construction —
-  // the standard fix for the eval-contamination mode where a test doc's
-  // near-twin sits in train. Unpaired docs hash their own id (each is
-  // its own singleton group). Split rates ride the first md5 hex digit
-  // (q66's machinery): < 'c' → train (12/16), < 'e' → valid (2/16),
-  // else test. Beyond the clustering itself this is one left join and a
-  // map — the assignment adds nothing to the collapse's scale cost.
-  /** The split-assignment map shared by q91 (self-contained: re-clusters)
-    * and the production path (`ClusterMaintenance.splitsFromLabels`:
-    * consumes the persisted labeling). One left join + a md5 map —
-    * nothing beyond the clustering's own scale cost. */
-  private[graft] def splitAssign(docs: DataFrame, clusters: DataFrame): DataFrame =
-    docs.join(clusters, Seq("doc_id"), "left")
-      .withColumn("group_id", coalesce(col("cluster_id"), col("doc_id")))
-      .withColumn("hd",
-        substring(md5(concat(lit("split|"), col("group_id").cast("string"))), 1, 1))
-      .withColumn("split",
-        when(col("hd") < "c", "train")
-          .when(col("hd") < "e", "valid")
-          .otherwise("test"))
-      .select("doc_id", "group_id", "split")
-
-  private val leakageSafeSplits = Q(
-    "q91_leakage_safe_splits",
-    (s, dir) =>
-      splitAssign(t(s, dir, "documents"), docClusters(s, dir)).orderBy("doc_id"),
-    Some(s"""WITH RECURSIVE $minhashSigSqlCte, $minhashBandsSqlCte,
-            $jaccardEdgesSqlCte, $clusterSqlCte,
-            g AS (SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS group_id
-                  FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id),
-            sg AS (SELECT doc_id, group_id,
-                     substr(md5('split|' || CAST(group_id AS VARCHAR)), 1, 1) AS hd
-                   FROM g)
-            SELECT doc_id, group_id,
-              CASE WHEN hd < 'c' THEN 'train'
-                   WHEN hd < 'e' THEN 'valid'
-                   ELSE 'test' END AS split
-            FROM sg ORDER BY doc_id"""))
-
-  // ---- duplicated-span REMOVAL (the q87 report's action) ---------------
-  // Lee et al.'s transformation, not just its diagnosis: drop every
-  // token position covered by a cross-doc-duplicated k-gram and
-  // reassemble the surviving text in original token order. Scale
-  // shape: the
-  // gram/coverage stages are exactly q87's (linear gram table, partial
-  // min/max dup test, coverage bounded by duplicated hits); the
-  // reassembly is one per-doc aggregation of (pos, token) structs
-  // sorted inside the row (array_sort on the collected struct array —
-  // collect_list order is partition-dependent, the sort makes the
-  // result deterministic), never a corpus-wide sort.
-  private val dupSpanScrub = Q(
-    "q92_dup_span_scrub",
-    (s, dir) => {
-      val toks = Staging.stage(Staging.spread(t(s, dir, "documents"))
-        .select(col("doc_id"), expr(toksExpr).as("toks")))
-      val pos = toks.select(col("doc_id"),
-        posexplode(col("toks")).as(Seq("p0", "w")))
-        .select(col("doc_id"), (col("p0") + 1).as("pos"), col("w"))
-      val grams = toks
-        .select(col("doc_id"), explode(expr(
-          s"""CASE WHEN size(toks) >= $spanK
-                THEN transform(sequence(1, size(toks) - ${spanK - 1}),
-                  i -> struct(i AS pos, concat_ws(' ', slice(toks, i, $spanK)) AS gram))
-                ELSE array() END""")).as("g"))
-        .select(col("doc_id"), col("g.pos").as("pos"), col("g.gram").as("gram"))
-      val dupGrams = grams.groupBy("gram")
-        .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
-        .filter(col("d0") =!= col("d1"))
-        .select("gram")
-      val covered = grams.join(dupGrams, Seq("gram"))
-        .select(col("doc_id"),
-          explode(expr(s"sequence(pos, pos + ${spanK - 1})")).as("pos"))
-        .distinct()
-      pos.join(covered, Seq("doc_id", "pos"), "left_anti")
-        .groupBy("doc_id")
-        .agg(collect_list(struct(col("pos"), col("w"))).as("kept"))
-        .select(col("doc_id"),
-          expr("concat_ws(' ', transform(array_sort(kept), x -> x.w))")
-            .as("scrubbed"),
-          size(col("kept")).cast("long").as("n_kept"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            p AS (SELECT doc_id, u.i AS pos, toks[u.i] AS w
-                  FROM b, unnest(range(1, len(toks) + 1)) AS u(i)),
-            g AS (SELECT doc_id, u.i AS pos,
-                    array_to_string(list_slice(toks, u.i, u.i + ${spanK - 1}), ' ') AS gram
-                  FROM b, unnest(range(1, len(toks) - ${spanK - 2})) AS u(i)),
-            d AS (SELECT gram FROM g GROUP BY gram
-                  HAVING min(doc_id) <> max(doc_id)),
-            cov AS (SELECT DISTINCT g.doc_id, u2.p
-                    FROM g JOIN d USING (gram),
-                      unnest(range(g.pos, g.pos + $spanK)) AS u2(p)),
-            k AS (SELECT p.doc_id, p.pos, p.w FROM p
-                  LEFT JOIN cov ON p.doc_id = cov.doc_id AND p.pos = cov.p
-                  WHERE cov.p IS NULL)
-            SELECT doc_id, string_agg(w, ' ' ORDER BY pos) AS scrubbed,
-              CAST(count(*) AS BIGINT) AS n_kept
-            FROM k GROUP BY doc_id ORDER BY doc_id"""))
-
-  // ---- graded contamination: per-doc benchmark overlap fraction --------
-  // q65 answers "is this doc contaminated?" with a fixed >= 2-shingle
-  // gate; published contamination analyses (PaLM §C, GPT-4 TR appendix)
-  // instead REPORT a per-document overlap grade — the fraction of the
-  // doc's distinct n-grams that appear in the benchmark — and threshold
-  // it, because a 300-shingle doc sharing 2 shingles is noise while a
-  // 10-shingle doc sharing 8 is a leak. Same scale shape as q65 (the
-  // benchmark side broadcasts, the corpus side is one linear shingle
-  // explode): ONE broadcast left join marks each corpus shingle, and
-  // per-doc total + hit counts come from the same map-side-partial
-  // aggregate, so the whole grade is a single pass over the corpus
-  // shingles. The flag thresholds the ROUNDED fraction (cross-engine
-  // stable, the q88 trick).
-  private val contamThreshold = 0.2
-
-  private val contamFrac = Q(
-    "q100_contam_frac",
-    (s, dir) => {
-      val sh = Staging.stage(shingleHashes(t(s, dir, "documents")))
-      val bench = sh.filter(col("doc_id") < 10)
-        .select("h").distinct().withColumn("hit", lit(1))
-      sh.filter(col("doc_id") >= 10)
-        .join(broadcast(bench), Seq("h"), "left")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shingles"), count(col("hit")).as("n_shared"))
-        .withColumn("contam_frac",
-          round(col("n_shared").cast("double") / col("n_shingles"), 6))
-        .withColumn("contaminated", col("contam_frac") >= contamThreshold)
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            shl AS (SELECT doc_id, list_distinct($shingleSql) AS shingles FROM b),
-            shx AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM shl),
-            bench AS (SELECT DISTINCT h FROM shx WHERE doc_id < 10),
-            agg AS (SELECT s.doc_id,
-                CAST(count(*) AS BIGINT) AS n_shingles,
-                CAST(count(bench.h) AS BIGINT) AS n_shared
-              FROM shx s LEFT JOIN bench ON s.h = bench.h
-              WHERE s.doc_id >= 10 GROUP BY s.doc_id)
-            SELECT doc_id, n_shingles, n_shared,
-              round(CAST(n_shared AS DOUBLE) / n_shingles, 6) AS contam_frac,
-              (round(CAST(n_shared AS DOUBLE) / n_shingles, 6)
-                >= $contamThreshold) AS contaminated
-            FROM agg ORDER BY doc_id"""))
-
-  // ---- quality-ranked near-dup survivor selection ----------------------
-  // q74 keeps each near-dup cluster's MIN-doc_id member — the right
-  // default when members are interchangeable. Production dedup usually
-  // keeps the BEST copy instead (the cleanest mirror of a boilerplate-
-  // mangled page): survivor = argmax of the q60 quality score, ties on
-  // doc_id. The quality signal is map-only and the survivor choice is
-  // one row_number window KEYED ON group_id (cardinality ~ corpus;
-  // never a global collapse) — nothing beyond q73's own clustering
-  // cost. Scores are rounded to 6 dp BEFORE ranking, so tie behavior is
-  // engine-independent.
-  private val qualitySurvivors = Q(
-    "q101_quality_survivors",
-    (s, dir) => {
-      val q = qualityCols(t(s, dir, "documents"))
-        .select(col("doc_id"), col("quality"))
-      val w = Window.partitionBy("group_id")
-        .orderBy(col("quality").desc, col("doc_id"))
-      q.join(docClusters(s, dir), Seq("doc_id"), "left")
-        .withColumn("group_id", coalesce(col("cluster_id"), col("doc_id")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select("doc_id", "group_id", "quality")
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH RECURSIVE $minhashSigSqlCte, $minhashBandsSqlCte,
-            $jaccardEdgesSqlCte, $clusterSqlCte, $qualitySqlCte,
-            qs AS (SELECT doc_id,
-                round(0.4 * (1.0 - punct_ratio) +
-                      0.3 * least(stop_ratio * 4, 1.0) +
-                      0.3 * least(mean_word_len / 8, 1.0), 6) AS quality
-              FROM qm),
-            gg AS (SELECT q.doc_id,
-                COALESCE(c.cluster_id, q.doc_id) AS group_id, q.quality
-              FROM qs q LEFT JOIN clusters c ON q.doc_id = c.doc_id),
-            r AS (SELECT doc_id, group_id, quality,
-                row_number() OVER (PARTITION BY group_id
-                  ORDER BY quality DESC, doc_id) AS rk
-              FROM gg)
-            SELECT doc_id, group_id, quality FROM r
-            WHERE rk = 1 ORDER BY doc_id"""))
-
-  // ---- corpus topic clustering (deterministic k-means) -----------------
-  // The embedding-space labeling cluster-conditioned pipelines consume
-  // (SemDeDup's own first stage is corpus k-means — arXiv:2303.09540 §3;
-  // cluster-balanced mixing and per-topic curriculum read the same
-  // table). llm/Kmeans trains full-space Lloyd iterations with every
-  // nondeterminism pinned (md5-order seeds, dot-identity distances,
-  // (d2, cent_id) ties, empty clusters keep their centroid) and — the
-  // step that makes a TRAINED model an oracle row at all — rounds each
-  // iteration's centroid means to 6 dp, collapsing cross-engine
-  // partial-sum order before it can drift an assignment. The oracle
-  // replays the fixed iteration count as an unrolled CTE chain (Scala-
-  // generated below), so the driver verifies training end-to-end, not
-  // just a fixed-centroid assignment (q57/q86's weaker form). Scale per
-  // iteration: broadcast k-row centroids, map-side-collapsed assignment
-  // (shuffle <= one row per vector), k*d-row mean update — see Kmeans
-  // scaladoc.
-  private val kmeansK = 10 // fixture plants 10 label clusters
-  private val kmeansIters = 3
-
-  private def kmeansIterSql(i: Int): String =
-    s"""a$i AS (SELECT e.vec_id, e.v, c.cent_id,
-              list_dot_product(e.v, e.v) - 2 * list_dot_product(e.v, c.cv)
-                + list_dot_product(c.cv, c.cv) AS d2
-            FROM en e CROSS JOIN c${i - 1} c),
-        w$i AS (SELECT vec_id, v, cent_id, d2,
-              row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) AS rk
-            FROM a$i),
-        m$i AS (SELECT cent_id, u.i AS pos, round(avg(v[u.i]), 6) AS mv
-            FROM w$i, unnest(range(1, len(v) + 1)) AS u(i)
-            WHERE rk = 1 GROUP BY cent_id, u.i),
-        g$i AS (SELECT cent_id, list(mv ORDER BY pos) AS ncv FROM m$i GROUP BY cent_id),
-        c$i AS (SELECT c.cent_id, COALESCE(g.ncv, c.cv) AS cv
-            FROM c${i - 1} c LEFT JOIN g$i g USING (cent_id))"""
-
-  /** The DuckDB twin of `Kmeans.train` + final assignment: CTEs `en`
-    * (converted vectors), `c0..c$kmeansIters` (per-iteration trained
-    * centroids), and `tf` — one row per vector with its final (cell,
-    * d2). Shared by q99 (the labeling itself) and the trained-model
-    * consumers (q102 SemDeDup, q103 balanced sampling). */
-  private val kmeansChainSql: String =
-    s"""en AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings),
-        sd AS (SELECT vec_id, v,
-            CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-              vec_id) - 1 AS INT) AS cent_id
-          FROM en QUALIFY cent_id < $kmeansK),
-        c0 AS (SELECT cent_id, v AS cv FROM sd),
-        ${(1 to kmeansIters).map(kmeansIterSql).mkString(",\n")},
-        af AS (SELECT e.vec_id, e.v, c.cent_id,
-            list_dot_product(e.v, e.v) - 2 * list_dot_product(e.v, c.cv)
-              + list_dot_product(c.cv, c.cv) AS d2
-          FROM en e CROSS JOIN c$kmeansIters c),
-        wf AS (SELECT vec_id, v, cent_id, d2,
-            row_number() OVER (PARTITION BY vec_id ORDER BY d2, cent_id) AS rk
-          FROM af),
-        tf AS (SELECT vec_id, v, cent_id, d2 FROM wf WHERE rk = 1)"""
-
-  private val kmeansTopics = Q(
-    "q99_kmeans_topics",
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      graft.llm.Kmeans.topics(emb, kmeansK, kmeansIters)
-        .join(emb.select("vec_id", "label"), Seq("vec_id"))
-        .select("vec_id", "label", "topic", "dist2")
-        .orderBy("vec_id")
-    },
-    Some(s"""WITH $kmeansChainSql
-            SELECT t.vec_id, e.label, t.cent_id AS topic,
-              round(t.d2, 6) AS dist2
-            FROM tf t JOIN embeddings e USING (vec_id)
-            ORDER BY t.vec_id"""))
-
-  // ---- SemDeDup over TRAINED cells -------------------------------------
-  // q86 proves the SemDeDup machinery against FIXED centroids (vec 1-8 —
-  // the oracle-replay trick of q57). The published pipeline trains its
-  // cells (Abbas et al. §3 run k-means first); with the q99 trainer now
-  // oracle-replayable, the production composition becomes a driver-
-  // verified row too: cells = trained k-means assignment (min-d2, the
-  // clustering's own geometry, rather than q86's max-cosine), within-
-  // cell cosine-≥-τ pairs, transitive-closure groups, survivor = the
-  // member FARTHEST from its centroid (max d2 — the paper keeps the
-  // least-typical exemplar; ties on vec_id). d2 needs no rounding for
-  // the ranking: both engines derive it from exact float inputs and the
-  // 6 dp-rounded trained centroids through the same left-to-right dot
-  // fold, so the compared bits are identical. Scale shape is q86's
-  // (bounded cell occupancy, cell equi-join pairs, keyed survivor
-  // window) on top of the trainer's (broadcast centroids, map-side
-  // collapses).
-  private val semDedupTrained = Q(
-    "q102_semdedup_trained",
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = graft.llm.Kmeans.train(emb, kmeansK, kmeansIters)
-      val cells = Staging.stage(graft.llm.Kmeans.assign(emb, cb)
-        .withColumn("norm", sqrt(expr(dotExpr.format("v", "v")))))
-      val a = cells.select(col("vec_id").as("vec_a"), col("v").as("va"),
-        col("norm").as("na"), col("cent_id").as("cell"))
-      val b = cells.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-        col("norm").as("nb"), col("cent_id").as("cell"))
-      val pairs = a.join(b, Seq("cell")).filter(col("vec_a") < col("vec_b"))
-        .filter(expr(dotExpr.format("va", "vb")) / (col("na") * col("nb"))
-          >= semDedupTau)
-        .select("vec_a", "vec_b")
-      val comps = Components.connected(pairs, src = "vec_a", dst = "vec_b")
-        .select(col("id").as("vec_id"), col("comp"))
-      val kw = Window.partitionBy("group_id")
-        .orderBy(col("d2").desc, col("vec_id"))
-      cells.join(comps, Seq("vec_id"), "left")
-        .withColumn("group_id", coalesce(col("comp"), col("vec_id")))
-        .withColumn("rn", row_number().over(kw))
-        .select(col("vec_id"), col("cent_id").as("cell"), col("group_id"),
-          (col("rn") === 1).as("kept"))
-        .orderBy("vec_id")
-    },
-    Some(s"""WITH RECURSIVE $kmeansChainSql,
-            cells AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm,
-                cent_id AS cell, d2 FROM tf),
-            jp AS (SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-                FROM cells a JOIN cells b
-                  ON a.cell = b.cell AND a.vec_id < b.vec_id
-                WHERE list_dot_product(a.v, b.v) / (a.norm * b.norm)
-                  >= $semDedupTau),
-            $clusterSqlCte,
-            g AS (SELECT cells.vec_id, cells.cell, cells.d2,
-                COALESCE(clusters.cluster_id, cells.vec_id) AS group_id
-              FROM cells LEFT JOIN clusters ON cells.vec_id = clusters.doc_id)
-            SELECT vec_id, cell, group_id,
-              (row_number() OVER (PARTITION BY group_id
-                 ORDER BY d2 DESC, vec_id) = 1) AS kept
-            FROM g ORDER BY vec_id"""))
-
-  // ---- cluster-balanced exact-count sampling ---------------------------
-  // The selection step cluster-conditioned curation runs on a topic
-  // labeling (DINOv2-style balanced curation, cluster-based pruning):
-  // exactly N vectors PER TOPIC, uniformly and reproducibly — de-skewing
-  // a corpus whose topics are power-law sized. Pure composition of the
-  // engine's existing machinery on the q99 labeling: q90's hash-order
-  // row_number, windowed per topic (one state counter per topic per
-  // task, never a global collapse), deterministic because vec_id seeds
-  // the hash.
-  private val perTopicN = 25
-
-  private val topicSample = Q(
-    "q103_per_topic_sample",
-    (s, dir) => {
-      val w = Window.partitionBy("topic").orderBy("h")
-      graft.llm.Kmeans.topics(t(s, dir, "embeddings"), kmeansK, kmeansIters)
-        .withColumn("h",
-          md5(concat(lit("topicsample|"), col("vec_id").cast("string"))))
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= perTopicN)
-        .select("vec_id", "topic", "h", "rk")
-        .orderBy("vec_id")
-    },
-    Some(s"""WITH $kmeansChainSql,
-            hx AS (SELECT vec_id, cent_id AS topic,
-                md5('topicsample|' || CAST(vec_id AS VARCHAR)) AS h FROM tf),
-            r AS (SELECT vec_id, topic, h,
-                CAST(row_number() OVER (PARTITION BY topic ORDER BY h)
-                  AS BIGINT) AS rk
-              FROM hx)
-            SELECT vec_id, topic, h, rk FROM r
-            WHERE rk <= $perTopicN ORDER BY vec_id"""))
-
-  // ---- BPE tokenizer training ------------------------------------------
-  // llm/Bpe trains byte-pair-encoding merges over the corpus word
-  // histogram (Sennrich et al., arXiv:1508.07909) — see its scaladoc for
-  // why the greedy left-to-right merge scan is exactly reproducible with
-  // keyed window functions (overlaps only occur on single-symbol runs,
-  // where greedy = even offsets from the run start). All integer/string
-  // arithmetic, so the oracle replays TRAINING bit-exactly: each
-  // iteration is one CTE block (Scala-generated below), the best pair a
-  // 1-row ORDER BY ... LIMIT 1 cut with the same lexicographic
-  // tie-break. q104 emits the learned merge table; q105 applies the
-  // learned tokenizer to the corpus (per-doc BPE token counts) — the
-  // rewrite runs on the VOCABULARY, the corpus pays one explode + one
-  // keyed join.
-  private val bpeSteps = 4
-
-  private def bpeStepSql(i: Int): String =
-    s"""p$i AS (SELECT word, cnt, unnest(syms) AS s,
-              generate_subscripts(syms, 1) AS p FROM w${i - 1}),
-        m$i AS (SELECT *, lead(s) OVER (PARTITION BY word ORDER BY p) AS ns
-              FROM p$i),
-        bp$i AS (SELECT s AS x, ns AS y, CAST(sum(cnt) AS BIGINT) AS pair_count
-              FROM m$i WHERE ns IS NOT NULL GROUP BY s, ns
-              ORDER BY pair_count DESC, x, y LIMIT 1),
-        f$i AS (SELECT m.*, b.x, b.y,
-              coalesce(m.s = b.x AND m.ns = b.y, false) AS mt
-              -- LEFT JOIN, not CROSS: an EXHAUSTED step (empty bp) must
-              -- pass the vocabulary through unchanged, matching the
-              -- Spark trainer's early stop — a cross join with an empty
-              -- best-pair frame would annihilate every later w$i
-              FROM m$i m LEFT JOIN bp$i b ON true),
-        g$i AS (SELECT *, sum(CASE WHEN mt THEN 1 ELSE 0 END)
-                OVER (PARTITION BY word ORDER BY p) AS mrn FROM f$i),
-        r$i AS (SELECT *, CASE WHEN mt THEN p - mrn END AS run FROM g$i),
-        k$i AS (SELECT *, mt AND ((p - min(p)
-                OVER (PARTITION BY word, run)) % 2 = 0) AS keep FROM r$i),
-        x$i AS (SELECT *, coalesce(lag(keep)
-                OVER (PARTITION BY word ORDER BY p), false) AS consumed
-              FROM k$i),
-        w$i AS (SELECT word, cnt,
-              list(CASE WHEN keep THEN s || ns ELSE s END ORDER BY p) AS syms
-              FROM x$i WHERE NOT consumed GROUP BY word, cnt)"""
-
-  /** CTEs `w0` (char-split corpus word histogram) through `w$bpeSteps`
-    * (post-merge vocabulary) and `bp1..bp$bpeSteps` (the learned pairs). */
-  private val bpeChainSql: String =
-    s"""t0 AS (SELECT $toksSql AS toks FROM documents),
-        wh AS (SELECT unnest(toks) AS word FROM t0),
-        w0 AS (SELECT word, count(*) AS cnt,
-              list_transform(generate_series(1, length(word)),
-                i -> substr(word, i, 1)) AS syms
-              FROM wh GROUP BY word),
-        ${(1 to bpeSteps).map(bpeStepSql).mkString(",\n")}"""
-
-  private def corpusWordHist(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(explode(expr(toksExpr)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-
-  private val bpeMerges = Q(
-    "q104_bpe_merges",
-    (s, dir) => {
-      val (merges, _) = graft.llm.Bpe.train(corpusWordHist(s, dir), bpeSteps)
-      merges.select(col("step"), col("x").as("merge_left"),
-        col("y").as("merge_right"), col("pair_count")).orderBy("step")
-    },
-    Some(s"""WITH $bpeChainSql
-            ${(1 to bpeSteps).map(i =>
-              s"SELECT CAST($i AS INT) AS step, x AS merge_left, y AS merge_right, pair_count FROM bp$i")
-              .mkString("\nUNION ALL\n")}
-            ORDER BY step"""))
-
-  // q104's trainer swapped for the incremental-count variant, against
-  // q104's ORACLE verbatim: the driver checks that maintaining the pair
-  // table by delta (retract matched words' old pairs, add their new
-  // ones) reproduces full-recount training bit-for-bit — the merge
-  // sequence, counts and tie-breaks included. BpePropSpec pins the
-  // equality against the sequential model; this row makes it
-  // driver-visible. Scale note in Bpe.trainIncremental's doc: per-step
-  // cost drops from all-positions to matched-positions + count-table.
-  private val bpeIncMerges = Q(
-    "q114_bpe_incremental",
-    (s, dir) => {
-      val (merges, _) =
-        graft.llm.Bpe.trainIncremental(corpusWordHist(s, dir), bpeSteps)
-      merges.select(col("step"), col("x").as("merge_left"),
-        col("y").as("merge_right"), col("pair_count")).orderBy("step")
-    },
-    Some(s"""WITH $bpeChainSql
-            ${(1 to bpeSteps).map(i =>
-              s"SELECT CAST($i AS INT) AS step, x AS merge_left, y AS merge_right, pair_count FROM bp$i")
-              .mkString("\nUNION ALL\n")}
-            ORDER BY step"""))
-
-  // ---- unigram-LM (SentencePiece-style) Viterbi segmentation -----------
-  // The tokenizer family's OTHER half (Kudo 2018, arXiv:1804.10959):
-  // where BPE applies learned merge rules, the unigram model tokenizes
-  // each word as its maximum-likelihood segmentation over a piece
-  // inventory with log-probs — SentencePiece's encode path and the
-  // E-step of its EM trainer. llm/Unigram seeds the inventory (top-S
-  // substrings + single-char coverage, 6 dp-rounded log-probs) and runs
-  // the Viterbi DP as in-row lambdas against the broadcast inventory;
-  // the oracle replays the DP as a recursive CTE that carries each
-  // word's best-score/backpointer arrays forward one position per
-  // iteration, with the (score DESC, split DESC) tie-break matching
-  // Spark's array_max over (s, j) structs exactly. Floats are safe
-  // without mid-DP rounding: every candidate score is a sum of the SAME
-  // rounded log-probs in the SAME order on both engines, so the
-  // compared bits are identical. Output is the q105 report shape, so
-  // the two tokenizer families read side-by-side.
-  private val umMaxLen = 4
-  private val umTopS = 200
-  private val umEmIters = 2
-
-  /** Seed-inventory CTEs → `uinv0` (piece, pcnt, logp): word histogram,
-    * substring counts, top-S + single-char coverage, 6 dp log-probs.
-    * Shared by q115 (segmentation) and q116 (EM training). */
-  private val umSeedSql: String =
-    s"""ut0 AS (SELECT $toksSql AS toks FROM documents),
-        uww AS (SELECT unnest(toks) AS word FROM ut0),
-        uwh AS (SELECT word, count(*) AS cnt FROM uww GROUP BY word),
-        usub AS (SELECT substr(w.word, st.s, ll.l) AS piece, w.cnt
-            FROM uwh w,
-                 LATERAL unnest(generate_series(1, length(w.word))) AS st(s),
-                 LATERAL unnest(generate_series(1, $umMaxLen)) AS ll(l)
-            WHERE st.s + ll.l - 1 <= length(w.word)),
-        upc AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS pcnt
-            FROM usub GROUP BY piece),
-        utop AS (SELECT piece, pcnt FROM upc
-            QUALIFY row_number() OVER (ORDER BY pcnt DESC, piece) <= $umTopS),
-        usingle AS (SELECT piece, pcnt FROM upc WHERE length(piece) = 1),
-        uraw0 AS (SELECT DISTINCT piece, pcnt FROM
-            (SELECT * FROM utop UNION ALL SELECT * FROM usingle)),
-        utot0 AS (SELECT CAST(sum(pcnt) AS DOUBLE) AS t FROM uraw0),
-        uinv0 AS (SELECT piece, pcnt, round(ln(pcnt / t), 6) AS logp
-            FROM uraw0, utot0)"""
-
-  /** One Viterbi pass against `uinv${i-1}`: the recursive DP carrying
-    * each word's (score, backpointer) arrays one position per
-    * iteration, then the piece-emitting backtrace → `ubt$i` (one row
-    * per segmentation step, `piece` NULL on the anchor row). */
-  private def umSegSql(i: Int): String =
-    s"""useg$i AS (
-          SELECT word, cnt, 0 AS pos,
-            [struct_pack(s := CAST(0 AS DOUBLE), j := CAST(0 AS BIGINT))] AS m
-          FROM uwh
-          UNION ALL
-          SELECT useg$i.word, useg$i.cnt, useg$i.pos + 1 AS pos,
-            list_append(useg$i.m, struct_pack(
-              s := COALESCE(best.s, CAST('-infinity' AS DOUBLE)),
-              j := COALESCE(best.j, CAST(-1 AS BIGINT)))) AS m
-          FROM useg$i LEFT JOIN LATERAL (
-            SELECT useg$i.m[useg$i.pos + 2 - l.l].s + iv.logp AS s,
-                   CAST(useg$i.pos + 1 - l.l AS BIGINT) AS j
-            FROM unnest(generate_series(1,
-                   least(useg$i.pos + 1, $umMaxLen))) AS l(l)
-            JOIN uinv${i - 1} iv
-              ON iv.piece = substr(useg$i.word, useg$i.pos + 2 - l.l, l.l)
-            ORDER BY s DESC, j DESC LIMIT 1
-          ) best ON true
-          WHERE useg$i.pos < length(useg$i.word)),
-        ufin$i AS (SELECT word, cnt, m FROM useg$i WHERE pos = length(word)),
-        ubt$i AS (
-          SELECT word, cnt, length(word) AS pos, m,
-                 CAST(NULL AS VARCHAR) AS piece
-          FROM ufin$i
-          UNION ALL
-          SELECT word, cnt, m[pos + 1].j AS pos, m,
-                 substr(word, m[pos + 1].j + 1, pos - m[pos + 1].j) AS piece
-          FROM ubt$i WHERE pos > 0)"""
-
-  /** M-step: weighted usage counts off `ubt$i` → next rounded
-    * inventory `uinv$i` (zero-usage pieces hard-pruned by absence). */
-  private def umUseSql(i: Int): String =
-    s"""uuse$i AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS pcnt
-            FROM ubt$i WHERE piece IS NOT NULL GROUP BY piece),
-        utot$i AS (SELECT CAST(sum(pcnt) AS DOUBLE) AS t FROM uuse$i),
-        uinv$i AS (SELECT piece, pcnt, round(ln(pcnt / t), 6) AS logp
-            FROM uuse$i, utot$i)"""
-
-  private val unigramSegment = Q(
-    "q115_unigram_segment",
-    (s, dir) => {
-      // staged once: the inventory's substring pass and the DP both
-      // re-scan the materialized histogram, never the corpus
-      val wh = Staging.stage(corpusWordHist(s, dir))
-      val inv = graft.llm.Unigram.inventory(wh, umMaxLen, umTopS)
-      val segs = graft.llm.Unigram.segmentCounts(wh, inv, umMaxLen)
-        .select(col("word"), col("n_pieces"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toksExpr)).as("word"))
-        .join(segs, Seq("word"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_words"),
-          sum(length(col("word"))).cast("long").as("n_chars"),
-          sum(col("n_pieces")).cast("long").as("n_um_tokens"))
-        .withColumn("compression",
-          round(col("n_chars").cast("double") / col("n_um_tokens"), 6))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH RECURSIVE $umSeedSql,
-            ${umSegSql(1)},
-            ucnt AS (SELECT word, CAST(count(piece) AS BIGINT) AS npieces
-                FROM ubt1 WHERE piece IS NOT NULL GROUP BY word),
-            udx AS (SELECT doc_id, unnest($toksSql) AS word FROM documents)
-            SELECT udx.doc_id,
-              CAST(count(*) AS BIGINT) AS n_words,
-              CAST(sum(length(udx.word)) AS BIGINT) AS n_chars,
-              CAST(sum(u.npieces) AS BIGINT) AS n_um_tokens,
-              round(CAST(sum(length(udx.word)) AS DOUBLE) / sum(u.npieces), 6)
-                AS compression
-            FROM udx JOIN ucnt u USING (word)
-            GROUP BY udx.doc_id ORDER BY doc_id"""))
-
-  // ---- unigram-LM EM training ------------------------------------------
-  // Trained-models-as-oracle-rows, unigram edition: k-means (q99), PQ
-  // (q111), and BPE (q104/q114) already replay their TRAINING in DuckDB;
-  // this closes the tokenizer family. Hard EM (Viterbi-EM): each
-  // iteration's E-step is q115's DP verbatim, the M-step re-estimates
-  // piece log-probs from weighted usage (rounded 6 dp — the per-
-  // iteration discipline that collapses cross-engine ln noise before it
-  // can steer the next E-step), and zero-usage pieces hard-prune.
-  // Pruning never breaks coverage: every piece used at iteration i
-  // survives to i+1, so each word's previous segmentation stays
-  // feasible. The oracle unrolls the fixed iteration count — each
-  // E-step one recursive DP + backtrace chain, each M-step a count
-  // re-normalization — and the driver verifies the final inventory.
-  private val unigramEm = Q(
-    "q116_unigram_em",
-    (s, dir) => graft.llm.Unigram
-      .emTrain(corpusWordHist(s, dir), umMaxLen, umTopS, umEmIters)
-      .orderBy("piece"),
-    Some(s"""WITH RECURSIVE $umSeedSql,
-            ${(1 to umEmIters).map(i =>
-              umSegSql(i) + ",\n" + umUseSql(i)).mkString(",\n")}
-            SELECT piece, pcnt, logp FROM uinv$umEmIters ORDER BY piece"""))
-
-  // ---- unigram-LM inventory pruning (the full SentencePiece loop) ------
-  // q116 refines log-probs of whatever EM keeps using; the paper's outer
-  // loop (Kudo 2018 §3.2) ALTERNATES EM with dropping the lowest-loss
-  // pieces until a target vocabulary size. Deterministic form: rank
-  // multi-char pieces by attributed likelihood mass (pcnt × logp — the
-  // hard-EM collapse of the lattice-marginal loss), keep
-  // max(target − alphabet, ceil(n × keepFrac)) per iteration, and floor
-  // the coverage alphabet at count 1 so no character can ever lose its
-  // char-by-char fallback path. The oracle replays prune+EM: each
-  // iteration is q115's recursive-CTE DP, then a loss-ranked QUALIFY
-  // (the "DELETE") whose keep-count folds the same greatest/ceil
-  // arithmetic, then the shared renormalization.
-  private val umTargetS = 80
-  private val umKeepFrac = 0.5
-  private val umPruneIters = 2
-
-  /** Prune+renormalize step `i`: usage counts off `ubt$i`, the coverage
-    * floor over `ualpha`, the loss-ranked keep, and the 6 dp
-    * renormalization → `uinv$i`. */
-  private def umPruneSql(i: Int): String =
-    s"""uuse$i AS (SELECT piece, CAST(sum(cnt) AS BIGINT) AS pcnt
-            FROM ubt$i WHERE piece IS NOT NULL GROUP BY piece),
-        usng$i AS (SELECT a.piece, greatest(COALESCE(u.pcnt, 0), 1) AS pcnt
-            FROM ualpha a LEFT JOIN uuse$i u ON u.piece = a.piece),
-        ukeep$i AS (SELECT u.piece, u.pcnt
-            FROM uuse$i u JOIN uinv${i - 1} iv ON iv.piece = u.piece
-            WHERE length(u.piece) > 1
-            QUALIFY row_number() OVER (ORDER BY u.pcnt * iv.logp, u.piece)
-              <= greatest(
-                   greatest(CAST($umTargetS AS BIGINT)
-                     - (SELECT count(*) FROM ualpha), 0),
-                   CAST(ceil(count(*) OVER () * $umKeepFrac) AS BIGINT))),
-        uraw$i AS (SELECT piece, pcnt FROM ukeep$i
-            UNION ALL SELECT piece, pcnt FROM usng$i),
-        utot$i AS (SELECT CAST(sum(pcnt) AS DOUBLE) AS t FROM uraw$i),
-        uinv$i AS (SELECT piece, pcnt, round(ln(pcnt / t), 6) AS logp
-            FROM uraw$i, utot$i)"""
-
-  // ---- unigram-LM SOFT-EM training (forward-backward) ------------------
-  // q116 is hard EM (Viterbi counts); the paper's E-step uses lattice
-  // EXPECTED counts — forward-backward over all segmentations. The
-  // float-determinism problem is that ln/exp are only ~1-ulp
-  // reproducible across engines and a soft DP compounds them, so the
-  // operator QUANTIZES every transcendental on computation: α/β entries
-  // round to 6 dp before the next position reads them, log-sum-exp
-  // terms round into 1e-7 fixed-point and sum as exact BIGINTs
-  // (order-free — a float sum would be partial-aggregation-order
-  // dependent), and per-occurrence expected counts round into 1e-6
-  // micro-units summed as BIGINTs. Both engines then see bit-identical
-  // inputs at every step; a 1-ulp difference only flips a rounding when
-  // the true value sits within ~1e-15 of a quantum boundary. β is the
-  // forward pass run on the REVERSED word against the reversed-piece
-  // inventory (β(j) = α_rev(n−j)) on BOTH engines — one DP shape, and
-  // the fixed-point sums make candidate order irrelevant.
-  private val umSoftIters = 2
-
-  /** Quantized-LSE forward DP over `$wordCol` of `$wordTable` against
-    * `$invName` → `$out` (word key, cnt, segmented string `w`, α array
-    * `a`). The lateral computes max-rescaled fixed-point log-sum-exp:
-    * candidates x = α(j) + logp (already-quantized doubles), terms
-    * round(exp(x − mx)·1e7) summed as BIGINT, result rounded to 6 dp. */
-  private def umFwdSql(i: Int, wordTable: String, wordCol: String,
-                       invName: String, out: String): String =
-    s"""$out AS (
-          SELECT word, cnt, $wordCol AS w, 0 AS pos,
-            [CAST(0 AS DOUBLE)] AS a
-          FROM $wordTable
-          UNION ALL
-          SELECT f.word, f.cnt, f.w, f.pos + 1 AS pos,
-            list_append(f.a,
-              COALESCE(best.v, CAST('-infinity' AS DOUBLE))) AS a
-          FROM $out f LEFT JOIN LATERAL (
-            SELECT round(max(q.mx) + ln(CAST(sum(
-                     CAST(round(exp(q.x - q.mx) * 1e7) AS BIGINT))
-                     AS DOUBLE) / 1e7), 6) AS v
-            FROM (
-              SELECT c.x, max(c.x) OVER () AS mx
-              FROM (
-                SELECT f.a[f.pos + 2 - l.l] + iv.logp AS x
-                FROM unnest(generate_series(1,
-                       least(f.pos + 1, $umMaxLen))) AS l(l)
-                JOIN $invName iv
-                  ON iv.piece = substr(f.w, f.pos + 2 - l.l, l.l)
-                WHERE f.a[f.pos + 2 - l.l] > CAST('-infinity' AS DOUBLE)
-              ) c
-            ) q
-          ) best ON true
-          WHERE f.pos < length(f.w))"""
-
-  /** One soft-EM iteration: forward on the word, forward on the
-    * reversed word (reversed inventory), lattice-posterior expected
-    * counts in 1e-6 fixed-point, exact BIGINT sum, 6 dp
-    * renormalization → `uinv$i`. */
-  private def umSoftSql(i: Int): String =
-    s"""urinv$i AS (SELECT reverse(piece) AS piece, logp FROM uinv${i - 1}),
-        ${umFwdSql(i, "uwh", "word", s"uinv${i - 1}", s"ufw$i")},
-        ${umFwdSql(i, "urv", "rword", s"urinv$i", s"urw$i")},
-        ufx$i AS (SELECT word, cnt, a FROM ufw$i WHERE pos = length(w)),
-        urx$i AS (SELECT word, a AS ra FROM urw$i WHERE pos = length(w)),
-        uex$i AS (
-          SELECT iv.piece,
-            CAST(round(f.cnt * exp(f.a[j.j + 1] + iv.logp
-              + x.ra[length(f.word) - j.j - l.l + 1]
-              - f.a[length(f.word) + 1]) * 1e6) AS BIGINT) AS cm
-          FROM ufx$i f, urx$i x,
-               LATERAL unnest(generate_series(0, length(f.word) - 1)) AS j(j),
-               LATERAL unnest(generate_series(1, $umMaxLen)) AS l(l),
-               uinv${i - 1} iv
-          WHERE x.word = f.word
-            AND j.j + l.l <= length(f.word)
-            AND iv.piece = substr(f.word, j.j + 1, l.l)
-            AND f.a[length(f.word) + 1] > CAST('-infinity' AS DOUBLE)
-            AND f.a[j.j + 1] > CAST('-infinity' AS DOUBLE)
-            AND x.ra[length(f.word) - j.j - l.l + 1]
-              > CAST('-infinity' AS DOUBLE)),
-        uuse$i AS (SELECT piece, CAST(sum(cm) AS BIGINT) AS pcnt
-            FROM uex$i GROUP BY piece HAVING sum(cm) > 0),
-        utot$i AS (SELECT CAST(sum(pcnt) AS DOUBLE) AS t FROM uuse$i),
-        uinv$i AS (SELECT piece, pcnt, round(ln(pcnt / t), 6) AS logp
-            FROM uuse$i, utot$i)"""
-
-  private val unigramSoftEm = Q(
-    "q118_unigram_soft_em",
-    (s, dir) => graft.llm.Unigram
-      .softEmTrain(corpusWordHist(s, dir), umMaxLen, umTopS, umSoftIters)
-      .orderBy("piece"),
-    Some(s"""WITH RECURSIVE $umSeedSql,
-            urv AS (SELECT word, cnt, reverse(word) AS rword FROM uwh),
-            ${(1 to umSoftIters).map(umSoftSql).mkString(",\n")}
-            SELECT piece, pcnt, logp FROM uinv$umSoftIters
-            ORDER BY piece"""))
-
-  // ---- unigram-LM sampled segmentation (subword regularization) --------
-  // Kudo 2018 §4: training-time augmentation draws each word's
-  // segmentation from the lattice posterior instead of argmax.
-  // Forward-filtering backward-sampling with NO RNG: the uniform is the
-  // q110 md5-digit fold of (word, position), and the inverse-CDF pick is
-  // all-integer — candidate weights are q118's quantized posteriors in
-  // 1e-7 fixed-point and the pick compares cum·2³² > u·total in exact
-  // 64-bit products, so the DRAW itself replays bit-identically in
-  // DuckDB (a recursive CTE walking positions, choosing via a windowed
-  // cumulative sum under the same inequality).
-  private val unigramSampled = Q(
-    "q119_unigram_sampled",
-    (s, dir) => {
-      val wh = Staging.stage(corpusWordHist(s, dir))
-      val inv = graft.llm.Unigram.inventory(wh, umMaxLen, umTopS)
-      val segs = graft.llm.Unigram.sampleSegmentCounts(wh, inv, umMaxLen)
-        .select(col("word"), col("n_pieces"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toksExpr)).as("word"))
-        .join(segs, Seq("word"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_words"),
-          sum(length(col("word"))).cast("long").as("n_chars"),
-          sum(col("n_pieces")).cast("long").as("n_sampled_tokens"))
-        .withColumn("compression",
-          round(col("n_chars").cast("double") / col("n_sampled_tokens"), 6))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH RECURSIVE $umSeedSql,
-            ${umFwdSql(1, "uwh", "word", "uinv0", "usfw")},
-            usfx AS (SELECT word, cnt, a FROM usfw WHERE pos = length(w)),
-            uwt AS (
-              SELECT f.word, p.p AS pos, l.l AS l,
-                CAST(round(exp(f.a[p.p - l.l + 1] + iv.logp
-                  - f.a[p.p + 1]) * 1e7) AS BIGINT) AS w
-              FROM usfx f,
-                   LATERAL unnest(generate_series(1, length(f.word))) AS p(p),
-                   LATERAL unnest(generate_series(1,
-                     least(p.p, $umMaxLen))) AS l(l),
-                   uinv0 iv
-              WHERE iv.piece = substr(f.word, p.p - l.l + 1, l.l)
-                AND f.a[p.p - l.l + 1] > CAST('-infinity' AS DOUBLE)
-                AND f.a[p.p + 1] > CAST('-infinity' AS DOUBLE)),
-            uchoice AS (
-              SELECT word, pos, min(l) AS pick FROM (
-                SELECT word, pos, l,
-                  sum(w) OVER (PARTITION BY word, pos ORDER BY l) AS cum,
-                  sum(w) OVER (PARTITION BY word, pos) AS total,
-                  CAST(list_sum(list_transform(range(1, 9),
-                    i -> (strpos('0123456789abcdef',
-                        substr(md5('useg|' || word || '|'
-                          || CAST(pos AS VARCHAR)), i, 1)) - 1)
-                      * power(16, 8 - i))) AS BIGINT) AS u
-                FROM uwt)
-              WHERE cum * 4294967296 > u * total
-              GROUP BY word, pos),
-            usmp AS (
-              SELECT word, cnt, length(word) AS pos, 0 AS n FROM uwh
-              UNION ALL
-              SELECT s.word, s.cnt, s.pos - ch.pick AS pos, s.n + 1 AS n
-              FROM usmp s
-              JOIN uchoice ch ON ch.word = s.word AND ch.pos = s.pos
-              WHERE s.pos > 0),
-            uscnt AS (SELECT word, CAST(n AS BIGINT) AS npieces
-                FROM usmp WHERE pos = 0),
-            usdx AS (SELECT doc_id, unnest($toksSql) AS word FROM documents)
-            SELECT usdx.doc_id,
-              CAST(count(*) AS BIGINT) AS n_words,
-              CAST(sum(length(usdx.word)) AS BIGINT) AS n_chars,
-              CAST(sum(u.npieces) AS BIGINT) AS n_sampled_tokens,
-              round(CAST(sum(length(usdx.word)) AS DOUBLE) / sum(u.npieces), 6)
-                AS compression
-            FROM usdx JOIN uscnt u USING (word)
-            GROUP BY usdx.doc_id ORDER BY doc_id"""))
-
-  private val unigramPruned = Q(
-    "q117_unigram_pruned",
-    (s, dir) => graft.llm.Unigram
-      .emTrainPruned(corpusWordHist(s, dir), umMaxLen, umTopS, umTargetS,
-        umPruneIters, umKeepFrac)
-      .orderBy("piece"),
-    Some(s"""WITH RECURSIVE $umSeedSql,
-            ualpha AS (SELECT piece FROM uinv0 WHERE length(piece) = 1),
-            ${(1 to umPruneIters).map(i =>
-              umSegSql(i) + ",\n" + umPruneSql(i)).mkString(",\n")}
-            SELECT piece, pcnt, logp FROM uinv$umPruneIters
-            ORDER BY piece"""))
-
-  private val bpeEncode = Q(
-    "q105_bpe_encode",
-    (s, dir) => {
-      val (_, vocab) = graft.llm.Bpe.train(corpusWordHist(s, dir), bpeSteps)
-      val wlen = vocab.select(col("word"),
-        size(col("syms")).cast("long").as("n_syms"))
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(expr(toksExpr)).as("word"))
-        .join(wlen, Seq("word"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_words"),
-          sum(length(col("word"))).cast("long").as("n_chars"),
-          sum(col("n_syms")).cast("long").as("n_bpe_tokens"))
-        .withColumn("compression",
-          round(col("n_chars").cast("double") / col("n_bpe_tokens"), 6))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH $bpeChainSql,
-            wl AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_syms
-                  FROM w$bpeSteps),
-            dx AS (SELECT doc_id, unnest($toksSql) AS word FROM documents)
-            SELECT dx.doc_id,
-              CAST(count(*) AS BIGINT) AS n_words,
-              CAST(sum(length(dx.word)) AS BIGINT) AS n_chars,
-              CAST(sum(wl.n_syms) AS BIGINT) AS n_bpe_tokens,
-              round(CAST(sum(length(dx.word)) AS DOUBLE) / sum(wl.n_syms), 6)
-                AS compression
-            FROM dx JOIN wl USING (word)
-            GROUP BY dx.doc_id ORDER BY doc_id"""))
-
-  // ---- stupid-backoff LM scoring (cross-slice) -------------------------
-  // Brants et al. 2007 ("Large Language Models in Machine Translation",
-  // EMNLP) — the distributed-LM scoring scheme built precisely for this
-  // engine's situation: MLE n-gram tables sharded across machines, no
-  // normalized smoothing, unseen n-grams handled by backing off with a
-  // fixed penalty: S(w|v) = cnt(v w)/cnt(v ·) if seen, else
-  // alpha * S(w), with S(w) = cnt(w)/N and alpha = 0.4 (the paper's
-  // constant); a token unseen even as a unigram bottoms out at
-  // alpha^2 / N. q84 estimates its LM on the SAME corpus it scores, so
-  // by construction no backoff ever fires there; here the LM is
-  // estimated on a TRAINING SLICE (doc_id < sbSplit) and scores the
-  // held-out rest — the production shape (external LM, eval scoring),
-  // and the backoff path actually executes (n_backoff is emitted as an
-  // observable). Scale: LM bigram/unigram tables are Heaps'-law sized —
-  // keyed left joins, NO broadcast mandate (q70/q78/q84's rule); only
-  // the 1-row token total is hint-broadcast. The float seam is the
-  // usual avg-of-logs, rounded 6 dp at emission.
-  private val sbAlpha = 0.4
-  private val sbSplit = 250L
-
-  private val stupidBackoff = Q(
-    "q106_stupid_backoff",
-    (s, dir) => {
-      val toks = t(s, dir, "documents").withColumn("toks", expr(toksExpr))
-      def bigramsOf(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), explode(expr(
-          """zip_with(slice(toks, 1, greatest(size(toks)-1, 0)),
-                      slice(toks, 2, greatest(size(toks)-1, 0)),
-                      (a, b) -> struct(a AS w1, b AS w2))""")).as("bg"))
-        .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      val lmToks = toks.filter(col("doc_id") < sbSplit)
-      val lmBig = Staging.stage(bigramsOf(lmToks))
-      val biCnt = lmBig.groupBy("w1", "w2").agg(count(lit(1)).as("bi_cnt"))
-      val ctxCnt = lmBig.groupBy("w1").agg(count(lit(1)).as("ctx_cnt"))
-      val lmUni = lmToks.select(explode(col("toks")).as("w2"))
-        .groupBy("w2").agg(count(lit(1)).as("uni_cnt"))
-      val nTot = lmToks.select(explode(col("toks")).as("w"))
-        .agg(count(lit(1)).cast("double").as("n_total"))
-      bigramsOf(toks.filter(col("doc_id") >= sbSplit))
-        .join(biCnt, Seq("w1", "w2"), "left")
-        .join(ctxCnt, Seq("w1"), "left")
-        .join(lmUni, Seq("w2"), "left")
-        .crossJoin(broadcast(nTot))
-        .withColumn("s",
-          when(col("bi_cnt").isNotNull,
-            col("bi_cnt").cast("double") / col("ctx_cnt"))
-            .when(col("uni_cnt").isNotNull,
-              lit(sbAlpha) * col("uni_cnt") / col("n_total"))
-            .otherwise(lit(sbAlpha) * lit(sbAlpha) / col("n_total")))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_scored"),
-          sum(when(col("bi_cnt").isNull, 1).otherwise(0)).cast("long")
-            .as("n_backoff"),
-          round(avg(log(col("s"))), 6).as("avg_logs"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH b AS (SELECT doc_id, $toksSql AS toks FROM documents),
-            x AS (SELECT doc_id, unnest(toks) AS w,
-                generate_subscripts(toks, 1) AS i FROM b),
-            g AS (SELECT a.doc_id, a.w AS w1, c.w AS w2
-                FROM x a JOIN x c ON a.doc_id = c.doc_id AND c.i = a.i + 1),
-            lb AS (SELECT w1, w2, count(*) AS bi_cnt FROM g
-                WHERE doc_id < $sbSplit GROUP BY w1, w2),
-            lc AS (SELECT w1, count(*) AS ctx_cnt FROM g
-                WHERE doc_id < $sbSplit GROUP BY w1),
-            lu AS (SELECT w AS w2, count(*) AS uni_cnt FROM x
-                WHERE doc_id < $sbSplit GROUP BY w),
-            nt AS (SELECT CAST(count(*) AS DOUBLE) AS n_total FROM x
-                WHERE doc_id < $sbSplit),
-            hx AS (SELECT g.doc_id, lb.bi_cnt, lc.ctx_cnt, lu.uni_cnt,
-                nt.n_total
-              FROM g LEFT JOIN lb USING (w1, w2) LEFT JOIN lc USING (w1)
-                LEFT JOIN lu USING (w2) CROSS JOIN nt
-              WHERE g.doc_id >= $sbSplit),
-            sv AS (SELECT doc_id,
-                CASE WHEN bi_cnt IS NOT NULL
-                       THEN CAST(bi_cnt AS DOUBLE) / ctx_cnt
-                     WHEN uni_cnt IS NOT NULL
-                       THEN CAST($sbAlpha AS DOUBLE) * uni_cnt / n_total
-                     ELSE CAST($sbAlpha AS DOUBLE) * CAST($sbAlpha AS DOUBLE)
-                       / n_total END AS s,
-                CASE WHEN bi_cnt IS NULL THEN 1 ELSE 0 END AS bo
-              FROM hx)
-            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_scored,
-              CAST(sum(bo) AS BIGINT) AS n_backoff,
-              round(avg(ln(s)), 6) AS avg_logs
-            FROM sv GROUP BY doc_id ORDER BY doc_id"""))
-
-  // ---- deterministic weighted sampling (Gumbel-top-k) ------------------
-  // The EXECUTION step behind importance-weighted selection: q88/q60
-  // produce per-doc weights, and a training mix wants "N docs sampled
-  // proportional to exp(weight/T), without replacement, reproducibly".
-  // The Gumbel-max trick (Vieira 2014; Kool et al. 2019,
-  // arXiv:1903.06059) turns that into a top-k: key_i = w_i/T + G_i with
-  // G_i standard Gumbel noise, take the N largest — exactly a weighted
-  // sample without replacement. The engine's twist is that G_i needs NO
-  // RNG state: u_i derives from 8 md5 hex digits of the salted doc id
-  // (digit-fold to an integer in [0, 2^32), +0.5, normalize — every
-  // term is double-exact, so both engines compute bit-identical u),
-  // g = -ln(-ln(u)). ln itself is only 1-ulp-accurate per engine (JVM
-  // Math.log vs libm need not agree in the last ulp), so the sort key
-  // is ROUNDED to 6 dp before the top-N cut — see the in-query comment.
-  // Scale:
-  // weight + noise are map-only column arithmetic and the cut is
-  // TakeOrdered(N) — no global sort, no RNG broadcast, rerun-stable.
-  private val gumbelN = 50
-  private val gumbelT = 0.5
-
-  private val gumbelSample = Q(
-    "q110_gumbel_sample",
-    (s, dir) => {
-      val uExpr =
-        """aggregate(sequence(1, 8), CAST(0 AS DOUBLE),
-             (a, i) -> a + (instr('0123456789abcdef', substring(h, i, 1)) - 1)
-                         * power(16, 8 - i))"""
-      qualityCols(t(s, dir, "documents"))
-        .select(col("doc_id"), col("quality"))
-        .withColumn("h", md5(concat(lit("wsample|"), col("doc_id").cast("string"))))
-        .withColumn("u", (expr(uExpr) + lit(0.5)) / lit(4294967296.0))
-        .withColumn("g", -log(-log(col("u"))))
-        // round BEFORE the rank cut (q101's rounded-before-ranking rule):
-        // ln is only 1-ulp-accurate on either engine, so the unrounded
-        // key could straddle the top-N boundary by a last-ulp disagreement
-        // and flip SET membership — rounding first makes both engines cut
-        // on identical bits, with doc_id breaking the (now possible) ties
-        .withColumn("skey",
-          round(col("quality") / lit(gumbelT) + col("g"), 6))
-        .orderBy(col("skey").desc, col("doc_id"))
-        .limit(gumbelN)
-        .select(col("doc_id"), col("quality"), col("skey"))
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH $qualitySqlCte,
-            qs AS (SELECT doc_id,
-                round(0.4 * (1.0 - punct_ratio) +
-                      0.3 * least(stop_ratio * 4, 1.0) +
-                      0.3 * least(mean_word_len / 8, 1.0), 6) AS quality
-              FROM qm),
-            hx AS (SELECT doc_id, quality,
-                md5('wsample|' || CAST(doc_id AS VARCHAR)) AS h FROM qs),
-            ux AS (SELECT doc_id, quality,
-                (list_sum(list_transform(range(1, 9),
-                   i -> (strpos('0123456789abcdef', substr(h, i, 1)) - 1)
-                        * power(16, 8 - i))) + 0.5) / 4294967296.0 AS u
-              FROM hx),
-            kx AS (SELECT doc_id, quality,
-                round(quality / $gumbelT + (-ln(-ln(u))), 6) AS skey FROM ux),
-            top AS (SELECT doc_id, quality, skey FROM kx
-                ORDER BY skey DESC, doc_id LIMIT $gumbelN)
-            SELECT doc_id, quality, skey FROM top
-            ORDER BY doc_id"""))
-
-  // ---- trained-PQ ANN (train -> encode -> ADC, the q94/q99 composition) --
-  // q94 pins the encode/ADC machinery against FIXED codebooks (the only
-  // kind its oracle could replay at the time); PqRecallSpec proves
-  // Pq.trainCodebooks beats that baseline on a planted fixture. This row
-  // closes the gap between them: the PRODUCTION composition — per-subspace
-  // Lloyd TRAINING, corpus encoding against the trained codebooks, ADC
-  // top-k — verified end-to-end by the driver. Replayability is the q99
-  // recipe applied per subspace: md5-order seeds, dot-identity distances
-  // (bit-identical folds both engines), (d2, cent_id) ties, empty cells
-  // keep their centroid, and each iteration's means ROUNDED to 6 dp so
-  // partial-sum order can never drift an assignment. The oracle unrolls
-  // the fixed iteration count as a CTE chain over the (vec, sub) slice
-  // table — one chain trains all m subspaces at once, exactly like the
-  // engine's own sub-keyed aggregation. Scale shape: per iteration the
-  // m*k-row codebook broadcasts and the mean update shuffles m*k*subDim
-  // rows; the ADC scan is q94's (broadcast LUT, map-only fold, bounded
-  // heap) — PlanSpec pins it on the trained path too.
-  private val pqTrainM = 4
-  private val pqTrainSubDim = 16
-  private val pqTrainK = 8
-  private val pqTrainIters = 2
-
-  private def pqIterSql(i: Int): String =
-    s"""pa$i AS (SELECT s.vec_id, s.sub, s.sv, c.cent_id,
-              list_dot_product(s.sv, s.sv) - 2 * list_dot_product(s.sv, c.cv)
-                + list_dot_product(c.cv, c.cv) AS d2
-            FROM psv s JOIN pc${i - 1} c ON s.sub = c.sub),
-        pw$i AS (SELECT vec_id, sub, sv, cent_id,
-              row_number() OVER (PARTITION BY vec_id, sub
-                ORDER BY d2, cent_id) AS rk
-            FROM pa$i),
-        pm$i AS (SELECT sub, cent_id, u.i AS pos, round(avg(sv[u.i]), 6) AS mv
-            FROM pw$i, unnest(range(1, len(sv) + 1)) AS u(i)
-            WHERE rk = 1 GROUP BY sub, cent_id, u.i),
-        pg$i AS (SELECT sub, cent_id, list(mv ORDER BY pos) AS ncv
-            FROM pm$i GROUP BY sub, cent_id),
-        pc$i AS (SELECT c.sub, c.cent_id, COALESCE(g.ncv, c.cv) AS cv
-            FROM pc${i - 1} c LEFT JOIN pg$i g USING (sub, cent_id))"""
-
-  private val pqTrained = Q(
-    "q111_pq_trained",
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = graft.llm.Pq.trainCodebooks(
-        emb, pqTrainM, pqTrainSubDim, pqTrainK, pqTrainIters)
-      val codes = graft.llm.Pq.encode(emb, cb, pqTrainM, pqTrainSubDim)
-      graft.llm.Pq.adcTopK(emb.filter(col("vec_id") < 5), codes, cb,
-        pqTrainM, pqTrainSubDim, pqTrainK, topK = 5)
-        .orderBy(col("query_id"), col("approx_dist"), col("vec_id"))
-    },
-    Some(s"""WITH pen AS (SELECT vec_id,
-                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              FROM embeddings),
-            pst AS (SELECT unnest(generate_series(0, ${pqTrainM - 1})) AS sub),
-            psv AS (SELECT vec_id, sub,
-                v[$pqTrainSubDim*sub+1 : $pqTrainSubDim*sub+$pqTrainSubDim] AS sv
-              FROM pen CROSS JOIN pst),
-            psd AS (SELECT vec_id,
-                CAST(row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)),
-                  vec_id) - 1 AS INT) AS cent_id
-              FROM pen QUALIFY cent_id < $pqTrainK),
-            pc0 AS (SELECT s.sub, d.cent_id, s.sv AS cv
-              FROM psv s JOIN psd d USING (vec_id)),
-            ${(1 to pqTrainIters).map(pqIterSql).mkString(",\n")},
-            pdf AS (SELECT s.vec_id, s.sub, c.cent_id,
-                list_dot_product(s.sv, s.sv) - 2 * list_dot_product(s.sv, c.cv)
-                  + list_dot_product(c.cv, c.cv) AS d2
-              FROM psv s JOIN pc$pqTrainIters c ON s.sub = c.sub),
-            pcodes AS (SELECT vec_id, sub, cent_id AS code FROM pdf
-              QUALIFY row_number() OVER (PARTITION BY vec_id, sub
-                ORDER BY d2, cent_id) = 1),
-            padc AS (SELECT l.vec_id AS query_id, c.vec_id,
-                round(sum(l.d2), 6) AS approx_dist
-              FROM pcodes c JOIN pdf l
-                ON c.sub = l.sub AND c.code = l.cent_id
-                  AND l.vec_id < 5 AND c.vec_id <> l.vec_id
-              GROUP BY l.vec_id, c.vec_id)
-            SELECT query_id, vec_id, approx_dist FROM padc
-            QUALIFY row_number() OVER (PARTITION BY query_id
-              ORDER BY approx_dist, vec_id) <= 5
-            ORDER BY query_id, approx_dist, vec_id"""))
-
-  // ---- mergeable sketch summaries (KMV / HLL / CMS) --------------------
-  // The bounded-summary tier (llm/Sketches): at 100 TB, per-source
-  // distinct-token counts, cross-source overlap, and heavy-hitter
-  // frequency gates are sketch questions — one map-side-combinable pass
-  // into a fixed-size summary per group, mergeable across shards/days,
-  // estimates computed from the summary alone. Each oracle row builds
-  // the sketch AND an exact answer side by side, so the driver verifies
-  // the engine's sketch construction bit-for-bit (the md5 digit-fold
-  // hash makes every register/rank/bucket identical cross-engine) while
-  // the exact column documents the estimate's quality on the fixture.
-  // shared with streaming/SketchStream — the streamed state and these
-  // oracle-generating constants must agree or the driver gate diverges
-  private[graft] val kmvK = 256
-  private[graft] val hllP = 9 // 512 registers
-  private[graft] val cmsD = 4
-  private[graft] val cmsW = 8192
-  private val cmsTopN = 40
-
-  /** Distinct (source, shingle) pairs with the sketch family's 32-bit
-    * hash — the base all three sketch rows share. The sketched unit is
-    * the 3-word shingle (the q65 contamination unit, ~10³ per source on
-    * the fixture — enough cardinality that the k-th-order-statistic and
-    * harmonic-mean estimator branches actually execute; the fixture's
-    * whitespace vocabulary is only ~31 types, which would leave every
-    * estimator in its exact-small-set branch). Shingle-set-sized, never
-    * corpus-sized; the distinct is the one shuffle and exists only
-    * because the oracle rows also want EXACT comparison columns — a
-    * production sketch pass aggregates straight from the shingle stream
-    * with map-side partials and no distinct. */
-  private def sourceShingleHashes(s: SparkSession, dir: String): DataFrame =
-    Staging.spread(t(s, dir, "documents"))
-      .withColumn("toks", expr(toksExpr))
-      .select(col("source"),
-        explode(expr(s"array_distinct($shingleSparkExpr)")).as("item"))
-      .distinct()
-      .withColumn("hh", md5(concat(lit("kmv|"), col("item"))))
-      .select(col("source"), col("item"), graft.llm.Sketches.hexFold32("hh").as("h"))
-
-  /** The shared base as SQL CTEs: `skb` (source, item) distinct, `skv`
-    * (source, h) distinct hashes. */
-  private val sketchBaseSql =
-    s"""skt AS (SELECT source, $toksSql AS toks FROM documents),
-        skb AS (SELECT DISTINCT source, unnest(list_distinct($shingleSql)) AS item
-          FROM skt),
-        skh AS (SELECT source, item, md5('kmv|' || item) AS hh FROM skb),
-        skv AS (SELECT DISTINCT source,
-            CAST(list_sum(list_transform(range(1, 9),
-              i -> (strpos('0123456789abcdef', substr(hh, i, 1)) - 1)
-                   * power(16, 8 - i))) AS BIGINT) AS h
-          FROM skh)"""
-
-  // KMV distinct-count: k smallest hashes per source; estimate
-  // (k-1)/u_k, exact when the set is smaller than k. The rank pass is
-  // a per-source window at fixture scale; the 100 TB shape is the
-  // TopK.TopKAgg bounded-heap aggregation (map-side k-buffers, shuffle
-  // = k rows/partition/group) — same result, pinned in ApproxSpec.
-  private val kmvDistinct = Q(
-    "q120_kmv_distinct",
-    (s, dir) => {
-      val base = Staging.stage(sourceShingleHashes(s, dir))
-      val wn = Window.partitionBy("source").orderBy("h")
-      val sk = base.select("source", "h").distinct()
-        .withColumn("rn", row_number().over(wn))
-        .groupBy("source")
-        .agg(count(lit(1)).as("nh"),
-          max(when(col("rn") === kmvK, col("h"))).as("hk"))
-      val ex = base.groupBy("source").agg(countDistinct("item").as("n_exact"))
-      ex.join(sk, Seq("source"))
-        .select(col("source"), col("n_exact"),
-          graft.llm.Sketches.kmvEstimate(col("hk"), col("nh"), kmvK).as("est_kmv"))
-        .orderBy("source")
-    },
-    Some(s"""WITH $sketchBaseSql,
-            krn AS (SELECT source, h, row_number() OVER (PARTITION BY source
-                ORDER BY h) AS rn FROM skv),
-            ksk AS (SELECT source, count(*) AS nh,
-                max(CASE WHEN rn = $kmvK THEN h END) AS hk
-              FROM krn GROUP BY source),
-            kex AS (SELECT source, count(DISTINCT item) AS n_exact
-              FROM skb GROUP BY source)
-            SELECT e.source, e.n_exact,
-              round(CASE WHEN s.hk IS NULL THEN CAST(s.nh AS DOUBLE)
-                ELSE ${(kmvK - 1).toDouble} / ((s.hk + 0.5) / 4294967296.0)
-                END, 4) AS est_kmv
-            FROM kex e JOIN ksk s USING (source) ORDER BY source"""))
-
-  // KMV set algebra: the k smallest hashes of A∪B are computable from
-  // the two k-hash SKETCHES alone (min-k is mergeable), so cross-source
-  // Jaccard never re-reads either source — 20 sketch rows of k values
-  // each, a broadcastable pairwise combine. ρ = |union-sketch ∩ A ∩ B|
-  // / |union-sketch| (Beyer et al. 2007 §5); the exact Jaccard sits
-  // alongside for quality.
-  private val kmvJaccard = Q(
-    "q121_kmv_jaccard",
-    (s, dir) => {
-      val base = Staging.stage(sourceShingleHashes(s, dir))
-      val wn = Window.partitionBy("source").orderBy("h")
-      val sk = base.select("source", "h").distinct()
-        .withColumn("rn", row_number().over(wn))
-        .filter(col("rn") <= kmvK)
-        .groupBy("source").agg(sort_array(collect_list("h")).as("mins"))
-      val pairs = sk.select(col("source").as("src_a"), col("mins").as("ma"))
-        .crossJoin(broadcast(
-          sk.select(col("source").as("src_b"), col("mins").as("mb"))))
-        .filter(col("src_a") < col("src_b"))
-        .withColumn("u",
-          slice(array_sort(array_union(col("ma"), col("mb"))), 1, kmvK))
-        .withColumn("ov", size(filter(col("u"),
-          v => array_contains(col("ma"), v) && array_contains(col("mb"), v))))
-        .withColumn("est_jacc", round(col("ov") / size(col("u")), 4))
-      val sizes = base.groupBy("source").agg(countDistinct("item").as("n"))
-      val inter = base.select(col("source").as("src_a"), col("item"))
-        .join(base.select(col("source").as("src_b"), col("item")), Seq("item"))
-        .filter(col("src_a") < col("src_b"))
-        .groupBy("src_a", "src_b").agg(count(lit(1)).as("ni"))
-      pairs
-        .join(sizes.select(col("source").as("src_a"), col("n").as("na")), Seq("src_a"))
-        .join(sizes.select(col("source").as("src_b"), col("n").as("nb")), Seq("src_b"))
-        .join(inter, Seq("src_a", "src_b"), "left")
-        .withColumn("ni", coalesce(col("ni"), lit(0L)))
-        .select(col("src_a"), col("src_b"), col("est_jacc"),
-          round(col("ni") / (col("na") + col("nb") - col("ni")), 4).as("exact_jacc"))
-        .orderBy("src_a", "src_b")
-    },
-    Some(s"""WITH $sketchBaseSql,
-            jrn AS (SELECT source, h, row_number() OVER (PARTITION BY source
-                ORDER BY h) AS rn FROM skv),
-            jmins AS (SELECT source, list(h ORDER BY h) AS mins
-              FROM jrn WHERE rn <= $kmvK GROUP BY source),
-            jpr AS (SELECT a.source AS src_a, b.source AS src_b,
-                a.mins AS ma, b.mins AS mb
-              FROM jmins a, jmins b WHERE a.source < b.source),
-            jev AS (SELECT src_a, src_b,
-                len(list_filter(list_slice(list_sort(list_distinct(
-                      list_concat(ma, mb))), 1, $kmvK),
-                  v -> list_contains(ma, v) AND list_contains(mb, v))) AS ov,
-                len(list_slice(list_sort(list_distinct(
-                      list_concat(ma, mb))), 1, $kmvK)) AS nu
-              FROM jpr),
-            jsz AS (SELECT source, count(DISTINCT item) AS n
-              FROM skb GROUP BY source),
-            jin AS (SELECT a.source AS src_a, b.source AS src_b,
-                count(*) AS ni
-              FROM skb a JOIN skb b ON a.item = b.item
-                AND a.source < b.source
-              GROUP BY a.source, b.source)
-            SELECT e.src_a, e.src_b, round(e.ov / e.nu, 4) AS est_jacc,
-              round(coalesce(i.ni, 0) /
-                (sa.n + sb.n - coalesce(i.ni, 0)), 4) AS exact_jacc
-            FROM jev e
-            JOIN jsz sa ON sa.source = e.src_a
-            JOIN jsz sb ON sb.source = e.src_b
-            LEFT JOIN jin i ON i.src_a = e.src_a AND i.src_b = e.src_b
-            ORDER BY e.src_a, e.src_b"""))
-
-  // HyperLogLog distinct-count: 512 registers of max leading-zero rank,
-  // register-wise max merge — the smallest mergeable distinct summary.
-  // The rank comes from the binary-string LENGTH of the low hash bits
-  // (integer-exact, no log2 boundary), the harmonic sum is Σ2^(24-ρ)
-  // accumulated as exact BIGINTs (every term a power of two —
-  // order-free), and the estimator (with Flajolet's small-range linear
-  // counting) is single-division double arithmetic both engines
-  // reproduce bit-for-bit. Duplicates never matter (max is idempotent),
-  // so the sketch pass needs no distinct at all at scale.
-  private val hllDistinct = Q(
-    "q122_hll_distinct",
-    (s, dir) => {
-      val base = Staging.stage(sourceShingleHashes(s, dir))
-      val regs = base
-        .withColumn("reg", graft.llm.Sketches.hllRegister(col("h"), hllP))
-        .withColumn("rho", graft.llm.Sketches.hllRho(col("h"), hllP))
-        .groupBy("source", "reg").agg(max("rho").as("mrho"))
-      val agg = regs.groupBy("source").agg(
-        sum(expr("shiftleft(CAST(1 AS BIGINT), 24 - mrho)")).as("spow"),
-        count(lit(1)).as("nregs"))
-      val ex = base.groupBy("source").agg(countDistinct("item").as("n_exact"))
-      ex.join(agg, Seq("source"))
-        .withColumn("v_empty", (lit(1 << hllP) - col("nregs")).cast("long"))
-        .select(col("source"), col("n_exact"), col("v_empty"),
-          graft.llm.Sketches.hllEstimate(col("spow"), col("v_empty"), hllP)
-            .as("est_hll"))
-        .orderBy("source")
-    },
-    Some(s"""WITH $sketchBaseSql,
-            hrg AS (SELECT source,
-                CAST(floor(h / 8388608) AS INT) AS reg,
-                CAST(CASE WHEN h % 8388608 = 0 THEN 24
-                  ELSE 24 - length(bin(h % 8388608)) END AS INT) AS rho
-              FROM skv),
-            hmx AS (SELECT source, reg, max(rho) AS mrho
-              FROM hrg GROUP BY source, reg),
-            hag AS (SELECT source,
-                CAST(sum(CAST(1 AS BIGINT) << (24 - mrho)) AS BIGINT) AS spow,
-                count(*) AS nregs
-              FROM hmx GROUP BY source),
-            hex AS (SELECT source, count(DISTINCT item) AS n_exact
-              FROM skb GROUP BY source)
-            SELECT e.source, e.n_exact,
-              CAST(512 - a.nregs AS BIGINT) AS v_empty,
-              round(CASE WHEN (0.7213 / (1.0 + 1.079 / 512.0)) * 262144.0
-                  / (a.spow / 16777216.0 + CAST(512 - a.nregs AS DOUBLE))
-                  <= 1280.0 AND a.nregs < 512
-                THEN 512.0 * ln(512.0 / CAST(512 - a.nregs AS DOUBLE))
-                ELSE (0.7213 / (1.0 + 1.079 / 512.0)) * 262144.0
-                  / (a.spow / 16777216.0 + CAST(512 - a.nregs AS DOUBLE))
-                END, 4) AS est_hll
-            FROM hex e JOIN hag a USING (source) ORDER BY source"""))
-
-  // Count-min heavy hitters: a 4×8192 counter grid (row-salted hashes),
-  // point estimate = min over rows — one-sided error, never an
-  // underestimate, so a heavy-hitter gate has no false negatives. The
-  // sketch build is a map-side-combinable aggregation into 4096 cells
-  // (bounded shuffle however big the corpus); estimates join the
-  // candidates against the broadcast grid. Candidates here are the
-  // exact top-N so the row also documents estimate quality; a
-  // production gate streams candidates through the grid directly.
-  private val cmsHeavy = Q(
-    "q123_cms_heavy",
-    (s, dir) => {
-      val counts = Staging.stage(Staging.spread(t(s, dir, "documents"))
-        .withColumn("toks", expr(toksExpr))
-        .select(explode(expr(shingleSparkExpr)).as("item"))
-        .groupBy("item").agg(count(lit(1)).as("cnt")))
-      def cellOf(df: DataFrame): DataFrame = df
-        .withColumn("hh",
-          md5(concat(lit("cms"), col("r").cast("string"), lit("|"), col("item"))))
-        .withColumn("c", (graft.llm.Sketches.hexFold32("hh") % cmsW).cast("int"))
-      val cells = cellOf(counts
-        .select(col("item"), col("cnt"),
-          explode(expr(s"sequence(0, ${cmsD - 1})")).as("r")))
-        .groupBy("r", "c").agg(sum("cnt").as("cell"))
-      val top = counts.orderBy(col("cnt").desc, col("item")).limit(cmsTopN)
-      cellOf(top.select(col("item"), col("cnt").as("n_true"),
-          explode(expr(s"sequence(0, ${cmsD - 1})")).as("r")))
-        .join(broadcast(cells), Seq("r", "c"))
-        .groupBy("item", "n_true").agg(min("cell").as("n_est"))
-        .orderBy("item")
-    },
-    Some(cmsOracleSql))
-
-  private lazy val cmsOracleSql =
-    s"""WITH cts AS (SELECT $toksSql AS toks FROM documents),
-            ctc AS (SELECT item, count(*) AS cnt
-              FROM (SELECT unnest($shingleSql) AS item FROM cts)
-              GROUP BY item),
-            cce AS (SELECT item, cnt, r FROM ctc,
-              LATERAL unnest(generate_series(0, ${cmsD - 1})) AS tt(r)),
-            cch AS (SELECT item, cnt, r,
-                md5('cms' || CAST(r AS VARCHAR) || '|' || item) AS hh
-              FROM cce),
-            ccv AS (SELECT item, cnt, r,
-                CAST(CAST(list_sum(list_transform(range(1, 9),
-                  i -> (strpos('0123456789abcdef', substr(hh, i, 1)) - 1)
-                       * power(16, 8 - i))) AS BIGINT) % 8192 AS INT) AS c
-              FROM cch),
-            csk AS (SELECT r, c, CAST(sum(cnt) AS BIGINT) AS cell
-              FROM ccv GROUP BY r, c),
-            ctop AS (SELECT item, cnt FROM ctc
-              ORDER BY cnt DESC, item LIMIT $cmsTopN)
-            SELECT v.item, CAST(v.cnt AS BIGINT) AS n_true,
-              min(k.cell) AS n_est
-            FROM ccv v
-            JOIN ctop t ON t.item = v.item
-            JOIN csk k ON k.r = v.r AND k.c = v.c
-            GROUP BY v.item, v.cnt ORDER BY v.item"""
-
-  // ---- WordPiece training + encode (the third tokenizer family) -------
-  // llm/Wordpiece: BPE's merge loop rescored by likelihood gain —
-  // score(x,y) = count(xy)/(count(x)·count(y)) — with `##` continuation
-  // markers (Schuster & Nakajima 2012; the BERT tokenizer). The oracle
-  // replays TRAINING as the q104 unrolled CTE chain extended with a
-  // per-step unit-count CTE and the score ordering; scores compare
-  // bit-for-bit because each is one IEEE division of exact BIGINTs (no
-  // sums, no transcendentals — stronger than q115's rounded-logp
-  // argument). The encode row replays the greedy longest-match walk by
-  // precomputing every (word, pos) pick non-recursively (the q119
-  // trick) and walking them with a plain recursive equi-join.
-  private val wpSteps = 4
-  private val wpMaxPieceLen = 16 // ≥ longest unit spelling after 4 merges
-
-  private def wpStepSql(i: Int): String =
-    s"""wp$i AS (SELECT word, cnt, unnest(syms) AS s,
-              generate_subscripts(syms, 1) AS p FROM ww${i - 1}),
-        wm$i AS (SELECT *, lead(s) OVER (PARTITION BY word ORDER BY p) AS ns
-              FROM wp$i),
-        wu$i AS (SELECT s AS sym, CAST(sum(cnt) AS BIGINT) AS scnt
-              FROM wm$i GROUP BY s),
-        wc$i AS (SELECT s AS x, ns AS y, CAST(sum(cnt) AS BIGINT) AS pair_count
-              FROM wm$i WHERE ns IS NOT NULL GROUP BY s, ns),
-        wb$i AS (SELECT c.x, c.y, c.pair_count,
-              ux.scnt AS left_count, uy.scnt AS right_count
-              FROM wc$i c JOIN wu$i ux ON ux.sym = c.x
-                          JOIN wu$i uy ON uy.sym = c.y
-              ORDER BY c.pair_count / (ux.scnt * uy.scnt) DESC, c.x, c.y
-              LIMIT 1),
-        wf$i AS (SELECT m.*, b.x, b.y,
-              coalesce(m.s = b.x AND m.ns = b.y, false) AS mt
-              -- LEFT JOIN: exhaustion keeps the vocab (the q104 chain's
-              -- rule) — q125 reads ww$wpSteps, so an annihilating cross
-              -- join would silently empty the encode oracle
-              FROM wm$i m LEFT JOIN wb$i b ON true),
-        wg$i AS (SELECT *, sum(CASE WHEN mt THEN 1 ELSE 0 END)
-                OVER (PARTITION BY word ORDER BY p) AS mrn FROM wf$i),
-        wr$i AS (SELECT *, CASE WHEN mt THEN p - mrn END AS run FROM wg$i),
-        wk$i AS (SELECT *, mt AND ((p - min(p)
-                OVER (PARTITION BY word, run)) % 2 = 0) AS keep FROM wr$i),
-        wx$i AS (SELECT *, coalesce(lag(keep)
-                OVER (PARTITION BY word ORDER BY p), false) AS consumed
-              FROM wk$i),
-        ww$i AS (SELECT word, cnt,
-              list(CASE WHEN keep THEN s || regexp_replace(ns, '^##', '')
-                   ELSE s END ORDER BY p) AS syms
-              FROM wx$i WHERE NOT consumed GROUP BY word, cnt)"""
-
-  /** CTEs `ww0` (##-marked char histogram) → `ww$wpSteps`, with
-    * `wb1..wb$wpSteps` the learned merges. */
-  private val wpChainSql: String =
-    s"""wt0 AS (SELECT $toksSql AS toks FROM documents),
-        wwh AS (SELECT unnest(toks) AS word FROM wt0),
-        ww0 AS (SELECT word, count(*) AS cnt,
-              list_transform(generate_series(1, length(word)),
-                i -> CASE WHEN i = 1 THEN substr(word, 1, 1)
-                     ELSE '##' || substr(word, i, 1) END) AS syms
-              FROM wwh GROUP BY word),
-        ${(1 to wpSteps).map(wpStepSql).mkString(",\n")}"""
-
-  private val wordpieceMerges = Q(
-    "q124_wordpiece_merges",
-    (s, dir) => {
-      val (merges, _) = graft.llm.Wordpiece.train(corpusWordHist(s, dir), wpSteps)
-      merges.select(col("step"), col("x").as("merge_left"),
-        col("y").as("merge_right"), col("pair_count"),
-        col("left_count"), col("right_count")).orderBy("step")
-    },
-    Some(s"""WITH $wpChainSql
-            ${(1 to wpSteps).map(i =>
-              s"""SELECT CAST($i AS INT) AS step, x AS merge_left,
-                  y AS merge_right, pair_count, left_count, right_count
-                  FROM wb$i""").mkString("\nUNION ALL\n")}
-            ORDER BY step"""))
-
-  // Greedy longest-match-first encode against the learned unit
-  // inventory (max-munch; a stuck position makes the word [UNK] — the
-  // BERT rule). The corpus pays nothing here: encode runs on the WORD
-  // HISTOGRAM against a broadcast inventory, map-only, and per-doc
-  // token counts are one keyed join away (the q105 pattern).
-  private val wordpieceEncode = Q(
-    "q125_wordpiece_encode",
-    (s, dir) => {
-      val hist = corpusWordHist(s, dir)
-      val (_, vocab) = graft.llm.Wordpiece.train(hist, wpSteps)
-      val units = vocab.select(explode(col("syms")).as("piece")).distinct()
-      graft.llm.Wordpiece.encode(hist, units, wpMaxPieceLen).orderBy("word")
-    },
-    Some(s"""WITH RECURSIVE $wpChainSql,
-            wvoc AS (SELECT DISTINCT unnest(syms) AS piece FROM ww$wpSteps),
-            wpo AS (SELECT word, cnt, unnest(generate_series(1, length(word)))
-                AS pos FROM ww0),
-            wcand AS (SELECT word, pos, l FROM wpo,
-              LATERAL unnest(generate_series(1,
-                least($wpMaxPieceLen, length(word) - pos + 1))) AS ll(l)),
-            wpick AS (SELECT c.word, c.pos, max(c.l) AS pick
-              FROM wcand c JOIN wvoc v ON v.piece =
-                CASE WHEN c.pos = 1 THEN substr(c.word, c.pos, c.l)
-                     ELSE '##' || substr(c.word, c.pos, c.l) END
-              GROUP BY c.word, c.pos),
-            wwalk AS (SELECT word, 1 AS pos, 0 AS n FROM ww0
-              UNION ALL
-              SELECT w.word, w.pos + m.pick, w.n + 1
-              FROM wwalk w JOIN wpick m ON m.word = w.word AND m.pos = w.pos),
-            wfin AS (SELECT word, max(pos) AS fpos, max(n) AS n
-              FROM wwalk GROUP BY word)
-            SELECT h.word, CAST(h.cnt AS BIGINT) AS cnt,
-              CAST(CASE WHEN f.fpos = length(h.word) + 1 THEN f.n
-                   ELSE 0 END AS BIGINT) AS n_pieces,
-              (f.fpos <> length(h.word) + 1) AS is_unk
-            FROM ww0 h JOIN wfin f USING (word) ORDER BY h.word"""))
-
-  // ---- streaming ANN index maintenance as an oracle row ----------------
-  // The q82/q112 discipline applied to similarity search: each
-  // invocation folds the embedding table in two halves into a FRESH
-  // persisted IVF index through streaming/AnnIndex (nearest-centroid
-  // assignment, novelty-probed cell-partitioned appends), then answers
-  // q57's exact probe from the persisted index — so the driver checks
-  // the STREAMED index against the batch IVF oracle verbatim. Probe IO
-  // is partition-pruned to the probed cells; no indexed row shuffles.
-  private val annIncremental = Q(
-    "q126_incremental_ann",
-    (s, dir) => withTempState("graft_q126_state") { state =>
-      graft.plans.VectorDot.register(s)
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").as("v"))
-        .withColumn("norm", sqrt(expr(dotExpr.format("v", "v"))))
-      val cents = emb.filter(col("vec_id").between(1, 8))
-        .select(col("vec_id").as("cent_id"), col("v").as("cvec"),
-          col("norm").as("cnorm"))
-      graft.streaming.AnnIndex.foldBatch(
-        emb.filter(col("vec_id") < 250), cents, state)
-      graft.streaming.AnnIndex.foldBatch(
-        emb.filter(col("vec_id") >= 250), cents, state)
-      val queries = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("norm").as("qnorm"))
-      Staging.stage(graft.streaming.AnnIndex.topK(s, state, cents, queries,
-          nprobe = 2, k = 5))
-        .orderBy(col("query_id"), col("score").desc, col("vec_id"))
-    },
-    Some(ivfOracleSql))
-
-  // ---- streaming sketch maintenance as an oracle row -------------------
-  // Mergeability made driver-visible: two streamed folds into the
-  // summary-sized sketch state (streaming/SketchStream — ≤k hashes and
-  // ≤m registers per source, whatever the corpus) must answer the SAME
-  // estimates as a batch sketch build over the whole table, which is
-  // what the oracle computes from scratch. k-min union and register max
-  // are associative and duplicate-absorbing, so the equality is exact,
-  // not approximate.
-  private val sketchIncremental = Q(
-    "q127_incremental_sketch",
-    (s, dir) => withTempState("graft_q127_state") { state =>
-      val docs = t(s, dir, "documents")
-      graft.streaming.SketchStream.foldBatch(
-        docs.filter(col("doc_id") < 250), state)
-      graft.streaming.SketchStream.foldBatch(
-        docs.filter(col("doc_id") >= 250), state)
-      Staging.stage(graft.streaming.SketchStream.report(s, state))
-        .orderBy("source")
-    },
-    Some(s"""WITH $sketchBaseSql,
-            krn AS (SELECT source, h, row_number() OVER (PARTITION BY source
-                ORDER BY h) AS rn FROM skv),
-            ksk AS (SELECT source, count(*) AS nh,
-                max(CASE WHEN rn = $kmvK THEN h END) AS hk
-              FROM krn WHERE rn <= $kmvK GROUP BY source),
-            hrg AS (SELECT source,
-                CAST(floor(h / 8388608) AS INT) AS reg,
-                CAST(CASE WHEN h % 8388608 = 0 THEN 24
-                  ELSE 24 - length(bin(h % 8388608)) END AS INT) AS rho
-              FROM skv),
-            hmx AS (SELECT source, reg, max(rho) AS mrho
-              FROM hrg GROUP BY source, reg),
-            hag AS (SELECT source,
-                CAST(sum(CAST(1 AS BIGINT) << (24 - mrho)) AS BIGINT) AS spow,
-                count(*) AS nregs
-              FROM hmx GROUP BY source)
-            SELECT k.source,
-              round(CASE WHEN k.hk IS NULL THEN CAST(k.nh AS DOUBLE)
-                ELSE ${(kmvK - 1).toDouble} / ((k.hk + 0.5) / 4294967296.0)
-                END, 4) AS est_kmv,
-              round(CASE WHEN (0.7213 / (1.0 + 1.079 / 512.0)) * 262144.0
-                  / (a.spow / 16777216.0 + CAST(512 - a.nregs AS DOUBLE))
-                  <= 1280.0 AND a.nregs < 512
-                THEN 512.0 * ln(512.0 / CAST(512 - a.nregs AS DOUBLE))
-                ELSE (0.7213 / (1.0 + 1.079 / 512.0)) * 262144.0
-                  / (a.spow / 16777216.0 + CAST(512 - a.nregs AS DOUBLE))
-                END, 4) AS est_hll
-            FROM ksk k JOIN hag a USING (source) ORDER BY source"""))
-
-  // ---- BM25 ranked retrieval ------------------------------------------
-  // The missing retrieval tier: score documents against keyword queries
-  // with Okapi BM25 (Robertson & Zaragoza 2009; Lucene's +1 idf so the
-  // weight never goes negative) and return the top-k per query. The
-  // query workload is data-derived and deterministic: five two-term
-  // queries built from mid-df-rank terms (ranks 11-15 paired with
-  // 21-25; frequent enough to match at every SF, rare enough to rank).
-  //
-  // Scale shape: the ONE corpus-wide pass is the df aggregation (output
-  // Heaps-law bounded); the workload pick is orderBy+limit — Spark
-  // compiles it to TakeOrderedAndProject, never a global sort; postings
-  // are cut to query terms by a BROADCAST join before any shuffle, so
-  // the tf aggregation and scoring touch matched postings only; top-k
-  // per query is the bounded-heap TopK aggregator (map-side k-buffers,
-  // shuffle ∝ k·queries). Cross-engine parity: the one transcendental
-  // (idf's ln) is quantized to 1e-7 fixed point on computation, each
-  // term's score is a BIGINT in the same grid, and the doc score is an
-  // EXACT integer sum — order-free however many terms a query has —
-  // ranked as an integer with doc_id tie-break, one IEEE division at
-  // emission.
-  private val bm25TopK = Q(
-    "q128_bm25_topk",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val toks = docs.select(col("doc_id"), expr(toksExpr).as("tk"))
-        .withColumn("dl", size(col("tk")).cast("long"))
-      val postings = toks.select(col("doc_id"), col("dl"),
-        explode(col("tk")).as("term"))
-      val dfTab = postings.select("doc_id", "term").distinct()
-        .groupBy("term").agg(count(lit(1)).as("df"))
-      val scalars = toks.agg(count(lit(1)).as("nd"), sum("dl").as("sumdl"))
-      val qterms = graft.llm.Bm25.workload(dfTab, scalars)
-      val tfRows = postings
-        .join(broadcast(qterms.select("term")), Seq("term"))
-        .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-      graft.llm.Bm25.topkFromTf(tfRows, qterms)
-        .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-    },
-    Some(bm25OracleSql))
-
-  private lazy val bm25OracleSql =
-    s"""WITH tl AS (SELECT doc_id, $toksSql AS tk FROM documents),
-            tx AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl,
-                     unnest(tk) AS term FROM tl),
-            dfv AS (SELECT term, count(DISTINCT doc_id) AS df
-                    FROM tx GROUP BY term),
-            gs AS (SELECT CAST(count(*) AS BIGINT) AS nd,
-                     CAST(sum(len(tk)) AS BIGINT) AS sumdl FROM tl),
-            dfr AS (SELECT term, df,
-                      row_number() OVER (ORDER BY df DESC, term) AS r
-                    FROM dfv QUALIFY r <= 25),
-            qt AS (SELECT CAST(CASE WHEN r <= 15 THEN r - 11
-                     ELSE r - 21 END AS BIGINT) AS query_id, term, df,
-                     CAST(round(ln((nd - df + 0.5) / (df + 0.5) + 1.0)
-                       * 10000000.0) AS BIGINT) AS idf_fp, nd, sumdl
-                   FROM dfr CROSS JOIN gs
-                   WHERE (r BETWEEN 11 AND 15) OR (r BETWEEN 21 AND 25)),
-            tf AS (SELECT q.query_id, q.term, x.doc_id, x.dl, q.idf_fp,
-                     q.nd, q.sumdl, count(*) AS tf
-                   FROM tx x JOIN qt q USING (term)
-                   GROUP BY ALL),
-            sc AS (SELECT query_id, doc_id,
-                     sum(CAST(round(idf_fp * (tf * 2.2) /
-                       (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl /
-                         (CAST(sumdl AS DOUBLE) / nd)))) AS BIGINT)) AS s_fp
-                   FROM tf GROUP BY query_id, doc_id)
-            SELECT query_id, doc_id, round(s_fp / 10000000.0, 4) AS score
-            FROM sc
-            QUALIFY row_number() OVER (PARTITION BY query_id
-              ORDER BY s_fp DESC, doc_id) <= 5
-            ORDER BY query_id, score DESC, doc_id"""
-
-  // ---- streaming BM25 index maintenance as an oracle row ---------------
-  // The q126 discipline applied to lexical retrieval: each invocation
-  // folds the documents table in two halves into a FRESH persisted
-  // inverted index through streaming/Bm25Index (per-table novelty-probed
-  // bucketed appends), then answers q128's retrieval from the persisted
-  // state — the driver checks the STREAMED index against the batch BM25
-  // oracle verbatim. The scoring probe partition-prunes the posting
-  // store to the workload terms' buckets; the arithmetic is the shared
-  // llm/Bm25 path, so equality is structural, not coincidental.
-  private val bm25Incremental = Q(
-    "q129_incremental_bm25",
-    (s, dir) => withTempState("graft_q129_state") { state =>
-      val docs = t(s, dir, "documents")
-      graft.streaming.Bm25Index.foldBatch(
-        docs.filter(col("doc_id") < 250), "fold-a", state)
-      graft.streaming.Bm25Index.foldBatch(
-        docs.filter(col("doc_id") >= 250), "fold-b", state)
-      Staging.stage(graft.streaming.Bm25Index.topK(s, state))
-        .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-    },
-    Some(bm25OracleSql))
-
-  // ---- streaming CMS maintenance as an oracle row ----------------------
-  // The exactly-once contrast to q127: cell-wise SUM is associative but
-  // NOT duplicate-absorbing, so SketchStream.foldCms guards each fold
-  // with a batch-id ledger swapped atomically WITH the counters. Two
-  // ledgered folds must produce the same grid as q123's from-scratch
-  // build (exact BIGINT sums), which is what the oracle recomputes. The
-  // heavy-hitter CANDIDATES (and their exact n_true) are the batch pass
-  // here as in q123 — candidate tracking is a separate concern; the
-  // streamed state answers the estimates.
-  private val cmsIncremental = Q(
-    "q130_incremental_cms",
-    (s, dir) => withTempState("graft_q130_state") { state =>
-      val docs = t(s, dir, "documents")
-      graft.streaming.SketchStream.foldCms(
-        docs.filter(col("doc_id") < 250), "fold-a", state)
-      graft.streaming.SketchStream.foldCms(
-        docs.filter(col("doc_id") >= 250), "fold-b", state)
-      val counts = Staging.stage(docs
-        .withColumn("toks", expr(toksExpr))
-        .select(explode(expr(shingleSparkExpr)).as("item"))
-        .groupBy("item").agg(count(lit(1)).as("cnt")))
-      val top = counts.orderBy(col("cnt").desc, col("item")).limit(cmsTopN)
-      Staging.stage(graft.streaming.SketchStream.cmsEstimates(s, state,
-          top.select("item"))
-        .join(broadcast(top.select(col("item"), col("cnt").as("n_true"))),
-          Seq("item"))
-        .select("item", "n_true", "n_est"))
-        .orderBy("item")
-    },
-    Some(cmsOracleSql))
-
-  // ---- PageRank centrality over the near-dup graph ---------------------
-  // The iterative-graph-fixpoint family (beyond q73's transitive
-  // closure): power-iteration PageRank (Brin & Page 1998; damping 0.85,
-  // dangling mass redistributed uniformly) over the q79 simhash
-  // candidate graph — a curation signal ranking documents by how
-  // centrally they sit in the near-dup neighborhood. Deterministic
-  // cross-engine because ranks live on a 1e-9 integer grid: every
-  // division (contribution r/deg, dangling share, the damped update) is
-  // ONE IEEE op on exact BIGINTs rounded straight back to the grid, and
-  // every per-node inflow is an exact integer sum — the oracle unrolls
-  // the three iterations as a CTE chain.
-  //
-  // Scale shape: edges come from the banded candidate join (never
-  // all-pairs); an iteration is two keyed joins plus one keyed
-  // aggregation — edge- and node-sized shuffles, no broadcast mandate on
-  // anything corpus-sized; the dangling mass is a collapsed 1-row
-  // scalar riding a broadcast; the rank frame is staged per iteration
-  // so plans stay bounded.
-  private val prIters = graft.llm.PageRank.iters
-
-  private def prIterSql(i: Int): String = {
-    val p = i - 1
-    s"""g$i AS (SELECT coalesce(CAST(sum(r.r) AS BIGINT), 0) AS dang
-              FROM r$p r LEFT JOIN og ON og.src = r.doc_id
-              WHERE og.src IS NULL),
-            c$i AS (SELECT e.dst,
-                CAST(round(CAST(r.r AS DOUBLE) / o.deg) AS BIGINT) AS w
-              FROM ed e JOIN r$p r ON r.doc_id = e.src
-              JOIN og o ON o.src = e.src),
-            i$i AS (SELECT dst, CAST(sum(w) AS BIGINT) AS w
-              FROM c$i GROUP BY dst),
-            r$i AS (SELECT d.doc_id,
-                CAST(round(0.15 * 1000000000.0 / nd) AS BIGINT)
-                + CAST(round(0.85 * (coalesce(i.w, 0)
-                    + CAST(round(CAST(g.dang AS DOUBLE) / nd) AS BIGINT)))
-                  AS BIGINT) AS r
-              FROM documents d LEFT JOIN i$i i ON i.dst = d.doc_id
-              CROSS JOIN nn CROSS JOIN g$i g)"""
-  }
-
-  private val pagerank = Q(
-    "q131_pagerank",
-    (s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Staging.stage(
-        simhashBandPairs(Staging.stage(simhashFrame(s, dir, 32)), 8, 4, 6)
-          .select("doc_a", "doc_b"))
-      graft.llm.PageRank.ranks(docs.select("doc_id"), pairs)
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH ${simhashSqlCte(32)},
-            jp AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM sim a JOIN sim b ON a.lang = b.lang AND a.doc_id < b.doc_id
-              WHERE bit_count(xor(a.simhash, b.simhash)) <= 6),
-            ed AS (SELECT doc_a AS src, doc_b AS dst FROM jp
-              UNION ALL SELECT doc_b AS src, doc_a AS dst FROM jp),
-            og AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-              FROM ed GROUP BY src),
-            nn AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents),
-            r0 AS (SELECT doc_id,
-                CAST(round(1000000000.0 / nd) AS BIGINT) AS r
-              FROM documents, nn),
-            ${(1 to prIters).map(prIterSql).mkString(",\n            ")}
-            SELECT doc_id,
-              round(CAST(r AS DOUBLE) / 1000000000.0, 9) AS pr
-            FROM r$prIters ORDER BY doc_id"""))
-
-  // ---- streaming PageRank maintenance as an oracle row ------------------
-  // The q126 discipline applied to graph centrality: each invocation
-  // folds the documents table into a FRESH persisted edge/band/node
-  // state (streaming/PageRankStream — new edges from banding the batch
-  // against the pruned band index, never re-pairing the accumulated
-  // corpus), then re-ranks over the CURRENT edge state — which must
-  // answer q131's batch oracle VERBATIM, because the edge SETS are
-  // identical (same banding, same exactly-once emission, same Hamming
-  // gate) and the rank arithmetic is the shared llm/PageRank. The split
-  // is the family's doc_id-250 convention (a seed batch, then the
-  // rest); PageRankStreamSpec additionally pins 2-way-even and 4-way
-  // splits to the same ranks.
-  private val pagerankIncremental = Q(
-    "q144_incremental_pagerank",
-    (s, dir) => withTempState("graft_q144_state") { state =>
-      val docs = t(s, dir, "documents")
-      graft.streaming.PageRankStream.foldBatch(
-        docs.filter(col("doc_id") < 250), state)
-      graft.streaming.PageRankStream.foldBatch(
-        docs.filter(col("doc_id") >= 250), state)
-      Staging.stage(graft.streaming.PageRankStream.ranks(s, state))
-        .orderBy("doc_id")
-    },
-    pagerank.oracle)
-
-  // ---- PCA over the embedding corpus ----------------------------------
-  // The dimensionality lens of the embedding family (llm/Pca): ONE
-  // corpus pass accumulates the 64×64 Gram + mean moments through a
-  // typed map-side-combining Aggregator (only ~33 KB buffers cross the
-  // shuffle, whatever the corpus), then everything else is
-  // DIMENSION-bounded driver math — covariance, 48 fixed power
-  // iterations from the all-ones direction, sign pinned by the
-  // largest-|loading| dimension. The oracle replays the training
-  // end-to-end: moments via an unnest self-join, the covariance, and
-  // the 48 iterations as an unrolled CTE chain (the q111 trained-model
-  // discipline). Fixed iteration count, NOT convergence-tested — a
-  // data-dependent stop could not be replayed; the 48-step iterate
-  // from a pinned start IS the defined statistic, exactly like q99's
-  // fixed k-means iterations.
-  /** The 48-step power iteration over covariance CTE `mat`, with every
-    * generated CTE name prefixed by `pfx` (so the deflation chain can
-    * run it once per component): `<pfx>v0 … <pfx>v48`, the sign pin
-    * `<pfx>sp`, and the pinned result `<pfx>vf`. */
-  private def pcaIterChainSql(mat: String, pfx: String): String = {
-    val d = graft.llm.Pca.dim
-    val iters = (1 to graft.llm.Pca.powerIters).map { t =>
-      s"""${pfx}w$t AS MATERIALIZED (SELECT m.i AS i, sum(m.c * p.v) AS w
-              FROM $mat m JOIN ${pfx}v${t - 1} p ON p.i = m.j GROUP BY m.i),
-            ${pfx}v$t AS MATERIALIZED (SELECT i,
-                w / sqrt((SELECT sum(w * w) FROM ${pfx}w$t)) AS v
-              FROM ${pfx}w$t)"""
-    }.mkString(",\n            ")
-    val T = graft.llm.Pca.powerIters
-    s"""${pfx}v0 AS (SELECT CAST(t.r AS INT) AS i, 1.0 / sqrt($d.0) AS v
-              FROM range($d) t(r)),
-            $iters,
-            ${pfx}sp AS (SELECT CASE WHEN (SELECT v FROM ${pfx}v$T
-                  ORDER BY abs(v) DESC, i LIMIT 1) < 0
-                THEN -1.0 ELSE 1.0 END AS s),
-            ${pfx}vf AS MATERIALIZED (SELECT i,
-                v * (SELECT s FROM ${pfx}sp) AS v FROM ${pfx}v$T)"""
-  }
-
-  /** The Rayleigh quotient λ = vᵀCv and the rank-1 deflation
-    * C − λ v vᵀ as CTEs — one pair per extracted component. */
-  private def pcaDeflateSql(mat: String, vf: String, lam: String,
-                            next: String): String =
-    s"""$lam AS (SELECT sum(va.v * c0.c * vb.v) AS l
-              FROM $mat c0 JOIN $vf va ON va.i = c0.i
-              JOIN $vf vb ON vb.i = c0.j),
-            $next AS MATERIALIZED (SELECT c0.i AS i, c0.j AS j,
-                c0.c - (SELECT l FROM $lam) * va.v * vb.v AS c
-              FROM $mat c0 JOIN $vf va ON va.i = c0.i
-              JOIN $vf vb ON vb.i = c0.j)"""
-
-  private def pcaChainSql: String = {
-    // MATERIALIZED: DuckDB inlines CTEs by default, and the iteration
-    // chain references cv (→ the embeddings scan) once per step —
-    // inlined, that is 48 re-scans and an open-file blowup.
-    s"""el AS MATERIALIZED (SELECT vec_id,
-              CAST(unnest(embedding) AS DOUBLE) AS x,
-              generate_subscripts(embedding, 1) - 1 AS i FROM embeddings),
-            nn AS MATERIALIZED (SELECT count(*) AS n FROM embeddings),
-            mn AS MATERIALIZED (SELECT i, sum(x) / (SELECT n FROM nn) AS m
-              FROM el GROUP BY i),
-            gr AS MATERIALIZED (SELECT a.i AS i, b.i AS j,
-                sum(a.x * b.x) AS g
-              FROM el a JOIN el b USING (vec_id) GROUP BY a.i, b.i),
-            cv AS MATERIALIZED (SELECT g.i, g.j,
-                g.g / (SELECT n FROM nn) - ma.m * mb.m AS c
-              FROM gr g JOIN mn ma ON ma.i = g.i JOIN mn mb ON mb.i = g.j),
-            ${pcaIterChainSql("cv", "")}"""
-  }
-
-  private def round6(c: Column): Column = round(c, 6)
-
-  private val pcaLoadings = Q(
-    "q132_pca_loadings",
-    (s, dir) => {
-      val m = graft.llm.Pca.moments(t(s, dir, "embeddings"), "embedding")
-      val (_, v, lam, evr) = graft.llm.Pca.principal(m)
-      // the fitted model IS the result — dimension-bounded (64 rows),
-      // the same bounded-model materialization as trained centroids
-      import s.implicits._
-      v.toSeq.zipWithIndex
-        .map { case (x, i) => (i.toLong, x) }
-        .toDF("dim", "raw")
-        .select(col("dim"), round6(col("raw")).as("loading"),
-          round(lit(lam), 4).as("eigval"), round(lit(evr), 6).as("evr"))
-        .orderBy("dim")
-    },
-    Some(s"""WITH $pcaChainSql,
-            lam AS (SELECT sum(va.v * cv.c * vb.v) AS l
-              FROM cv JOIN vf va ON va.i = cv.i JOIN vf vb ON vb.i = cv.j),
-            tr AS (SELECT sum(c) AS t FROM cv WHERE i = j)
-            SELECT CAST(i AS BIGINT) AS dim, round(v, 6) AS loading,
-              round((SELECT l FROM lam), 4) AS eigval,
-              round((SELECT l FROM lam) / (SELECT t FROM tr), 6) AS evr
-            FROM vf ORDER BY dim"""))
-
-  // PC1 projection — the trained direction APPLIED at corpus scale: the
-  // mean and loadings ride into a single map-only scan as literal
-  // arrays (no join, no shuffle before the top-k cut, which is
-  // orderBy+limit = TakeOrderedAndProject). Scores are rounded BEFORE
-  // the rank cut so the orderings agree cross-engine.
-  private val pcaProject = Q(
-    "q133_pca_project",
-    (s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val m = graft.llm.Pca.moments(emb, "embedding")
-      val (mean, v, _, _) = graft.llm.Pca.principal(m)
-      val center = mean.zip(v).map { case (a, b) => a * b }.sum
-      // Double.toString round-trips, so the literal array is exact
-      val vsql = v.map(x => s"${x}D").mkString(", ")
-      emb.select(col("vec_id"), col("label"),
-          round6(expr(s"aggregate(zip_with(embedding, array($vsql), " +
-              "(x, w) -> CAST(x AS DOUBLE) * w), 0D, (acc, y) -> acc + y)")
-            - lit(center)).as("score"))
-        .orderBy(col("score").desc, col("vec_id")).limit(20)
-    },
-    Some(s"""WITH $pcaChainSql,
-            ctr AS (SELECT sum(m.m * f.v) AS c
-              FROM mn m JOIN vf f ON f.i = m.i),
-            sc AS (SELECT e.vec_id,
-                round(sum(e.x * f.v) - (SELECT c FROM ctr), 6) AS score
-              FROM el e JOIN vf f ON f.i = e.i GROUP BY e.vec_id)
-            SELECT s.vec_id, b.label, s.score
-            FROM sc s JOIN embeddings b USING (vec_id)
-            ORDER BY s.score DESC, s.vec_id LIMIT 20"""))
-
-  // Streaming moments made driver-visible: two streamed folds into the
-  // summary-sized moment state (streaming/PcaStream — d·d + d + 1
-  // cells whatever the corpus, exactly-once via the in-frame batch
-  // ledger) must answer the SAME loadings as the batch q132 over the
-  // whole table, which is what the oracle retrains from scratch.
-  private val pcaIncremental = Q(
-    "q134_incremental_pca",
-    (s, dir) => withTempState("graft_q134_state") { state =>
-      val emb = t(s, dir, "embeddings")
-      graft.streaming.PcaStream.foldBatch(
-        emb.filter(col("vec_id") < 250), "embedding", "b0", state)
-      graft.streaming.PcaStream.foldBatch(
-        emb.filter(col("vec_id") >= 250), "embedding", "b1", state)
-      // a redelivery must be absorbed by the ledger, not double-counted
-      graft.streaming.PcaStream.foldBatch(
-        emb.filter(col("vec_id") < 250), "embedding", "b0", state)
-      graft.streaming.PcaStream.report(s, state)
-    },
-    pcaLoadings.oracle)
-
-  // ---- multi-component PCA by deflation ---------------------------------
-  // Real embedding curation (outlier maps, diversity sampling) wants
-  // more than the dominant direction: the top 3 PCs by Hotelling
-  // deflation — extract v₁ from C, subtract λ₁v₁v₁ᵀ, iterate again on
-  // the residual. The corpus cost is UNCHANGED (the same one moments
-  // pass as q132; deflation is d×d driver arithmetic), and the oracle
-  // replays the whole thing: three 48-step iteration chains with the
-  // rank-1 subtraction CTE between (the q132 unrolled-replay discipline
-  // ×3). Explained-variance ratios are against the ORIGINAL trace, so
-  // they sum toward 1 across components; eigenvalues descend up to the
-  // fixed iterate's convergence slack (exact order is a convergence
-  // property, and the replayable statistic is the 48-step iterate).
-  private val pcaComponents = Q(
-    "q143_pca_components",
-    (s, dir) => {
-      val m = graft.llm.Pca.moments(t(s, dir, "embeddings"), "embedding")
-      val (_, comps) = graft.llm.Pca.principals(m, 3)
-      import s.implicits._
-      comps.zipWithIndex.flatMap { case ((v, lam, evr), c) =>
-        v.zipWithIndex.map { case (x, i) =>
-          ((c + 1).toLong, i.toLong, x, lam, evr)
-        }
-      }.toDF("pc", "dim", "raw", "lam", "ev")
-        .select(col("pc"), col("dim"), round6(col("raw")).as("loading"),
-          round(col("lam"), 4).as("eigval"), round(col("ev"), 6).as("evr"))
-        .orderBy("pc", "dim")
-    },
-    Some(s"""WITH $pcaChainSql,
-            tr AS (SELECT sum(c) AS t FROM cv WHERE i = j),
-            ${pcaDeflateSql("cv", "vf", "l1", "cvd2")},
-            ${pcaIterChainSql("cvd2", "p2")},
-            ${pcaDeflateSql("cvd2", "p2vf", "l2", "cvd3")},
-            ${pcaIterChainSql("cvd3", "p3")},
-            l3 AS (SELECT sum(va.v * c0.c * vb.v) AS l
-              FROM cvd3 c0 JOIN p3vf va ON va.i = c0.i
-              JOIN p3vf vb ON vb.i = c0.j)
-            SELECT * FROM (
-              SELECT CAST(1 AS BIGINT) AS pc, CAST(i AS BIGINT) AS dim,
-                round(v, 6) AS loading,
-                round((SELECT l FROM l1), 4) AS eigval,
-                round((SELECT l FROM l1) / (SELECT t FROM tr), 6) AS evr
-              FROM vf
-              UNION ALL
-              SELECT CAST(2 AS BIGINT), CAST(i AS BIGINT), round(v, 6),
-                round((SELECT l FROM l2), 4),
-                round((SELECT l FROM l2) / (SELECT t FROM tr), 6)
-              FROM p2vf
-              UNION ALL
-              SELECT CAST(3 AS BIGINT), CAST(i AS BIGINT), round(v, 6),
-                round((SELECT l FROM l3), 4),
-                round((SELECT l FROM l3) / (SELECT t FROM tr), 6)
-              FROM p3vf)
-            ORDER BY pc, dim"""))
-
-  // ---- corpus profiling -----------------------------------------------
-  // The data-quality census a 100 TB ingest runs before anything else:
-  // per-column null counts, exact distinct counts, numeric ranges and
-  // string length means, in ONE aggregation pass (the multi-distinct
-  // expands the scan k-ways inside a single shuffle — the standard
-  // profile trade; swap count_distinct for approx_count_distinct when
-  // the census is advisory). The single-row aggregate is then unpivoted
-  // driver-free via a 5-way select over the 1-row frame.
-  private val profileCensus = Q(
-    "q135_profile",
-    (s, dir) => {
-      val d = t(s, dir, "documents")
-      val cols = Seq("doc_id", "lang", "n_chars", "source", "text")
-      val nums = Set("doc_id", "n_chars")
-      val aggs = count(lit(1)).as("n") +: cols.flatMap { c =>
-        Seq(
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nn"),
-          count_distinct(col(c)).as(s"${c}_nd")) ++
-          (if (nums(c)) Seq(
-            min(col(c)).cast("double").as(s"${c}_mn"),
-            max(col(c)).cast("double").as(s"${c}_mx"))
-          else Seq(round(avg(length(col(c))), 6).as(s"${c}_al")))
-      }
-      val one = d.agg(aggs.head, aggs.tail: _*)
-      cols.map { c =>
-        one.select(lit(c).as("col_name"), col("n").as("n_rows"),
-          col(s"${c}_nn").as("n_null"), col(s"${c}_nd").as("n_distinct"),
-          (if (nums(c)) col(s"${c}_mn") else lit(null).cast("double"))
-            .as("min_num"),
-          (if (nums(c)) col(s"${c}_mx") else lit(null).cast("double"))
-            .as("max_num"),
-          (if (nums(c)) lit(null).cast("double") else col(s"${c}_al"))
-            .as("avg_len"))
-      }.reduce(_ unionByName _).orderBy("col_name")
-    },
-    Some(s"""WITH a AS (SELECT count(*) AS n,
-              ${Seq("doc_id", "lang", "n_chars", "source", "text").map { c =>
-      s"""CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS ${c}_nn,
-              count(DISTINCT $c) AS ${c}_nd,
-              ${if (c == "doc_id" || c == "n_chars")
-        s"CAST(min($c) AS DOUBLE) AS ${c}_mn, CAST(max($c) AS DOUBLE) AS ${c}_mx"
-      else s"round(avg(length($c)), 6) AS ${c}_al"}"""
-    }.mkString(",\n              ")}
-            FROM documents)
-            ${Seq("doc_id", "lang", "n_chars", "source", "text").map { c =>
-      val (mn, mx, al) =
-        if (c == "doc_id" || c == "n_chars")
-          (s"${c}_mn", s"${c}_mx", "CAST(NULL AS DOUBLE)")
-        else ("CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)", s"${c}_al")
-      s"""SELECT '$c' AS col_name, n AS n_rows, ${c}_nn AS n_null,
-              ${c}_nd AS n_distinct, $mn AS min_num, $mx AS max_num,
-              $al AS avg_len FROM a"""
-    }.mkString("\n            UNION ALL\n            ")}
-            ORDER BY col_name"""))
-
-  // ---- Zipf slope fit ---------------------------------------------------
-  // Does the corpus look like natural language? Least-squares slope of
-  // log-frequency on log-rank over the top-100 terms (Zipf's law says
-  // ≈ −1). The corpus-sized stage is one token count; the cut is
-  // orderBy+limit (TakeOrderedAndProject), and the regression runs on
-  // the 100-row frame via covar_pop/var_pop — no collect.
-  private val zipfFit = Q(
-    "q136_zipf_fit",
-    (s, dir) => {
-      val topN = 100
-      val w = Window.orderBy(col("freq").desc, col("token"))
-      val tf = t(s, dir, "documents")
-        .select(explode(expr(toksExpr)).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token")).limit(topN)
-        .withColumn("r", row_number().over(w))
-        .select(log(col("r")).as("lr"), log(col("freq")).as("lf"))
-      tf.agg(count(lit(1)).as("n_terms"),
-          (covar_pop(col("lr"), col("lf")) / var_pop(col("lr"))).as("m"),
-          avg(col("lf")).as("alf"), avg(col("lr")).as("alr"))
-        .select(col("n_terms"), round(col("m"), 6).as("slope"),
-          round(col("alf") - col("m") * col("alr"), 6).as("intercept"))
-    },
-    Some(s"""WITH x AS (SELECT unnest($toksSql) AS token FROM documents),
-            tf AS (SELECT token, count(*) AS freq FROM x GROUP BY token),
-            rk AS (SELECT freq,
-                row_number() OVER (ORDER BY freq DESC, token) AS r
-              FROM tf QUALIFY r <= 100),
-            l AS (SELECT ln(r) AS lr, ln(freq) AS lf FROM rk)
-            SELECT CAST(count(*) AS BIGINT) AS n_terms,
-              round(covar_pop(lr, lf) / var_pop(lr), 6) AS slope,
-              round(avg(lf) - covar_pop(lr, lf) / var_pop(lr) * avg(lr), 6)
-                AS intercept
-            FROM l"""))
-
-  // ---- trained quality classifier (logistic regression as oracle rows) --
-  // The model-based filtering tier (CCNet's fastText filter, Llama-style
-  // quality classifiers): label documents with a cheap heuristic, train a
-  // linear model on surface features to generalize it, score the corpus
-  // with the model. Here the teacher is q60's composite quality rule
-  // (label = quality >= 0.62) — heuristic-labels-to-cheap-model is
-  // exactly the production distillation shape, and the teacher's linear
-  // boundary makes convergence VERIFIABLE (training accuracy must climb
-  // from the base rate toward it; x_len is a deliberate distractor the
-  // optimizer has to learn to ignore). All arithmetic lives on exact
-  // integer grids (llm/QualityModel), so the DuckDB oracle replays
-  // standardization + every gradient-descent step bit-exactly as an
-  // unrolled CTE chain — the q99/q111/q116 trained-model-as-oracle-row
-  // discipline applied to supervised training.
-  private val lrFeatNames = Seq("bias", "x_stop", "x_mwl", "x_len")
-  private val lrIters = 8
-  private val lrRate = 2.0
-  // L2 (weight decay) on the 1e-7 grid, bias exempt — shrinks reliance
-  // on weak-signal features (x_len is the planted distractor); one more
-  // literal in the update, replayed verbatim by the oracle chain
-  private val lrL2 = 0.01
-
-  /** Raw 1e-6-grid features + the heuristic label off [[qualityCols]]:
-    * saturated stopword ratio, saturated mean word length, saturated
-    * token count (the distractor). */
-  private def lrFeatures(s: SparkSession, dir: String): DataFrame =
-    qualityCols(t(s, dir, "documents")).select(col("doc_id"),
-      floor(least(col("stop_ratio") * 4, lit(1.0)) * lit(1000000.0) + lit(0.5))
-        .as("x_stop"),
-      floor(least(col("mean_word_len") / 8, lit(1.0)) * lit(1000000.0) + lit(0.5))
-        .as("x_mwl"),
-      floor(least(col("tok_cnt") / 100, lit(1.0)) * lit(1000000.0) + lit(0.5))
-        .as("x_len"),
-      when(col("quality") >= 0.62, 1L).otherwise(0L).as("y"))
-
-  private val lrXsCols = Seq("xs_bias", "xs_x_stop", "xs_x_mwl", "xs_x_len")
-
-  /** Standardize + train on `raw` (a [[lrFeatures]]-shaped frame);
-    * returns (staged standardized frame, steps, mu, sd) — the stats ride
-    * along so a held-out split can be standardized WITH THE TRAINING
-    * SPLIT'S moments (no leakage). */
-  private def lrTrainOn(raw: DataFrame) = {
-    import graft.llm.QualityModel
-    val cols = Seq("x_stop", "x_mwl", "x_len")
-    val (_, mu, sd) = QualityModel.stats(raw, cols)
-    val st = Staging.stage(QualityModel.standardize(raw, cols, mu, sd))
-    (st, QualityModel.train(st, lrXsCols, "y", lrRate, lrIters, lrL2), mu, sd)
-  }
-
-  private def lrTrain(s: SparkSession, dir: String) = {
-    val (st, steps, _, _) = lrTrainOn(lrFeatures(s, dir))
-    (st, steps)
-  }
-
-  /** The DuckDB training replay from the feature CTE through `w<iters>`:
-    * one stats CTE pair (integer moments → mu/sigma on the grid), the
-    * standardized frame, then per iteration a sigmoid pass (quantized
-    * 1e-7 on computation), exact-integer gradient sums, and the floored
-    * weight update — each step reading the previous iteration's 1-row
-    * weight CTE. Every rounding is floor(v + 0.5), matching the engine.
-    * `cond` restricts the TRAINING rows (q139's hash split); `f0` always
-    * carries the full feature table so the complement stays reachable. */
-  private def lrChainSql(cond: String = "TRUE"): String = {
-    val fx = Seq("x_stop", "x_mwl", "x_len")
-    val wc = Seq("wb", "ws", "wm", "wl")
-    val xs = Seq("xs_bias", "xs_stop", "xs_mwl", "xs_len")
-    val stats = fx.zipWithIndex.map { case (c, i) =>
-      s"CAST(sum($c) AS BIGINT) AS s${i + 1}, CAST(sum($c*$c) AS BIGINT) AS q${i + 1}"
-    }.mkString(",\n                ")
-    val mus = fx.indices.map(i =>
-      s"CAST(floor(CAST(s${i + 1} AS DOUBLE)/n + 0.5) AS BIGINT) AS mu${i + 1}")
-      .mkString(",\n                ")
-    val sds = fx.indices.map(i =>
-      s"""greatest(CAST(floor(sqrt(CAST(q${i + 1} - 2*mu${i + 1}*s${i + 1} +
-                mu${i + 1}*mu${i + 1}*n AS DOUBLE)/n) + 0.5) AS BIGINT), 1) AS sd${i + 1}""")
-      .mkString(",\n                ")
-    val zs = fx.zipWithIndex.map { case (c, i) =>
-      s"CAST(floor(CAST(($c - mu${i + 1})*1000000 AS DOUBLE)/sd${i + 1} + 0.5) AS BIGINT) AS xs_${c.stripPrefix("x_")}"
-    }.mkString(",\n                ")
-    val dot = wc.zip(xs).map { case (w, x) => s"w.$w*z.$x" }.mkString(" + ")
-    val iters = (1 to lrIters).map { tt =>
-      val grads = wc.zip(xs).zipWithIndex.map { case ((w, x), j) =>
-        s"CAST(sum((p - y*10000000)*$x) AS BIGINT) AS g$j"
-      }.mkString(",\n                ")
-      val ups = wc.zipWithIndex.map { case (w, j) =>
-        // bias (j = 0) is exempt from the L2 term, the standard rule
-        val pen = if (j == 0) ""
-          else s" + $lrL2*(CAST(w.$w AS DOUBLE)/1e7)"
-        s"""w.$w - CAST(floor($lrRate*(CAST(g.g$j AS DOUBLE)/g.n/1e13$pen)*10000000.0
-                  + 0.5) AS BIGINT) AS $w"""
-      }.mkString(",\n                ")
-      s"""p$tt AS (SELECT z.doc_id, z.y, ${xs.map(x => s"z.$x").mkString(", ")},
-                CAST(floor(10000000.0/(1.0 + exp(-(CAST($dot AS DOUBLE)/1e13)))
-                  + 0.5) AS BIGINT) AS p
-              FROM z, w${tt - 1} w),
-            g$tt AS (SELECT count(*) AS n, $grads,
-                CAST(sum(CASE WHEN (p >= 5000000) = (y = 1) THEN 1 ELSE 0 END)
-                  AS BIGINT) AS nc
-              FROM p$tt),
-            w$tt AS (SELECT $ups,
-                g.nc AS nc FROM w${tt - 1} w, g$tt g)"""
-    }.mkString(",\n            ")
-    s"""$qualitySqlCte,
-            f0 AS (SELECT doc_id,
-                CAST(floor(least(stop_ratio*4, 1.0)*1000000.0 + 0.5) AS BIGINT) AS x_stop,
-                CAST(floor(least(mean_word_len/8, 1.0)*1000000.0 + 0.5) AS BIGINT) AS x_mwl,
-                CAST(floor(least(tok_cnt/100, 1.0)*1000000.0 + 0.5) AS BIGINT) AS x_len,
-                CASE WHEN round(0.4*(1.0 - punct_ratio) +
-                    0.3*least(stop_ratio*4, 1.0) +
-                    0.3*least(mean_word_len/8, 1.0), 6) >= 0.62
-                  THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS y
-              FROM qm),
-            f AS (SELECT * FROM f0 WHERE $cond),
-            st AS (SELECT count(*) AS n, $stats FROM f),
-            ms AS (SELECT n, s1, q1, s2, q2, s3, q3, $mus FROM st),
-            sg AS (SELECT n, mu1, mu2, mu3, $sds FROM ms),
-            z AS (SELECT doc_id, y, CAST(1000000 AS BIGINT) AS xs_bias, $zs
-              FROM f, sg),
-            w0 AS (SELECT ${wc.map(w => s"CAST(0 AS BIGINT) AS $w").mkString(", ")}),
-            $iters"""
-  }
-
-  /** The q137 emission shape off a trained step sequence. */
-  private def lrStepsDf(s: SparkSession,
-                        steps: Seq[graft.llm.QualityModel.Step]): DataFrame = {
-    import s.implicits._
-    steps.flatMap { step =>
-      lrFeatNames.zip(step.w).map { case (f, wu) =>
-        (step.iter.toLong, f, wu, wu.toDouble / 1e7, step.nCorrect)
-      }
-    }.toDF("iter", "feature", "w_units", "weight", "n_correct")
-      .orderBy("iter", "feature")
-  }
-
-  private val lrTrainQ = Q(
-    "q137_quality_train",
-    (s, dir) => lrStepsDf(s, lrTrain(s, dir)._2),
-    Some {
-      val wc = Seq("wb", "ws", "wm", "wl")
-      val rows = (1 to lrIters).flatMap { tt =>
-        lrFeatNames.zip(wc).map { case (f, w) =>
-          s"""SELECT CAST($tt AS BIGINT) AS iter, '$f' AS feature,
-              $w AS w_units, CAST($w AS DOUBLE)/10000000.0 AS weight,
-              nc AS n_correct FROM w$tt"""
-        }
-      }.mkString("\n            UNION ALL ")
-      s"""WITH ${lrChainSql()}
-            SELECT * FROM ($rows)
-            ORDER BY iter, feature"""
-    })
-
-  private val lrScoreQ = Q(
-    "q138_quality_score",
-    (s, dir) => {
-      import graft.llm.QualityModel
-      val (st, steps) = lrTrain(s, dir)
-      QualityModel.score(st,
-        Seq("xs_bias", "xs_x_stop", "xs_x_mwl", "xs_x_len"), steps.last.w)
-        .select(col("doc_id"), col("p_units"), col("score"), col("pred"),
-          (col("y") === 1).as("label"))
-        .orderBy("doc_id")
-    },
-    Some {
-      val dot = Seq("wb", "ws", "wm", "wl")
-        .zip(Seq("xs_bias", "xs_stop", "xs_mwl", "xs_len"))
-        .map { case (w, x) => s"w.$w*z.$x" }.mkString(" + ")
-      s"""WITH ${lrChainSql()},
-            sc AS (SELECT z.doc_id, z.y,
-                CAST(floor(10000000.0/(1.0 + exp(-(CAST($dot AS DOUBLE)/1e13)))
-                  + 0.5) AS BIGINT) AS p
-              FROM z, w$lrIters w)
-            SELECT doc_id, p AS p_units, CAST(p AS DOUBLE)/10000000.0 AS score,
-              p >= 5000000 AS pred, y = 1 AS label
-            FROM sc ORDER BY doc_id"""
-    })
-
-  // ---- held-out evaluation + threshold sweep ---------------------------
-  // The evaluation tier a model-based filter ships with: train on a
-  // deterministic md5-hash half-split (the q89 seeded-hash discipline —
-  // no RNG, rerun-stable), standardize the HELD-OUT half with the
-  // TRAINING split's moments (no leakage), score it under the trained
-  // weights, and report the confusion table + precision/recall/F1 at
-  // nine decision thresholds. Scale shape: the sweep rides a broadcast
-  // 9-row threshold frame crossed into the scored scan, collapsed by a
-  // map-side-partial groupBy(step) — shuffle is 9 rows per partition,
-  // corpus-size-independent. Ratios derive from EXACT integer counts
-  // (one division + round at emission); F1 comes from counts directly,
-  // never from the rounded precision/recall.
-  private val lrSplitSqlCond =
-    "substring(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1) < '8'"
-
-  private val lrEvalQ = Q(
-    "q139_quality_eval",
-    (s, dir) => {
-      val scored = lrHeldOutScored(s, dir)
-      import s.implicits._
-      val thr = (1L to 9L).toDF("step")
-      scored.crossJoin(broadcast(thr))
-        .groupBy("step")
-        .agg(
-          sum(when(col("p_units") >= col("step") * 1000000L &&
-            col("y") === 1, 1L).otherwise(0L)).as("tp"),
-          sum(when(col("p_units") >= col("step") * 1000000L &&
-            col("y") === 0, 1L).otherwise(0L)).as("fp"),
-          sum(when(col("p_units") < col("step") * 1000000L &&
-            col("y") === 1, 1L).otherwise(0L)).as("fn"),
-          sum(when(col("p_units") < col("step") * 1000000L &&
-            col("y") === 0, 1L).otherwise(0L)).as("tn"))
-        .select(col("step"),
-          (col("step").cast("double") / 10).as("threshold"),
-          col("tp"), col("fp"), col("fn"), col("tn"),
-          when(col("tp") + col("fp") > 0,
-            round(col("tp").cast("double") / (col("tp") + col("fp")), 6))
-            .as("p_val"),
-          when(col("tp") + col("fn") > 0,
-            round(col("tp").cast("double") / (col("tp") + col("fn")), 6))
-            .as("r_val"),
-          when(lit(2) * col("tp") + col("fp") + col("fn") > 0,
-            round((lit(2) * col("tp")).cast("double") /
-              (lit(2) * col("tp") + col("fp") + col("fn")), 6))
-            .as("f1_val"))
-        .orderBy("step")
-    },
-    Some(s"""WITH $lrHeldOutSql,
-            ks AS (SELECT unnest([1, 2, 3, 4, 5, 6, 7, 8, 9]) AS step),
-            cf AS (SELECT CAST(step AS BIGINT) AS step,
-                CAST(sum(CASE WHEN p >= step*1000000 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-                CAST(sum(CASE WHEN p >= step*1000000 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-                CAST(sum(CASE WHEN p < step*1000000 AND y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-                CAST(sum(CASE WHEN p < step*1000000 AND y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-              FROM sc, ks GROUP BY step)
-            SELECT step, CAST(step AS DOUBLE)/10 AS threshold,
-              tp, fp, fn, tn,
-              CASE WHEN tp + fp > 0
-                THEN round(CAST(tp AS DOUBLE)/(tp + fp), 6) END AS p_val,
-              CASE WHEN tp + fn > 0
-                THEN round(CAST(tp AS DOUBLE)/(tp + fn), 6) END AS r_val,
-              CASE WHEN 2*tp + fp + fn > 0
-                THEN round(CAST(2*tp AS DOUBLE)/(2*tp + fp + fn), 6) END AS f1_val
-            FROM cf ORDER BY step"""))
-
-  /** Shared held-out scoring for q140/q141: the q139 split, trained
-    * weights, and the scored complement (doc_id, p_units, y, ...). */
-  private def lrHeldOutScored(s: SparkSession, dir: String): DataFrame = {
-    import graft.llm.QualityModel
-    val all = lrFeatures(s, dir)
-    val isTrain =
-      substring(md5(concat(lit("split:"), col("doc_id").cast("string"))),
-        1, 1) < "8"
-    val (_, steps, mu, sd) = lrTrainOn(all.filter(isTrain))
-    val ho = QualityModel.standardize(all.filter(!isTrain),
-      Seq("x_stop", "x_mwl", "x_len"), mu, sd)
-    QualityModel.score(ho, lrXsCols, steps.last.w)
-  }
-
-  /** The q139 oracle prefix through the held-out sigmoid pass `sc`. */
-  private def lrHeldOutSql: String =
-    s"""${lrChainSql(lrSplitSqlCond)},
-            fho AS (SELECT * FROM f0 WHERE NOT ($lrSplitSqlCond)),
-            zho AS (SELECT doc_id, y, CAST(1000000 AS BIGINT) AS xs_bias,
-                CAST(floor(CAST((x_stop - mu1)*1000000 AS DOUBLE)/sd1 + 0.5) AS BIGINT) AS xs_stop,
-                CAST(floor(CAST((x_mwl - mu2)*1000000 AS DOUBLE)/sd2 + 0.5) AS BIGINT) AS xs_mwl,
-                CAST(floor(CAST((x_len - mu3)*1000000 AS DOUBLE)/sd3 + 0.5) AS BIGINT) AS xs_len
-              FROM fho, sg),
-            sc AS (SELECT z.doc_id, z.y,
-                CAST(floor(10000000.0/(1.0 + exp(-(CAST(w.wb*z.xs_bias +
-                  w.ws*z.xs_stop + w.wm*z.xs_mwl + w.wl*z.xs_len
-                  AS DOUBLE)/1e13))) + 0.5) AS BIGINT) AS p
-              FROM zho z, w$lrIters w)"""
-
-  // ---- exact ROC AUC over the held-out split ----------------------------
-  // The threshold-free ranking metric (equivalently: P(score⁺ > score⁻)
-  // with ties at half credit). The scalable shape: the corpus pass
-  // collapses into a SCORE HISTOGRAM — per distinct p_units, positive
-  // and negative counts — which the 1e-7 probability grid bounds at
-  // 1e7+1 rows WHATEVER the corpus, so the cumulative window below runs
-  // over a bounded-by-construction table (the k-seed window argument,
-  // GraftSession-filtered). AUC then derives from exact integers:
-  // 2·P·N·AUC = Σ_s np(s)·(2·negBelow(s) + nn(s)) — one IEEE division
-  // at emission, rounded 6 dp.
-  private val lrAucQ = Q(
-    "q140_quality_auc",
-    (s, dir) => {
-      val hg = lrHeldOutScored(s, dir)
-        .groupBy("p_units")
-        .agg(sum(when(col("y") === 1, 1L).otherwise(0L)).as("np"),
-          sum(when(col("y") === 0, 1L).otherwise(0L)).as("nn"))
-      val w = Window.orderBy("p_units")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      hg.withColumn("cnb", coalesce(sum(col("nn")).over(w), lit(0L)))
-        .agg(sum(col("np")).as("n_pos"), sum(col("nn")).as("n_neg"),
-          count(lit(1)).as("n_scores"),
-          sum(col("np") * (lit(2L) * col("cnb") + col("nn"))).as("num2"))
-        .select(col("n_pos"), col("n_neg"), col("n_scores"),
-          round(col("num2").cast("double") /
-            (lit(2.0) * col("n_pos") * col("n_neg")), 6).as("auc"))
-    },
-    Some(s"""WITH $lrHeldOutSql,
-            hg AS (SELECT p,
-                CAST(sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS BIGINT) AS np,
-                CAST(sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nn
-              FROM sc GROUP BY p),
-            cu AS (SELECT np, nn, COALESCE(CAST(sum(nn) OVER (ORDER BY p
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT),
-                0) AS cnb FROM hg)
-            SELECT CAST(sum(np) AS BIGINT) AS n_pos,
-              CAST(sum(nn) AS BIGINT) AS n_neg,
-              CAST(count(*) AS BIGINT) AS n_scores,
-              round(CAST(sum(np*(2*cnb + nn)) AS DOUBLE) /
-                (2.0 * CAST(sum(np) AS BIGINT) * CAST(sum(nn) AS BIGINT)), 6)
-                AS auc
-            FROM cu"""))
-
-  // ---- calibration (reliability) bins -----------------------------------
-  // Is a predicted 0.7 actually right 70% of the time? Ten probability
-  // bins over the held-out scores: per bin the count, the mean PREDICTED
-  // probability (an exact integer sum of p_units, one division at
-  // emission) and the EMPIRICAL positive rate. Pure map + one keyed
-  // aggregation — no window, no join; p = 1.0 folds into the top bin.
-  private val lrCalibQ = Q(
-    "q141_quality_calibration",
-    (s, dir) =>
-      lrHeldOutScored(s, dir)
-        .withColumn("bin", least(floor(col("p_units") / lit(1000000L)), lit(9L)))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("p_units")).as("sp"),
-          sum(col("y")).as("npos"))
-        .select(col("bin"), col("n_docs"),
-          round(col("sp").cast("double") / lit(1e7) / col("n_docs"), 6)
-            .as("mean_score"),
-          round(col("npos").cast("double") / col("n_docs"), 6)
-            .as("frac_pos"))
-        .orderBy("bin"),
-    Some(s"""WITH $lrHeldOutSql,
-            bn AS (SELECT least(CAST(floor(p/1000000) AS BIGINT), 9) AS bin,
-                p, y FROM sc),
-            ag AS (SELECT bin, count(*) AS n_docs,
-                CAST(sum(p) AS BIGINT) AS sp,
-                CAST(sum(y) AS BIGINT) AS npos
-              FROM bn GROUP BY bin)
-            SELECT bin, n_docs,
-              round(CAST(sp AS DOUBLE)/1e7/n_docs, 6) AS mean_score,
-              round(CAST(npos AS DOUBLE)/n_docs, 6) AS frac_pos
-            FROM ag ORDER BY bin"""))
-
-  // ---- streaming feature store + periodic retrain as an oracle row -----
-  // The classifier's deployment shape made driver-visible: two streamed
-  // folds of the feature rows into the novelty-guarded, doc-bucketed
-  // feature store (streaming/QualityStream), then a retrain over the
-  // PERSISTED state — which must answer q137's oracle VERBATIM, because
-  // gradient and moment sums are order-free exact integers, so training
-  // over folded state is bit-equal to one-shot batch training.
-  private val lrIncrementalQ = Q(
-    "q142_incremental_quality",
-    (s, dir) => withTempState("graft_q142_state") { state =>
-      val feats = lrFeatures(s, dir)
-      graft.streaming.QualityStream.foldBatch(
-        feats.filter(col("doc_id") < 250), state)
-      graft.streaming.QualityStream.foldBatch(
-        feats.filter(col("doc_id") >= 250), state)
-      lrStepsDf(s,
-        graft.streaming.QualityStream.train(s, state, lrRate, lrIters, lrL2))
-    },
-    lrTrainQ.oracle)
-
-  // ---- feature importance off the trained model --------------------------
-  // Which features does the filter actually lean on? |w_j|·σ(xs_j) — the
-  // weight magnitude times the feature's realized (standardized,
-  // integer-grid) spread, the standard linear-model attribution. All
-  // exact integers until one division at emission; the oracle re-derives
-  // σ from the z frame with the same floor(√(Σx² − 2μΣx + nμ²)/n + .5)
-  // integer-moment formula the training stats use. With L2 on, the
-  // distractor (x_len) ranks last among the real features.
-  private val lrImportanceQ = Q(
-    "q145_quality_importance",
-    (s, dir) => {
-      import graft.llm.QualityModel
-      val (st, steps) = lrTrain(s, dir)
-      val rows = QualityModel.importance(st, lrXsCols, steps.last.w,
-        lrFeatNames)
-      import s.implicits._
-      rows.toDF("feature", "w_units", "sd_units", "importance")
-        .orderBy("feature")
-    },
-    Some {
-      val feats = Seq( // (display name, weight CTE col, xs col, index)
-        ("bias", "wb", "xs_bias", 0),
-        ("x_stop", "ws", "xs_stop", 1),
-        ("x_mwl", "wm", "xs_mwl", 2),
-        ("x_len", "wl", "xs_len", 3))
-      val sums = feats.map { case (_, _, x, i) =>
-        s"CAST(sum($x) AS BIGINT) AS s$i, CAST(sum($x*$x) AS BIGINT) AS q$i"
-      }.mkString(",\n                ")
-      val mus = feats.map { case (_, _, _, i) =>
-        s"CAST(floor(CAST(s$i AS DOUBLE)/n + 0.5) AS BIGINT) AS mu$i"
-      }.mkString(",\n                ")
-      val sds = feats.map { case (_, _, _, i) =>
-        s"""greatest(CAST(floor(sqrt(CAST(q$i - 2*mu$i*s$i +
-                mu$i*mu$i*n AS DOUBLE)/n) + 0.5) AS BIGINT), 1) AS sd$i"""
-      }.mkString(",\n                ")
-      val rows = feats.map { case (nm, w, _, i) =>
-        s"""SELECT '$nm' AS feature, w.$w AS w_units, d.sd$i AS sd_units,
-              round(CAST(abs(w.$w)*d.sd$i AS DOUBLE)/1e13, 6) AS importance
-            FROM w$lrIters w, isd d"""
-      }.mkString("\n            UNION ALL ")
-      s"""WITH ${lrChainSql()},
-            ist AS (SELECT count(*) AS n, $sums FROM z),
-            imu AS (SELECT *, $mus FROM ist),
-            isd AS (SELECT n, $sds FROM imu)
-            SELECT * FROM ($rows)
-            ORDER BY feature"""
-    })
-
-  val queries: Seq[Q] = Seq(
-    docStats, tokenCount, langHeuristic, fingerprint, exactDedup,
-    minhashSignatures, minhashPairs, jaccardPairs, simhash, simhashPairs,
-    simhashWidePairs, cosineTopK, embedBuckets, annTopK, embedNearDup,
-    ivfTopK, rollingFp, multimodalMeta, multimodalDecode, multimodalAv,
-    qualityScore, piiScrub, corpusFilter,
-    vocabDf, decontaminate, bloomDecontam, bloomDecontamLarge,
-    decontamProvenance, stratifiedSample, exactSample, sourceMix,
-    seqPacking, lengthCurriculum, tfidfTopTerms, repetition,
-    dupClusters, dedupSurvivors, incrementalDedup, temperatureMix,
-    unigramLogprob, bigramLogprob, simhashClusters, incrementalClusters,
-    semDedup, dupSpans, dsirWeights, corpusShuffle, perSourceSample,
-    leakageSafeSplits, dupSpanScrub, perplexityBuckets, pqTopK, budgetEpochs,
-    gopherRules, contamFrac, qualitySurvivors, kmeansTopics,
-    semDedupTrained, topicSample, bpeMerges, bpeEncode, stupidBackoff,
-    gumbelSample, pqTrained, bpeIncMerges, unigramSegment, unigramEm,
-    unigramPruned, unigramSoftEm, unigramSampled,
-    kmvDistinct, kmvJaccard, hllDistinct, cmsHeavy,
-    wordpieceMerges, wordpieceEncode, annIncremental, sketchIncremental,
-    bm25TopK, bm25Incremental, cmsIncremental, pagerank,
-    pagerankIncremental,
-    pcaLoadings, pcaProject, pcaIncremental, pcaComponents,
-    profileCensus, zipfFit,
-    lrTrainQ, lrScoreQ, lrEvalQ, lrAucQ, lrCalibQ, lrIncrementalQ,
-    lrImportanceQ, decontamIncremental)
+  val queries: Seq[Q] = LlmText.queries ++ LlmDedup.queries ++
+    LlmEmbed.queries ++ LlmTokens.queries ++ LlmStats.queries
 }

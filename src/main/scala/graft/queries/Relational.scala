@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables
 import graft.functions.F
 import graft.operators.{Dedup, Skew, Upsert}
-import Q.t
+import graft.streaming.EventReports.{retentionReport, wauReport}
+import Q.{t, withTempState}
 
 /** The relational operator inventory (SURVEY.md §2), each entry an
   * oracle-checked query over the driver testdata. Determinism rules:
@@ -934,21 +935,6 @@ object Relational {
   // user-keyed min for cohorts, one distinct over (user, week) — both
   // map-side-partial — then a count-distinct keyed on (cohort, offset);
   // no self-join of the event log against itself.
-  /** The q108 report body over prepared inputs — shared verbatim with
-    * the streaming fold (`graft.streaming.EventReports.retention`), so
-    * stream and batch can only diverge where their inputs do.
-    * @param cohorts (user_id, cohort: week-truncated first signup)
-    * @param active  distinct (user_id, wk: week-truncated activity) */
-  private[graft] def retentionReport(cohorts: DataFrame,
-                                     active: DataFrame): DataFrame =
-    cohorts.join(active, Seq("user_id"))
-      .filter(col("wk") >= col("cohort"))
-      .withColumn("week_offset",
-        expr("CAST(datediff(wk, cohort) div 7 AS INT)"))
-      .groupBy("cohort", "week_offset")
-      .agg(countDistinct(col("user_id")).cast("long").as("active_users"))
-      .orderBy("cohort", "week_offset")
-
   /** q108's oracle — also the oracle of q112's incremental fold (same
     * report, streaming-maintained inputs). */
   private val retentionSql =
@@ -988,19 +974,6 @@ object Relational {
   // (day BETWEEN d-6 AND d), so agreement checks the window semantics.
   // Only observed days are reported (semi-join back), matching the
   // oracle's day list.
-  /** The q109 report body over a distinct (user_id, d: date) activity
-    * table — shared verbatim with the streaming fold
-    * (`graft.streaming.EventReports.rollingActive`). */
-  private[graft] def wauReport(days: DataFrame): DataFrame =
-    days
-      .select(col("user_id"),
-        explode(expr("sequence(d, date_add(d, 6))")).as("day"))
-      .join(days.select(col("d").as("day")).distinct(), Seq("day"), "left_semi")
-      .groupBy("day")
-      .agg(countDistinct(col("user_id")).cast("long").as("wau"))
-      .select(col("day").cast("timestamp_ntz").as("day"), col("wau"))
-      .orderBy("day")
-
   /** q109's oracle — also the oracle of q113's incremental fold. */
   private val wauSql =
     """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
@@ -1036,13 +1009,13 @@ object Relational {
     graft.streaming.EventReports.foldBatch(ev.filter(us < cut), state)
   }
 
-  // both rows run under withStreamScratch so the per-invocation state
+  // both rows run under withTempState so the per-invocation state
   // dir is DELETED after the (staged) report materializes — the old
   // createTempDirectory shape leaked one folded state dir per
   // invocation, and Bench invokes each row several times per section
   private val incRetention = Q(
     "q112_incremental_retention",
-    (s, dir) => withStreamScratch("graft_q112") { tmp =>
+    (s, dir) => withTempState("graft_q112") { tmp =>
       foldEventsInto(s, dir, tmp)
       graft.streaming.EventReports.retention(s, tmp)
     },
@@ -1050,31 +1023,18 @@ object Relational {
 
   private val incRollingActive = Q(
     "q113_incremental_wau",
-    (s, dir) => withStreamScratch("graft_q113") { tmp =>
+    (s, dir) => withTempState("graft_q113") { tmp =>
       foldEventsInto(s, dir, tmp)
       graft.streaming.EventReports.rollingActive(s, tmp)
     },
     Some(wauSql))
 
-  /** Per-invocation scratch for the REAL-STREAM oracle rows (q146/q147):
-    * land the batch as files, run the streaming query against them with
-    * AvailableNow, collect emissions via foreachBatch into a scratch
-    * parquet, hand the (eagerly staged) result back, delete everything.
-    * The stream is genuine — file source, checkpoint, watermark, state
-    * store — not a fold-method shortcut, because these operators ARE
-    * their flatMapGroupsWithState logic. */
-  private def withStreamScratch(prefix: String)(
-      body: String => DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.core.GraftSession.fastScratch), prefix)
-    try graft.core.Staging.stage(body(dir.toString))
-    finally {
-      val st = java.nio.file.Files.walk(dir)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally st.close()
-    }
-  }
+  // The REAL-STREAM oracle rows (q146/q147) land the batch as files
+  // under withTempState and run the streaming query against them with
+  // AvailableNow, collecting emissions via foreachBatch into a scratch
+  // parquet. The stream is genuine — file source, checkpoint, watermark,
+  // state store — not a fold-method shortcut, because these operators
+  // ARE their flatMapGroupsWithState logic.
 
   /** Run a streaming frame to completion against the scratch checkpoint,
     * landing every emitted row in `tmp/out`. `mode` must match the
@@ -1136,7 +1096,7 @@ object Relational {
   // µs/1000). Emitting start_ms as BIGINT keeps the compare exact.
   private val incSessions = Q(
     "q146_incremental_sessions",
-    (s, dir) => withStreamScratch("graft_q146") { tmp =>
+    (s, dir) => withTempState("graft_q146") { tmp =>
       val ev = t(s, dir, "events").select(col("user_id"), col("ts"))
       ev.write.parquet(s"$tmp/in")
       val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/in")
@@ -1177,7 +1137,7 @@ object Relational {
   // subject, not this row's).
   private val incFunnel = Q(
     "q147_incremental_funnel",
-    (s, dir) => withStreamScratch("graft_q147") { tmp =>
+    (s, dir) => withTempState("graft_q147") { tmp =>
       val ev = t(s, dir, "events").select("user_id", "ts", "event_type")
       ev.write.parquet(s"$tmp/in")
       val stream = s.readStream.schema(ev.schema).parquet(s"$tmp/in")
@@ -1218,7 +1178,7 @@ object Relational {
   // sequencing just as four did.
   private val streamedRetention = Q(
     "q149_streamed_retention",
-    (s, dir) => withStreamScratch("graft_q149") { tmp =>
+    (s, dir) => withTempState("graft_q149") { tmp =>
       val ev = t(s, dir, "events").select("user_id", "ts", "event_type")
       ev.repartition(2).write.parquet(s"$tmp/in")
       val stream = s.readStream.schema(ev.schema)
@@ -1238,7 +1198,7 @@ object Relational {
   // oracle rows, not just the shared fold.
   private val streamedRollingActive = Q(
     "q150_streamed_wau",
-    (s, dir) => withStreamScratch("graft_q150") { tmp =>
+    (s, dir) => withTempState("graft_q150") { tmp =>
       val ev = t(s, dir, "events").select("user_id", "ts", "event_type")
       ev.repartition(2).write.parquet(s"$tmp/in")
       val stream = s.readStream.schema(ev.schema)

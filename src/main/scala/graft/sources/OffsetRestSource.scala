@@ -106,7 +106,7 @@ private class OffsetScan(pages: Int, pageSize: Int, limit: Int,
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new OffsetPartitionReader(partition.asInstanceOf[OffsetWindow])
+        OffsetPartitionReader(partition.asInstanceOf[OffsetWindow])
     }
 }
 
@@ -117,24 +117,13 @@ private case class OffsetWindow(offset: Long, limit: Int, endpoint: Option[Strin
   * offset/limit params when an endpoint is configured
   * (hubspotoop.py:360-367), deterministic generator otherwise. Shares
   * the paged source's in-partition backoff discipline. */
-private class OffsetPartitionReader(w: OffsetWindow)
-    extends PartitionReader[InternalRow] {
+private object OffsetPartitionReader {
 
-  private def httpWindow(endpoint: String): Iterator[InternalRow] = {
-    val body = graft.functions.Retry.withBackoff(maxRetries = 3, baseDelayMs = 200) {
-      val conn = java.net.URI.create(s"$endpoint?offset=${w.offset}&limit=${w.limit}")
-        .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("GET")
-      conn.setConnectTimeout(5000)
-      conn.setReadTimeout(15000)
-      try {
-        val is = conn.getInputStream
-        try scala.io.Source.fromInputStream(is, "UTF-8").mkString
-        finally is.close()
-      } finally conn.disconnect()
-    }
-    val results = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(body).get("results")
+  def apply(w: OffsetWindow): PartitionReader[InternalRow] =
+    new IteratorReader(w.endpoint.map(httpWindow(w, _)).getOrElse(syntheticWindow(w)))
+
+  private def httpWindow(w: OffsetWindow, endpoint: String): Iterator[InternalRow] = {
+    val results = RestFetch.results(s"$endpoint?offset=${w.offset}&limit=${w.limit}")
     (0 until results.size()).iterator.map { i =>
       val r = results.get(i)
       InternalRow(r.get("id").asText().toLong,
@@ -142,18 +131,9 @@ private class OffsetPartitionReader(w: OffsetWindow)
     }
   }
 
-  private def syntheticWindow(): Iterator[InternalRow] =
+  private def syntheticWindow(w: OffsetWindow): Iterator[InternalRow] =
     (0 until w.limit).iterator.map { i =>
       val id = w.offset + i
       InternalRow(id, UTF8String.fromString(s"record_$id"))
     }
-
-  private val rows: Iterator[InternalRow] =
-    w.endpoint.map(httpWindow).getOrElse(syntheticWindow())
-
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

@@ -140,7 +140,7 @@ private class PagedScan(pages: Int, pageSize: Int, cursorMicros: Long,
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new PagedPartitionReader(partition.asInstanceOf[PagePartition])
+        PagedPartitionReader(partition.asInstanceOf[PagePartition])
     }
 }
 
@@ -154,33 +154,18 @@ private case class PagePartition(page: Int, pageSize: Int, cursorMicros: Long,
   * without one it is the deterministic in-process generator. Both paths
   * re-check the cursor per record: the server-side filter is a page
   * PRUNE, and a page straddling the cursor still serves rows below it. */
-private class PagedPartitionReader(p: PagePartition)
-    extends PartitionReader[InternalRow] {
+private object PagedPartitionReader {
+
+  def apply(p: PagePartition): PartitionReader[InternalRow] =
+    new IteratorReader(p.endpoint.map(httpPage(p, _)).getOrElse(syntheticPage(p)))
 
   // fetchPage over the wire: GET `<endpoint>?after=<pageToken>&limit=<n>`
   // (hubspotoop.py:58-64 — the after token addresses the page start; the
   // partition-per-page plan makes tokens deterministic so pages fetch in
-  // parallel instead of the reference's serial token chain). Wrapped in
-  // the same backoff discipline as the reference's client
-  // (test/hubspot/retry.py:6-42): transient HTTP failures retry inside
-  // the partition instead of failing the task and re-running the page
-  // through Spark's coarser task-level retry.
-  private def httpPage(endpoint: String): Iterator[InternalRow] = {
+  // parallel instead of the reference's serial token chain)
+  private def httpPage(p: PagePartition, endpoint: String): Iterator[InternalRow] = {
     val after = p.page.toLong * p.pageSize
-    val body = graft.functions.Retry.withBackoff(maxRetries = 3, baseDelayMs = 200) {
-      val conn = java.net.URI.create(s"$endpoint?after=$after&limit=${p.pageSize}")
-        .toURL.openConnection().asInstanceOf[java.net.HttpURLConnection]
-      conn.setRequestMethod("GET")
-      conn.setConnectTimeout(5000)
-      conn.setReadTimeout(15000)
-      try {
-        val is = conn.getInputStream
-        try scala.io.Source.fromInputStream(is, "UTF-8").mkString
-        finally is.close()
-      } finally conn.disconnect()
-    }
-    val results = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(body).get("results")
+    val results = RestFetch.results(s"$endpoint?after=$after&limit=${p.pageSize}")
     (0 until results.size()).iterator.flatMap { i =>
       val r = results.get(i)
       val inst = java.time.Instant.parse(r.get("updatedAt").asText())
@@ -192,7 +177,7 @@ private class PagedPartitionReader(p: PagePartition)
     }
   }
 
-  private def syntheticPage(): Iterator[InternalRow] =
+  private def syntheticPage(p: PagePartition): Iterator[InternalRow] =
     (0 until p.pageSize).iterator.flatMap { i =>
       val id = p.page.toLong * p.pageSize + i
       val ts = PagedRestSource.T0Micros + id * PagedRestSource.StepMicros
@@ -200,13 +185,4 @@ private class PagedPartitionReader(p: PagePartition)
         Some(InternalRow(id, ts, UTF8String.fromString(s"""{"seq": $id}""")))
       else None
     }
-
-  private val rows: Iterator[InternalRow] =
-    p.endpoint.map(httpPage).getOrElse(syntheticPage())
-
-  private var current: InternalRow = _
-  override def next(): Boolean =
-    if (rows.hasNext) { current = rows.next(); true } else false
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
+import graft.llm.Shingles
 import graft.sinks.Sinks
 
 /** Streaming BM25 index maintenance — the dedup-state discipline
@@ -91,7 +92,7 @@ object Bm25Index {
     // additive, so skipping its ledger row is replay-safe
     val (toks, nDocs) = Staging.stageCounted(
       batch.select(col("doc_id"),
-          expr(graft.queries.Llm.toksExpr).as("tk"))
+          expr(Shingles.toksExpr).as("tk"))
         .select(col("doc_id"), col("tk"),
           size(col("tk")).cast("long").as("dl")))
     if (nDocs == 0) { Staging.release(toks); return }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Staging
+import graft.llm.{MinHash, Splits}
 import graft.operators.Components
-import graft.queries.Llm
 import graft.sinks.Sinks
 
 /** Streaming near-dup CLUSTER maintenance — the loop that was open
@@ -19,7 +19,7 @@ import graft.sinks.Sinks
   *
   * Persisted state under `statePath` (q76's persisted-index architecture,
   * extended with the labeling):
-  *  - `bands/` — append-only MinHash band index (`Llm.bandIndexOf`
+  *  - `bands/` — append-only MinHash band index (`MinHash.bandIndexOf`
   *    columns), hash-bucket-partitioned on (band, bucket) — see
   *    [[stateBuckets]]; the batch never re-shingles the corpus,
   *  - `toks/`  — append-only distinct-token table (the q49 shape) for
@@ -33,7 +33,7 @@ import graft.sinks.Sinks
   * map-only (`NearDup.bands`, bit-parity with the batch index), candidate
   * generation is the delta-vs-index band equi-join plus the delta's
   * self-join (both keyed, never all-pairs), verification reuses the
-  * shared `Llm.jaccardScore` core, and the label fold is
+  * shared `MinHash.jaccardScore` core, and the label fold is
   * `Components.merge` over ONLY the affected components (their old
   * labels enter as diameter-2 star edges, so convergence never
   * re-walks edge history — see [[foldLabels]]). The streamed
@@ -247,7 +247,7 @@ object ClusterMaintenance {
         col("toks").as("toks_a"))), Seq("doc_a"))
       .join(toksSide(deltaToks.select(col("doc_id").as("doc_b"),
         col("toks").as("toks_b"))), Seq("doc_b"))
-    val dd = Llm.jaccardScore(ddScored, "toks_a", "toks_b", threshold)
+    val dd = MinHash.jaccardScore(ddScored, "toks_a", "toks_b", threshold)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
 
     // delta-vs-corpus candidates: band equi-join against the persisted
@@ -285,7 +285,7 @@ object ClusterMaintenance {
           .join(broadcast(cand), Seq("corpus_id"))
           .join(toksSide(deltaToks.select(col("doc_id").as("delta_id"),
             col("toks").as("toks_d"))), Seq("delta_id"))
-        Llm.jaccardScore(scored, "toks_d", "toks_c", threshold)
+        MinHash.jaccardScore(scored, "toks_d", "toks_c", threshold)
           .select(col("delta_id").as("src"), col("corpus_id").as("dst"))
       }
 
@@ -740,7 +740,7 @@ object ClusterMaintenance {
         Seq("doc_a"))
       .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
         Seq("doc_b"))
-    val edges = Llm.jaccardScore(scored, "toks_a", "toks_b", threshold)
+    val edges = MinHash.jaccardScore(scored, "toks_a", "toks_b", threshold)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     // labeling: a from-scratch connectivity under the new banding,
     // published per the store's swap protocol; the comp projection is
@@ -788,7 +788,7 @@ object ClusterMaintenance {
     * Parity with q91's self-contained output (after folding the same
     * corpus) is pinned by SplitsFromLabelsSpec. */
   def splitsFromLabels(docs: DataFrame, statePath: String): DataFrame =
-    graft.queries.Llm.splitAssign(docs,
+    Splits.splitAssign(docs,
       labels(docs.sparkSession, statePath)
         .select(col("id").as("doc_id"), col("comp").as("cluster_id")))
 

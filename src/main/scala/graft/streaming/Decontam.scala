@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
-import graft.queries.Llm
+import graft.llm.Shingles
 
 /** Streaming benchmark decontamination — the persisted-state tier of the
   * q65/q80 gate: the benchmark's shingle-hash set lives as a bucketed
@@ -55,7 +55,7 @@ object Decontam {
     // hashes, and nh == 0 short-circuits exactly like the old
     // bench.isEmpty — appendBucketed skips zero-row deltas) — one job
     // instead of a source-scan probe plus the staging job
-    val (hs, nh) = Staging.stageCounted(Llm.shingleHashes(bench)
+    val (hs, nh) = Staging.stageCounted(Shingles.shingleHashes(bench)
       .select("h").filter(col("h").isNotNull).distinct()
       .withColumn("hb", hashBucketOf(col("h"))))
     if (nh == 0L) { Staging.release(hs); return }
@@ -112,7 +112,7 @@ object Decontam {
         // Replay-duplicated hash rows only duplicate join output, and
         // the per-doc countDistinct below collapses them exactly.
         val benchH = StateStore.readPacked(spark, p).select("h")
-        (Llm.shingleHashes(batch).filter(col("h").isNotNull)
+        (Shingles.shingleHashes(batch).filter(col("h").isNotNull)
           .join(broadcast(benchH), Seq("h"))
           .groupBy("doc_id")
           .agg(countDistinct(col("h")).as("n_shared"))
@@ -122,7 +122,7 @@ object Decontam {
         // accumulated-state regime: the batch's (doc_id, h) pairs are
         // staged once and counted (the count feeds the broadcast-side
         // decision below AND materializes the staging in one job)
-        val (pairs, nPairs) = Staging.stageCounted(Llm.shingleHashes(batch)
+        val (pairs, nPairs) = Staging.stageCounted(Shingles.shingleHashes(batch)
           .filter(col("h").isNotNull)
           .withColumn("hb", hashBucketOf(col("h"))))
         // which side broadcasts, part 2: with the STATE past the

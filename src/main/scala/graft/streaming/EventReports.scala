@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Staging
-import graft.queries.Relational
 import graft.sinks.Sinks
 
 /** Streaming cohort-retention and rolling-WAU — q108/q109 as
@@ -20,7 +19,7 @@ import graft.sinks.Sinks
   * engine's persisted-state foreachBatch pattern (CorpusStream's), not
   * flatMapGroupsWithState: each micro-batch folds its delta into two
   * compact state tables, and the reports run the BATCH query bodies
-  * (`Relational.retentionReport` / `Relational.wauReport` — shared
+  * ([[retentionReport]] / [[wauReport]] — shared
   * code, not re-derived) over that state. Stream == batch by
   * construction wherever the inputs agree, and EventReportsStreamSpec
   * pins that they do — under reversed arrival order too, which needs no
@@ -135,10 +134,37 @@ object EventReports {
     else spark.range(0).select(col("id").as("user_id"),
       lit(null).cast("date").as("d"))
 
+  /** The q108 report body over prepared inputs — shared verbatim by
+    * the batch query and [[retention]], so stream and batch can only
+    * diverge where their inputs do.
+    * @param cohorts (user_id, cohort: week-truncated first signup)
+    * @param active  distinct (user_id, wk: week-truncated activity) */
+  private[graft] def retentionReport(cohorts: DataFrame,
+                                     active: DataFrame): DataFrame =
+    cohorts.join(active, Seq("user_id"))
+      .filter(col("wk") >= col("cohort"))
+      .withColumn("week_offset",
+        expr("CAST(datediff(wk, cohort) div 7 AS INT)"))
+      .groupBy("cohort", "week_offset")
+      .agg(countDistinct(col("user_id")).cast("long").as("active_users"))
+      .orderBy("cohort", "week_offset")
+
+  /** The q109 report body over a distinct (user_id, d: date) activity
+    * table — shared verbatim by the batch query and [[rollingActive]]. */
+  private[graft] def wauReport(days: DataFrame): DataFrame =
+    days
+      .select(col("user_id"),
+        explode(expr("sequence(d, date_add(d, 6))")).as("day"))
+      .join(days.select(col("d").as("day")).distinct(), Seq("day"), "left_semi")
+      .groupBy("day")
+      .agg(countDistinct(col("user_id")).cast("long").as("wau"))
+      .select(col("day").cast("timestamp_ntz").as("day"), col("wau"))
+      .orderBy("day")
+
   /** The q108 cohort-retention report over the folded state — the batch
-    * query body (`Relational.retentionReport`) on streaming inputs. */
+    * query body ([[retentionReport]]) on streaming inputs. */
   def retention(spark: SparkSession, statePath: String): DataFrame =
-    Relational.retentionReport(
+    retentionReport(
       cohortsOf(spark, statePath),
       daysRaw(spark, statePath)
         .select(col("user_id"),
@@ -146,7 +172,7 @@ object EventReports {
         .distinct())
 
   /** The q109 rolling-7-day-WAU report over the folded state — the
-    * batch query body (`Relational.wauReport`) on streaming inputs. */
+    * batch query body ([[wauReport]]) on streaming inputs. */
   def rollingActive(spark: SparkSession, statePath: String): DataFrame =
-    Relational.wauReport(daysRaw(spark, statePath).distinct())
+    wauReport(daysRaw(spark, statePath).distinct())
 }

@@ -1,13 +1,13 @@
 package graft.streaming
+import graft.llm.{MinHash, Shingles}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.queries.Llm
 
 /** Streaming near-dup detection: the stream-static realization of q76's
   * incremental-dedup architecture. The corpus band index
-  * (`Llm.bandIndexOf`, persisted as a table) and the corpus token table
+  * (`MinHash.bandIndexOf`, persisted as a table) and the corpus token table
   * are the STATIC sides; each micro-batch of arriving documents computes
   * its own MinHash bands map-only and equi-joins them against the index —
   * stateless stream-static joins, so no watermark, no state store, and
@@ -62,7 +62,7 @@ object NearDup {
 
   object Banding {
     /** The oracle constants: 2 bands × 2 slices off one md5 — exactly
-      * `Llm.bandIndexOf`'s shape (q45/q46/q73/q76/q82 are pinned to
+      * `MinHash.bandIndexOf`'s shape (q45/q46/q73/q76/q82 are pinned to
       * it), and the default so those rows answer their DuckDB oracles
       * verbatim. */
     val default: Banding = Banding(2, 2)
@@ -149,7 +149,7 @@ object NearDup {
         .otherwise(array(col("b0"))))
 
   /** Map-only (doc_id, band, bucket, b0, bpre) for a streaming OR batch
-    * doc frame — same band values as `Llm.bandIndexOf` at the default
+    * doc frame — same band values as `MinHash.bandIndexOf` at the default
     * banding (parity-tested), no aggregation state. */
   def bands(docs: DataFrame, banding: Banding = Banding.default): DataFrame =
     explodeBands(bandsAndToks(docs, banding)).drop("toks")
@@ -163,8 +163,8 @@ object NearDup {
   def bandsAndToks(docs: DataFrame,
                    banding: Banding = Banding.default): DataFrame =
     graft.core.Staging.spread(docs)
-      .withColumn("toks", expr(Llm.toksExpr))
-      .withColumn("shingles", expr(Llm.shingleSparkExpr))
+      .withColumn("toks", expr(Shingles.toksExpr))
+      .withColumn("shingles", expr(Shingles.shingleSparkExpr))
       .select(col("doc_id"), expr(bandArrayExpr(banding)).as("bs"),
         array_distinct(col("toks")).as("toks"))
 
@@ -177,15 +177,15 @@ object NearDup {
         col("b.bpre").as("bpre"), col("toks"))
 
   /** The explode + groupBy-min construction of the SAME band index at
-    * any banding — `Llm.bandIndexOf` IS this at [[Banding.default]]
+    * any banding — `MinHash.bandIndexOf` IS this at [[Banding.default]]
     * (shared with the q45/q46/q73 oracle SQL); this generalization is
     * the batch reference the fold expression is parity-pinned against
     * at the wide setting, and the builder a deployment uses to persist
     * a non-default static index for [[flagAgainstIndex]]. */
   def batchBandIndexOf(docs: DataFrame, banding: Banding): DataFrame = {
     val hashed = graft.core.Staging.spread(docs)
-      .withColumn("toks", expr(Llm.toksExpr))
-      .withColumn("shingles", expr(Llm.shingleSparkExpr))
+      .withColumn("toks", expr(Shingles.toksExpr))
+      .withColumn("shingles", expr(Shingles.shingleSparkExpr))
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
       .select(col("doc_id"), expr(mdArray("sh", banding)).as("h"))
     val sliceAggs = (0 until banding.numSlices).map { k =>
@@ -215,7 +215,7 @@ object NearDup {
     * never matches a null key, and `array_intersect` WOULD, so keeping
     * them breaks stream/batch parity. */
   def benchmarkShingleHashes(benchmark: DataFrame): Array[String] =
-    Llm.shingleHashes(benchmark)
+    Shingles.shingleHashes(benchmark)
       .select("h").filter(col("h").isNotNull).distinct()
       .collect().map(_.getString(0))
 
@@ -243,13 +243,13 @@ object NearDup {
     stream.filter(coalesce(
       size(array_intersect(
         typedLit(benchHashes.toSeq),
-        expr(Llm.shingleHashArrayExpr))) < minShared,
+        expr(Shingles.shingleHashArrayExpr))) < minShared,
       lit(true)))
 
   /** Flag stream docs that are near-dups of the indexed corpus.
     *
     * @param stream     streaming doc frame with `doc_id` and `text`
-    * @param index      static band index: output of `Llm.bandIndexOf`
+    * @param index      static band index: output of `MinHash.bandIndexOf`
     *                   (read back from its persisted table), or of
     *                   [[batchBandIndexOf]] when `banding` is not the
     *                   default — index and stream MUST share a banding
@@ -265,8 +265,8 @@ object NearDup {
       threshold: Double = 0.5,
       banding: Banding = Banding.default): DataFrame = {
     val withBands = stream
-      .withColumn("toks", expr(Llm.toksExpr))
-      .withColumn("shingles", expr(Llm.shingleSparkExpr))
+      .withColumn("toks", expr(Shingles.toksExpr))
+      .withColumn("shingles", expr(Shingles.shingleSparkExpr))
       .select(col("doc_id").as("delta_id"),
         array_distinct(col("toks")).as("toks_d"),
         expr(bandArrayExpr(banding)).as("bs"))
@@ -280,7 +280,7 @@ object NearDup {
       .filter(lowestBandOnly(col("bpre_d"), col("bpre_c")))
       .join(corpusToks.select(col("doc_id").as("corpus_id"),
         col("toks").as("toks_c")), Seq("corpus_id"))
-    Llm.jaccardScore(scored, "toks_d", "toks_c", threshold)
+    MinHash.jaccardScore(scored, "toks_d", "toks_c", threshold)
       .select(col("delta_id"), col("corpus_id"), col("jaccard"))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
-import graft.queries.Llm
+import graft.llm.Simhash
 
 /** Streaming PageRank maintenance — the dedup-state discipline applied
   * to the near-dup centrality graph (q131's semantics): documents
@@ -188,7 +188,7 @@ object PageRankStream {
 
     // signatures + band entries of the novel docs (token-less docs
     // produce no signature, exactly as the batch pass)
-    val sims = Llm.simhashOf(
+    val sims = Simhash.simhashOf(
       batch.select(col("doc_id"), col("lang"), col("text"))
         .join(broadcast(novel.select("doc_id")), Seq("doc_id")), simBits)
     val bandsDelta = Staging.stage(
@@ -345,7 +345,7 @@ object PageRankStream {
     StateStore.writeTag(spark, np, "_rebanding", newBanding.tag)
     val docs = corpus.select("doc_id", "lang", "text")
       .join(StateStore.readPacked(spark, np).select("doc_id"), Seq("doc_id"))
-    val sims = Llm.simhashOf(docs, newBanding.simBits)
+    val sims = Simhash.simhashOf(docs, newBanding.simBits)
     // staged: consumed by both self-join sides and the band swap write
     val bands = Staging.stage(
       segRows(sims, newBanding).withColumn("bb", bandBucket))

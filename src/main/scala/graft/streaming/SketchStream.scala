@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.llm.Sketches
+import graft.llm.{Shingles, Sketches}
 import graft.sinks.Sinks
 
 /** Streaming sketch maintenance — per-source distinct-cardinality
@@ -33,8 +33,8 @@ object SketchStream {
   private def sketchPath(state: String) = s"$state/sketch"
   // ONE definition with the oracle-generating batch queries — retuning
   // either side alone would silently diverge the driver gate
-  private val kmvK = graft.queries.Llm.kmvK
-  private val hllP = graft.queries.Llm.hllP
+  private val kmvK = Sketches.kmvK
+  private val hllP = Sketches.hllP
 
   /** One-time read-union-swap from the pre-unification two-dir layout
     * (`kmin/` = (source, h); `hll/` = (source, reg, mrho)) into the
@@ -82,9 +82,9 @@ object SketchStream {
     * applied to a batch's 3-word shingles. */
   private def deltaHashes(batch: DataFrame): DataFrame =
     graft.core.Staging.spread(batch)
-      .withColumn("toks", expr(graft.queries.Llm.toksExpr))
+      .withColumn("toks", expr(Shingles.toksExpr))
       .select(col("source"),
-        explode(expr(s"array_distinct(${graft.queries.Llm.shingleSparkExpr})"))
+        explode(expr(s"array_distinct(${Shingles.shingleSparkExpr})"))
           .as("item"))
       .withColumn("hh", md5(concat(lit("kmv|"), col("item"))))
       .select(col("source"), Sketches.hexFold32("hh").as("h"))
@@ -153,7 +153,7 @@ object SketchStream {
   // batchId is exactly the stable id this needs.
 
   private def cmsPath(state: String) = s"$state/cms"
-  private val cmsD = graft.queries.Llm.cmsD
+  private val cmsD = Sketches.cmsD
 
   /** CMS cell assignment of an (item, r) frame — the q123 hashing
     * verbatim (md5("cms" + r + "|" + item) digit-folded mod w). */
@@ -161,14 +161,14 @@ object SketchStream {
     .withColumn("hh", md5(concat(lit("cms"), col("r").cast("string"),
       lit("|"), col("item"))))
     .withColumn("c",
-      (Sketches.hexFold32("hh") % graft.queries.Llm.cmsW).cast("int"))
+      (Sketches.hexFold32("hh") % Sketches.cmsW).cast("int"))
 
   /** The batch's cell deltas: every 3-shingle occurrence (NOT distinct —
     * CMS counts frequency) hashed into the d×w grid. */
   private def cmsDelta(batch: DataFrame): DataFrame =
     cmsCell(graft.core.Staging.spread(batch)
-      .withColumn("toks", expr(graft.queries.Llm.toksExpr))
-      .select(explode(expr(graft.queries.Llm.shingleSparkExpr)).as("item"))
+      .withColumn("toks", expr(Shingles.toksExpr))
+      .select(explode(expr(Shingles.shingleSparkExpr)).as("item"))
       .groupBy("item").agg(count(lit(1)).as("cnt"))
       .select(col("item"), col("cnt"),
         explode(expr(s"sequence(0, ${cmsD - 1})")).as("r")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Llm
+import graft.llm.{MinHash, Shingles}
 import graft.streaming.NearDup
 
 /** Banding-tuning probe for the MinHash cluster tier: for each banding
@@ -30,10 +30,10 @@ object BandingProbe {
 
     val docs = Tables.load(spark, sfDir, "documents")
     val toks = graft.core.Staging.stage(docs.select(col("doc_id"),
-      expr(s"array_distinct(${Llm.toksExpr})").as("toks")))
+      expr(s"array_distinct(${Shingles.toksExpr})").as("toks")))
 
     def verify(cand: DataFrame): DataFrame =
-      Llm.jaccardScore(
+      MinHash.jaccardScore(
         cand
           .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
             Seq("doc_a"))
@@ -47,9 +47,9 @@ object BandingProbe {
     // the synthetic fixtures most doc pairs clear IT, so the banding
     // is the semantic and sj is the axis to judge misses on)
     val shingles = graft.core.Staging.stage(docs
-      .withColumn("toks", expr(Llm.toksExpr))
+      .withColumn("toks", expr(Shingles.toksExpr))
       .select(col("doc_id"),
-        expr(s"array_distinct(${Llm.shingleSparkExpr})").as("sh")))
+        expr(s"array_distinct(${Shingles.shingleSparkExpr})").as("sh")))
     def sjOf(pairs: DataFrame): DataFrame = pairs
       .join(shingles.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
         Seq("doc_a"))

@@ -62,7 +62,7 @@ class AnnRecallSpec extends SparkSpec {
     // formula (annSqlCte's np CTE), so bit-equality holds at any SF; this
     // canary pins the formula itself — if the knob drifts from 4 at
     // sf0.01, every recall floor below was measured on a different index
-    assert(graft.queries.Llm.annPlanesFor(spark, "/root/testdata/sf0.01") === 4)
+    assert(graft.queries.LlmEmbed.annPlanesFor(spark, "/root/testdata/sf0.01") === 4)
   }
 
   dirs.foreach { dir =>

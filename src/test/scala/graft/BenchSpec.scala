@@ -78,4 +78,21 @@ class BenchSpec extends SparkSpec {
       qs("b", Seq(9.0, 9.0, 9.0)), qs("c", Seq(-1.0, -1.0, -1.0))))
     assert(Bench.keepBest(Seq(s1, s2)) === s2)
   }
+
+  test("a failing query's first cause is recorded in its stats entry, escaped on one line") {
+    val ok: (SparkSession, String) => DataFrame = (s, _) => s.range(5).toDF("n")
+    val boom: (SparkSession, String) => DataFrame =
+      (_, _) => throw new IllegalStateException("bad \"plan\"\tat\\root\nsecond line")
+    val sec = Bench.timedSection(Seq("q_ok" -> ok, "q_boom" -> boom), spark, "unused",
+      cpus = 1, loadPreSampled = None)
+    val byName = sec.stats.map(s => s.name -> s).toMap
+    assert(byName("q_ok").error === None)
+    assert(byName("q_boom").med === -1.0)
+    assert(byName("q_boom").error ===
+      Some("java.lang.IllegalStateException: bad \"plan\"\tat\\root"))
+    assert(Bench.statJson(byName("q_boom")) ===
+      "\"q_boom\":{\"min\":-1.000,\"med\":-1.000,\"max\":-1.000," +
+        "\"error\":\"java.lang.IllegalStateException: bad \\\"plan\\\"\\tat\\\\root\"}")
+    assert(!Bench.statJson(byName("q_ok")).contains("error"))
+  }
 }

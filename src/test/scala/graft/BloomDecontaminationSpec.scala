@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Llm
+import graft.llm.{BloomDecontam, Shingles}
 
-/** Bloom-filter decontamination (`Llm.bloomDecontaminationKept`) — the
+/** Bloom-filter decontamination
+  * (`BloomDecontam.bloomDecontaminationKept`) — the
   * fixed-memory scale path behind exact q65.
   *
   * Properties pinned:
@@ -40,7 +41,7 @@ class BloomDecontaminationSpec extends SparkSpec {
 
   test("one-sided error: bloom-kept is a subset of exact-kept even at loose fpp") {
     val (corpus, bench) = fixture
-    val kept = Llm.bloomDecontaminationKept(corpus, bench, fpp = 0.05)
+    val kept = BloomDecontam.bloomDecontaminationKept(corpus, bench, fpp = 0.05)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val exact = exactKept
     assert(exact.nonEmpty && exact.size < corpus.count(),
@@ -60,7 +61,7 @@ class BloomDecontaminationSpec extends SparkSpec {
     // independently-salted keys; the build is seed-fixed, so this is
     // deterministic, not flaky
     val (corpus, bench) = fixture
-    val kept = Llm.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
+    val kept = BloomDecontam.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === exactKept)
   }
@@ -74,10 +75,10 @@ class BloomDecontaminationSpec extends SparkSpec {
     val big = "/root/testdata/sf0.1"
     val (corpus, bench) = fixtureAt(big)
     val exact = exactKeptAt(big)
-    val keptLit = Llm.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
+    val keptLit = BloomDecontam.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptLit === exact, "literal tier must match exact q65 at sf0.1")
-    val keptLarge = Llm.bloomDecontaminationKeptLarge(corpus, bench, fpp = 1e-8)
+    val keptLarge = BloomDecontam.bloomDecontaminationKeptLarge(corpus, bench, fpp = 1e-8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptLarge === exact, "subquery tier must match exact q65 at sf0.1")
   }
@@ -88,11 +89,11 @@ class BloomDecontaminationSpec extends SparkSpec {
     // every doc the bloom gate over-drops must have >= 1 real shared
     // shingle, i.e. the error concentrates on threshold-boundary docs
     val (corpus, bench) = fixture
-    val kept = Llm.bloomDecontaminationKept(corpus, bench)
+    val kept = BloomDecontam.bloomDecontaminationKept(corpus, bench)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val overDropped = exactKept -- kept
     if (overDropped.nonEmpty) {
-      val sh = Llm.shingleHashes(Tables.load(spark, sf, "documents"))
+      val sh = Shingles.shingleHashes(Tables.load(spark, sf, "documents"))
       val benchH = sh.filter(col("doc_id") < 10).select("h").distinct()
       val realShared = sh.filter(col("doc_id").isin(overDropped.toSeq: _*))
         .join(benchH, Seq("h"))
@@ -107,7 +108,7 @@ class BloomDecontaminationSpec extends SparkSpec {
 
   test("the gate is map-only: no join and no exchange in the plan") {
     val (corpus, bench) = fixture
-    val plan = Llm.bloomDecontaminationKept(corpus, bench)
+    val plan = BloomDecontam.bloomDecontaminationKept(corpus, bench)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"gate must not join:\n$plan")
     assert(!plan.contains("Exchange"), s"gate must not shuffle:\n$plan")
@@ -118,14 +119,14 @@ class BloomDecontaminationSpec extends SparkSpec {
     // reaches the probe as a scalar subquery — same one-sided error
     // model as the literal variant, so the same equality bar applies
     val (corpus, bench) = fixture
-    val kept = Llm.bloomDecontaminationKeptLarge(corpus, bench, fpp = 1e-8)
+    val kept = BloomDecontam.bloomDecontaminationKeptLarge(corpus, bench, fpp = 1e-8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === exactKept)
   }
 
   test("large-set variant: bloom-kept is a subset of exact-kept at loose fpp") {
     val (corpus, bench) = fixture
-    val kept = Llm.bloomDecontaminationKeptLarge(corpus, bench, fpp = 0.05)
+    val kept = BloomDecontam.bloomDecontaminationKeptLarge(corpus, bench, fpp = 0.05)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert((kept -- exactKept).isEmpty)
   }
@@ -136,7 +137,7 @@ class BloomDecontaminationSpec extends SparkSpec {
     // scalar-subquery reference to the distributed bloom_filter_agg
     // build — the plan shape that scales past plan-constant sizes
     val (corpus, bench) = fixture
-    val plan = Llm.bloomDecontaminationKeptLarge(corpus, bench)
+    val plan = BloomDecontam.bloomDecontaminationKeptLarge(corpus, bench)
       .queryExecution.analyzed.toString
     assert(plan.contains("scalar-subquery") || plan.contains("Subquery"),
       s"expected a scalar subquery in:\n${plan.take(2000)}")
@@ -162,7 +163,7 @@ class BloomDecontaminationSpec extends SparkSpec {
       spark.conf.set(itemsConf, "16")
       spark.conf.set(bitsConf, "64")
       val (corpus, bench) = fixture
-      val kept = Llm.bloomDecontaminationKeptLarge(corpus, bench, fpp = 1e-8)
+      val kept = BloomDecontam.bloomDecontaminationKeptLarge(corpus, bench, fpp = 1e-8)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(kept === exactKept,
         "clamped filter saturated — the gate must raise the bloom maxima")
@@ -179,7 +180,7 @@ class BloomDecontaminationSpec extends SparkSpec {
     val (_, bench) = fixture
     val docs = Seq((1L, null.asInstanceOf[String]), (2L, "spark rows fast table"))
       .toDF("doc_id", "text")
-    val kept = Llm.bloomDecontaminationKeptLarge(docs, bench)
+    val kept = BloomDecontam.bloomDecontaminationKeptLarge(docs, bench)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 2L))
   }
@@ -189,7 +190,7 @@ class BloomDecontaminationSpec extends SparkSpec {
     val (_, bench) = fixture
     val docs = Seq((1L, null.asInstanceOf[String]), (2L, "spark rows fast table"))
       .toDF("doc_id", "text")
-    val kept = Llm.bloomDecontaminationKept(docs, bench)
+    val kept = BloomDecontam.bloomDecontaminationKept(docs, bench)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept.contains(1L), "null-text doc can never be contaminated")
     assert(kept.contains(2L))

@@ -89,4 +89,16 @@ class BpeSpec extends SparkSpec {
     }
     assert(snap() === snap())
   }
+
+  test("an IntegerType histogram trains the same merges as its LongType cast") {
+    import spark.implicits._
+    val ints = Seq(("hug", 10), ("pug", 5), ("pun", 12), ("bun", 4), ("hugs", 5))
+      .toDF("word", "cnt")
+    val longs = ints.select(col("word"), col("cnt").cast("long").as("cnt"))
+    val (mi, vi) = Bpe.train(ints, 3)
+    val (ml, vl) = Bpe.train(longs, 3)
+    assert(mi.orderBy("step").collect().map(_.toSeq).toSeq ===
+      ml.orderBy("step").collect().map(_.toSeq).toSeq)
+    assert(symsOf(vi) === symsOf(vl))
+  }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Llm
+import graft.llm.BloomDecontam
 import graft.streaming.{CorpusStream, Decontam}
 
 /** The streaming decontamination tier: the benchmark shingle-hash set
@@ -30,7 +30,7 @@ class DecontamStreamSpec extends SparkSpec {
     val streamed = kept1.select("doc_id").unionByName(kept2.select("doc_id"))
       .collect().map(_.getLong(0)).toSet
 
-    val batch = Llm.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
+    val batch = BloomDecontam.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(batch.nonEmpty && batch.size < corpus.count(),
       "fixture must actually flag some docs")
@@ -57,7 +57,7 @@ class DecontamStreamSpec extends SparkSpec {
 
     val contaminated = corpus.select("doc_id")
       .collect().map(_.getLong(0)).toSet --
-      Llm.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
+      BloomDecontam.bloomDecontaminationKept(corpus, bench, fpp = 1e-8)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(contaminated.nonEmpty, "fixture must contain contaminated docs")
     assert(landed.intersect(contaminated).isEmpty,

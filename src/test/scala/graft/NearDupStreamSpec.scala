@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.queries.Llm
+import graft.llm.{MinHash, Shingles}
 import graft.streaming.NearDup
 
 /** Streaming near-dup detection (streaming/NearDup.scala): bit-parity of
@@ -18,7 +18,7 @@ class NearDupStreamSpec extends SparkSpec {
 
   test("map-only fold bands are bit-identical to the batch band index") {
     val docs = Tables.load(spark, sf, "documents")
-    val batch = Llm.bandIndexOf(docs)
+    val batch = MinHash.bandIndexOf(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
     val fold = NearDup.bands(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
@@ -33,7 +33,7 @@ class NearDupStreamSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, null.asInstanceOf[String]), (2L, "spark rows fast table"))
       .toDF("doc_id", "text")
-    val batch = Llm.bandIndexOf(docs)
+    val batch = MinHash.bandIndexOf(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
     val fold = NearDup.bands(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
@@ -44,7 +44,7 @@ class NearDupStreamSpec extends SparkSpec {
   test("the parameterized batch reference at the DEFAULT banding is " +
       "bit-identical to Llm.bandIndexOf (the oracle shape)") {
     val docs = Tables.load(spark, sf, "documents")
-    val oracle = Llm.bandIndexOf(docs)
+    val oracle = MinHash.bandIndexOf(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
     val general = NearDup.batchBandIndexOf(docs, NearDup.Banding.default)
       .select("doc_id", "band", "bucket", "b0")
@@ -128,11 +128,11 @@ class NearDupStreamSpec extends SparkSpec {
     // the persisted corpus artifacts: band index + distinct-token table
     val idxDir = Files.createTempDirectory("nd-idx").toString
     val toksDir = Files.createTempDirectory("nd-toks").toString
-    Llm.bandIndexOf(docs.filter(col("doc_id") < split))
+    MinHash.bandIndexOf(docs.filter(col("doc_id") < split))
       .write.mode("overwrite").parquet(idxDir)
     docs.filter(col("doc_id") < split)
       .select(col("doc_id"),
-        expr(s"array_distinct(${Llm.toksExpr})").as("toks"))
+        expr(s"array_distinct(${Shingles.toksExpr})").as("toks"))
       .write.mode("overwrite").parquet(toksDir)
 
     // the arriving delta, staged as a file stream

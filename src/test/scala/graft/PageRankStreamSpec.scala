@@ -86,7 +86,7 @@ class PageRankStreamSpec extends SparkSpec {
     // under the Hamming gate — the pigeonhole guarantee says the banded
     // equi-join must find every one of these, and the lowest-agreeing-
     // segment emission says none twice
-    val sims = graft.queries.Llm.simhashOf(
+    val sims = graft.llm.Simhash.simhashOf(
       docs.select(col("doc_id"), col("lang"), col("text")), wide.simBits)
     val a = sims.select(col("lang"), col("doc_id").as("doc_a"),
       col("simhash").as("sa"))

@@ -225,8 +225,8 @@ class PlanSpec extends SparkSpec {
   test("q86 semdedup pair join is keyed on the cell, never corpus-wide all-pairs") {
     // the staged cell table truncates q86's final lineage, so the pair
     // join's shape is asserted on the sub-pipeline it actually lives in
-    val p = planOf(graft.queries.Llm.semDedupPairs(
-      graft.queries.Llm.semDedupCells(spark, sf)))
+    val p = planOf(graft.queries.LlmEmbed.semDedupPairs(
+      graft.queries.LlmEmbed.semDedupCells(spark, sf)))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"no all-pairs join in pair generation:\n$p")
     assert("(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin) \\[cell#".r
@@ -409,7 +409,7 @@ class PlanSpec extends SparkSpec {
     import graft.llm.Bpe
     val hist = graft.core.Tables.load(spark, sf, "documents")
       .select(org.apache.spark.sql.functions.explode(
-        org.apache.spark.sql.functions.expr(graft.queries.Llm.toksExpr)).as("word"))
+        org.apache.spark.sql.functions.expr(graft.llm.Shingles.toksExpr)).as("word"))
       .groupBy("word").agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("cnt"))
     val pos = Bpe.positionsOf(Bpe.withCharSyms(hist))

@@ -4,7 +4,7 @@ import graft.llm.Pq
 
 /** Proves PQ codebook TRAINING improves retrieval — on a fixture built so
   * recall measures the operator, not the fixture (the round-9 verdict's
-  * ask: `Llm.scala`'s q94 notes document why the sf corpus can't).
+  * ask: `LlmEmbed.scala`'s q94 notes document why the sf corpus can't).
   *
   * Planted product structure: each subspace has 8 well-separated
   * prototype subvectors; every corpus vector is a prototype tuple plus

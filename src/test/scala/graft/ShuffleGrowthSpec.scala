@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{JobTrace, Tables}
+import graft.llm.{MinHash, Shingles}
 import graft.operators.Components
-import graft.queries.Llm
 
 /** The measured form of the 100 TB claim the dedup tier rests on:
   * candidate generation is a bounded-occupancy band equi-join and
@@ -56,10 +56,10 @@ class ShuffleGrowthSpec extends SparkSpec {
 
   test("band pair generation + verification shuffle grows ~linearly in corpus size") {
     val (rec1, byt1) = measureShuffle {
-      Llm.jaccardEdgesOf(corpus(1)).count()
+      MinHash.jaccardEdgesOf(corpus(1)).count()
     }
     val (rec8, byt8) = measureShuffle {
-      Llm.jaccardEdgesOf(corpus(8)).count()
+      MinHash.jaccardEdgesOf(corpus(8)).count()
     }
     info(f"records 1x=$rec1 8x=$rec8 ratio=${rec8.toDouble / rec1}%.1f; " +
       f"bytes 1x=$byt1 8x=$byt8 ratio=${byt8.toDouble / byt1}%.1f")
@@ -72,7 +72,7 @@ class ShuffleGrowthSpec extends SparkSpec {
 
   test("contraction clustering shuffle grows ~linearly in corpus size") {
     def cluster(k: Int): Unit = {
-      val edges = Llm.jaccardEdgesOf(corpus(k))
+      val edges = MinHash.jaccardEdgesOf(corpus(k))
       Components.connected(edges, src = "doc_a", dst = "doc_b").count()
     }
     val (rec1, byt1) = measureShuffle(cluster(1))
@@ -258,7 +258,7 @@ class ShuffleGrowthSpec extends SparkSpec {
         base.select((col("doc_id") + lit(i * 100000L)).as("doc_id"), col("text")))
         .reduce(_ unionByName _)
       val v = Staging.stage(Bpe.withCharSyms(corpus
-        .select(explode(expr(Llm.toksExpr)).as("word"))
+        .select(explode(expr(Shingles.toksExpr)).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cnt"))))
       v.count() // materialize the histogram OUTSIDE the measured step
       v

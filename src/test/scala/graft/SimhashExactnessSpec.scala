@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
-import graft.queries.Llm
+import graft.llm.Simhash
+import graft.queries.LlmDedup
 
 /** Banded SimHash pair generation == exact Hamming-≤-r all-pairs.
   *
@@ -41,17 +42,17 @@ class SimhashExactnessSpec extends SparkSpec {
 
   private def banded(sim: DataFrame, numSegs: Int, segBits: Int,
                      maxHamming: Int): Set[(Any, Any, Any)] =
-    collectPairs(Llm.simhashBandPairs(sim, numSegs, segBits, maxHamming))
+    collectPairs(Simhash.simhashBandPairs(sim, numSegs, segBits, maxHamming))
 
   test("q51 knobs: 32-bit 8x4 banding emits exactly the Hamming<=6 pairs") {
-    val sim = Staging.stage(Llm.simhashFrame(spark, dir, 32))
+    val sim = Staging.stage(LlmDedup.simhashFrame(spark, dir, 32))
     val exact = exactPairs(sim, 6)
     assert(exact.nonEmpty, "fixture must contain qualifying pairs or the test is vacuous")
     assert(banded(sim, 8, 4, 6) === exact)
   }
 
   test("q56 knobs: 56-bit 8x7 banding emits exactly the Hamming<=6 pairs") {
-    val sim = Staging.stage(Llm.simhashFrame(spark, dir, 56))
+    val sim = Staging.stage(LlmDedup.simhashFrame(spark, dir, 56))
     val exact = exactPairs(sim, 6)
     assert(exact.nonEmpty)
     assert(banded(sim, 8, 7, 6) === exact)
@@ -60,19 +61,19 @@ class SimhashExactnessSpec extends SparkSpec {
   test("exactness is parameterization-independent: 16x2 segmentation of the 32-bit signature") {
     // same signature, different covering segmentation — the guarantee
     // comes from the pigeonhole, not from the shipped 8x4 layout
-    val sim = Staging.stage(Llm.simhashFrame(spark, dir, 32))
+    val sim = Staging.stage(LlmDedup.simhashFrame(spark, dir, 32))
     assert(banded(sim, 16, 2, 6) === exactPairs(sim, 6))
   }
 
   test("tighter radius stays exact (r=3 under the q51 segmentation)") {
-    val sim = Staging.stage(Llm.simhashFrame(spark, dir, 32))
+    val sim = Staging.stage(LlmDedup.simhashFrame(spark, dir, 32))
     assert(banded(sim, 8, 4, 3) === exactPairs(sim, 3))
   }
 
   test("pigeonhole precondition is enforced: numSegs <= maxHamming throws") {
-    val sim = Llm.simhashFrame(spark, dir, 32)
+    val sim = LlmDedup.simhashFrame(spark, dir, 32)
     intercept[IllegalArgumentException] {
-      Llm.simhashBandPairs(sim, 6, 4, 6)
+      Simhash.simhashBandPairs(sim, 6, 4, 6)
     }
   }
 }

@@ -185,7 +185,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = ClusterMaintenance.labels(spark, state)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.operators.Components
-      .connected(graft.queries.Llm.jaccardEdgesOf(docs), "doc_a", "doc_b")
+      .connected(graft.llm.MinHash.jaccardEdgesOf(docs), "doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(batch.nonEmpty, "fixture must contain near-dup pairs")
     assert(streamed === batch)
@@ -407,7 +407,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = ClusterMaintenance.labels(spark, state)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.operators.Components
-      .connected(graft.queries.Llm.jaccardEdgesOf(docs), "doc_a", "doc_b")
+      .connected(graft.llm.MinHash.jaccardEdgesOf(docs), "doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(batch.nonEmpty, "fixture must contain near-dup pairs")
     assert(streamed === batch,
@@ -438,7 +438,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = ClusterMaintenance.labels(spark, state)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.operators.Components
-      .connected(graft.queries.Llm.jaccardEdgesOf(docs), "doc_a", "doc_b")
+      .connected(graft.llm.MinHash.jaccardEdgesOf(docs), "doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed === batch,
       "the absorbed labeling must equal the full batch re-cluster")
@@ -480,7 +480,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = ClusterMaintenance.labels(spark, state)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.operators.Components
-      .connected(graft.queries.Llm.jaccardEdgesOf(docs), "doc_a", "doc_b")
+      .connected(graft.llm.MinHash.jaccardEdgesOf(docs), "doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed === batch,
       "the compaction cadence must not change the labeling")

@@ -164,4 +164,18 @@ class WordpieceSpec extends SparkSpec {
       assert(!unk && n >= 1 && n <= w.length, s"word $w -> ($n, $unk)")
     }
   }
+
+  test("a unit-count product past Long.MaxValue fails on both trainer paths") {
+    // every unit counts 4e9, so left_count * right_count ~ 1.6e19; two
+    // pairs, so the distributed pick really compares (evaluates) a score
+    val hist = Seq(("abc", 4000000000L)).toDF("word", "cnt")
+    def overflows(f: => Any): Boolean =
+      Iterator.iterate(intercept[Throwable](f))(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    assert(overflows(Wordpiece.train(hist, 1)._1.collect()), "driver path")
+    val gate = "spark.graft.tokenizer.driverTrainRows"
+    spark.conf.set(gate, "0")
+    try assert(overflows(Wordpiece.train(hist, 1)._1.collect()), "distributed path")
+    finally spark.conf.unset(gate)
+  }
 }
