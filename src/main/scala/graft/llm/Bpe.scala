@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,10 +39,14 @@ import graft.core.Staging
   */
 object Bpe {
 
-  /** Initial character symbols for a (word, cnt) histogram. */
-  def withCharSyms(words: DataFrame): DataFrame =
-    words.withColumn("syms",
-      expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
+  /** Initial symbols for a (word, cnt) histogram: one per code point,
+    * each after a word's first prefixed with `marker` (WordPiece's `##`).
+    * An empty word has none, so no vocab row (bare `sequence(1, 0)` would
+    * count DOWN to [1, 0]). [[charSymsLocal]] is the driver form. */
+  def withCharSyms(words: DataFrame, marker: String = ""): DataFrame =
+    words.filter(length(col("word")) > 0).withColumn("syms", expr(
+      s"""transform(sequence(1, length(word)), i ->
+            IF(i = 1, substring(word, 1, 1), concat('$marker', substring(word, i, 1))))"""))
 
   /** One merge step over a (word, cnt, syms) table.
     * @return (bestPair: 1-row (x, y, pair_count) frame — staged,
@@ -107,7 +111,7 @@ object Bpe {
       .orderBy(col("pair_count").desc, col("x"), col("y"))
       .limit(1)
 
-  // ---- driver-resident merge loop (the bounded-table discipline) -------
+  // ---- the shared merge loops (the bounded-table discipline) -----------
   //
   // The merge LOOP's working set is the word HISTOGRAM — vocabulary-
   // sized, NOT corpus-sized. When that histogram is bounded (the same
@@ -118,35 +122,40 @@ object Bpe {
   // scheduling round trip spent on a table that already fits one JVM:
   // measured at sf0.1, the 4-step trainers pay 40-65 jobs of ~20 ms work
   // under 0.05 s gaps each (q114 3.8 s wall / 0.96 s task-CPU). Below
-  // [[driverTrainGate]] the loop runs on the driver over the collected
-  // histogram — ONE distributed job total (the histogram stage+count) —
-  // replicating the distributed semantics exactly (integer pair sums,
-  // UTF-8 binary tie-breaks, the greedy even-offset scan, code-point
-  // symbols). Real-corpus vocabularies (Heaps' law: 10^6-10^7 types at
-  // 100 TB) stay far above the gate and keep the distributed path;
-  // BpePropSpec pins driver == distributed == the sequential model.
+  // [[driverTrainGate]] ONE driver loop serves `train`, `trainIncremental`
+  // and `Wordpiece.train` over the collected histogram — one distributed
+  // job total (the histogram stage+count) — replicating the distributed
+  // semantics exactly (integer pair sums, UTF-8 binary tie-breaks, the
+  // greedy even-offset scan, code-point symbols). Above it ONE recount
+  // loop serves `train` and `Wordpiece.train`; `trainIncremental` keeps
+  // its delta loop. A [[Scheme]] supplies what the tokenizers differ in,
+  // and every loop starts from the same split and ends in the same
+  // merges table. Real-corpus vocabularies (Heaps' law: 10^6-10^7 types
+  // at 100 TB) stay far above the gate; BpePropSpec and WordpieceSpec pin
+  // driver == distributed == the sequential model.
 
   /** Histogram-rows gate for the driver-resident loop. 2^17 rows is a
     * few MB of driver heap (words + symbol arrays) — conservative next
     * to PageRank's 2^20-node gate because these rows carry strings, not
     * longs. `spark.graft.tokenizer.driverTrainRows` overrides; 0
     * disables (every trainer then runs distributed, the A/B knob). */
-  private[llm] def driverTrainGate(spark: org.apache.spark.sql.SparkSession): Long =
+  private[llm] def driverTrainGate(spark: SparkSession): Long =
     spark.conf.get("spark.graft.tokenizer.driverTrainRows",
       (1L << 17).toString).toLong
 
   /** The (word, cnt) histogram, collected when bounded: Right(rows)
     * below the gate (one stageCounted job, the collect reads its cached
-    * blocks, released immediately), Left(histogram) above it — staged,
-    * so the distributed path's first checkpoint scans blocks — or
-    * verbatim when the gate is disabled. */
+    * blocks, released immediately), Left((histogram, owned)) above it —
+    * staged, so the distributed loop's first checkpoint scans blocks,
+    * and owned, so the loop releases it once its vocab is staged — or
+    * the caller's frame verbatim, not owned, when the gate is disabled. */
   private[llm] def boundedHistogram(words: DataFrame)
-      : Either[DataFrame, Array[(String, Long)]] = {
+      : Either[(DataFrame, Boolean), Array[(String, Long)]] = {
     val gate = driverTrainGate(words.sparkSession)
-    if (gate <= 0L) Left(words)
+    if (gate <= 0L) Left((words, false))
     else {
       val (wh, n) = Staging.stageCounted(words)
-      if (n > gate) Left(wh)
+      if (n > gate) Left((wh, true))
       else {
         val rows = wh.collect().map { r =>
           (r.getString(r.fieldIndex("word")),
@@ -158,6 +167,44 @@ object Bpe {
     }
   }
 
+  /** One learned merge; `extra` holds the scheme's `extraCols` values. */
+  private[llm] final case class Merge(x: String, y: String, pairCount: Long,
+      extra: Seq[Long])
+
+  /** What a tokenizer supplies to the shared loops: its initial symbols'
+    * `marker` (stripped from a merge's right symbol), the long
+    * `extraCols` its pick adds after pair_count, and its best-pair pick
+    * on the driver and as a ≤ 1-row frame over a positions table. */
+  private[llm] final case class Scheme(marker: String, extraCols: Seq[String],
+      pickLocal: (Array[(String, Long, Array[String])],
+        collection.Map[(String, String), Long]) => Option[Merge],
+      pick: DataFrame => DataFrame) {
+    def joinCol(x: Column, y: Column): Column =
+      if (marker.isEmpty) concat(x, y) else concat(x, regexp_replace(y, s"^$marker", ""))
+  }
+
+  /** BPE: plain symbols, most frequent pair. */
+  private val Frequency = Scheme("", Nil,
+    (_, pairs) => argmaxPair(pairs)((_, pc) => pc)(java.lang.Long.compare)
+      .map { case ((x, y), pc) => Merge(x, y, pc, Nil) },
+    bestPairOf)
+
+  /** A best-pair row, (x, y, pair_count) then `extraCols`, as a merge. */
+  private def mergeOf(r: Row, extraCols: Seq[String]): Merge =
+    Merge(r.getString(0), r.getString(1), r.getLong(2),
+      extraCols.map(c => r.getLong(r.fieldIndex(c))))
+
+  /** The merges table every loop returns: (step, x, y, pair_count) and
+    * then `extraCols`, one row per merge in step order. */
+  private def mergesTable(spark: SparkSession, merges: Seq[Merge],
+      extraCols: Seq[String]): DataFrame = {
+    import spark.implicits._
+    merges.zipWithIndex.map { case (m, i) => (i + 1, m.x, m.y, m.pairCount, m.extra) }
+      .toDF("step", "x", "y", "pair_count", "extra")
+      .select(Seq(col("step"), col("x"), col("y"), col("pair_count")) ++
+        extraCols.indices.map(k => col("extra")(k).as(extraCols(k))): _*)
+  }
+
   /** Spark's string order is UTF8String.binaryCompare — unsigned UTF-8
     * bytes, replicated verbatim (the emTrainPruned discipline). */
   private[llm] def utf8Cmp(a: String, b: String): Int =
@@ -165,29 +212,24 @@ object Bpe {
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** Initial character symbols, driver form: `length`/`substring` count
-    * CODE POINTS, so a surrogate pair is ONE symbol here too. */
-  private[llm] def charSymsLocal(word: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    var i = 0
-    while (i < word.length) {
-      val n = Character.charCount(word.codePointAt(i))
-      out += word.substring(i, i + n)
-      i += n
+  /** [[withCharSyms]], driver form: `length`/`substring` count CODE
+    * POINTS, so a surrogate pair is ONE symbol here too. */
+  private[llm] def charSymsLocal(word: String, marker: String = ""): Array[String] =
+    word.codePoints().toArray.zipWithIndex.map { case (cp, i) =>
+      (if (i == 0) "" else marker) + new String(Character.toChars(cp))
     }
-    out.result()
-  }
 
   /** The greedy left-to-right merge scan — the ground truth
     * [[applyMerge]]'s window formulation reproduces (BpePropSpec's
-    * sequential model, verbatim). */
+    * sequential model, verbatim); the merged symbol is `x` ++ `y`
+    * without its leading `marker`. */
   private[llm] def mergeWordLocal(syms: Array[String], x: String, y: String,
-      join: (String, String) => String): Array[String] = {
+      marker: String): Array[String] = {
     val out = Array.newBuilder[String]
     var j = 0
     while (j < syms.length) {
       if (j + 1 < syms.length && syms(j) == x && syms(j + 1) == y) {
-        out += join(syms(j), syms(j + 1)); j += 2
+        out += syms(j) + syms(j + 1).stripPrefix(marker); j += 2
       } else { out += syms(j); j += 1 }
     }
     out.result()
@@ -209,95 +251,78 @@ object Bpe {
     counts
   }
 
-  /** (pair_count DESC, x, y) — [[bestPairOf]]'s cut, picked by a fold
-    * over the map (iteration-order-free: the comparison is a total
-    * order). */
-  private def bestPairLocal(counts: collection.Map[(String, String), Long])
-      : Option[(String, String, Long)] = {
+  /** The pair with the greatest `score` under `cmp`, ties on UTF-8
+    * binary (x, y) — [[bestPairOf]]'s cut with the score left to the
+    * scheme — picked by a fold over the map (iteration-order-free: the
+    * comparison is a total order). */
+  private[llm] def argmaxPair[S](pairs: collection.Map[(String, String), Long])
+      (score: ((String, String), Long) => S)(cmp: (S, S) => Int)
+      : Option[((String, String), Long)] = {
     var best: ((String, String), Long) = null
-    counts.foreach { e =>
-      val better = best == null || e._2 > best._2 || (e._2 == best._2 && {
+    var bestScore = null.asInstanceOf[S]
+    pairs.foreach { e =>
+      val s = score(e._1, e._2)
+      val c = if (best == null) 1 else cmp(s, bestScore)
+      val better = c > 0 || (c == 0 && {
         val cx = utf8Cmp(e._1._1, best._1._1)
         cx < 0 || (cx == 0 && utf8Cmp(e._1._2, best._1._2) < 0)
       })
-      if (better) best = e
+      if (better) { best = e; bestScore = s }
     }
-    Option(best).map { case ((x, y), c) => (x, y, c) }
+    Option(best)
   }
 
-  /** The driver-resident merge loop. ONE shared loop serves [[train]]
-    * and [[trainIncremental]]: full recount per step equals delta
+  /** The driver-resident merge loop. Full recount per step equals delta
     * maintenance by the exactly-once arithmetic BpePropSpec pins, so
-    * below the gate both dispatch here (they differ only in telemetry —
-    * `vocab_symbols` for the full trainer, `matched_words` for the
-    * incremental one, same values the distributed jobs reported). */
-  private def trainDriverLoop(spark: org.apache.spark.sql.SparkSession,
-      hist: Array[(String, Long)], steps: Int,
-      observe: Option[(String, Long) => Unit],
+    * `trainIncremental` runs here too; it differs only in telemetry —
+    * `matched_words` where the full trainer reports `vocab_symbols`,
+    * the values the distributed jobs report. */
+  private def trainDriverLoop(spark: SparkSession, hist: Array[(String, Long)],
+      steps: Int, scheme: Scheme, observe: Option[(String, Long) => Unit],
       reportSymbols: Boolean): (DataFrame, DataFrame) = {
     import spark.implicits._
     def report(stage: String)(rows: => Long): Unit = observe.foreach(_(stage, rows))
-    var vocab = hist.map { case (w, c) => (w, c, charSymsLocal(w)) }
-    val mergeRows = Seq.newBuilder[(Int, String, String, Long)]
+    var vocab = hist.collect { case (w, c) if w.nonEmpty =>
+      (w, c, charSymsLocal(w, scheme.marker))
+    }
+    val merges = Seq.newBuilder[Merge]
     var exhausted = false
     for (i <- 1 to steps if !exhausted) {
-      bestPairLocal(pairCountsLocal(vocab)) match {
+      scheme.pickLocal(vocab, pairCountsLocal(vocab)) match {
         case None => exhausted = true
-        case Some((x, y, pc)) =>
-          mergeRows += ((i, x, y, pc))
+        case Some(m) =>
+          merges += m
           var matched = 0L
           vocab = vocab.map { case (w, c, syms) =>
-            var j = 0; var has = false
-            while (!has && j + 1 < syms.length) {
-              has = syms(j) == x && syms(j + 1) == y; j += 1
-            }
-            if (has) { matched += 1; (w, c, mergeWordLocal(syms, x, y, _ + _)) }
-            else (w, c, syms)
+            val out = mergeWordLocal(syms, m.x, m.y, scheme.marker)
+            if (out.length < syms.length) matched += 1
+            (w, c, out)
           }
-          report(s"bpe:step${i}_pair_count")(pc)
+          report(s"bpe:step${i}_pair_count")(m.pairCount)
           if (reportSymbols)
             report(s"bpe:step${i}_vocab_symbols")(
               vocab.iterator.map(_._3.length.toLong).sum)
           else report(s"bpe:step${i}_matched_words")(matched)
       }
     }
-    val rows = mergeRows.result()
-    val mergesDf =
-      if (rows.isEmpty)
-        spark.emptyDataFrame
-          .select(lit(1).as("step"), lit("").as("x"), lit("").as("y"),
-            lit(0L).as("pair_count")).limit(0)
-      else rows.toDF("step", "x", "y", "pair_count")
     val vocabDf = vocab.toSeq.map { case (w, c, s) => (w, c, s.toSeq) }
       .toDF("word", "cnt", "syms")
-    (mergesDf.select("step", "x", "y", "pair_count"), vocabDf)
+    (mergesTable(spark, merges.result(), scheme.extraCols), vocabDf)
   }
 
-  /** Learn `steps` merges from a (word, cnt) histogram.
-    * @param observe training telemetry hook `(stage, rows) => Unit`,
-    *   zero-cost when None: per step, the chosen pair's weighted count
-    *   (`bpe:step{i}_pair_count`) and the vocabulary's remaining symbol
-    *   total (`bpe:step{i}_vocab_symbols` — the compression curve).
-    * @return (merges: (step, x, y, pair_count) — up to `steps` rows
-    *         (fewer on pair exhaustion), vocab: (word, cnt, syms) after
-    *         all merges) */
-  def train(words: DataFrame, steps: Int,
-            observe: Option[(String, Long) => Unit] = None): (DataFrame, DataFrame) =
-    boundedHistogram(words) match {
-      case Right(hist) => trainDriverLoop(words.sparkSession, hist, steps,
-        observe, reportSymbols = true)
-      case Left(wh) => trainDistributed(wh, steps, observe)
-    }
-
-  /** The distributed merge loop — [[train]]'s path above the gate, and
-    * the formulation PlanSpec/ShuffleGrowthSpec pin directly. */
-  private[graft] def trainDistributed(words: DataFrame, steps: Int,
-            observe: Option[(String, Long) => Unit] = None): (DataFrame, DataFrame) = {
+  /** The distributed recount loop: per step, stage the positions,
+    * collect the scheme's best pair, stage the rewrite. `owned` says
+    * `words` is the gate's staged copy, released once the vocab is
+    * staged — never a caller's frame. */
+  private[llm] def trainRecount(words: DataFrame, steps: Int, scheme: Scheme,
+      observe: Option[(String, Long) => Unit] = None, owned: Boolean = false)
+      : (DataFrame, DataFrame) = {
     def report(stage: String)(rows: => Long): Unit = observe.foreach(_(stage, rows))
     val spark = words.sparkSession
     import spark.implicits._
-    var vocab = Staging.stage(withCharSyms(words))
-    val mergeRows = Seq.newBuilder[(Int, String, String, Long)]
+    var vocab = Staging.stage(withCharSyms(words, scheme.marker))
+    if (owned) Staging.release(words)
+    val merges = Seq.newBuilder[Merge]
     var exhausted = false
     for (i <- 1 to steps if !exhausted) {
       val pos = Staging.stage(positionsOf(vocab))
@@ -309,35 +334,59 @@ object Bpe {
       // the driver instead of a k-way union of staged frames — measured
       // 3 scheduling round trips saved per merge step, exact same pair
       // by construction (same TakeOrdered(1), same tie-break).
-      val bpRows = bestPairOf(pos).collect()
+      val bpRows = scheme.pick(pos).collect()
       // pair exhaustion (every word down to one symbol): stop — an
       // empty best pair would otherwise annihilate the vocab through
       // the cross join.
       if (bpRows.isEmpty) exhausted = true
       else {
-        val r = bpRows.head
-        val (x, y, pc) = (r.getString(0), r.getString(1), r.getLong(2))
-        mergeRows += ((i, x, y, pc))
-        val bp = Seq((x, y, pc)).toDF("x", "y", "pair_count")
-        vocab = Staging.stage(applyMerge(pos, bp))
+        val m = mergeOf(bpRows.head, scheme.extraCols)
+        merges += m
+        val bp = Seq((m.x, m.y, m.pairCount)).toDF("x", "y", "pair_count")
+        vocab = Staging.stage(applyMerge(pos, bp, scheme.joinCol))
         // merge-progress telemetry (the Components discipline — zero
         // cost when unobserved): the chosen pair's weighted count, and
         // the total symbols left in the vocabulary (the compression
         // curve a production training run watches for early stop)
-        report(s"bpe:step${i}_pair_count")(pc)
+        report(s"bpe:step${i}_pair_count")(m.pairCount)
         report(s"bpe:step${i}_vocab_symbols")(
           vocab.agg(sum(size(col("syms")))).collect().head.getLong(0))
       }
     }
-    val rows = mergeRows.result()
-    val mergesDf =
-      if (rows.isEmpty)
-        vocab.sparkSession.emptyDataFrame
-          .select(lit(1).as("step"), lit("").as("x"), lit("").as("y"),
-            lit(0L).as("pair_count")).limit(0)
-      else rows.toDF("step", "x", "y", "pair_count")
-    (mergesDf.select("step", "x", "y", "pair_count"), vocab)
+    (mergesTable(spark, merges.result(), scheme.extraCols), vocab)
   }
+
+  /** Gated training under `scheme`: the driver loop below the gate;
+    * above it the recount loop, or the delta loop when `incremental`. */
+  private[llm] def trainGated(words: DataFrame, steps: Int, scheme: Scheme,
+      observe: Option[(String, Long) => Unit] = None,
+      incremental: Boolean = false): (DataFrame, DataFrame) =
+    boundedHistogram(words) match {
+      case Right(hist) => trainDriverLoop(words.sparkSession, hist, steps,
+        scheme, observe, reportSymbols = !incremental)
+      case Left((wh, owned)) =>
+        if (incremental) trainIncrementalDistributed(wh, steps, observe, owned)
+        else trainRecount(wh, steps, scheme, observe, owned)
+    }
+
+  /** Learn `steps` merges from a (word, cnt) histogram.
+    * @param observe training telemetry hook `(stage, rows) => Unit`,
+    *   zero-cost when None: per step, the chosen pair's weighted count
+    *   (`bpe:step{i}_pair_count`) and the vocabulary's remaining symbol
+    *   total (`bpe:step{i}_vocab_symbols` — the compression curve).
+    * @return (merges: (step, x, y, pair_count) — up to `steps` rows
+    *         (fewer on pair exhaustion), vocab: (word, cnt, syms) after
+    *         all merges) */
+  def train(words: DataFrame, steps: Int,
+            observe: Option[(String, Long) => Unit] = None): (DataFrame, DataFrame) =
+    trainGated(words, steps, Frequency, observe)
+
+  /** The distributed recount loop under BPE's scheme — [[train]]'s path
+    * above the gate, and the formulation PlanSpec/ShuffleGrowthSpec pin
+    * directly. */
+  private[graft] def trainDistributed(words: DataFrame, steps: Int,
+            observe: Option[(String, Long) => Unit] = None): (DataFrame, DataFrame) =
+    trainRecount(words, steps, Frequency, observe)
 
   /** [[train]] with INCREMENTAL pair counts — the production shape for
     * real vocab scale (32k merges), where re-exploding every position of
@@ -361,41 +410,38 @@ object Bpe {
   def trainIncremental(words: DataFrame, steps: Int,
                        observe: Option[(String, Long) => Unit] = None)
       : (DataFrame, DataFrame) =
-    boundedHistogram(words) match {
-      // below the gate the incremental count table IS the driver loop's
-      // recount (delta == recount is the operator's own invariant,
-      // BpePropSpec-pinned); only the telemetry channel differs
-      case Right(hist) => trainDriverLoop(words.sparkSession, hist, steps,
-        observe, reportSymbols = false)
-      case Left(wh) => trainIncrementalDistributed(wh, steps, observe)
-    }
+    // below the gate the incremental count table IS the driver loop's
+    // recount (delta == recount is the operator's own invariant,
+    // BpePropSpec-pinned); only the telemetry channel differs
+    trainGated(words, steps, Frequency, observe, incremental = true)
 
   /** The distributed delta-maintained loop — [[trainIncremental]]'s
     * path above the gate (ShuffleGrowthSpec pins its delta-sized
-    * per-step shuffle directly). */
+    * per-step shuffle directly); `owned` as in [[trainRecount]]. */
   private[graft] def trainIncrementalDistributed(words: DataFrame, steps: Int,
-                       observe: Option[(String, Long) => Unit] = None)
+                       observe: Option[(String, Long) => Unit] = None,
+                       owned: Boolean = false)
       : (DataFrame, DataFrame) = {
     def report(stage: String)(rows: => Long): Unit = observe.foreach(_(stage, rows))
     val spark = words.sparkSession
     import spark.implicits._
     var vocab = Staging.stage(withCharSyms(words))
+    if (owned) Staging.release(words)
     // the one corpus-sized pass: the full pair histogram
     var counts = Staging.stage(pairCountsOf(positionsOf(vocab)))
-    val mergeRows = Seq.newBuilder[(Int, String, String, Long)]
+    val merges = Seq.newBuilder[Merge]
     var exhausted = false
     for (i <- 1 to steps if !exhausted) {
-      // bounded 1-row driver collect, as in [[train]]: saves the staged
-      // frame, the isEmpty probe, and the broadcast-build job per step
+      // bounded 1-row driver collect, as in [[trainRecount]]: saves the
+      // staged frame, the isEmpty probe, and the broadcast-build job
       val bpRows = counts
         .orderBy(col("pair_count").desc, col("x"), col("y")).limit(1)
         .collect()
       if (bpRows.isEmpty) exhausted = true
       else {
-        val r = bpRows.head
-        val (x0, y0, pc) = (r.getString(0), r.getString(1), r.getLong(2))
-        mergeRows += ((i, x0, y0, pc))
-        val bp = Seq((x0, y0, pc)).toDF("x", "y", "pair_count")
+        val m = mergeOf(bpRows.head, Nil)
+        merges += m
+        val bp = Seq((m.x, m.y, m.pairCount)).toDF("x", "y", "pair_count")
         // matched = words containing the pair adjacently — map-only scan
         // the size guard short-circuits single-symbol words: without it
         // sequence(1, 0) DESCENDS under Spark's default step and the
@@ -420,17 +466,10 @@ object Bpe {
           .groupBy("x", "y").agg(sum(col("pair_count")).as("pair_count"))
           .filter(col("pair_count") > 0))
         vocab = Staging.stage(untouched.unionByName(rewritten))
-        report(s"bpe:step${i}_pair_count")(pc)
+        report(s"bpe:step${i}_pair_count")(m.pairCount)
         report(s"bpe:step${i}_matched_words")(matched.count())
       }
     }
-    val rows = mergeRows.result()
-    val mergesDf =
-      if (rows.isEmpty)
-        vocab.sparkSession.emptyDataFrame
-          .select(lit(1).as("step"), lit("").as("x"), lit("").as("y"),
-            lit(0L).as("pair_count")).limit(0)
-      else rows.toDF("step", "x", "y", "pair_count")
-    (mergesDf.select("step", "x", "y", "pair_count"), vocab)
+    (mergesTable(spark, merges.result(), Nil), vocab)
   }
 }

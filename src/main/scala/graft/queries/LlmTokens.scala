@@ -235,18 +235,25 @@ object LlmTokens {
       .select(explode(expr(toksExpr)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 
+  // q104/q114 share their report and oracle
+  private def bpeMergesReport(merges: DataFrame): DataFrame =
+    merges.select(col("step"), col("x").as("merge_left"),
+      col("y").as("merge_right"), col("pair_count")).orderBy("step")
+
+  private val bpeMergesOracle =
+    s"""WITH $bpeChainSql
+            ${(1 to bpeSteps).map(i =>
+              s"SELECT CAST($i AS INT) AS step, x AS merge_left, y AS merge_right, pair_count FROM bp$i")
+              .mkString("\nUNION ALL\n")}
+            ORDER BY step"""
+
   private val bpeMerges = Q(
     "q104_bpe_merges",
     (s, dir) => {
       val (merges, _) = graft.llm.Bpe.train(corpusWordHist(s, dir), bpeSteps)
-      merges.select(col("step"), col("x").as("merge_left"),
-        col("y").as("merge_right"), col("pair_count")).orderBy("step")
+      bpeMergesReport(merges)
     },
-    Some(s"""WITH $bpeChainSql
-            ${(1 to bpeSteps).map(i =>
-              s"SELECT CAST($i AS INT) AS step, x AS merge_left, y AS merge_right, pair_count FROM bp$i")
-              .mkString("\nUNION ALL\n")}
-            ORDER BY step"""))
+    Some(bpeMergesOracle))
 
   // q104's trainer swapped for the incremental-count variant, against
   // q104's ORACLE verbatim: the driver checks that maintaining the pair
@@ -261,14 +268,9 @@ object LlmTokens {
     (s, dir) => {
       val (merges, _) =
         graft.llm.Bpe.trainIncremental(corpusWordHist(s, dir), bpeSteps)
-      merges.select(col("step"), col("x").as("merge_left"),
-        col("y").as("merge_right"), col("pair_count")).orderBy("step")
+      bpeMergesReport(merges)
     },
-    Some(s"""WITH $bpeChainSql
-            ${(1 to bpeSteps).map(i =>
-              s"SELECT CAST($i AS INT) AS step, x AS merge_left, y AS merge_right, pair_count FROM bp$i")
-              .mkString("\nUNION ALL\n")}
-            ORDER BY step"""))
+    Some(bpeMergesOracle))
 
   // ---- unigram-LM (SentencePiece-style) Viterbi segmentation -----------
   // The tokenizer family's OTHER half (Kudo 2018, arXiv:1804.10959):

@@ -166,16 +166,19 @@ class WordpieceSpec extends SparkSpec {
   }
 
   test("a unit-count product past Long.MaxValue fails on both trainer paths") {
-    // every unit counts 4e9, so left_count * right_count ~ 1.6e19; two
-    // pairs, so the distributed pick really compares (evaluates) a score
-    val hist = Seq(("abc", 4000000000L)).toDF("word", "cnt")
-    def overflows(f: => Any): Boolean =
-      Iterator.iterate(intercept[Throwable](f))(_.getCause).takeWhile(_ != null)
-        .exists(_.isInstanceOf[ArithmeticException])
-    assert(overflows(Wordpiece.train(hist, 1)._1.collect()), "driver path")
-    val gate = "spark.graft.tokenizer.driverTrainRows"
-    spark.conf.set(gate, "0")
-    try assert(overflows(Wordpiece.train(hist, 1)._1.collect()), "distributed path")
-    finally spark.conf.unset(gate)
+    // every unit counts 4e9, so left_count * right_count ~ 1.6e19; "abc"
+    // has two pairs, so the distributed pick compares (evaluates) a score;
+    // "ab" has one, where the pick compares nothing
+    for (word <- Seq("abc", "ab")) {
+      val hist = Seq((word, 4000000000L)).toDF("word", "cnt")
+      def overflows(f: => Any): Boolean =
+        Iterator.iterate(intercept[Throwable](f))(_.getCause).takeWhile(_ != null)
+          .exists(_.isInstanceOf[ArithmeticException])
+      assert(overflows(Wordpiece.train(hist, 1)._1.collect()), s"driver path, $word")
+      val gate = "spark.graft.tokenizer.driverTrainRows"
+      spark.conf.set(gate, "0")
+      try assert(overflows(Wordpiece.train(hist, 1)._1.collect()), s"distributed path, $word")
+      finally spark.conf.unset(gate)
+    }
   }
 }
