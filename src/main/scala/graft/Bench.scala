@@ -237,12 +237,27 @@ object Bench {
     * durable reference. A genuinely quiet run is never 15% above the
     * existing quiet total of the same engine lineage; a real engine
     * regression that large shows up in BENCH_DETAIL and the per-round
-    * records long before the durable reference needs to move. */
+    * records long before the durable reference needs to move. The same
+    * holds per row: a run whose median for any query (`medians`) is more
+    * than 2.5× that query's row in the reference (`quietRows`) may not
+    * refresh it either — the r18 quiet record banked a q84 row at 3.53 s
+    * whose true cost is ~0.7 s, a spike well inside the 15% total band.
+    * The offending rows go to stderr. */
   private[graft] def mayRefreshQuiet(keptContended: Boolean, nSections: Int,
                                      total: Double = 0.0,
-                                     quietRef: Option[Double] = None): Boolean =
+                                     quietRef: Option[Double] = None,
+                                     medians: Map[String, Double] = Map.empty,
+                                     quietRows: Map[String, Double] = Map.empty): Boolean = {
+    val outliers = medians.toSeq.sorted.flatMap { case (q, med) =>
+      quietRows.get(q).filter(ref => ref > 0 && med > ref * 2.5).map((q, med, _))
+    }
+    outliers.foreach { case (q, med, ref) =>
+      System.err.println(s"[bench] quiet refresh refused: $q median ${f(med)} s " +
+        s"is more than 2.5x its quiet row ${f(ref)} s")
+    }
     !keptContended && nSections == 1 &&
-      quietRef.forall(ref => total <= ref * 1.15)
+      quietRef.forall(ref => total <= ref * 1.15) && outliers.isEmpty
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -261,18 +276,20 @@ object Bench {
     // the committed BENCH_DETAIL.json, if it says contended:false (this
     // run overwrites both files at the end, so read FIRST). A contended
     // snapshot is never a reference — it is the noise this field exposes.
-    val quietRef: Option[Double] =
+    val quietTxt: Option[String] =
       Seq("BENCH_QUIET.json", "BENCH_DETAIL.json").view.flatMap { name =>
         val p = java.nio.file.Paths.get(name)
         if (!java.nio.file.Files.exists(p)) None
-        else {
-          val txt = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          if (txt.contains(""""contended":false"""))
-            """"value":([0-9.]+)""".r.findFirstMatchIn(txt).map(_.group(1).toDouble)
-          else None
-        }
+        else Some(new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8))
+          .filter(_.contains(""""contended":false"""))
       }.headOption
+    val quietRef: Option[Double] = quietTxt.flatMap(
+      """"value":([0-9.]+)""".r.findFirstMatchIn(_).map(_.group(1).toDouble))
+    // the reference's per-query medians, for mayRefreshQuiet's row gate
+    val quietRows: Map[String, Double] = quietTxt.toSeq.flatMap(
+      """"([^"]+)":\{"min":-?[0-9.]+,"med":(-?[0-9.]+)""".r.findAllMatchIn(_)
+        .map(m => m.group(1) -> m.group(2).toDouble)).toMap
 
     // machine-context disclosure: the recorded number has twice been 1.3–2.3×
     // a judge's idle re-run of the identical binary (co-tenant load).
@@ -351,7 +368,8 @@ object Bench {
     // (measured this round: a 2.4-loadavg run re-ran to a "quiet" 61.7 s
     // against a genuine 51.0 s quiet reference). One section = the run
     // started quiet and stayed under every tripwire.
-    if (mayRefreshQuiet(kept.contended, sections.size, kept.total, quietRef))
+    if (mayRefreshQuiet(kept.contended, sections.size, kept.total, quietRef,
+        kept.stats.map(s => s.name -> s.med).toMap, quietRows))
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_QUIET.json"), detailJson)
     println(s"""{"metric":"total","value":${f(kept.total)},"unit":"sec"""" +
       s""","sf":"$sfDir","floor":${f(floor)},$machine,"detail":"${detailFile.toAbsolutePath}"}""")

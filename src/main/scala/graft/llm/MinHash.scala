@@ -1,97 +1,199 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Staging
 import Shingles.{shingleSparkExpr, toksExpr}
 
-/** MinHash-LSH near-duplicate detection over (doc_id, text) frames:
-  * per-doc signatures, the persisted band index, band-join candidate
-  * pairs, and the exact-Jaccard verification every near-dup path
-  * (batch queries, the corpus pipeline, the streaming near-dup and
-  * cluster-maintenance folds) shares. */
+/** MinHash-LSH near-duplicate detection over (doc_id, text) frames, the
+  * one LSH core every near-dup path (batch queries, the corpus pipeline,
+  * the streaming folds) shares: the [[Banding]], the md5/slice/bucket
+  * definitions, ONE batch band-index builder ([[bandIndexOf]]), ONE
+  * exactly-once rule for band joins ([[lowestBandOnly]]), and the
+  * exact-Jaccard verification. */
 object MinHash {
 
   // ---- MinHash signatures + LSH bands ----------------------------------
-  // 3-word shingles -> ONE md5 per shingle, sliced into four disjoint
-  // 8-hex-char (32-bit) sub-hashes -> 4 min-hashes (hex slices are
-  // uniform and independent, so lexicographic min of each slice is a
-  // valid MinHash; one digest instead of four cuts the dominant hashing
-  // cost 4×) -> 2 bands of 2 rows each. Documents colliding on a band
-  // hash are near-dup candidates — candidate generation is an equi-join
-  // on the band value.
+  // 3-word shingles -> one salted md5 per shingle per four slices, each
+  // digest cut into four disjoint 8-hex-char (32-bit) sub-hashes (hex
+  // slices are uniform and independent, so the lexicographic min of each
+  // slice is a valid MinHash; one digest instead of four cuts the
+  // dominant hashing cost 4×) -> `numBands` bands of `rowsPerBand`
+  // slices. Documents colliding on a band bucket are near-dup candidates
+  // — candidate generation is an equi-join on (band, bucket).
+
+  /** The MinHash-LSH banding of the near-dup tier — one parameterised
+    * construction shared by the batch queries, the corpus pipeline and
+    * the streaming folds: `numBands` bands of `rowsPerBand` min-hash
+    * slices each; a band's bucket is the md5 of its slices, so two docs
+    * are candidates iff ALL `rowsPerBand` slices of some band coincide —
+    * P(candidate) = 1−(1−s^r)^b for Jaccard s. The default (2 bands × 2
+    * slices) is the q45/q46/q73/q82 oracle shape; as the corpus grows
+    * and bucket OCCUPANCY saturates (many moderately-similar or short
+    * docs sharing a 2-slice bucket — BENCH_SF1's q82 second-decade
+    * reading), WIDEN by raising `rowsPerBand` (each bucket needs more
+    * coinciding slices → exponentially fewer chance collisions) and
+    * `numBands` (restores recall: P(candidate|s=0.5) is 0.44 default,
+    * 0.41 wide). The trade is signature compute: slices come in fours
+    * from md5 (32 hex chars = 4×8), so [[Banding.numHashes]] salted md5
+    * passes run per shingle — linear in the corpus, while the candidate
+    * join it bounds is the term that grows superlinearly at saturation.
+    * Residual hotspot no banding fixes: zero-shingle docs all bucket at
+    * md5('') in every band — filter empties before folding at scale. */
+  final case class Banding(numBands: Int, rowsPerBand: Int) {
+    require(numBands >= 1 && rowsPerBand >= 1,
+      s"banding needs at least one band of one slice ($numBands × $rowsPerBand)")
+    /** min-hash slices in the signature. */
+    val numSlices: Int = numBands * rowsPerBand
+    /** salted md5 evaluations per shingle — each yields four slices. */
+    val numHashes: Int = (numSlices + 3) / 4
+    /** The state tag value — both parameters, so a fold under ANY
+      * changed setting is refused against existing band state. */
+    def tag: String = s"$numBands:$rowsPerBand"
+  }
+
+  object Banding {
+    /** The oracle constants: 2 bands × 2 slices off one md5 — q45/q46/
+      * q73/q76/q82 are pinned to it, and it is the default so those rows
+      * answer their DuckDB oracles verbatim. */
+    val default: Banding = Banding(2, 2)
+    /** The documented scale setting: 3 bands × 3 slices — the
+      * THRESHOLD-PRESERVING widening. An LSH banding's S-curve midpoint
+      * is s* = (1/b)^(1/r) in SHINGLE-Jaccard (the space the bands
+      * hash; the token-Jaccard verification is a separate downstream
+      * filter): the default's 0.707 becomes 0.693 here, so the pair
+      * semantics hold to within the curve's probabilistic edge, while
+      * chance-candidate mass — the bucket occupancy that saturates at
+      * corpus scale — drops from 2s² to 3s³: 2.2×/3.3×/6.7× fewer junk
+      * candidates at shingle-J 0.3/0.2/0.1. Cost: 3 salted md5 passes
+      * per shingle (vs 1) and 1.5× band rows, both linear. Measured on
+      * the sf0.01 fixture (`graft.tools.BandingProbe`): 25 of the
+      * default's 28 verified pairs — the 3 losses sit below BOTH
+      * settings' s* and were caught by the 2-slice bands' chance mass;
+      * every r=3 width from 3 to 8 bands verifies the same 25, so more
+      * bands buy junk, not recall, and 3 is the cheapest. */
+    val wide: Banding = Banding(3, 3)
+  }
+
+  /** Salt `i`'s md5 of one shingle expression: salt 0 is the bare md5
+    * (the q45 oracle shape), salts 1+ prefix the index + a unit
+    * separator. */
+  private def saltedMd5(sh: String, i: Int): String =
+    if (i == 0) s"md5($sh)" else s"md5(concat('$i', chr(31), $sh))"
+
+  /** All of one shingle's salted md5s as one array — the per-shingle
+    * form of the streaming fold (`NearDup.bandArrayExpr`), which cannot
+    * explode a shingle into per-salt columns. */
+  private[graft] def mdArray(sh: String, b: Banding): String =
+    (0 until b.numHashes).map(saltedMd5(sh, _)).mkString("array(", ", ", ")")
+
+  /** Slice `k` of a shingle's signature: 8 hex chars of the salt-`k/4`
+    * digest, which `digest(i)` names. */
+  private[graft] def sliceOf(k: Int, digest: Int => String): String =
+    s"substring(${digest(k / 4)}, ${(k % 4) * 8 + 1}, 8)"
+
+  /** Band `j`'s bucket: md5 of its `rowsPerBand` min-slices joined by
+    * '|' (`concat_ws` skips a null slice), with `slice(k)` naming min-
+    * slice `k`. */
+  private[graft] def bucketOf(b: Banding, j: Int, slice: Int => String): String =
+    (j * b.rowsPerBand until (j + 1) * b.rowsPerBand).map(slice)
+      .mkString("md5(concat_ws('|', ", ", ", "))")
 
   // Explode + hash-aggregate rather than per-row array lambdas: the
-  // exploded form computes exactly one md5 per shingle (array-lambda
-  // variants re-inline the digest via CollapseProject, quadrupling the
-  // hashing), does the mins map-side (partial_min before the shuffle,
-  // 4 short strings per doc on the wire), and is the shape that scales —
-  // shingle explosion is linear and the shuffle is per-doc, not per-pair.
+  // exploded form computes exactly one md5 per shingle per salt, each
+  // its own column (array-lambda variants re-inline the digest via
+  // CollapseProject, multiplying the hashing), does the mins map-side
+  // (partial_min before the shuffle, short strings per doc on the
+  // wire), and is the shape that scales — shingle explosion is linear
+  // and the shuffle is per-doc, not per-pair.
   // `spread` fans the input out before the shingle explode (the
   // single-row-group-file fix) — right for the band-index consumers
   // whose downstream self-joins amortize it, skipped for the
   // signature-only projection (q45), where the pre-expansion text
   // shuffle costs more than the explode it unblocks buys back.
-  private[graft] def minhashSigOf(docs: DataFrame, spread: Boolean = true): DataFrame =
-    (if (spread) Staging.spread(docs) else docs)
+  /** (doc_id, s0 .. s{numSlices-1}): each doc's min per signature slice. */
+  private def slicesOf(docs: DataFrame, b: Banding, spread: Boolean): DataFrame = {
+    val hashed = (if (spread) Staging.spread(docs) else docs)
       .withColumn("toks", expr(toksExpr))
       .withColumn("shingles", expr(shingleSparkExpr))
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .withColumn("h", md5(col("sh")))
-      .groupBy("doc_id")
-      .agg(
-        min(expr("substring(h, 1, 8)")).as("mh0"),
-        min(expr("substring(h, 9, 8)")).as("mh1"),
-        min(expr("substring(h, 17, 8)")).as("mh2"),
-        min(expr("substring(h, 25, 8)")).as("mh3"))
-      .withColumn("band0", md5(concat_ws("|", col("mh0"), col("mh1"))))
-      .withColumn("band1", md5(concat_ws("|", col("mh2"), col("mh3"))))
+      .select(col("doc_id") +: (0 until b.numHashes)
+        .map(i => expr(saltedMd5("sh", i)).as(s"h$i")): _*)
+    val mins = (0 until b.numSlices)
+      .map(k => min(expr(sliceOf(k, i => s"h$i"))).as(s"s$k"))
+    hashed.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+  }
 
-  /** The UNSTAGED band-index plan: (doc_id, band, bucket) rows, one per
-    * LSH band, plus the doc's band-0 bucket on every row (`b0`) so pair
-    * joins can decide exactly-once emission without a dedup pass. Public
-    * seam for PERSISTING the index (q76's architecture, and the static
-    * side of the streaming near-dup join — streaming/NearDup.scala): an
+  /** q45's signature projection at the default banding: the four
+    * min-slices (`mh0`..`mh3`) and the two band buckets. */
+  private[graft] def minhashSigOf(docs: DataFrame): DataFrame = {
+    val b = Banding.default
+    slicesOf(docs, b, spread = false).select(col("doc_id") +:
+      ((0 until b.numSlices).map(k => col(s"s$k").as(s"mh$k")) ++
+        (0 until b.numBands).map(j =>
+          expr(bucketOf(b, j, k => s"s$k")).as(s"band$j"))): _*)
+  }
+
+  /** The UNSTAGED band-index plan: (doc_id, band, bucket, b0, bpre) rows,
+    * one per LSH band of `banding`. `b0` is the doc's band-0 bucket (the
+    * column default-banded persisted state keeps); `bpre` holds the
+    * buckets of all LOWER bands, which [[lowestBandOnly]] compares so a
+    * pair join emits each pair once without a dedup pass. Public seam
+    * for PERSISTING the index (q76's architecture, and the static side
+    * of the streaming near-dup join — streaming/NearDup.scala): an
     * ingest pipeline writes this once per dedup run and every later
     * delta joins against the stored table instead of re-shingling the
     * corpus. In-engine consumers that self-join the index within one
     * query go through [[minhashBandsOf]], which stages this plan so the
-    * shingle+minhash aggregation runs once per query, not per branch. */
-  def bandIndexOf(docs: DataFrame): DataFrame =
-    minhashSigOf(docs).select(col("doc_id"), col("band0").as("b0"),
-      explode(array(
-        struct(lit(0).as("band"), col("band0").as("bucket")),
-        struct(lit(1).as("band"), col("band1").as("bucket")))).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bucket").as("bucket"),
-        col("b0"))
+    * shingle+minhash aggregation runs once per query, not per branch.
+    * The buckets are built once per doc as one array and exploded with
+    * their position, so `b0` and `bpre` are narrow reads of it. */
+  def bandIndexOf(docs: DataFrame, banding: Banding = Banding.default): DataFrame =
+    slicesOf(docs, banding, spread = true)
+      .select(col("doc_id"), array((0 until banding.numBands).map(j =>
+        expr(bucketOf(banding, j, k => s"s$k"))): _*).as("bk"))
+      .select(col("doc_id"), col("bk"),
+        posexplode(col("bk")).as(Seq("band", "bucket")))
+      .select(col("doc_id"), col("band"), col("bucket"),
+        col("bk").getItem(0).as("b0"), expr("slice(bk, 1, band)").as("bpre"))
 
-  /** [[bandIndexOf]] materialized via Staging.stage: in the default local
-    * mode its blocks are reclaimed by the ContextCleaner when the frame
-    * goes out of scope; `spark.graft.staging=reliable` switches to a
-    * recomputable parquet staging write (executor loss survivable) —
-    * the classic signature-staging step of MinHash-LSH dedup. */
-  private[graft] def minhashBandsOf(docs: DataFrame): DataFrame =
-    Staging.stage(bandIndexOf(docs))
+  /** [[bandIndexOf]] materialized via Staging.stage, less `b0` (band
+    * joins read `bpre`): in the default local mode its blocks are
+    * reclaimed by the ContextCleaner when the frame goes out of scope;
+    * `spark.graft.staging=reliable` switches to a recomputable parquet
+    * staging write (executor loss survivable) — the classic
+    * signature-staging step of MinHash-LSH dedup. */
+  private[graft] def minhashBandsOf(docs: DataFrame,
+                                    banding: Banding = Banding.default): DataFrame =
+    Staging.stage(bandIndexOf(docs, banding).drop("b0"))
 
-  /** Candidate near-dup pairs from the band equi-join — never all-pairs,
-    * and exactly-once: a pair colliding on BOTH bands is emitted only from
-    * band 0 (`band = 0 OR b0_a <> b0_b`), so no `.distinct()` —
-    * previously the dedup shuffle over the candidate rows dominated the
-    * pair queries on dense near-dup corpora (round-3 verdict, clean-run
-    * top-5).
-    */
-  private[graft] def minhashCandidatesOf(docs: DataFrame): DataFrame = {
-    val bands = minhashBandsOf(docs)
-    val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("bucket"),
-      col("b0").as("b0_a"))
-    val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("bucket"),
-      col("b0").as("b0_b"))
-    a.join(b, Seq("band", "bucket"))
+  /** TRUE iff no band BELOW this row's band also collides — the one
+    * exactly-once pair-emission rule of every band join (each side's
+    * `bpre` holds its lower-band buckets; the rows under comparison
+    * share a band, so the arrays zip index-aligned). With two bands,
+    * band 0 always passes (empty prefix) and band 1 passes iff the
+    * band-0 buckets differ. */
+  private[graft] def lowestBandOnly(preA: Column, preB: Column): Column =
+    !exists(zip_with(preA, preB, (x, y) => x === y), c => c)
+
+  /** Candidate (doc_a, doc_b) pairs of a band frame's self-join — never
+    * all-pairs, and exactly-once via [[lowestBandOnly]], so no
+    * `.distinct()`: a dedup shuffle over the candidate rows dominated
+    * the pair queries on dense near-dup corpora (round-3 verdict). */
+  private[graft] def bandPairsOf(bands: DataFrame): DataFrame = {
+    def side(id: String, pre: String) = bands.select(col("doc_id").as(id),
+      col("band"), col("bucket"), col("bpre").as(pre))
+    side("doc_a", "bpre_a").join(side("doc_b", "bpre_b"), Seq("band", "bucket"))
       .filter(col("doc_a") < col("doc_b"))
-      .filter(col("band") === 0 || col("b0_a") =!= col("b0_b"))
+      .filter(lowestBandOnly(col("bpre_a"), col("bpre_b")))
       .select("doc_a", "doc_b")
   }
+
+  /** Candidate near-dup pairs of `docs` under `banding` (q46). */
+  private[graft] def minhashCandidatesOf(docs: DataFrame,
+                                         banding: Banding = Banding.default): DataFrame =
+    bandPairsOf(minhashBandsOf(docs, banding))
 
   // ---- exact n-gram Jaccard, MinHash-band candidate generation ---------
   // Round-2 joined on (lang, n_chars/64) buckets, whose population is
@@ -117,19 +219,26 @@ object MinHash {
       .withColumn("jaccard", round(col("inter") / col("uni"), 6))
       .filter(col("jaccard") >= threshold)
 
+  /** Candidate (doc_a, doc_b) pairs verified against a (doc_id, toks)
+    * table of DISTINCT token arrays: (doc_a, doc_b, jaccard) for the
+    * pairs at/above `threshold`. */
+  private[graft] def verifiedPairsOf(cand: DataFrame, toks: DataFrame,
+                                     threshold: Double): DataFrame =
+    jaccardScore(cand
+      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), Seq("doc_a"))
+      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), Seq("doc_b")),
+      "toks_a", "toks_b", threshold)
+      .select("doc_a", "doc_b", "jaccard")
+
   /** Verified near-dup edges: MinHash-band candidates with exact Jaccard
     * ≥ 0.5 — the edge list q49 reports and q73/q74 cluster. */
   private[graft] def jaccardEdgesOf(docs: DataFrame): DataFrame = {
-    // token table staged ONCE: both join sides below scan the staged
+    // token table staged ONCE: both join sides scan the staged
     // (doc_id, toks) frame instead of re-running the tokenizer per side
     // (the plan otherwise tokenized three times — once in minhashSig,
     // once per join side; round-4 verdict "What's wrong" #3)
     val toks = Staging.stage(docs
       .select(col("doc_id"), expr(s"array_distinct($toksExpr)").as("toks")))
-    val cand = minhashCandidatesOf(docs)
-      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), Seq("doc_a"))
-      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), Seq("doc_b"))
-    jaccardScore(cand, "toks_a", "toks_b", 0.5)
-      .select("doc_a", "doc_b", "jaccard")
+    verifiedPairsOf(minhashCandidatesOf(docs), toks, 0.5)
   }
 }

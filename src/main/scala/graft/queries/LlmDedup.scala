@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Staging
 import graft.llm.BloomDecontam.{bloomDecontaminationKept, bloomDecontaminationKeptLarge}
-import graft.llm.MinHash.{jaccardEdgesOf, jaccardScore, minhashBandsOf,
-  minhashCandidatesOf, minhashSigOf}
+import graft.llm.MinHash.{jaccardEdgesOf, jaccardScore, lowestBandOnly,
+  minhashBandsOf, minhashCandidatesOf, minhashSigOf}
 import graft.llm.Shingles.{shingleHashes, toksExpr}
 import graft.llm.Simhash.{hexDigits, simhashBandPairs, simhashOf}
 import graft.llm.Splits.splitAssign
@@ -38,7 +38,7 @@ object LlmDedup {
             ORDER BY doc_id"""))
 
   private def minhashSig(s: SparkSession, dir: String): DataFrame =
-    minhashSigOf(t(s, dir, "documents"), spread = false)
+    minhashSigOf(t(s, dir, "documents"))
 
   private val minhashSignatures = Q(
     "q45_minhash_sig",
@@ -331,10 +331,10 @@ object LlmDedup {
       val idx = minhashBandsOf(docs.filter(col("doc_id") < deltaSplit))
       val delta = minhashBandsOf(docs.filter(col("doc_id") >= deltaSplit))
       val cand = delta.select(col("doc_id").as("delta_id"), col("band"),
-          col("bucket"), col("b0").as("b0_d"))
+          col("bucket"), col("bpre").as("bpre_d"))
         .join(idx.select(col("doc_id").as("corpus_id"), col("band"),
-          col("bucket"), col("b0").as("b0_c")), Seq("band", "bucket"))
-        .filter(col("band") === 0 || col("b0_d") =!= col("b0_c"))
+          col("bucket"), col("bpre").as("bpre_c")), Seq("band", "bucket"))
+        .filter(lowestBandOnly(col("bpre_d"), col("bpre_c")))
         .select("delta_id", "corpus_id")
       val toks = Staging.stage(docs
         .select(col("doc_id"), expr(s"array_distinct($toksExpr)").as("toks")))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.Staging
 import graft.llm.{MinHash, Splits}
+import graft.llm.MinHash.Banding
 import graft.operators.Components
 import graft.sinks.Sinks
 
@@ -124,14 +125,14 @@ object ClusterMaintenance {
     * band store stamps a `_banding` tag BEFORE its first append lands
     * and later folds REFUSE a mismatch. An UNTAGGED store that already
     * exists was necessarily written by a pre-tag engine version whose
-    * constants were inlined — i.e. under [[NearDup.Banding.default]] —
-    * so only a default fold may adopt (and stamp) it; re-banding an
-    * existing clustering is a batch rebuild ([[rebandTo]] in place, or
-    * a new statePath), not a fold. The default answers the q46/q73/q82
+    * constants were inlined — i.e. under `Banding.default` — so only
+    * a default fold may adopt (and stamp) it; re-banding an existing
+    * clustering is a batch rebuild ([[rebandTo]] in place, or a new
+    * statePath), not a fold. The default answers the q46/q73/q82
     * oracles verbatim. */
   def foldBatch(batch: DataFrame, statePath: String,
                 threshold: Double = 0.5,
-                banding: NearDup.Banding = NearDup.Banding.default): Unit = {
+                banding: Banding = Banding.default): Unit = {
     // a ProcessingTime trigger delivers an EMPTY micro-batch every idle
     // interval; folding one would append a zero-row file set to bands/
     // and toks/ each time — a small-file leak no compaction cadence can
@@ -140,39 +141,11 @@ object ClusterMaintenance {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
 
-    // an interrupted [[rebandTo]] leaves the band store and labeling in
-    // a mixed-generation shape its marker records; folding into it
-    // would mix bandings however the tag reads — refuse until it
-    // completes (the marker lives on toks/, the one store the rebuild
-    // never swaps)
-    StateStore.readTag(spark, toksPath(statePath), "_rebanding").foreach { t =>
-      require(requirement = false,
-        s"state at $statePath has an interrupted re-band to $t; " +
-          "re-run rebandTo to complete it before folding")
-    }
-
-    // banding-consistency guard (see the scaladoc): refuse a mismatch
-    // BEFORE any append can mix settings in one store; an untagged
-    // existing store is pre-tag state = default-banded, adoptable only
-    // by a default fold (stamping the CALLER's setting on it would be
-    // the silent mixed-banding corruption the tag refuses)
+    // the re-band marker lives on toks/, the one store rebandTo never
+    // swaps
     val bp = bandsPath(statePath)
-    StateStore.readTag(spark, bp, "_banding") match {
-      case Some(t) =>
-        require(t == banding.tag,
-          s"band state at $bp was built under banding $t; refusing to " +
-            s"fold under ${banding.tag} — re-banding an existing " +
-            "clustering is a batch rebuild (rebandTo / new statePath), " +
-            "not a fold")
-      case None if StateStore.exists(spark, bp) =>
-        require(banding == NearDup.Banding.default,
-          s"band state at $bp predates the _banding tag, so it was built " +
-            s"under the default ${NearDup.Banding.default.tag}; refusing " +
-            s"to fold under ${banding.tag} — re-banding an existing " +
-            "clustering is a batch rebuild (rebandTo / new statePath), " +
-            "not a fold")
-      case None => () // fresh state: stamped below, before any append
-    }
+    StateStore.checkBanding(spark, statePath, toksPath(statePath), bp,
+      banding.tag, Banding.default.tag)
 
     // the delta's own artifacts, staged once as ONE combined frame —
     // the tokenizer and the band expression run a single time over the
@@ -202,16 +175,7 @@ object ClusterMaintenance {
       stateBuckets)
     StateStore.ensureBucketed(spark, toksPath(statePath), "tb",
       tokBucket(col("doc_id")), stateBuckets)
-    // stamp the banding BEFORE any append can land (creation, pre-tag
-    // adoption, or a modulus-migration rewrite that replaced the
-    // directory carrying the tag): the guard above proved this fold's
-    // setting is the store's, so a crash between stamp and appends
-    // replays against a correctly-tagged store — stamping AFTER the
-    // appends would leave a window where a replay under a different
-    // banding reads as adoptable pre-tag state. The tag file is hidden
-    // (underscore), so a tag-only dir still reads as "no state".
-    if (StateStore.readTag(spark, bp, "_banding").isEmpty)
-      StateStore.writeTag(spark, bp, "_banding", banding.tag)
+    StateStore.stampBanding(spark, bp, banding.tag)
 
     // which side of the verification joins broadcasts: the batch's
     // token table is micro-batch-bounded in the steady state (ride the
@@ -226,28 +190,15 @@ object ClusterMaintenance {
     def toksSide(df: DataFrame) = if (toksBroadcastable) broadcast(df) else df
 
     // delta-vs-delta candidates: the batch's internal band self-join,
-    // same exactly-once lowest-colliding-band emission as batch q46
-    // (NearDup.lowestBandOnly — at the default banding it is literally
-    // q46's band-0-or-b0-differs rule). The join's strategy is left to
-    // the planner: micro-batch sides broadcast off source stats, and a
-    // bulk ingest pays one materialized exchange that AQE then turns
-    // into the other side's broadcast — the q73-class plan transition,
-    // measured at ScaleSanity k=100 as the whole decade-2 step (the
-    // candidates themselves stay linear: 49k rows at 500k docs).
-    val a = deltaBands.select(col("doc_id").as("doc_a"), col("band"),
-      col("bucket"), col("bpre").as("bpre_a"))
-    val b = deltaBands.select(col("doc_id").as("doc_b"), col("band"),
-      col("bucket"), col("bpre").as("bpre_b"))
-    val ddCand = a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(NearDup.lowestBandOnly(col("bpre_a"), col("bpre_b")))
-      .select("doc_a", "doc_b")
-    val ddScored = ddCand
-      .join(toksSide(deltaToks.select(col("doc_id").as("doc_a"),
-        col("toks").as("toks_a"))), Seq("doc_a"))
-      .join(toksSide(deltaToks.select(col("doc_id").as("doc_b"),
-        col("toks").as("toks_b"))), Seq("doc_b"))
-    val dd = MinHash.jaccardScore(ddScored, "toks_a", "toks_b", threshold)
+    // the same exactly-once pair join as batch q46 (MinHash.bandPairsOf).
+    // The join's strategy is left to the planner: micro-batch sides
+    // broadcast off source stats, and a bulk ingest pays one
+    // materialized exchange that AQE then turns into the other side's
+    // broadcast — the q73-class plan transition, measured at
+    // ScaleSanity k=100 as the whole decade-2 step (the candidates
+    // themselves stay linear: 49k rows at 500k docs).
+    val dd = MinHash.verifiedPairsOf(MinHash.bandPairsOf(deltaBands),
+        toksSide(deltaToks), threshold)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
 
     // delta-vs-corpus candidates: band equi-join against the persisted
@@ -273,7 +224,7 @@ object ClusterMaintenance {
           .join(broadcast(deltaBands.select(col("doc_id").as("delta_id"),
             col("band"), col("bucket"), col("bpre").as("bpre_d"))),
             Seq("band", "bucket"))
-          .filter(NearDup.lowestBandOnly(col("bpre_d"), col("bpre_c")))
+          .filter(MinHash.lowestBandOnly(col("bpre_d"), col("bpre_c")))
           // a replayed batch is already in the index; never self-pair
           .filter(col("delta_id") =!= col("corpus_id"))
           .select("delta_id", "corpus_id"))
@@ -314,7 +265,7 @@ object ClusterMaintenance {
         // stores without a mixed-schema directory; a non-default store
         // is tag-fresh by the guard and persists the prefix column
         StateStore.appendBucketed(
-          if (banding == NearDup.Banding.default) deltaBands.drop("bpre")
+          if (banding == Banding.default) deltaBands.drop("bpre")
           else deltaBands,
           bandsPath(statePath), "pb", stateBuckets, deltaRows = nBands),
         StateStore.appendBucketed(deltaToks, toksPath(statePath), "tb",
@@ -639,7 +590,7 @@ object ClusterMaintenance {
            threshold: Double = 0.5,
            trigger: Trigger = Trigger.AvailableNow(),
            compactEvery: Int = 8,
-           banding: NearDup.Banding = NearDup.Banding.default): StreamingQuery =
+           banding: Banding = Banding.default): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -697,16 +648,14 @@ object ClusterMaintenance {
     * band rows and pairs, so corpus completeness is the caller's
     * contract. Cost ∝ corpus — maintenance cadence, never per batch.
     *
-    * Crash consistency: the `_rebanding` marker lands FIRST, on toks/,
-    * and folds refuse while it exists — without it, the instant between
-    * the band swap (which necessarily drops the `_banding` tag with the
-    * directory it replaces) and the restamp would read as adoptable
-    * pre-tag state. Any crash leaves the marker, so the remedy is
+    * Crash consistency: the rebuild runs inside `StateStore.reband`,
+    * whose `_rebanding` marker lands FIRST, on toks/, and refuses folds
+    * until the restamp. Any crash leaves the marker, so the remedy is
     * always "re-run rebandTo" (idempotent: each swap publishes
     * complete-old or complete-new, and the labeling rebuild is a pure
     * function of (corpus, newBanding, threshold)). */
   def rebandTo(corpus: DataFrame, statePath: String,
-               newBanding: NearDup.Banding,
+               newBanding: Banding,
                threshold: Double = 0.5): Unit = {
     val spark = corpus.sparkSession
     val tp = toksPath(statePath)
@@ -714,69 +663,56 @@ object ClusterMaintenance {
     val lp = labelsPath(statePath)
     require(StateStore.exists(spark, tp),
       s"no folded state at $statePath to re-band")
-    StateStore.writeTag(spark, tp, "_rebanding", newBanding.tag)
-    // the folded ledger is the token store's id set; re-sign those docs
-    // from the caller's corpus text under the new setting
-    val foldedIds = StateStore.readPacked(spark, tp).select("doc_id").distinct()
-    val docs = corpus.select("doc_id", "text").join(foldedIds, Seq("doc_id"))
-    val delta = Staging.stage(NearDup.bandsAndToks(docs, newBanding))
-    val bandRows = NearDup.explodeBands(delta).drop("toks")
-      .withColumn("pb", bandBucket)
-    val toks = delta.select(col("doc_id"), col("toks"))
-    // the full candidate self-join under the new setting — foldBatch's
-    // delta-vs-delta path at corpus scale (one materialized exchange;
-    // AQE converts the other side to a broadcast when it fits, the
-    // q73-class transition otherwise) — then the shared verification
-    val a = bandRows.select(col("doc_id").as("doc_a"), col("band"),
-      col("bucket"), col("bpre").as("bpre_a"))
-    val b = bandRows.select(col("doc_id").as("doc_b"), col("band"),
-      col("bucket"), col("bpre").as("bpre_b"))
-    val cand = a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .filter(NearDup.lowestBandOnly(col("bpre_a"), col("bpre_b")))
-      .select("doc_a", "doc_b")
-    val scored = cand
-      .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
-        Seq("doc_a"))
-      .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
-        Seq("doc_b"))
-    val edges = MinHash.jaccardScore(scored, "toks_a", "toks_b", threshold)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // labeling: a from-scratch connectivity under the new banding,
-    // published per the store's swap protocol; the comp projection is
-    // dropped (its generation could not match the fresh labeling — the
-    // next fold that needs a member lookup rebuilds it on demand)
-    val labeling = Staging.stage(
-      Components.connected(edges).select("id", "comp"))
-    val fs = new Path(lp).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (spark.conf.get("spark.graft.swap", "rename") == "marker")
-      Sinks.snapshotPublish(labeling, lp)
-    else if (labeling.isEmpty) {
-      // an empty labeling is "no state" — a zero-row partitioned write
-      // leaves a dir with no part files, which readers can't infer a
-      // schema from; absence answers empty through labels()
-      fs.delete(new Path(lp), true)
-    } else {
+    StateStore.reband(spark, tp, bp, newBanding.tag) {
+      // the folded ledger is the token store's id set; re-sign those
+      // docs from the caller's corpus text under the new setting
+      val foldedIds = StateStore.readPacked(spark, tp).select("doc_id").distinct()
+      val docs = corpus.select("doc_id", "text").join(foldedIds, Seq("doc_id"))
+      val delta = Staging.stage(NearDup.bandsAndToks(docs, newBanding))
+      val bandRows = NearDup.explodeBands(delta).drop("toks")
+        .withColumn("pb", bandBucket)
+      val toks = delta.select(col("doc_id"), col("toks"))
+      // the full candidate self-join under the new setting — foldBatch's
+      // delta-vs-delta path at corpus scale (one materialized exchange;
+      // AQE converts the other side to a broadcast when it fits, the
+      // q73-class transition otherwise) — then the shared verification
+      val edges = MinHash.verifiedPairsOf(MinHash.bandPairsOf(bandRows), toks,
+          threshold)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      // labeling: a from-scratch connectivity under the new banding,
+      // published per the store's swap protocol; the comp projection is
+      // dropped (its generation could not match the fresh labeling — the
+      // next fold that needs a member lookup rebuilds it on demand)
+      val labeling = Staging.stage(
+        Components.connected(edges).select("id", "comp"))
+      val fs = new Path(lp).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (spark.conf.get("spark.graft.swap", "rename") == "marker")
+        Sinks.snapshotPublish(labeling, lp)
+      else if (labeling.isEmpty) {
+        // an empty labeling is "no state" — a zero-row partitioned write
+        // leaves a dir with no part files, which readers can't infer a
+        // schema from; absence answers empty through labels()
+        fs.delete(new Path(lp), true)
+      } else {
+        Sinks.snapshotSwap(
+          labeling.withColumn("ib", labelsBucketOf(col("id")))
+            .repartition(col("ib")).sortWithinPartitions("id"),
+          lp, Seq("ib"))
+        StateStore.writeTag(spark, lp, GenTag, newGen())
+        StateStore.writeModulus(spark, lp, stateBuckets)
+      }
+      fs.delete(new Path(lp + "_comp"), true)
+      // band store last (reband restamps it) — mirrors foldBatch's
+      // legacy-schema rule: a default store persists without bpre so
+      // pre-tag-era appends still land schema-consistent
       Sinks.snapshotSwap(
-        labeling.withColumn("ib", labelsBucketOf(col("id")))
-          .repartition(col("ib")).sortWithinPartitions("id"),
-        lp, Seq("ib"))
-      StateStore.writeTag(spark, lp, GenTag, newGen())
-      StateStore.writeModulus(spark, lp, stateBuckets)
+        (if (newBanding == Banding.default) bandRows.drop("bpre")
+         else bandRows).repartition(col("pb")),
+        bp, Seq("pb"))
+      StateStore.writeModulus(spark, bp, stateBuckets)
+      Staging.release(delta)
+      Staging.release(labeling)
     }
-    fs.delete(new Path(lp + "_comp"), true)
-    // band store last, then restamp and clear — mirrors foldBatch's
-    // legacy-schema rule: a default store persists without bpre so
-    // pre-tag-era appends still land schema-consistent
-    Sinks.snapshotSwap(
-      (if (newBanding == NearDup.Banding.default) bandRows.drop("bpre")
-       else bandRows).repartition(col("pb")),
-      bp, Seq("pb"))
-    StateStore.writeModulus(spark, bp, stateBuckets)
-    StateStore.writeTag(spark, bp, "_banding", newBanding.tag)
-    StateStore.deleteTag(spark, tp, "_rebanding")
-    Staging.release(delta)
-    Staging.release(labeling)
   }
 
   /** Production leakage-safe split assignment (the q91 transformation

@@ -135,37 +135,10 @@ object PageRankStream {
     val bp = bandsPath(statePath)
     val ep = edgesPath(statePath)
 
-    // an interrupted [[rebandTo]] leaves the band/edge stores in a
-    // mixed-generation shape its marker records; folding into it would
-    // mix bandings however the tag reads — refuse until it completes
-    StateStore.readTag(spark, np, "_rebanding").foreach { t =>
-      require(requirement = false,
-        s"state at $statePath has an interrupted re-band to $t; " +
-          "re-run rebandTo to complete it before folding")
-    }
-
-    // banding-consistency guard (see the foldBatch scaladoc): one small
-    // tag read per fold; a mismatch is refused BEFORE any append can
-    // mix settings in one store. An absent tag on an EXISTING store
-    // means pre-tag state, which was necessarily built under the then-
-    // inlined constants — Banding.default — so only a default fold may
-    // proceed (and adopt-stamp it, below): stamping the CALLER's
-    // setting here would silently mix bandings, the exact corruption
-    // the tag refuses.
-    StateStore.readTag(spark, bp, "_banding") match {
-      case Some(t) =>
-        require(t == banding.tag,
-          s"band state at $bp was built under banding $t; refusing to fold " +
-            s"under ${banding.tag} — re-banding an existing graph is a batch " +
-            "rebuild (rebandTo / new statePath), not a fold")
-      case None if StateStore.exists(spark, bp) =>
-        require(banding == Banding.default,
-          s"band state at $bp predates the _banding tag, so it was built " +
-            s"under the default ${Banding.default.tag}; refusing to fold " +
-            s"under ${banding.tag} — re-banding an existing graph is a " +
-            "batch rebuild (rebandTo / new statePath), not a fold")
-      case None => () // fresh state: stamped below, before any append
-    }
+    // the re-band marker lives on nodes/, the one store rebandTo never
+    // swaps
+    StateStore.checkBanding(spark, statePath, np, bp, banding.tag,
+      Banding.default.tag)
 
     // id-only delta for the novelty probe: staging the batch TEXT here
     // would checkpoint the corpus bytes twice per fold for a probe that
@@ -210,17 +183,7 @@ object PageRankStream {
       stateBuckets)
     StateStore.ensureBucketed(spark, bp, "bb", bandBucket, stateBuckets)
 
-    // stamp the banding BEFORE any append can land (creation, pre-tag
-    // adoption, or a modulus-migration rewrite that replaced the
-    // directory carrying the tag): the guard above already proved this
-    // fold's setting is the store's setting, so a crash between the
-    // stamp and the appends replays against a correctly-tagged store —
-    // the old stamp-after-appends order left a window in which a replay
-    // under a DIFFERENT banding would have been silently adopted. The
-    // tag file is hidden (underscore), so a tag-only directory still
-    // reads as "no state" to every exists() gate.
-    if (StateStore.readTag(spark, bp, "_banding").isEmpty)
-      StateStore.writeTag(spark, bp, "_banding", banding.tag)
+    StateStore.stampBanding(spark, bp, banding.tag)
 
     val newSide = bandsDelta.select(col("doc_id").as("db"), col("lang"),
       col("seg"), col("seg_val"), col("simhash").as("sim_b"))
@@ -326,11 +289,9 @@ object PageRankStream {
     * corpus completeness is the caller's contract. Cost ∝ corpus —
     * maintenance cadence, never per batch.
     *
-    * Crash consistency: a `_rebanding` marker lands FIRST, on the one
-    * store this rebuild never swaps (nodes/), and folds refuse while it
-    * exists — without it, the instant between the band swap (which
-    * necessarily drops the `_banding` tag with the directory it
-    * replaces) and the restamp would read as adoptable pre-tag state.
+    * Crash consistency: the rebuild runs inside `StateStore.reband`,
+    * whose `_rebanding` marker lands FIRST, on the one store this
+    * rebuild never swaps (nodes/), and refuses folds until the restamp.
     * Any crash leaves the marker, so the remedy is always "re-run
     * rebandTo" (idempotent: each swap publishes complete-old or
     * complete-new). */
@@ -342,31 +303,30 @@ object PageRankStream {
     val ep = edgesPath(statePath)
     require(StateStore.exists(spark, np),
       s"no folded state at $statePath to re-band")
-    StateStore.writeTag(spark, np, "_rebanding", newBanding.tag)
-    val docs = corpus.select("doc_id", "lang", "text")
-      .join(StateStore.readPacked(spark, np).select("doc_id"), Seq("doc_id"))
-    val sims = Simhash.simhashOf(docs, newBanding.simBits)
-    // staged: consumed by both self-join sides and the band swap write
-    val bands = Staging.stage(
-      segRows(sims, newBanding).withColumn("bb", bandBucket))
-    val aSide = bands.select(col("doc_id").as("da"), col("lang"),
-      col("seg"), col("seg_val"), col("simhash").as("sim_a"))
-    val bSide = bands.select(col("doc_id").as("db"), col("lang"),
-      col("seg"), col("seg_val"), col("simhash").as("sim_b"))
-    val edges = aSide.join(bSide, Seq("seg", "seg_val", "lang"))
-      .filter(col("da") < col("db"))
-      .filter(col("seg") === expr(newBanding.firstAgreeingSeg))
-      .filter(expr("CAST(bit_count(sim_a ^ sim_b) AS INT)")
-        <= newBanding.maxHamming)
-      .select(col("da").as("doc_a"), col("db").as("doc_b"))
-      .withColumn("eb", docBucket(col("doc_a")))
-    graft.sinks.Sinks.snapshotSwap(edges.repartition(col("eb")), ep, Seq("eb"))
-    StateStore.writeModulus(spark, ep, stateBuckets)
-    graft.sinks.Sinks.snapshotSwap(bands.repartition(col("bb")), bp, Seq("bb"))
-    StateStore.writeModulus(spark, bp, stateBuckets)
-    StateStore.writeTag(spark, bp, "_banding", newBanding.tag)
-    StateStore.deleteTag(spark, np, "_rebanding")
-    Staging.release(bands)
+    StateStore.reband(spark, np, bp, newBanding.tag) {
+      val docs = corpus.select("doc_id", "lang", "text")
+        .join(StateStore.readPacked(spark, np).select("doc_id"), Seq("doc_id"))
+      val sims = Simhash.simhashOf(docs, newBanding.simBits)
+      // staged: consumed by both self-join sides and the band swap write
+      val bands = Staging.stage(
+        segRows(sims, newBanding).withColumn("bb", bandBucket))
+      val aSide = bands.select(col("doc_id").as("da"), col("lang"),
+        col("seg"), col("seg_val"), col("simhash").as("sim_a"))
+      val bSide = bands.select(col("doc_id").as("db"), col("lang"),
+        col("seg"), col("seg_val"), col("simhash").as("sim_b"))
+      val edges = aSide.join(bSide, Seq("seg", "seg_val", "lang"))
+        .filter(col("da") < col("db"))
+        .filter(col("seg") === expr(newBanding.firstAgreeingSeg))
+        .filter(expr("CAST(bit_count(sim_a ^ sim_b) AS INT)")
+          <= newBanding.maxHamming)
+        .select(col("da").as("doc_a"), col("db").as("doc_b"))
+        .withColumn("eb", docBucket(col("doc_a")))
+      graft.sinks.Sinks.snapshotSwap(edges.repartition(col("eb")), ep, Seq("eb"))
+      StateStore.writeModulus(spark, ep, stateBuckets)
+      graft.sinks.Sinks.snapshotSwap(bands.repartition(col("bb")), bp, Seq("bb"))
+      StateStore.writeModulus(spark, bp, stateBuckets)
+      Staging.release(bands)
+    }
   }
 
   /** Compact the append-only stores — callers wire it on a batch

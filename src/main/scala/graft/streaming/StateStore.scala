@@ -101,6 +101,58 @@ object StateStore {
   def deleteTag(spark: SparkSession, path: String, name: String): Unit =
     fs(spark, path).delete(new Path(path, name), false)
 
+  /** The banded-state guard of the streaming folds (ClusterMaintenance,
+    * PageRankStream): band rows mean nothing under another banding. Refuses
+    * (IllegalArgumentException) while `marker` holds an interrupted
+    * [[reband]], when the band store's `_banding` tag names another
+    * setting, and when the store exists UNTAGGED but `tag` is not
+    * `defaultTag` — untagged state was written by a pre-tag engine whose
+    * constants were inlined, i.e. default-banded, so only a default fold
+    * may adopt it. Passing folds call [[stampBanding]] before appending. */
+  def checkBanding(spark: SparkSession, statePath: String, marker: String,
+                   bands: String, tag: String, defaultTag: String): Unit = {
+    readTag(spark, marker, "_rebanding").foreach { t =>
+      require(requirement = false,
+        s"state at $statePath has an interrupted re-band to $t; " +
+          "re-run rebandTo to complete it before folding")
+    }
+    val remedy = "re-banding existing state is a batch rebuild " +
+      "(rebandTo / new statePath), not a fold"
+    readTag(spark, bands, "_banding") match {
+      case Some(t) =>
+        require(t == tag, s"band state at $bands was built under banding " +
+          s"$t; refusing to fold under $tag — $remedy")
+      case None if exists(spark, bands) =>
+        require(tag == defaultTag, s"band state at $bands predates the " +
+          s"_banding tag, so it was built under the default $defaultTag; " +
+          s"refusing to fold under $tag — $remedy")
+      case None => ()
+    }
+  }
+
+  /** Stamp an untagged band store — BEFORE any append (creation, pre-tag
+    * adoption, or a modulus-migration rewrite that dropped the tag), so a
+    * crash before the appends replays against a tagged store instead of
+    * one a differently-banded replay could adopt. The tag file is
+    * hidden, so a tag-only directory still reads as "no state". */
+  def stampBanding(spark: SparkSession, bands: String, tag: String): Unit =
+    if (readTag(spark, bands, "_banding").isEmpty)
+      writeTag(spark, bands, "_banding", tag)
+
+  /** Run a re-band `rebuild` to `tag`: the `_rebanding` marker lands
+    * FIRST, on `marker` (a store the rebuild never swaps), and
+    * [[checkBanding]] refuses folds until the restamp that follows
+    * `rebuild` — without it, the band swap (which drops the `_banding`
+    * tag with the directory it replaces) would leave state that reads as
+    * adoptable pre-tag state. Any crash leaves the marker; re-run. */
+  def reband(spark: SparkSession, marker: String, bands: String,
+             tag: String)(rebuild: => Unit): Unit = {
+    writeTag(spark, marker, "_rebanding", tag)
+    rebuild
+    writeTag(spark, bands, "_banding", tag)
+    deleteTag(spark, marker, "_rebanding")
+  }
+
   /** The modulus recorded when the layout was written (the `_buckets`
     * tag), if any. The marker is the AUTHORITATIVE record — dir-value
     * inference cannot detect a DOUBLING (old modulus k → new 2k leaves

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.llm.{MinHash, Shingles}
-import graft.streaming.NearDup
+import graft.llm.MinHash.Banding
 
 /** Banding-tuning probe for the MinHash cluster tier: for each banding
   * under consideration, report CANDIDATE pairs (band-join output — the
@@ -14,7 +14,7 @@ import graft.streaming.NearDup
   * production corpus can afford, but a tuning fixture can), and the
   * shingle-Jaccard profile of the pairs each setting misses. An
   * operator picks the widest banding whose recall still clears their
-  * target — this main is how the shipped [[NearDup.Banding.wide]]
+  * target — this main is how the shipped [[graft.llm.MinHash.Banding.wide]]
   * constant was chosen and is the tool a deployment reruns on its own
   * sample before widening.
   *
@@ -31,16 +31,6 @@ object BandingProbe {
     val docs = Tables.load(spark, sfDir, "documents")
     val toks = graft.core.Staging.stage(docs.select(col("doc_id"),
       expr(s"array_distinct(${Shingles.toksExpr})").as("toks")))
-
-    def verify(cand: DataFrame): DataFrame =
-      MinHash.jaccardScore(
-        cand
-          .join(toks.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")),
-            Seq("doc_a"))
-          .join(toks.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")),
-            Seq("doc_b")),
-        "toks_a", "toks_b", threshold)
-        .select("doc_a", "doc_b")
 
     // shingle-Jaccard of a pair frame: the space the bands actually
     // hash (token-Jaccard is the downstream verification filter — on
@@ -61,25 +51,16 @@ object BandingProbe {
         ((size(col("sh_a")) + size(col("sh_b"))).cast("double") - col("inter")), 3))
       .select("doc_a", "doc_b", "sj")
 
-    def pairsAt(b: NearDup.Banding): DataFrame = {
-      val bands = graft.core.Staging.stage(
-        NearDup.batchBandIndexOf(docs, b))
-      verify(bands.select(col("doc_id").as("doc_a"), col("band"),
-          col("bucket"), col("bpre").as("pa"))
-        .join(bands.select(col("doc_id").as("doc_b"), col("band"),
-          col("bucket"), col("bpre").as("pb")), Seq("band", "bucket"))
-        .filter(col("doc_a") < col("doc_b"))
-        .filter(!exists(zip_with(col("pa"), col("pb"), (x, y) => x === y),
-          c => c))
-        .select("doc_a", "doc_b")).cache()
-    }
-    val defaultPairs = pairsAt(NearDup.Banding.default)
+    def pairsAt(b: Banding): DataFrame = MinHash.verifiedPairsOf(
+        MinHash.minhashCandidatesOf(docs, b), toks, threshold)
+      .select("doc_a", "doc_b").cache()
+    val defaultPairs = pairsAt(Banding.default)
     val nDefault = defaultPairs.count()
 
-    Seq("wide" -> NearDup.Banding.wide,
-        "b5r3" -> NearDup.Banding(5, 3),
-        "b8r3" -> NearDup.Banding(8, 3),
-        "b4r2" -> NearDup.Banding(4, 2))
+    Seq("wide" -> Banding.wide,
+        "b5r3" -> Banding(5, 3),
+        "b8r3" -> Banding(8, 3),
+        "b4r2" -> Banding(4, 2))
       .foreach { case (name, b) =>
         val found = pairsAt(b)
         val nFound = found.count()

@@ -60,7 +60,7 @@ object ScaleSanity {
     PageRankStream.ranks(s, state)
   }
 
-  /** q82's fold under [[graft.streaming.NearDup.Banding.wide]] — the
+  /** q82's fold under [[graft.llm.MinHash.Banding.wide]] — the
     * cluster tier's scale setting (3 bands × 3 slices vs the oracle's
     * 2×2): same split shape as the oracle row's body, scratch state
     * under the synthetic sf dir. The default cell's second-decade
@@ -68,16 +68,17 @@ object ScaleSanity {
     * occupancy saturating; this cell records the wide slope. */
   private def q82WideBanding(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame = {
-    import graft.streaming.{ClusterMaintenance, NearDup}
+    import graft.llm.MinHash.Banding
+    import graft.streaming.ClusterMaintenance
     val state = s"$dir/__state_q82_wide"
     val fs = new org.apache.hadoop.fs.Path(state).getFileSystem(
       s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(state), true)
     val docs = Tables.load(s, dir, "documents")
     ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), state,
-      banding = NearDup.Banding.wide)
+      banding = Banding.wide)
     ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), state,
-      banding = NearDup.Banding.wide)
+      banding = Banding.wide)
     ClusterMaintenance.labels(s, state)
   }
 

@@ -69,6 +69,20 @@ class BenchSpec extends SparkSpec {
       total = 191.1, quietRef = None))
   }
 
+  test("a run with one row far above its quiet row may not refresh the reference") {
+    // round 18 banked q84 at 3.53 s against a 0.71 s quiet row; the
+    // total stayed inside its 15% band, so only a per-row gate sees it
+    val ref = Map("q84" -> 0.71, "q01" -> 0.14)
+    assert(!Bench.mayRefreshQuiet(keptContended = false, nSections = 1,
+      total = 100.0, quietRef = Some(100.0),
+      medians = Map("q84" -> 3.53, "q01" -> 0.14), quietRows = ref))
+    // within 2.5x, a failed (-1) median, and a query the reference lacks
+    // all pass
+    assert(Bench.mayRefreshQuiet(keptContended = false, nSections = 1,
+      total = 100.0, quietRef = Some(100.0),
+      medians = Map("q84" -> 1.70, "q01" -> -1.0, "q99" -> 9.0), quietRows = ref))
+  }
+
   test("keepBest ties on failures break by total over the common-valid queries") {
     // s1's b flaked, s2's c flaked: common-valid = {a}, and s2's a is
     // faster — raw totals would pick s1 (it "measured less" by failing b)

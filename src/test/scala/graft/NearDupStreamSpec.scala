@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.llm.{MinHash, Shingles}
+import graft.llm.MinHash.Banding
 import graft.streaming.NearDup
 
 /** Streaming near-dup detection (streaming/NearDup.scala): bit-parity of
@@ -41,21 +42,9 @@ class NearDupStreamSpec extends SparkSpec {
     assert(batch.exists(_._1 == 1L), "the null-text doc must still produce bands")
   }
 
-  test("the parameterized batch reference at the DEFAULT banding is " +
-      "bit-identical to Llm.bandIndexOf (the oracle shape)") {
-    val docs = Tables.load(spark, sf, "documents")
-    val oracle = MinHash.bandIndexOf(docs)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
-    val general = NearDup.batchBandIndexOf(docs, NearDup.Banding.default)
-      .select("doc_id", "band", "bucket", "b0")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
-    assert(general === oracle)
-  }
-
   test("fold bands == batch reference at the WIDE banding, null-text " +
       "docs and the bpre prefix column included") {
     import spark.implicits._
-    val wide = NearDup.Banding.wide
     val docs = Tables.load(spark, sf, "documents")
       .select("doc_id", "text")
       .unionByName(Seq((900001L, null.asInstanceOf[String]))
@@ -64,19 +53,22 @@ class NearDupStreamSpec extends SparkSpec {
       .select("doc_id", "band", "bucket", "b0", "bpre")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
         r.getString(3), r.getSeq[String](4).toList)).toSet
-    val fold = rows(NearDup.bands(docs, wide))
-    val batch = rows(NearDup.batchBandIndexOf(docs, wide))
-    assert(fold === batch)
-    assert(fold.exists(_._1 == 900001L),
-      "the null-text doc must still produce wide bands")
-    // shape sanity: every doc carries numBands rows, band j's prefix
-    // holds j buckets, and b0 is always the band-0 bucket
-    assert(fold.count(_._2 == wide.numBands - 1) ==
-      fold.count(_._2 == 0), "band fan-out must be uniform")
-    assert(fold.forall(r => r._5.size == r._2),
-      "bpre must hold exactly the lower bands' buckets")
-    val b0s = fold.filter(_._2 == 0).map(r => (r._1, r._3)).toMap
-    assert(fold.forall(r => r._4 == b0s(r._1)), "b0 must be band 0's bucket")
+    // the default banding too: its parity then covers all five columns
+    Seq(Banding.wide, Banding.default).foreach { banding =>
+      val fold = rows(NearDup.bands(docs, banding))
+      val batch = rows(MinHash.bandIndexOf(docs, banding))
+      assert(fold === batch, s"fold != batch at ${banding.tag}")
+      assert(fold.exists(_._1 == 900001L),
+        s"the null-text doc must still produce bands at ${banding.tag}")
+      // shape sanity: every doc carries numBands rows, band j's prefix
+      // holds j buckets, and b0 is always the band-0 bucket
+      assert(fold.count(_._2 == banding.numBands - 1) ==
+        fold.count(_._2 == 0), "band fan-out must be uniform")
+      assert(fold.forall(r => r._5.size == r._2),
+        "bpre must hold exactly the lower bands' buckets")
+      val b0s = fold.filter(_._2 == 0).map(r => (r._1, r._3)).toMap
+      assert(fold.forall(r => r._4 == b0s(r._1)), "b0 must be band 0's bucket")
+    }
   }
 
   test("streaming decontamination keeps a null-text doc (batch q65 parity)") {

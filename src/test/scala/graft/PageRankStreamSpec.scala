@@ -52,6 +52,56 @@ class PageRankStreamSpec extends SparkSpec {
       s"driver-resident ranks diverge from the lazy plan:\n$driver\n$lazyPlan")
   }
 
+  test("property: the driver-bounded, lazy and staged-distributed " +
+      "strategies agree on generated graphs") {
+    // 0-40 nodes, 0-80 pairs with self-pairs and duplicates, isolated
+    // vertices and the empty node set; IntegerType ids skip the driver
+    // path, so the staged loop runs distributed. Each strategy must give
+    // the same ranks or fail with the same exception class.
+    import org.scalacheck.{Gen, Prop, Test}
+    import spark.implicits._
+    def ranksOf(n: Int, pairs: Seq[(Long, Long)], staged: Boolean,
+                idType: String) = scala.util.Try {
+      val nodes = (1L to n.toLong).toDF("doc_id")
+        .select(col("doc_id").cast(idType).as("doc_id"))
+      val edges = pairs.toDF("doc_a", "doc_b").select(
+        col("doc_a").cast(idType).as("doc_a"), col("doc_b").cast(idType).as("doc_b"))
+      graft.llm.PageRank.ranks(nodes, edges, stageIterations = staged)
+        .collect().map(r => (r.getAs[Number](0).longValue, r.getDouble(1)))
+        .sorted.toSeq
+    }.toEither.left.map(_.getClass.getName)
+    def divergence(n: Int, pairs: Seq[(Long, Long)]): Option[String] = {
+      val driver = ranksOf(n, pairs, staged = true, "long")
+      val lazyPlan = ranksOf(n, pairs, staged = false, "long")
+      val distributed = ranksOf(n, pairs, staged = true, "int")
+      if (driver == lazyPlan && lazyPlan == distributed) None
+      else Some(s"n=$n pairs=$pairs\ndriver=$driver\nlazy=$lazyPlan\n" +
+        s"distributed=$distributed")
+    }
+    // pinned degenerate shapes: the empty node set; a self-pair twice
+    // beside two isolated vertices
+    Seq(0 -> Nil, 3 -> Seq((1L, 1L), (1L, 1L))).foreach { case (n, pairs) =>
+      val d = divergence(n, pairs)
+      assert(d.isEmpty, d.getOrElse(""))
+    }
+    val graphs = for {
+      n <- Gen.choose(0, 40)
+      k <- Gen.choose(0, if (n == 0) 0 else 80)
+      base <- Gen.listOfN(k, for {
+        a <- Gen.choose(1L, n.toLong)
+        b <- Gen.frequency(1 -> Gen.const(a), 4 -> Gen.choose(1L, n.toLong))
+      } yield (a, b))
+      dups <- Gen.someOf(base)
+    } yield (n, base ++ dups)
+    val agree = Prop.forAllNoShrink(graphs) { case (n, pairs) =>
+      val d = divergence(n, pairs)
+      Prop(d.isEmpty) :| d.getOrElse("")
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(10)
+      .withInitialSeed(org.scalacheck.rng.Seed(1319L)), agree)
+    assert(result.passed, result.status.toString)
+  }
+
   test("a finer 4-way split converges to the same ranks") {
     val state = java.nio.file.Files.createTempDirectory("prs_four").toString
     Seq(col("doc_id") < 125,

@@ -220,8 +220,9 @@ class StreamingSpec extends SparkSpec {
 
   test("wide-banded cluster folds: split == bulk, mismatched fold refused, " +
       "untagged state adoptable only by a default fold") {
-    import graft.streaming.{ClusterMaintenance, NearDup}
-    val wide = NearDup.Banding.wide
+    import graft.llm.MinHash.Banding
+    import graft.streaming.ClusterMaintenance
+    val wide = Banding.wide
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
 
     // split folds == one bulk fold at the same wide setting: fold 2's
@@ -281,7 +282,7 @@ class StreamingSpec extends SparkSpec {
       s"unexpected message: ${blocked.getMessage}")
     ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), legacy)
     assert(graft.streaming.StateStore.readTag(spark, s"$legacy/bands",
-      "_banding").contains(NearDup.Banding.default.tag))
+      "_banding").contains(Banding.default.tag))
     assert(labelsOf(legacy) === SparkEntry.queries("q82_incremental_clusters")(
       spark, "/root/testdata/sf0.01")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
@@ -290,8 +291,9 @@ class StreamingSpec extends SparkSpec {
 
   test("rebandTo rebuilds the clustering under the new banding; folds " +
       "resume; an interrupted re-band refuses folds until re-run") {
-    import graft.streaming.{ClusterMaintenance, NearDup, StateStore}
-    val wide = NearDup.Banding.wide
+    import graft.llm.MinHash.Banding
+    import graft.streaming.{ClusterMaintenance, StateStore}
+    val wide = Banding.wide
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
     val state = Files.createTempDirectory("cm-reband").toString
     ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), state)
@@ -332,8 +334,9 @@ class StreamingSpec extends SparkSpec {
 
   test("compactState preserves the banding tag: a wide store still " +
       "folds after compaction, and a default fold stays refused") {
-    import graft.streaming.{ClusterMaintenance, NearDup}
-    val wide = NearDup.Banding.wide
+    import graft.llm.MinHash.Banding
+    import graft.streaming.ClusterMaintenance
+    val wide = Banding.wide
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
     val state = Files.createTempDirectory("cmw-ctag").toString
     ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), state,
