@@ -135,20 +135,19 @@ object MinHash {
           expr(bucketOf(b, j, k => s"s$k")).as(s"band$j"))): _*)
   }
 
-  /** The UNSTAGED band-index plan: (doc_id, band, bucket, b0, bpre) rows,
-    * one per LSH band of `banding`. `b0` is the doc's band-0 bucket (the
-    * column default-banded persisted state keeps); `bpre` holds the
-    * buckets of all LOWER bands, which [[lowestBandOnly]] compares so a
-    * pair join emits each pair once without a dedup pass. Public seam
-    * for PERSISTING the index (q76's architecture, and the static side
-    * of the streaming near-dup join — streaming/NearDup.scala): an
-    * ingest pipeline writes this once per dedup run and every later
-    * delta joins against the stored table instead of re-shingling the
-    * corpus. In-engine consumers that self-join the index within one
-    * query go through [[minhashBandsOf]], which stages this plan so the
-    * shingle+minhash aggregation runs once per query, not per branch.
-    * The buckets are built once per doc as one array and exploded with
-    * their position, so `b0` and `bpre` are narrow reads of it. */
+  /** The UNSTAGED band-index plan: (doc_id, band, bucket, bpre) rows,
+    * one per LSH band of `banding`. `bpre` holds the buckets of all
+    * LOWER bands, which [[lowestBandOnly]] compares so a pair join emits
+    * each pair once without a dedup pass. Public seam for PERSISTING the
+    * index (q76's architecture, and the static side of the streaming
+    * near-dup join — streaming/NearDup.scala): an ingest pipeline writes
+    * this once per dedup run and every later delta joins against the
+    * stored table instead of re-shingling the corpus. In-engine
+    * consumers that self-join the index within one query go through
+    * [[minhashBandsOf]], which stages this plan so the shingle+minhash
+    * aggregation runs once per query, not per branch. The buckets are
+    * built once per doc as one array and exploded with their position,
+    * so `bpre` is a narrow read of it. */
   def bandIndexOf(docs: DataFrame, banding: Banding = Banding.default): DataFrame =
     slicesOf(docs, banding, spread = true)
       .select(col("doc_id"), array((0 until banding.numBands).map(j =>
@@ -156,17 +155,16 @@ object MinHash {
       .select(col("doc_id"), col("bk"),
         posexplode(col("bk")).as(Seq("band", "bucket")))
       .select(col("doc_id"), col("band"), col("bucket"),
-        col("bk").getItem(0).as("b0"), expr("slice(bk, 1, band)").as("bpre"))
+        expr("slice(bk, 1, band)").as("bpre"))
 
-  /** [[bandIndexOf]] materialized via Staging.stage, less `b0` (band
-    * joins read `bpre`): in the default local mode its blocks are
-    * reclaimed by the ContextCleaner when the frame goes out of scope;
-    * `spark.graft.staging=reliable` switches to a recomputable parquet
-    * staging write (executor loss survivable) — the classic
-    * signature-staging step of MinHash-LSH dedup. */
+  /** [[bandIndexOf]] materialized via Staging.stage: in the default
+    * local mode its blocks are reclaimed by the ContextCleaner when the
+    * frame goes out of scope; `spark.graft.staging=reliable` switches to
+    * a recomputable parquet staging write (executor loss survivable) —
+    * the classic signature-staging step of MinHash-LSH dedup. */
   private[graft] def minhashBandsOf(docs: DataFrame,
                                     banding: Banding = Banding.default): DataFrame =
-    Staging.stage(bandIndexOf(docs, banding).drop("b0"))
+    Staging.stage(bandIndexOf(docs, banding))
 
   /** TRUE iff no band BELOW this row's band also collides — the one
     * exactly-once pair-emission rule of every band join (each side's
@@ -189,6 +187,21 @@ object MinHash {
       .filter(lowestBandOnly(col("bpre_a"), col("bpre_b")))
       .select("doc_a", "doc_b")
   }
+
+  /** Candidate (delta_id, corpus_id, carry..) pairs of a delta band
+    * frame against a corpus band index — the (band, bucket) equi-join,
+    * exactly-once via [[lowestBandOnly]], with the delta's `carry`
+    * columns kept on each pair. Both frames carry (doc_id, band, bucket,
+    * bpre); the caller picks the broadcast side by passing that frame
+    * wrapped in `broadcast` (the hint survives the projections here). */
+  private[graft] def deltaPairsOf(delta: DataFrame, index: DataFrame,
+                                  carry: Seq[String] = Nil): DataFrame =
+    delta.select(Seq(col("doc_id").as("delta_id"), col("band"), col("bucket"),
+        col("bpre").as("bpre_d")) ++ carry.map(col): _*)
+      .join(index.select(col("doc_id").as("corpus_id"), col("band"),
+        col("bucket"), col("bpre").as("bpre_c")), Seq("band", "bucket"))
+      .filter(lowestBandOnly(col("bpre_d"), col("bpre_c")))
+      .select((Seq("delta_id", "corpus_id") ++ carry).map(col): _*)
 
   /** Candidate near-dup pairs of `docs` under `banding` (q46). */
   private[graft] def minhashCandidatesOf(docs: DataFrame,

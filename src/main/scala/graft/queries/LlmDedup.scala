@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Staging
 import graft.llm.BloomDecontam.{bloomDecontaminationKept, bloomDecontaminationKeptLarge}
-import graft.llm.MinHash.{jaccardEdgesOf, jaccardScore, lowestBandOnly,
+import graft.llm.MinHash.{deltaPairsOf, jaccardEdgesOf, jaccardScore,
   minhashBandsOf, minhashCandidatesOf, minhashSigOf}
 import graft.llm.Shingles.{shingleHashes, toksExpr}
 import graft.llm.Simhash.{hexDigits, simhashBandPairs, simhashOf}
@@ -330,12 +330,7 @@ object LlmDedup {
       val docs = t(s, dir, "documents")
       val idx = minhashBandsOf(docs.filter(col("doc_id") < deltaSplit))
       val delta = minhashBandsOf(docs.filter(col("doc_id") >= deltaSplit))
-      val cand = delta.select(col("doc_id").as("delta_id"), col("band"),
-          col("bucket"), col("bpre").as("bpre_d"))
-        .join(idx.select(col("doc_id").as("corpus_id"), col("band"),
-          col("bucket"), col("bpre").as("bpre_c")), Seq("band", "bucket"))
-        .filter(lowestBandOnly(col("bpre_d"), col("bpre_c")))
-        .select("delta_id", "corpus_id")
+      val cand = deltaPairsOf(delta, idx)
       val toks = Staging.stage(docs
         .select(col("doc_id"), expr(s"array_distinct($toksExpr)").as("toks")))
       val scored = cand

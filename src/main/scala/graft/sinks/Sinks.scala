@@ -48,9 +48,12 @@ object Sinks {
     * rename over the live dir. The staging-table + MERGE + TRUNCATE dance
     * (bigquery.py:206-271) becomes write-then-rename; readers see either
     * the old snapshot or the new one, never a half write (SURVEY.md §7.4.1).
+    * `staged` runs on the written `__tmp` dir before it goes live, so
+    * small side files (layout tags) publish with the data.
     */
   def snapshotSwap(df: DataFrame, path: String,
-                   partitionCols: Seq[String] = Nil): Unit = {
+                   partitionCols: Seq[String] = Nil,
+                   staged: String => Unit = _ => ()): Unit = {
     val spark = df.sparkSession
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + "__tmp")
@@ -60,6 +63,7 @@ object Sinks {
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(tmp.toString)
+    staged(tmp.toString)
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(live)) renameOrFail(fs, live, old)
     renameOrFail(fs, tmp, live)

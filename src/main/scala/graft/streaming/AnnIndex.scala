@@ -73,8 +73,7 @@ object AnnIndex {
         "run AnnIndex.recoverRebalance before folding")
     val novel = StateStore.novelAgainst(cellsPath(statePath), rows,
       Seq("vec_id"), "cell", col("cell"), deltaRows = nRows)
-    StateStore.appendBucketed(novel, cellsPath(statePath), "cell",
-      buckets = 0)
+    StateStore.appendBucketed(novel, cellsPath(statePath), "cell")
   }
 
   /** Compact the append-only cell store: one fold appends ≤|cells|
@@ -83,8 +82,7 @@ object AnnIndex {
     * compaction cadence guards against). Same discipline here — callers
     * wire it on a batch cadence. */
   def compact(spark: SparkSession, statePath: String): Unit =
-    StateStore.compactBucketed(spark, cellsPath(statePath), "cell",
-      buckets = 0)
+    StateStore.compactBucketed(spark, cellsPath(statePath), "cell")
 
   /** Cell-occupancy census off parquet FOOTERS — a driver-side listing,
     * no Spark job (the profiling discipline applied to the cell store).
@@ -267,9 +265,8 @@ object AnnIndex {
 
   /** Offline retrain-and-migrate: reassign EVERY persisted vector to
     * its nearest centroid in `newCents` and rewrite the store
-    * partitioned by the new cells — the `ensureBucketed` migration
-    * shape (∝ state, ONCE, published through the atomic snapshot swap;
-    * folds keep their ∝-delta cost). After the swap the layout is
+    * partitioned by the new cells (∝ state, ONCE, published through
+    * the atomic snapshot swap; folds keep their ∝-delta cost). After the swap the layout is
     * consistent with `newCents`, so subsequent folds and probes MUST
     * pass the retrained set: a fold against the old centroids would
     * assign a replayed vector to a cell the pruned novelty probe

@@ -68,8 +68,7 @@ object Bm25Index {
 
   /** Term/doc hash-bucket modulus — the ClusterMaintenance layout
     * contract (32 matches the session shuffle parallelism at test
-    * scale; a 100 TB deployment raises it, and `ensureBucketed`
-    * detects + rewrites via the `_buckets` marker). */
+    * scale; a 100 TB deployment raises it under a new statePath). */
   private val stateBuckets = 32
   private def termBucket(t: Column): Column =
     pmod(xxhash64(t), lit(stateBuckets)).cast("int")
@@ -86,7 +85,13 @@ object Bm25Index {
     * touched-bucket collect jobs (StateStore.prunedByTouched) instead
     * of paying one per table per fold. Each state table appends only
     * its novel rows, ≤ `stateBuckets` files. */
-  def foldBatch(batch: DataFrame, batchId: String, statePath: String): Unit = {
+  def foldBatch(batch: DataFrame, batchId: String, statePath: String): Unit =
+    foldBatch(batch, batchId, statePath, dfsumShardBytes)
+
+  /** [[foldBatch]] with the summary's shard target as a parameter — the
+    * seam a test uses to force a sharded swap at fixture scale. */
+  private[graft] def foldBatch(batch: DataFrame, batchId: String,
+                               statePath: String, shardBytes: Long): Unit = {
     val spark = batch.sparkSession
     // staged and counted in one job; an empty batch contributes nothing
     // additive, so skipping its ledger row is replay-safe
@@ -99,8 +104,6 @@ object Bm25Index {
 
     val docsDelta = toks.select(col("doc_id"), col("dl"))
       .withColumn("db", docBucket(col("doc_id")))
-    StateStore.ensureBucketed(spark, docsPath(statePath), "db",
-      docBucket(col("doc_id")), stateBuckets)
     // staged: the summary fold and the append below must see the SAME
     // novel set — an unstaged frame re-probes the store after the
     // append and would read back empty
@@ -113,8 +116,6 @@ object Bm25Index {
       .select(col("doc_id"), col("dl"), explode(col("tk")).as("term"))
       .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
       .withColumn("tb", termBucket(col("term")))
-    StateStore.ensureBucketed(spark, postingsPath(statePath), "tb",
-      termBucket(col("term")), stateBuckets)
     // nDocs is a LOWER bound on posting rows — valid for the hint's
     // "delta ≫ buckets" direction (it can only under-skip, never
     // mis-prune)
@@ -123,7 +124,7 @@ object Bm25Index {
         postDelta, Seq("term", "doc_id"), "tb", termBucket(col("term")),
         stateBuckets, deltaRows = nDocs))
 
-    foldSummary(spark, statePath, batchId, novelPost, novelDocs)
+    foldSummary(spark, statePath, batchId, novelPost, novelDocs, shardBytes)
 
     // the staged-counted sizes buy the small-delta single-task append
     // path; the two appends are independent (each novelty-guarded — any
@@ -131,9 +132,9 @@ object Bm25Index {
     // writer/commit fixed cost, so they overlap (Par)
     graft.core.Par.awaitBoth(
       StateStore.appendBucketed(novelPost, postingsPath(statePath), "tb",
-        stateBuckets, deltaRows = nNovelPost),
+        deltaRows = nNovelPost),
       StateStore.appendBucketed(novelDocs, docsPath(statePath), "db",
-        stateBuckets, deltaRows = nNovelDocs))
+        deltaRows = nNovelDocs))
     // fold hygiene: the staged intermediates are dead once the appends
     // land — drop their blocks so folds don't accumulate storage pressure
     Staging.release(toks, novelPost, novelDocs)
@@ -154,6 +155,10 @@ object Bm25Index {
     * engine's, not the caller's). */
   private val ledgerHorizon = 64L
 
+  /** On-disk bytes per file of the `dfsum/` snapshot's sharded swap
+    * ([[foldSummary]]). */
+  private val dfsumShardBytes = 128L << 20
+
   /** Fold the novel rows' df/scalar deltas into the `dfsum/` snapshot,
     * exactly once per `batchId` within the [[ledgerHorizon]] (the q130
     * ledger shape: kinds `df`, `scalar`, `batch` in one frame, one
@@ -163,7 +168,7 @@ object Bm25Index {
     * `postings.distinct.groupBy(term).count` at every fold boundary. */
   private def foldSummary(spark: SparkSession, statePath: String,
                           batchId: String, novelPost: DataFrame,
-                          novelDocs: DataFrame): Unit = {
+                          novelDocs: DataFrame, shardBytes: Long): Unit = {
     val p = dfsumPath(statePath)
     val hasSum = StateStore.exists(spark, p)
     val old = if (hasSum) StateStore.readPacked(spark, p) else null
@@ -199,19 +204,10 @@ object Bm25Index {
     // the ledger, capped to the replay horizon IN-PLAN (no extra job):
     // the new row takes seq = max(old seq) + 1 via an all-rows window
     // over the (≤ horizon+1 row) ledger, then rows that fell out of the
-    // horizon are pruned before the union rides the swap. A pre-`seq`
-    // snapshot (earlier engine version) reads as seq 0 for every
-    // existing row — they age out together, which only ever prunes
-    // EARLIER than the horizon would (the safe direction: a pruned id
-    // re-folds only if the source redelivers a batch older than its own
-    // checkpoint, which at-least-once delivery never does).
+    // horizon are pruned before the union rides the swap
     val oldLedger =
       if (!hasSum) ledgerRow.limit(0)
-      else {
-        val b = old.filter(col("kind") === "batch")
-        if (old.columns.contains("seq")) b
-        else b.withColumn("seq", lit(0L))
-      }
+      else old.filter(col("kind") === "batch")
     val wAll = org.apache.spark.sql.expressions.Window
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.unboundedFollowing)
@@ -228,31 +224,25 @@ object Bm25Index {
     // (a driver fs op, no job — the vocabulary never shrinks, so last
     // fold's size is a floor), keeping test-scale folds at one file and
     // giving a huge-vocabulary deployment ⌈bytes/target⌉-way write
-    // parallelism with the same swap atomicity. `spark.graft.bm25.
-    // dfsumShardBytes` is the ops knob (default 128 MiB).
-    val target = spark.conf
-      .get("spark.graft.bm25.dfsumShardBytes", (128L << 20).toString).toLong
+    // parallelism with the same swap atomicity
     val shards =
       if (!hasSum) 1
       else {
         val hp = new org.apache.hadoop.fs.Path(p)
         val bytes = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(hp).getLength
-        math.max(1L, (bytes + target - 1) / target).toInt
+        math.max(1L, (bytes + shardBytes - 1) / shardBytes).toInt
       }
     Sinks.snapshotSwap(dfRows.unionByName(scalRow).unionByName(ledger)
       .repartition(shards, col("term")), p, Seq.empty)
   }
 
-  /** Compact the append-only stores (exact-row dedup + file coalesce +
-    * marker restamp) — callers wire it on a batch cadence, like the
-    * cluster state's. The summary is swap-published whole and needs no
-    * compaction. */
+  /** Compact the append-only stores (exact-row dedup + file coalesce) —
+    * callers wire it on a batch cadence, like the cluster state's. The
+    * summary is swap-published whole and needs no compaction. */
   def compact(spark: SparkSession, statePath: String): Unit = {
-    StateStore.compactBucketed(spark, postingsPath(statePath), "tb",
-      stateBuckets)
-    StateStore.compactBucketed(spark, docsPath(statePath), "db",
-      stateBuckets)
+    StateStore.compactBucketed(spark, postingsPath(statePath), "tb")
+    StateStore.compactBucketed(spark, docsPath(statePath), "db")
   }
 
   /** Answer the q128 retrieval from the persisted index: derive the

@@ -71,8 +71,7 @@ object ClusterMaintenance {
     * broadcast). 32 buckets matches the session's shuffle-partition
     * count, so a fold appends at most one file per task at test scale; a
     * 100 TB deployment raises it (bucket count is a layout constant —
-    * changing it means a state rewrite, detected and performed by
-    * `StateStore.ensureBucketed` via the persisted `_buckets` marker). */
+    * a new value means a new statePath). */
   private val stateBuckets = 32
 
   /** Partition bucket of a band-index row: stable hash of the probe key
@@ -123,13 +122,10 @@ object ClusterMaintenance {
     * [[PageRankStream.foldBatch]] contract applied to the cluster
     * tier): band rows are meaningless under any other setting, so the
     * band store stamps a `_banding` tag BEFORE its first append lands
-    * and later folds REFUSE a mismatch. An UNTAGGED store that already
-    * exists was necessarily written by a pre-tag engine version whose
-    * constants were inlined — i.e. under `Banding.default` — so only
-    * a default fold may adopt (and stamp) it; re-banding an existing
-    * clustering is a batch rebuild ([[rebandTo]] in place, or a new
-    * statePath), not a fold. The default answers the q46/q73/q82
-    * oracles verbatim. */
+    * and later folds REFUSE a mismatch, and an existing store with no
+    * tag; re-banding an existing clustering is a batch rebuild
+    * ([[rebandTo]] in place, or a new statePath), not a fold. The
+    * default answers the q46/q73/q82 oracles verbatim. */
   def foldBatch(batch: DataFrame, statePath: String,
                 threshold: Double = 0.5,
                 banding: Banding = Banding.default): Unit = {
@@ -145,7 +141,7 @@ object ClusterMaintenance {
     // swaps
     val bp = bandsPath(statePath)
     StateStore.checkBanding(spark, statePath, toksPath(statePath), bp,
-      banding.tag, Banding.default.tag)
+      banding.tag)
 
     // the delta's own artifacts, staged once as ONE combined frame —
     // the tokenizer and the band expression run a single time over the
@@ -169,12 +165,6 @@ object ClusterMaintenance {
     // quo, in which AQE already converts one join side to a broadcast
     // off the first materialized exchange.)
     val nBands = deltaBands.count()
-    // one-time migration for pre-upgrade state: unbucketed layouts and
-    // stale (larger) bucket moduli both rewrite in place
-    StateStore.ensureBucketed(spark, bandsPath(statePath), "pb", bandBucket,
-      stateBuckets)
-    StateStore.ensureBucketed(spark, toksPath(statePath), "tb",
-      tokBucket(col("doc_id")), stateBuckets)
     StateStore.stampBanding(spark, bp, banding.tag)
 
     // which side of the verification joins broadcasts: the batch's
@@ -212,22 +202,12 @@ object ClusterMaintenance {
     val dc =
       if (!StateStore.exists(spark, bandsPath(statePath))) dd.limit(0)
       else {
-        // withBpre: a store persisted by a pre-banding engine version
-        // lacks the prefix column; the guard proved such state is
-        // default-banded, where the prefix derives from the legacy b0
-        val idx = NearDup.withBpre(
-          StateStore.prunedByTouched(spark, bandsPath(statePath),
-            "pb", deltaBands, col("pb"), stateBuckets, nBands))
-        val (cand, nCand) = Staging.stageCounted(idx
-          .select(col("doc_id").as("corpus_id"), col("band"),
-            col("bucket"), col("bpre").as("bpre_c"))
-          .join(broadcast(deltaBands.select(col("doc_id").as("delta_id"),
-            col("band"), col("bucket"), col("bpre").as("bpre_d"))),
-            Seq("band", "bucket"))
-          .filter(MinHash.lowestBandOnly(col("bpre_d"), col("bpre_c")))
-          // a replayed batch is already in the index; never self-pair
-          .filter(col("delta_id") =!= col("corpus_id"))
-          .select("delta_id", "corpus_id"))
+        val idx = StateStore.prunedByTouched(spark, bandsPath(statePath),
+          "pb", deltaBands, col("pb"), stateBuckets, nBands)
+        val (cand, nCand) = Staging.stageCounted(
+          MinHash.deltaPairsOf(broadcast(deltaBands), idx)
+            // a replayed batch is already in the index; never self-pair
+            .filter(col("delta_id") =!= col("corpus_id")))
         val corpusToks = StateStore.prunedByTouched(spark,
           toksPath(statePath), "tb", cand, tokBucket(col("corpus_id")),
           stateBuckets, nCand)
@@ -259,17 +239,10 @@ object ClusterMaintenance {
         if (nEdges > 0) foldLabels(spark, edges, labelsPath(statePath))
       },
       awaitBoth(
-        // at the DEFAULT banding the persisted schema stays the legacy
-        // (doc_id, band, bucket, b0, pb) — bpre is derivable there
-        // (withBpre) and dropping it lets new appends land in pre-tag
-        // stores without a mixed-schema directory; a non-default store
-        // is tag-fresh by the guard and persists the prefix column
-        StateStore.appendBucketed(
-          if (banding == Banding.default) deltaBands.drop("bpre")
-          else deltaBands,
-          bandsPath(statePath), "pb", stateBuckets, deltaRows = nBands),
+        StateStore.appendBucketed(deltaBands, bandsPath(statePath), "pb",
+          deltaRows = nBands),
         StateStore.appendBucketed(deltaToks, toksPath(statePath), "tb",
-          stateBuckets, deltaRows = nBands)))
+          deltaRows = nBands)))
     ()
   }
 
@@ -341,8 +314,6 @@ object ClusterMaintenance {
         if (Sinks.versionPointerExists(spark, lp))
           Some(Sinks.readSnapshot(spark, lp).select("id", "comp"))
         else if (bucketed) Some(StateStore.readPacked(spark, lp).select("id", "comp"))
-        else if (Sinks.snapshotExists(spark, lp))
-          Some(Sinks.readSnapshot(spark, lp).select("id", "comp"))
         else None
       val full = existing match {
         case Some(old) => Components.merge(Staging.stage(old), edges)
@@ -356,7 +327,7 @@ object ClusterMaintenance {
       fs.delete(new Path(lp + "_comp"), true)
       return
     }
-    migrateLegacyLabels(spark, lp)
+    absorbMarkerLabels(spark, lp)
     val cp = lp + "_comp"
     if (!fs.exists(new Path(lp))) {
       Components.connected(edges)
@@ -364,15 +335,8 @@ object ClusterMaintenance {
         .repartition(col("ib")).sortWithinPartitions("id")
         .write.partitionBy("ib").mode("overwrite").parquet(lp)
       StateStore.writeTag(spark, lp, GenTag, newGen())
-      StateStore.writeModulus(spark, lp, stateBuckets)
       // no projection yet — the first delta fold builds it on demand
     } else {
-      // the labeling participates in the same modulus discipline as the
-      // band/token stores: a bucket-count change re-buckets it here
-      // (the rewrite drops the _gen tag with the directory, which
-      // correctly invalidates the projection below)
-      StateStore.ensureBucketed(spark, lp, "ib",
-        labelsBucketOf(col("id")), stateBuckets)
       val restored = Sinks.recoverPartitionSwaps(spark, lp)
       val orphans = fs.globStatus(new Path(lp + "__stage-*"))
       val unclean = restored.nonEmpty || orphans.nonEmpty
@@ -424,8 +388,8 @@ object ClusterMaintenance {
       val needMembers = c0.count() > 0 || unclean
 
       // the member lookup's comp-bucketed projection: valid only while
-      // its generation matches the labeling's. A bulk fold, crash,
-      // legacy migration, or pre-projection labeling leaves it behind —
+      // its generation matches the labeling's. A bulk fold, a crash, or
+      // an absorbed marker-mode labeling leaves it behind —
       // rebuild wholesale from the labeling, but ONLY when this fold
       // actually needs a lookup (∝ labeling once, amortized across the
       // delta folds in between; an invalid projection otherwise just
@@ -434,15 +398,13 @@ object ClusterMaintenance {
         val g = newGen(); StateStore.writeTag(spark, lp, GenTag, g); g
       }
       var cpValid = fs.exists(new Path(cp)) &&
-        StateStore.readTag(spark, cp, GenTag).contains(lpGen) &&
-        StateStore.readModulus(spark, cp).contains(stateBuckets)
+        StateStore.readTag(spark, cp, GenTag).contains(lpGen)
       if (needMembers && !cpValid) {
         StateStore.readPacked(spark, lp).select("id", "comp")
           .withColumn("cb", compBucketOf(col("comp")))
           .repartition(col("cb")).sortWithinPartitions("comp")
           .write.partitionBy("cb").mode("overwrite").parquet(cp)
         StateStore.writeTag(spark, cp, GenTag, lpGen)
-        StateStore.writeModulus(spark, cp, stateBuckets)
         cpValid = true
       }
       // members of a key set, matched by comp (the normal linkage — the
@@ -553,26 +515,26 @@ object ClusterMaintenance {
     }
   }
 
-  /** One-time migration of a labeling published by the pre-delta code
-    * (whole-table snapshot, rename or marker protocol) into the
-    * id-bucket-partitioned layout. */
-  private def migrateLegacyLabels(spark: SparkSession, lp: String): Unit = {
-    val fs = new Path(lp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partitioned = StateStore.isBucketed(spark, lp, "ib")
-    if (!partitioned && Sinks.snapshotExists(spark, lp)) {
-      // through the atomic swap, never a live-path overwrite: a
-      // mid-migration crash must leave the complete legacy labeling,
-      // not a half-written bucketed one that isBucketed would adopt
+  /** The rename-mode counterpart of the marker branch's absorption: a
+    * labeling published under `spark.graft.swap=marker` (version
+    * pointer) is moved into the id-bucket-partitioned layout when a
+    * deployment switches back to rename — through the atomic swap, so a
+    * crash leaves the marker labeling whole — and its pointer and
+    * versions are retired, or [[labels]] would keep reading them. The
+    * pointer's labeling always wins over a bucketed one beside it: that
+    * is the frozen pre-switch layout a marker fold already absorbed. */
+  private def absorbMarkerLabels(spark: SparkSession, lp: String): Unit =
+    if (Sinks.versionPointerExists(spark, lp)) {
+      val fs = new Path(lp)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       Sinks.snapshotSwap(
-        Staging.stage(Sinks.readSnapshot(spark, lp).select("id", "comp"))
+        Sinks.readSnapshot(spark, lp).select("id", "comp")
           .withColumn("ib", labelsBucketOf(col("id")))
           .repartition(col("ib")),
         lp, Seq("ib"))
       fs.delete(new Path(lp + "__current"), false)
       fs.delete(new Path(lp + "__versions"), true)
     }
-  }
 
   /** Wire [[foldBatch]] as the foreachBatch sink of a streaming document
     * frame. AvailableNow by default — drain what's there and stop — the
@@ -627,8 +589,8 @@ object ClusterMaintenance {
     Seq((bandsPath(statePath), "pb", Seq("_banding")),
         (toksPath(statePath), "tb", Seq("_rebanding")))
       .foreach { case (p, bcol, tags) =>
-        StateStore.compactBucketed(spark, p, bcol, stateBuckets,
-          targetFileBytes, preserveTags = tags)
+        StateStore.compactBucketed(spark, p, bcol, targetFileBytes,
+          preserveTags = tags)
       }
 
   /** Re-band an existing clustering to `newBanding` — the batch rebuild
@@ -699,17 +661,10 @@ object ClusterMaintenance {
             .repartition(col("ib")).sortWithinPartitions("id"),
           lp, Seq("ib"))
         StateStore.writeTag(spark, lp, GenTag, newGen())
-        StateStore.writeModulus(spark, lp, stateBuckets)
       }
       fs.delete(new Path(lp + "_comp"), true)
-      // band store last (reband restamps it) — mirrors foldBatch's
-      // legacy-schema rule: a default store persists without bpre so
-      // pre-tag-era appends still land schema-consistent
-      Sinks.snapshotSwap(
-        (if (newBanding == Banding.default) bandRows.drop("bpre")
-         else bandRows).repartition(col("pb")),
-        bp, Seq("pb"))
-      StateStore.writeModulus(spark, bp, stateBuckets)
+      // band store last (reband restamps it)
+      Sinks.snapshotSwap(bandRows.repartition(col("pb")), bp, Seq("pb"))
       Staging.release(delta)
       Staging.release(labeling)
     }
@@ -732,16 +687,13 @@ object ClusterMaintenance {
     * Precedence: a marker-protocol version POINTER wins — it only
     * exists when marker-mode folds have published, and a pre-switch
     * rename-era partitioned layout awaiting retirement must not shadow
-    * it; then the id-bucket-partitioned layout; then a labeling
-    * published by the pre-delta code (migrates on the next fold). */
+    * it; then the id-bucket-partitioned layout. */
   def labels(spark: SparkSession, statePath: String): DataFrame = {
     val lp = labelsPath(statePath)
     if (Sinks.versionPointerExists(spark, lp))
       Sinks.readSnapshot(spark, lp).select("id", "comp")
     else if (StateStore.isBucketed(spark, lp, "ib"))
       StateStore.readPacked(spark, lp).select("id", "comp")
-    else if (Sinks.snapshotExists(spark, lp))
-      Sinks.readSnapshot(spark, lp)
     else {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("id", "comp")

@@ -71,7 +71,6 @@ object CorpusStream {
                 cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
                 threshold: Double = 0.5): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
     val admitted = Decontam.gate(batch, statePath)
 
     // stage-1 gate+scrub — the batch pipeline's own code
@@ -88,10 +87,7 @@ object CorpusStream {
     // the dedup probe, ∝ delta instead of ∝ corpus: StateStore prunes
     // the state to the batch's touched hash-prefix buckets and runs the
     // broadcast-delta novelty join — no accumulated-state row is ever
-    // shuffled, per batch or ever. ensureBucketed migrates a
-    // pre-bucketing (flat) hashes/ table once on first contact.
-    StateStore.ensureBucketed(spark, hashesPath(statePath), "hb",
-      hashBucketOf(col("content_hash")), 256)
+    // shuffled, per batch or ever.
     // LAZY staging ordering invariant: `novel`'s plan re-probes the
     // LIVE hash store until its checkpoint blocks materialize, and the
     // materializing action is the `docs` stage below (an eager
@@ -111,7 +107,7 @@ object CorpusStream {
     val docs = Staging.stage(novel.drop("content_hash", "hb"))
     docs.write.mode("append").parquet(docsPath(statePath))
     StateStore.appendBucketed(novel.select("content_hash", "hb"),
-      hashesPath(statePath), "hb", 256, deltaRows = nFirsts)
+      hashesPath(statePath), "hb", deltaRows = nFirsts)
     Staging.release(firsts, novel) // fold hygiene: dead once appended
     // incremental near-dup labeling over the SCRUBBED novel docs — the
     // batch pipeline shingles scrubbed text too, so bands agree
@@ -162,7 +158,7 @@ object CorpusStream {
         spark.read.parquet(docsP).distinct().repartition(fileBudget(docsP)), docsP)
     // the hash store keeps its hb partitioning through the rewrite —
     // one file per touched bucket (bucket = the compaction granule)
-    StateStore.compactBucketed(spark, hashesPath(statePath), "hb", 256,
+    StateStore.compactBucketed(spark, hashesPath(statePath), "hb",
       targetFileBytes)
     Decontam.compactState(spark, statePath, targetFileBytes)
     ClusterMaintenance.compactState(spark, clusterPath(statePath), targetFileBytes)

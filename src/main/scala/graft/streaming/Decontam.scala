@@ -61,7 +61,7 @@ object Decontam {
     if (nh == 0L) { Staging.release(hs); return }
     val novel = StateStore.novelAgainst(p, hs, Seq("h"), "hb", col("hb"),
       256, nh)
-    StateStore.appendBucketed(novel.select("h", "hb"), p, "hb", 256,
+    StateStore.appendBucketed(novel.select("h", "hb"), p, "hb",
       deltaRows = nh)
     Staging.release(hs) // fold hygiene: the staged hashes are dead
   }
@@ -180,6 +180,6 @@ object Decontam {
     * benchmark batch) — the shared bucketed-compaction discipline. */
   def compactState(spark: SparkSession, statePath: String,
                    targetFileBytes: Long = 128L << 20): Unit =
-    StateStore.compactBucketed(spark, ngramsPath(statePath), "hb", 256,
+    StateStore.compactBucketed(spark, ngramsPath(statePath), "hb",
       targetFileBytes)
 }

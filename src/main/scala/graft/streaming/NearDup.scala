@@ -33,8 +33,7 @@ object NearDup {
   private val top = "zzzzzzzz"
 
   /** One expression: shingles → md5 fold → band structs, each carrying
-    * the doc's band-0 bucket (`b0`, kept by default-banded persisted
-    * state) and `bpre` — the buckets of all LOWER bands — for the
+    * `bpre` — the buckets of all LOWER bands — for the
     * lowest-colliding-band emission filter (`MinHash.lowestBandOnly`).
     * Evaluated once per row (single use, then exploded). The `nullif`
     * on each accumulated slice keeps parity with the batch path for
@@ -51,7 +50,7 @@ object NearDup {
     def bucket(j: Int) = MinHash.bucketOf(b, j, k => s"nullif(g.s$k, '$top')")
     val bands = (0 until b.numBands).map { j =>
       val pre = (0 until j).map(bucket).mkString("array(", ", ", ")")
-      s"named_struct('band', $j, 'bucket', ${bucket(j)}, 'b0', ${bucket(0)}, " +
+      s"named_struct('band', $j, 'bucket', ${bucket(j)}, " +
         s"'bpre', CAST($pre AS array<string>))"
     }.mkString(", ")
     s"""transform(array(aggregate(
@@ -61,18 +60,7 @@ object NearDup {
         g -> array($bands))[0]"""
   }
 
-  /** Ensure a band frame carries `bpre`: a band store persisted by a
-    * pre-banding engine version lacks the column, but the `_banding`
-    * state guard proves such state is DEFAULT-banded (2 bands), where
-    * the prefix is derivable from the legacy `b0` — empty for band 0,
-    * the band-0 bucket for band 1. */
-  private[streaming] def withBpre(bands: DataFrame): DataFrame =
-    if (bands.columns.contains("bpre")) bands
-    else bands.withColumn("bpre",
-      when(col("band") === 0, expr("CAST(array() AS array<string>)"))
-        .otherwise(array(col("b0"))))
-
-  /** Map-only (doc_id, band, bucket, b0, bpre) for a streaming OR batch
+  /** Map-only (doc_id, band, bucket, bpre) for a streaming OR batch
     * doc frame — the same rows as `MinHash.bandIndexOf` at any banding
     * (parity-tested), no aggregation state. */
   def bands(docs: DataFrame, banding: Banding = Banding.default): DataFrame =
@@ -86,19 +74,24 @@ object NearDup {
     * staging ([[explodeBands]]) — narrow work over checkpointed rows. */
   def bandsAndToks(docs: DataFrame,
                    banding: Banding = Banding.default): DataFrame =
-    graft.core.Staging.spread(docs)
+    bandStructs(graft.core.Staging.spread(docs), banding)
+
+  /** [[bandsAndToks]] without the input fan-out — the form a streaming
+    * frame takes ([[flagAgainstIndex]]). */
+  private def bandStructs(docs: DataFrame, banding: Banding): DataFrame =
+    docs
       .withColumn("toks", expr(Shingles.toksExpr))
       .withColumn("shingles", expr(Shingles.shingleSparkExpr))
       .select(col("doc_id"), expr(bandArrayExpr(banding)).as("bs"),
         array_distinct(col("toks")).as("toks"))
 
-  /** The exploded (doc_id, band, bucket, b0, bpre, toks) form of
+  /** The exploded (doc_id, band, bucket, bpre, toks) form of
     * [[bandsAndToks]]. */
   def explodeBands(bt: DataFrame): DataFrame =
     bt.select(col("doc_id"), col("toks"), explode(col("bs")).as("b"))
       .select(col("doc_id"), col("b.band").as("band"),
-        col("b.bucket").as("bucket"), col("b.b0").as("b0"),
-        col("b.bpre").as("bpre"), col("toks"))
+        col("b.bucket").as("bucket"), col("b.bpre").as("bpre"),
+        col("toks"))
 
   /** Distinct shingle-hash values of a benchmark/eval corpus, collected
     * driver-side for [[decontaminateStream]]. Bounded-scalar by design:
@@ -156,23 +149,11 @@ object NearDup {
       corpusToks: DataFrame,
       threshold: Double = 0.5,
       banding: Banding = Banding.default): DataFrame = {
-    val withBands = stream
-      .withColumn("toks", expr(Shingles.toksExpr))
-      .withColumn("shingles", expr(Shingles.shingleSparkExpr))
-      .select(col("doc_id").as("delta_id"),
-        array_distinct(col("toks")).as("toks_d"),
-        expr(bandArrayExpr(banding)).as("bs"))
-      .select(col("delta_id"), col("toks_d"), explode(col("bs")).as("b"))
-      .select(col("delta_id"), col("toks_d"), col("b.band").as("band"),
-        col("b.bucket").as("bucket"), col("b.bpre").as("bpre_d"))
-    val scored = withBands
-      .join(withBpre(index).select(col("doc_id").as("corpus_id"),
-        col("band"), col("bucket"), col("bpre").as("bpre_c")),
-        Seq("band", "bucket"))
-      .filter(MinHash.lowestBandOnly(col("bpre_d"), col("bpre_c")))
+    val scored = MinHash.deltaPairsOf(
+        explodeBands(bandStructs(stream, banding)), index, Seq("toks"))
       .join(corpusToks.select(col("doc_id").as("corpus_id"),
         col("toks").as("toks_c")), Seq("corpus_id"))
-    MinHash.jaccardScore(scored, "toks_d", "toks_c", threshold)
+    MinHash.jaccardScore(scored, "toks", "toks_c", threshold)
       .select(col("delta_id"), col("corpus_id"), col("jaccard"))
   }
 }

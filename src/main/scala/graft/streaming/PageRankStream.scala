@@ -119,14 +119,9 @@ object PageRankStream {
     * `banding` must be held fixed over a state's lifetime: band rows
     * and verified edges are meaningless under any other setting, so the
     * band store stamps a `_banding` tag BEFORE its first append lands
-    * and later folds REFUSE a mismatch (re-banding an existing graph is
-    * a batch rebuild, not a fold — see [[rebandTo]]). An UNTAGGED store
-    * that already exists was necessarily written by a pre-tag engine
-    * version whose constants were inlined — i.e. under
-    * [[Banding.default]] — so it is treated AS default: a non-default
-    * fold on it is refused (adopting it under the caller's setting
-    * would be exactly the silent mixed-banding state the tag exists to
-    * prevent), and a default fold adopts + stamps it. */
+    * and later folds REFUSE a mismatch, and an existing store with no
+    * tag (re-banding an existing graph is a batch rebuild, not a fold —
+    * see [[rebandTo]]). */
   def foldBatch(batch: DataFrame, statePath: String,
                 banding: Banding = Banding.default): Unit = {
     import banding.{simBits, numSegs, maxHamming, firstAgreeingSeg}
@@ -137,8 +132,7 @@ object PageRankStream {
 
     // the re-band marker lives on nodes/, the one store rebandTo never
     // swaps
-    StateStore.checkBanding(spark, statePath, np, bp, banding.tag,
-      Banding.default.tag)
+    StateStore.checkBanding(spark, statePath, np, bp, banding.tag)
 
     // id-only delta for the novelty probe: staging the batch TEXT here
     // would checkpoint the corpus bytes twice per fold for a probe that
@@ -147,8 +141,6 @@ object PageRankStream {
     val (delta, dn) = Staging.stageCounted(
       batch.select(col("doc_id")).withColumn("nb", docBucket(col("doc_id"))))
     if (dn == 0) { Staging.release(delta); return }
-    StateStore.ensureBucketed(spark, np, "nb", docBucket(col("doc_id")),
-      stateBuckets)
     // a fresh node store means the whole delta is novel — novelAgainst
     // returns `delta` unchanged, and re-staging an already-staged frame
     // would pay one more checkpoint + count for nothing
@@ -166,6 +158,7 @@ object PageRankStream {
         .join(broadcast(novel.select("doc_id")), Seq("doc_id")), simBits)
     val bandsDelta = Staging.stage(
       segRows(sims, banding).withColumn("bb", bandBucket))
+    StateStore.stampBanding(spark, bp, banding.tag)
 
     // candidates BEFORE the band append (else new-vs-new would double
     // through the state side), in ONE join: the left side is the pruned
@@ -174,17 +167,6 @@ object PageRankStream {
     // (da ≠ db; the new doc only ever appears on the right) and
     // new-vs-new (da < db) pair in a single pass instead of two
     // materialized joins over the same inputs
-    // layout certification happens HERE, sequentially, before any plan
-    // pins a file listing: ensureBucketed on a consistent layout is one
-    // tag read, but a migration fold REWRITES the store through a swap —
-    // which must never run concurrently with the candidate join's
-    // pinned-listing read of the same files below
-    StateStore.ensureBucketed(spark, ep, "eb", docBucket(col("doc_a")),
-      stateBuckets)
-    StateStore.ensureBucketed(spark, bp, "bb", bandBucket, stateBuckets)
-
-    StateStore.stampBanding(spark, bp, banding.tag)
-
     val newSide = bandsDelta.select(col("doc_id").as("db"), col("lang"),
       col("seg"), col("seg_val"), col("simhash").as("sim_b"))
     val deltaSide = bandsDelta
@@ -241,19 +223,18 @@ object PageRankStream {
         val novelEdges = StateStore.novelAgainst(ep, edgeDelta,
           Seq("doc_a", "doc_b"), "eb", docBucket(col("doc_a")), stateBuckets,
           deltaRows = nEdges)
-        StateStore.appendBucketed(novelEdges, ep, "eb", stateBuckets,
-          deltaRows = nEdges)
+        StateStore.appendBucketed(novelEdges, ep, "eb", deltaRows = nEdges)
       },
       {
         val novelBands = StateStore.novelAgainst(bp, bandsDelta,
           Seq("doc_id", "seg"), "bb", bandBucket, stateBuckets,
           deltaRows = nNew * numSegs)
-        StateStore.appendBucketed(novelBands, bp, "bb", stateBuckets,
+        StateStore.appendBucketed(novelBands, bp, "bb",
           deltaRows = nNew * numSegs)
       })
 
     StateStore.appendBucketed(novel.select("doc_id", "nb"), np, "nb",
-      stateBuckets, deltaRows = nNew)
+      deltaRows = nNew)
     // the fold's staged intermediates are dead once the appends land —
     // dropping their blocks here keeps a fold-heavy session's executor
     // storage flat (the re-rank that follows two folds measured ~2 s of
@@ -322,9 +303,7 @@ object PageRankStream {
         .select(col("da").as("doc_a"), col("db").as("doc_b"))
         .withColumn("eb", docBucket(col("doc_a")))
       graft.sinks.Sinks.snapshotSwap(edges.repartition(col("eb")), ep, Seq("eb"))
-      StateStore.writeModulus(spark, ep, stateBuckets)
       graft.sinks.Sinks.snapshotSwap(bands.repartition(col("bb")), bp, Seq("bb"))
-      StateStore.writeModulus(spark, bp, stateBuckets)
       Staging.release(bands)
     }
   }
@@ -332,16 +311,15 @@ object PageRankStream {
   /** Compact the append-only stores — callers wire it on a batch
     * cadence, like the cluster state's. */
   def compact(spark: SparkSession, statePath: String): Unit = {
-    StateStore.compactBucketed(spark, edgesPath(statePath), "eb", stateBuckets)
+    StateStore.compactBucketed(spark, edgesPath(statePath), "eb")
     // the band store's _banding tag and the node store's in-progress
     // _rebanding marker live on directories these swaps replace —
     // carry them across (compactBucketed's preserveTags), or a
-    // compaction reverts a tagged store to "pre-tag" and the banding
-    // guard wedges a wide stream / lets a default fold mis-adopt it
+    // compaction leaves an untagged store the banding guard refuses
     StateStore.compactBucketed(spark, bandsPath(statePath), "bb",
-      stateBuckets, preserveTags = Seq("_banding"))
+      preserveTags = Seq("_banding"))
     StateStore.compactBucketed(spark, nodesPath(statePath), "nb",
-      stateBuckets, preserveTags = Seq("_rebanding"))
+      preserveTags = Seq("_rebanding"))
   }
 
   /** Re-rank over the CURRENT edge/node state — q131's exact arithmetic

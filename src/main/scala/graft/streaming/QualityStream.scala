@@ -34,8 +34,8 @@ object QualityStream {
 
   /** Bucket modulus of the feature store (see ClusterMaintenance's
     * sizing rule: near the shuffle-partition count at test scale; a
-    * layout constant, changes rewrite via the `_buckets` marker). */
-  val stateBuckets = 32
+    * layout constant — a new value means a new statePath). */
+  private val stateBuckets = 32
 
   private def featPath(state: String) = s"$state/features"
 
@@ -46,9 +46,7 @@ object QualityStream {
     * x_len, y) on QualityModel's 1e-6 grid — into the feature store.
     * @return novel rows appended (0 for a fully-replayed batch) */
   def foldBatch(feats: DataFrame, statePath: String): Long = {
-    val spark = feats.sparkSession
     val p = featPath(statePath)
-    StateStore.ensureBucketed(spark, p, "db", docBucket, stateBuckets)
     // staged: feature extraction (a tokenization upstream) runs ONCE —
     // the novelty probe consumes the delta twice (broadcast keys + the
     // anti-join's left side); the staged count feeds the probe's
@@ -62,8 +60,7 @@ object QualityStream {
     val (novel, n) = Staging.stageCounted(StateStore.novelAgainst(
       p, delta, Seq("doc_id"), "db", col("db"), stateBuckets,
       deltaRows = dn))
-    if (n > 0) StateStore.appendBucketed(novel, p, "db", stateBuckets,
-      deltaRows = n)
+    if (n > 0) StateStore.appendBucketed(novel, p, "db", deltaRows = n)
     Staging.release(delta, novel) // fold hygiene: staged frames are dead
     n
   }

@@ -25,8 +25,7 @@ import graft.sinks.Sinks
   * register-wise max rank — published through a SINGLE atomic swap per
   * fold (they always change together, and two swaps paid two write
   * jobs + two rename rounds per fold for tables that share a staged
-  * delta; a version upgrade from the earlier two-dir layout is one
-  * read-union-swap migration).
+  * delta).
   */
 object SketchStream {
 
@@ -35,48 +34,6 @@ object SketchStream {
   // either side alone would silently diverge the driver gate
   private val kmvK = Sketches.kmvK
   private val hllP = Sketches.hllP
-
-  /** One-time read-union-swap from the pre-unification two-dir layout
-    * (`kmin/` = (source, h); `hll/` = (source, reg, mrho)) into the
-    * discriminated `sketch/` snapshot — without it, a fold on legacy
-    * state would see `sketch/` absent and silently restart the sketches
-    * from empty (an estimate regression), and `report` would throw.
-    * Crash-safe at every point: the unified snapshot publishes through
-    * the atomic swap while the legacy dirs still exist (a crash before
-    * the swap re-runs the migration whole), and the legacy dirs are
-    * retired only after `sketch/` is live (a crash between leaves
-    * orphans that the next call sweeps — `sketch/` present, deletes
-    * only). Runs on every fold/report entry but costs two existence
-    * probes on the (normal) already-migrated path. */
-  private def migrateLegacy(spark: SparkSession, statePath: String): Unit = {
-    val kp = s"$statePath/kmin"
-    val hp = s"$statePath/hll"
-    val hasK = StateStore.exists(spark, kp)
-    val hasH = StateStore.exists(spark, hp)
-    if (!hasK && !hasH) return
-    val p = sketchPath(statePath)
-    if (!StateStore.exists(spark, p)) {
-      val kRows =
-        if (hasK) Some(spark.read.parquet(kp)
-          .select(col("source"), col("h").cast("long").as("h"),
-            lit(null).cast("int").as("reg"), lit(null).cast("int").as("mrho"),
-            lit("kmin").as("kind")))
-        else None
-      val hRows =
-        if (hasH) Some(spark.read.parquet(hp)
-          .select(col("source"), lit(null).cast("long").as("h"),
-            col("reg").cast("int").as("reg"), col("mrho").cast("int").as("mrho"),
-            lit("hll").as("kind")))
-        else None
-      Sinks.snapshotSwap((kRows ++ hRows).reduce(_.unionByName(_))
-        .repartition(1), p, Seq.empty)
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq(kp, hp).foreach { d =>
-      val path = new org.apache.hadoop.fs.Path(d)
-      path.getFileSystem(conf).delete(path, true)
-    }
-  }
 
   /** The delta's (source, h) distinct hash rows — the q120 hashing path
     * applied to a batch's 3-word shingles. */
@@ -100,7 +57,6 @@ object SketchStream {
     * by construction. */
   def foldBatch(batch: DataFrame, statePath: String): Unit = {
     val spark = batch.sparkSession
-    migrateLegacy(spark, statePath)
     // staged WITH the count in one job (stageCounted): the count is the
     // empty-batch early-out, so the separate limit-1 probe job is gone
     val (delta, nDelta) = graft.core.Staging.stageCounted(deltaHashes(batch))
@@ -223,7 +179,6 @@ object SketchStream {
   /** Per-source cardinality estimates off the persisted summaries —
     * no corpus access at all. @return (source, est_kmv, est_hll) */
   def report(spark: SparkSession, statePath: String): DataFrame = {
-    migrateLegacy(spark, statePath)
     Sinks.recoverSwap(spark, sketchPath(statePath)) // direct read: heal first
     val snap = StateStore.readPacked(spark, sketchPath(statePath))
     val wn = Window.partitionBy("source").orderBy("h")

@@ -31,7 +31,7 @@ object StateStore {
     graft.sinks.Sinks.recoverSwap(spark, path)
     val f = fs(spark, path)
     val p = new Path(path)
-    // A dir holding ONLY hidden entries (_SUCCESS, _buckets, tmp tags) is
+    // A dir holding ONLY hidden entries (_SUCCESS, layout tags, tmp tags) is
     // NOT state: a partitionBy write of an empty delta creates exactly
     // that shape (the dynamic-partition writer opens files only when a
     // row arrives), and treating it as present would send every later
@@ -74,11 +74,10 @@ object StateStore {
   /** Write a tag file (see [[readTag]]) via tmp + atomic rename
     * (mirroring Sinks.writeMarkerAtomic): a crash mid-write leaves only
     * an orphaned tmp (swept by the next write), never a PARTIAL but
-    * parsable value at the tag name — e.g. a torn '3' from '32' would
-    * read as a valid (wrong) modulus and mis-certify the layout. A crash
-    * before the rename reads as ABSENT, which every caller treats as the
-    * safe (re-derive / re-migrate) direction. Tmp names keep the
-    * underscore prefix so parquet listings skip them too. */
+    * parsable value at the tag name — e.g. a torn '3:' from '3:3' would
+    * name a banding no fold uses. A crash before the rename reads as
+    * ABSENT, which every caller treats as the safe direction. Tmp names
+    * keep the underscore prefix so parquet listings skip them too. */
   def writeTag(spark: SparkSession, path: String, name: String,
                value: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -105,12 +104,16 @@ object StateStore {
     * PageRankStream): band rows mean nothing under another banding. Refuses
     * (IllegalArgumentException) while `marker` holds an interrupted
     * [[reband]], when the band store's `_banding` tag names another
-    * setting, and when the store exists UNTAGGED but `tag` is not
-    * `defaultTag` — untagged state was written by a pre-tag engine whose
-    * constants were inlined, i.e. default-banded, so only a default fold
-    * may adopt it. Passing folds call [[stampBanding]] before appending. */
+    * setting, and when the store holds data but no tag — the folds stamp
+    * it before their first append and compaction carries it, so such a
+    * store was not written by a fold. Passing folds call [[stampBanding]]
+    * before appending. */
   def checkBanding(spark: SparkSession, statePath: String, marker: String,
-                   bands: String, tag: String, defaultTag: String): Unit = {
+                   bands: String, tag: String): Unit = {
+    // heal a swap-window crash of either store first (compaction swaps
+    // both), so the tags read from the restored directories
+    graft.sinks.Sinks.recoverSwap(spark, marker)
+    val present = exists(spark, bands)
     readTag(spark, marker, "_rebanding").foreach { t =>
       require(requirement = false,
         s"state at $statePath has an interrupted re-band to $t; " +
@@ -122,19 +125,15 @@ object StateStore {
       case Some(t) =>
         require(t == tag, s"band state at $bands was built under banding " +
           s"$t; refusing to fold under $tag — $remedy")
-      case None if exists(spark, bands) =>
-        require(tag == defaultTag, s"band state at $bands predates the " +
-          s"_banding tag, so it was built under the default $defaultTag; " +
+      case None =>
+        require(!present, s"band state at $bands has no _banding tag; " +
           s"refusing to fold under $tag — $remedy")
-      case None => ()
     }
   }
 
-  /** Stamp an untagged band store — BEFORE any append (creation, pre-tag
-    * adoption, or a modulus-migration rewrite that dropped the tag), so a
-    * crash before the appends replays against a tagged store instead of
-    * one a differently-banded replay could adopt. The tag file is
-    * hidden, so a tag-only directory still reads as "no state". */
+  /** Stamp the band store's `_banding` tag BEFORE its first append, so a
+    * crash before the appends replays against a tagged store. The tag
+    * file is hidden, so a tag-only directory still reads as "no state". */
   def stampBanding(spark: SparkSession, bands: String, tag: String): Unit =
     if (readTag(spark, bands, "_banding").isEmpty)
       writeTag(spark, bands, "_banding", tag)
@@ -142,9 +141,10 @@ object StateStore {
   /** Run a re-band `rebuild` to `tag`: the `_rebanding` marker lands
     * FIRST, on `marker` (a store the rebuild never swaps), and
     * [[checkBanding]] refuses folds until the restamp that follows
-    * `rebuild` — without it, the band swap (which drops the `_banding`
-    * tag with the directory it replaces) would leave state that reads as
-    * adoptable pre-tag state. Any crash leaves the marker; re-run. */
+    * `rebuild` — the band swap drops the `_banding` tag with the
+    * directory it replaces, so between the swap and the restamp the
+    * store is untagged and holds rows of either banding. Any crash
+    * leaves the marker; re-run. */
   def reband(spark: SparkSession, marker: String, bands: String,
              tag: String)(rebuild: => Unit): Unit = {
     writeTag(spark, marker, "_rebanding", tag)
@@ -152,24 +152,6 @@ object StateStore {
     writeTag(spark, bands, "_banding", tag)
     deleteTag(spark, marker, "_rebanding")
   }
-
-  /** The modulus recorded when the layout was written (the `_buckets`
-    * tag), if any. The marker is the AUTHORITATIVE record — dir-value
-    * inference cannot detect a DOUBLING (old modulus k → new 2k leaves
-    * every dir value below 2k while rows hashed to v+k still sit in dir
-    * v, which a pruned probe would silently miss), so any bucket-count
-    * change is detected by comparison against this record. A torn or
-    * unparseable marker reads as absent — callers then fall back to the
-    * legacy dir-value inference, which never misclassifies a consistent
-    * layout as stale. */
-  def readModulus(spark: SparkSession, path: String): Option[Int] =
-    readTag(spark, path, "_buckets")
-      .flatMap(s => scala.util.Try(s.toInt).toOption)
-
-  /** Record the layout's modulus. A crash mid-write leaves a torn marker
-    * that reads as absent (safe: inference path). */
-  def writeModulus(spark: SparkSession, path: String, buckets: Int): Unit =
-    writeTag(spark, path, "_buckets", buckets.toString)
 
   /** Exact row count of a parquet layout from file FOOTERS, on the
     * driver — no Spark job. The per-fold sizing decisions (bulk-ingest
@@ -197,50 +179,6 @@ object StateStore {
     }.sum
   }
 
-  /** One-time layout migration: state written by a pre-bucketing engine
-    * version has no bucket column — derive it and rewrite through the
-    * atomic snapshot swap (∝ state, once) so the first post-upgrade
-    * fold finds the layout it probes.
-    *
-    * Modulus staleness is decided by the persisted `_buckets` marker
-    * when present: ANY mismatch (halving, doubling, non-power-of-two)
-    * triggers the rewrite, and a match is the per-fold fast path — one
-    * small-file read, no directory listing. A marker-less bucketed
-    * layout (written by a pre-marker engine version) falls back to
-    * dir-value inference — a dir value ≥ the current modulus proves
-    * staleness — which detects DECREASES only; the consistent layout it
-    * adopts is then stamped with the marker so every later change is
-    * caught by comparison. */
-  def ensureBucketed(spark: SparkSession, path: String, bucketCol: String,
-                     bucketOf: Column, buckets: Int = 0): Unit =
-    if (exists(spark, path)) {
-      def rewrite(dropFirst: Boolean): Unit = {
-        val base = spark.read.parquet(path)
-        graft.sinks.Sinks.snapshotSwap(
-          (if (dropFirst) base.drop(bucketCol) else base)
-            .withColumn(bucketCol, bucketOf)
-            .repartition(col(bucketCol)),
-          path, Seq(bucketCol))
-        if (buckets > 0) writeModulus(spark, path, buckets)
-      }
-      readModulus(spark, path).filter(_ => buckets > 0) match {
-        case Some(m) if m == buckets => () // fast path: marker agrees
-        case Some(_) => rewrite(dropFirst = true)
-        case None =>
-          val bucketed = isBucketed(spark, path, bucketCol)
-          val staleModulus = buckets > 0 && bucketed &&
-            fs(spark, path).listStatus(new Path(path)).exists { st =>
-              val n = st.getPath.getName
-              n.startsWith(bucketCol + "=") &&
-                scala.util.Try(n.stripPrefix(bucketCol + "=").toInt)
-                  .toOption.exists(_ >= buckets)
-            }
-          if (staleModulus) rewrite(dropFirst = true)
-          else if (!bucketed) rewrite(dropFirst = false)
-          else if (buckets > 0) writeModulus(spark, path, buckets)
-      }
-    }
-
   /** Delta row count below which a bucketed append writes through a
     * FIXED small task count (8, hash-partitioned by the bucket column)
     * instead of the full per-bucket repartition: the layout is identical
@@ -254,43 +192,30 @@ object StateStore {
   private val smallDeltaAppendRows = 1L << 18
   private val smallDeltaAppendTasks = 8
 
-  /** Append a delta into the bucketed layout, stamping the modulus
-    * marker when the write CREATES the layout — so a later
-    * [[ensureBucketed]] can detect any bucket-count change by
-    * comparison. Pass `deltaRows` when the caller already has the count
-    * (most folds do — it feeds their novelty-probe hints): small deltas
-    * then take the fixed-width write path above; unknown (-1) or large
-    * deltas repartition by bucket so each bucket is one task's one
-    * file. */
+  /** Append a delta into the bucketed layout. Pass `deltaRows` when the
+    * caller already has the count (most folds do — it feeds their
+    * novelty-probe hints): small deltas then take the fixed-width write
+    * path above; unknown (-1) or large deltas repartition by bucket so
+    * each bucket is one task's one file. The bucket count is a layout
+    * constant of the caller's state: a new value means a new state
+    * path. */
   def appendBucketed(delta: DataFrame, path: String, bucketCol: String,
-                     buckets: Int, deltaRows: Long = -1L): Unit = {
-    val spark = delta.sparkSession
+                     deltaRows: Long = -1L): Unit = {
     // An EMPTY delta must not touch the layout: partitionBy writes no
-    // files for zero rows but still creates the dir + _SUCCESS (+ the
-    // modulus stamp below), a shape [[exists]] must then reject — so
-    // skip the write outright. Known counts (most folds) skip free;
-    // when the count is unknown the isEmpty probe is paid only on the
-    // fold that would CREATE the layout (appending nothing to an
-    // existing layout is already harmless).
+    // files for zero rows but still creates the dir + _SUCCESS, a shape
+    // [[exists]] must then reject — so skip the write outright. Known
+    // counts (most folds) skip free; when the count is unknown the
+    // isEmpty probe is paid only on the fold that would CREATE the
+    // layout (appending nothing to an existing layout is already
+    // harmless).
     if (deltaRows == 0L) return
-    val createsLayout0 = !exists(spark, path)
-    if (deltaRows < 0L && createsLayout0 && delta.isEmpty) return
-    // stamp ONLY when this write CREATES the layout: a pre-existing
-    // marker-less layout may be a legacy one written under a DIFFERENT
-    // modulus (a doubling, which dir-value inference cannot detect) —
-    // stamping it here would certify the current modulus forever and
-    // suppress the ensureBucketed rewrite that would fix it. A crash
-    // between the write and the stamp leaves a marker-less layout that
-    // the next ensureBucketed adjudicates by inference and restamps.
-    val createsLayout = createsLayout0
+    if (deltaRows < 0L && !exists(delta.sparkSession, path) && delta.isEmpty)
+      return
     val arranged =
       if (deltaRows >= 0 && deltaRows <= smallDeltaAppendRows)
         delta.repartition(smallDeltaAppendTasks, col(bucketCol))
       else delta.repartition(col(bucketCol))
     arranged.write.partitionBy(bucketCol).mode("append").parquet(path)
-    // buckets == 0 means the partition key is NOT a hash modulus (e.g.
-    // AnnIndex's centroid cells) — there is no layout contract to stamp
-    if (buckets > 0 && createsLayout) writeModulus(spark, path, buckets)
   }
 
   /** 256-way partition key of a hex-hash state row: first two hex
@@ -303,22 +228,18 @@ object StateStore {
 
   /** Compact an append-only bucketed state table: exact-row dedup
     * (duplicates arise only from at-least-once replay), ⌈bytes/target⌉
-    * files repartitioned by the bucket column, the atomic snapshot
-    * swap, and the modulus marker RE-STAMPED — the swap replaced the
-    * directory that carried it, and a site that forgets the restamp
-    * silently reverts the layout to marker-less inference. One
-    * definition so it can't be forgotten per caller.
+    * files repartitioned by the bucket column, and the atomic snapshot
+    * swap.
     *
-    * `preserveTags` names the caller's OTHER layout tags (`_banding`,
-    * an in-progress `_rebanding` marker) to carry across the swap the
-    * same way: their values are read BEFORE the directory is replaced
-    * and restamped after. Without this a compaction silently reverts a
-    * tagged store to untagged — which the banding guards then read as
-    * pre-tag state, wedging a non-default stream and letting a default
-    * fold adopt (and mis-stamp) a non-default store. Tags absent before
-    * the swap stay absent. */
+    * `preserveTags` names the caller's layout tags (`_banding`, an
+    * in-progress `_rebanding` marker) to carry across the swap: their
+    * values are read BEFORE the directory is replaced and written into
+    * the staged directory before it goes live, so the swap publishes
+    * data and tags together. Without this a compaction silently reverts
+    * a tagged store to untagged, which the banding guard refuses. Tags
+    * absent before the swap stay absent. */
   def compactBucketed(spark: SparkSession, path: String, bucketCol: String,
-                      buckets: Int, targetFileBytes: Long = 128L << 20,
+                      targetFileBytes: Long = 128L << 20,
                       preserveTags: Seq[String] = Nil): Unit =
     if (exists(spark, path)) {
       val p = new Path(path)
@@ -328,10 +249,8 @@ object StateStore {
       val kept = preserveTags.flatMap(t => readTag(spark, path, t).map((t, _)))
       graft.sinks.Sinks.snapshotSwap(
         spark.read.parquet(path).distinct().repartition(files, col(bucketCol)),
-        path, Seq(bucketCol))
-      // buckets == 0: non-modulus partition key (see appendBucketed)
-      if (buckets > 0) writeModulus(spark, path, buckets)
-      kept.foreach { case (t, v) => writeTag(spark, path, t, v) }
+        path, Seq(bucketCol),
+        staged = tmp => kept.foreach { case (t, v) => writeTag(spark, tmp, t, v) })
     }
 
   /** On-disk bytes per scan task for state-table reads ([[readPacked]]).

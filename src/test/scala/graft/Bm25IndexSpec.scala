@@ -64,7 +64,7 @@ class Bm25IndexSpec extends SparkSpec {
     assert(topkOf(state) == before)
   }
 
-  test("the batch-id ledger is capped to the replay horizon; pre-seq snapshots migrate") {
+  test("the batch-id ledger is capped to the replay horizon") {
     val state = java.nio.file.Files.createTempDirectory("bm_horizon").toString
     Bm25Index.foldBatch(docs.filter(col("doc_id") < 250), "b0", state)
     Bm25Index.foldBatch(docs.filter(col("doc_id") >= 250), "b1", state)
@@ -101,25 +101,6 @@ class Bm25IndexSpec extends SparkSpec {
     // inside the horizon, replay is still absorbed
     Bm25Index.foldBatch(docs.filter(col("doc_id") < 250), "b2", state)
     assert(snap.filter(col("kind") === "batch").count() == 64)
-
-    // a pre-`seq` snapshot (earlier engine version) folds clean: its
-    // ledger rows read as seq 0 and the new fold takes seq 1
-    val legacy = java.nio.file.Files.createTempDirectory("bm_preseq").toString
-    Bm25Index.foldBatch(docs.filter(col("doc_id") < 250), "b0", legacy)
-    val noSeq = graft.core.Staging.stage(
-      spark.read.parquet(s"$legacy/dfsum").drop("seq"))
-    graft.sinks.Sinks.snapshotSwap(noSeq.repartition(1), s"$legacy/dfsum",
-      Seq.empty)
-    Bm25Index.foldBatch(docs.filter(col("doc_id") >= 250), "b1", legacy)
-    assert(spark.read.parquet(s"$legacy/dfsum")
-      .filter(col("kind") === "batch").select("bid", "seq")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
-      Set(("b0", 0L), ("b1", 1L)))
-    // and the migrated state still answers the two-fold retrieval
-    val ref = java.nio.file.Files.createTempDirectory("bm_preseq_ref").toString
-    Bm25Index.foldBatch(docs.filter(col("doc_id") < 250), "b0", ref)
-    Bm25Index.foldBatch(docs.filter(col("doc_id") >= 250), "b1", ref)
-    assert(topkOf(legacy) == topkOf(ref))
   }
 
   test("a vocabulary past the shard target swaps as multiple files, answering identically") {
@@ -131,11 +112,8 @@ class Bm25IndexSpec extends SparkSpec {
     // bytes exceed the target, so its swap must shard by term hash —
     // same atomic publish, >1 data file
     val state = java.nio.file.Files.createTempDirectory("bm_shard").toString
-    spark.conf.set("spark.graft.bm25.dfsumShardBytes", "1024")
-    try {
-      Bm25Index.foldBatch(docs.filter(col("doc_id") < 250), "b0", state)
-      Bm25Index.foldBatch(docs.filter(col("doc_id") >= 250), "b1", state)
-    } finally spark.conf.unset("spark.graft.bm25.dfsumShardBytes")
+    Bm25Index.foldBatch(docs.filter(col("doc_id") < 250), "b0", state, 1024L)
+    Bm25Index.foldBatch(docs.filter(col("doc_id") >= 250), "b1", state, 1024L)
     val files = new java.io.File(s"$state/dfsum").listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     assert(files > 1, s"snapshot did not shard: $files file(s)")

@@ -20,9 +20,9 @@ class NearDupStreamSpec extends SparkSpec {
   test("map-only fold bands are bit-identical to the batch band index") {
     val docs = Tables.load(spark, sf, "documents")
     val batch = MinHash.bandIndexOf(docs)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getSeq[String](3).toList)).toSet
     val fold = NearDup.bands(docs)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getSeq[String](3).toList)).toSet
     assert(fold === batch)
   }
 
@@ -35,9 +35,9 @@ class NearDupStreamSpec extends SparkSpec {
     val docs = Seq((1L, null.asInstanceOf[String]), (2L, "spark rows fast table"))
       .toDF("doc_id", "text")
     val batch = MinHash.bandIndexOf(docs)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getSeq[String](3).toList)).toSet
     val fold = NearDup.bands(docs)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3))).toSet
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getSeq[String](3).toList)).toSet
     assert(fold === batch)
     assert(batch.exists(_._1 == 1L), "the null-text doc must still produce bands")
   }
@@ -50,24 +50,24 @@ class NearDupStreamSpec extends SparkSpec {
       .unionByName(Seq((900001L, null.asInstanceOf[String]))
         .toDF("doc_id", "text"))
     def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "band", "bucket", "b0", "bpre")
+      .select("doc_id", "band", "bucket", "bpre")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2),
-        r.getString(3), r.getSeq[String](4).toList)).toSet
-    // the default banding too: its parity then covers all five columns
+        r.getSeq[String](3).toList)).toSet
+    // the default banding too: its parity then covers all four columns
     Seq(Banding.wide, Banding.default).foreach { banding =>
       val fold = rows(NearDup.bands(docs, banding))
       val batch = rows(MinHash.bandIndexOf(docs, banding))
       assert(fold === batch, s"fold != batch at ${banding.tag}")
       assert(fold.exists(_._1 == 900001L),
         s"the null-text doc must still produce bands at ${banding.tag}")
-      // shape sanity: every doc carries numBands rows, band j's prefix
-      // holds j buckets, and b0 is always the band-0 bucket
+      // shape sanity: every doc carries numBands rows, and band j's
+      // prefix holds exactly the buckets of bands 0 until j
       assert(fold.count(_._2 == banding.numBands - 1) ==
         fold.count(_._2 == 0), "band fan-out must be uniform")
-      assert(fold.forall(r => r._5.size == r._2),
+      val bucketsOf = fold.groupBy(_._1).map { case (id, rs) =>
+        id -> rs.toSeq.sortBy(_._2).map(_._3) }
+      assert(fold.forall(r => r._4 == bucketsOf(r._1).take(r._2)),
         "bpre must hold exactly the lower bands' buckets")
-      val b0s = fold.filter(_._2 == 0).map(r => (r._1, r._3)).toMap
-      assert(fold.forall(r => r._4 == b0s(r._1)), "b0 must be band 0's bucket")
     }
   }
 

@@ -161,25 +161,22 @@ class PageRankStreamSpec extends SparkSpec {
       s"unexpected refusal message: ${refused.getMessage}")
   }
 
-  test("an untagged existing band store is treated as default-banded: " +
-      "a wide fold is refused, a default fold adopts and stamps it") {
+  test("an untagged existing band store is refused under every banding") {
     val state = java.nio.file.Files.createTempDirectory("prs_pretag").toString
     PageRankStream.foldBatch(docs.filter(col("doc_id") < 250), state)
-    // simulate pre-tag state (written by an engine version with the
-    // constants inlined): drop the stamp the fold just wrote
+    // a fold stamps the tag before its first append and compaction
+    // carries it, so a store without one was not written by a fold:
+    // drop the stamp the fold just wrote
     graft.streaming.StateStore.deleteTag(spark, s"$state/bands", "_banding")
-    val refused = intercept[IllegalArgumentException] {
-      PageRankStream.foldBatch(docs.filter(col("doc_id") >= 250), state,
-        PageRankStream.Banding.wide)
-    }
-    assert(refused.getMessage.contains("predates the _banding tag"),
-      s"unexpected refusal message: ${refused.getMessage}")
-    // a default fold is the legal adoption path — and it restamps
-    PageRankStream.foldBatch(docs.filter(col("doc_id") >= 250), state)
-    assert(graft.streaming.StateStore.readTag(spark, s"$state/bands",
-      "_banding").contains(PageRankStream.Banding.default.tag))
-    assert(streamedRanks(state) == batchRanks,
-      "adopted pre-tag state diverged from the batch ranks")
+    Seq(PageRankStream.Banding.default, PageRankStream.Banding.wide)
+      .foreach { banding =>
+        val refused = intercept[IllegalArgumentException] {
+          PageRankStream.foldBatch(docs.filter(col("doc_id") >= 250), state,
+            banding)
+        }
+        assert(refused.getMessage.contains("has no _banding tag"),
+          s"unexpected refusal message at ${banding.tag}: ${refused.getMessage}")
+      }
   }
 
   test("rebandTo rebuilds the graph under the new banding; folds resume; " +

@@ -64,15 +64,12 @@ class QualityStreamSpec extends SparkSpec {
       === batchSteps(3).map(_.w))
   }
 
-  test("the feature store keeps the bucketed layout and its modulus marker") {
+  test("the feature store keeps the bucketed layout") {
     val state = tmp()
     QualityStream.foldBatch(df(), state)
     val dirs = new java.io.File(s"$state/features").listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("db=")),
       s"expected db= partition dirs, got ${dirs.mkString(",")}")
-    assert(graft.streaming.StateStore
-      .readModulus(spark, s"$state/features")
-      .contains(QualityStream.stateBuckets))
   }
 }

@@ -101,35 +101,6 @@ class SketchStreamSpec extends SparkSpec {
     assert(bids == Set("a", "b"), s"ledger lost history: $bids")
   }
 
-  test("legacy two-dir layout migrates once (read-union-swap), then folds/reports as if unified") {
-    // build the reference state with the CURRENT engine...
-    val ref = java.nio.file.Files.createTempDirectory("sk_ref").toString
-    SketchStream.foldBatch(docs.filter(col("doc_id") < 250), ref)
-    // ...and hand-write the same tiers in the PRE-UNIFICATION layout:
-    // kmin/ = (source, h), hll/ = (source, reg, mrho), no sketch/
-    val legacy = java.nio.file.Files.createTempDirectory("sk_legacy").toString
-    val snap = spark.read.parquet(s"$ref/sketch")
-    snap.filter(col("kind") === "kmin").select("source", "h")
-      .repartition(1).write.parquet(s"$legacy/kmin")
-    snap.filter(col("kind") === "hll").select("source", "reg", "mrho")
-      .repartition(1).write.parquet(s"$legacy/hll")
-
-    // report() migrates in place and answers the unified state's report
-    assert(reportOf(legacy) == reportOf(ref), "migrated report != unified")
-    val fs = new java.io.File(legacy)
-    assert(new java.io.File(fs, "sketch").exists, "sketch/ not created")
-    assert(!new java.io.File(fs, "kmin").exists, "legacy kmin/ not retired")
-    assert(!new java.io.File(fs, "hll").exists, "legacy hll/ not retired")
-
-    // a fold on the migrated state continues the SAME sketches: folding
-    // the rest lands on the from-scratch two-fold end state exactly
-    SketchStream.foldBatch(docs.filter(col("doc_id") >= 250), legacy)
-    val whole = java.nio.file.Files.createTempDirectory("sk_mig_whole").toString
-    SketchStream.foldBatch(docs, whole)
-    assert(reportOf(legacy) == reportOf(whole),
-      "post-migration fold diverged from the unified build")
-  }
-
   test("estimates track the growing corpus monotonically in coverage") {
     val state = java.nio.file.Files.createTempDirectory("sk_grow").toString
     SketchStream.foldBatch(docs.filter(col("doc_id") < 100), state)

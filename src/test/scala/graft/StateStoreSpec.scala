@@ -4,44 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.streaming.CorpusStream
-
-/** The unbucketed->bucketed state migration: state written by a
-  * pre-bucketing engine version (flat, no bucket column) must fold
-  * cleanly after an upgrade — ensureBucketed rewrites it once, and the
-  * dedup semantics carry across the layout change. */
+/** The bucketed-state helpers: packed reads keep partition pruning,
+  * and an empty delta never creates a layout a later reader would try
+  * to infer a schema from. */
 class StateStoreSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
-
-  test("a flat pre-upgrade hash store migrates on first fold; dedup is unbroken") {
-    val docs = Tables.load(spark, sf, "documents")
-    val state = Files.createTempDirectory("migrate-state").toString
-    val first = docs.filter(col("doc_id") < 250)
-
-    CorpusStream.foldBatch(first, state)
-    val docsAfterFirst = spark.read.parquet(s"$state/docs").count()
-
-    // simulate the OLD layout: strip the bucket column and partitioning
-    val flat = spark.read.parquet(s"$state/hashes")
-      .select("content_hash").collect().map(_.getString(0)).toSeq
-    import spark.implicits._
-    graft.sinks.Sinks.snapshotSwap(flat.toDF("content_hash"), s"$state/hashes")
-    assert(!spark.read.parquet(s"$state/hashes").columns.contains("hb"))
-
-    // replay the same batch against the flat store: the fold must
-    // migrate the layout and still drop every already-seen doc
-    CorpusStream.foldBatch(first, state)
-    assert(spark.read.parquet(s"$state/hashes").columns.contains("hb"),
-      "the fold must have rewritten the store bucketed")
-    assert(spark.read.parquet(s"$state/docs").count() === docsAfterFirst,
-      "dedup must hold across the layout migration — no re-admitted docs")
-
-    // and a genuinely new batch still lands
-    CorpusStream.foldBatch(docs.filter(col("doc_id") >= 250), state)
-    assert(spark.read.parquet(s"$state/docs").count() > docsAfterFirst)
-  }
 
   test("packed state reads keep partition pruning: the touched-bucket " +
       "filter reaches the scan through the coalesce") {
@@ -65,38 +31,6 @@ class StateStoreSpec extends SparkSpec {
       s"bucket filter did not reach the scan:\n${pruned.queryExecution}")
   }
 
-  test("a bucket-count DOUBLING is detected via the modulus marker and rewritten") {
-    import graft.streaming.StateStore
-    import spark.implicits._
-    // dir-value inference is blind to a doubling: with old modulus 4 and
-    // new modulus 8, every dir value is below 8, yet a key with
-    // hash mod 8 = v+4 sits in dir v — a pruned probe would read the
-    // wrong bucket and re-admit seen keys. The persisted marker is what
-    // catches it.
-    val p = Files.createTempDirectory("modulus-state").toString + "/keys"
-    def bucketOf(m: Int) = pmod(xxhash64(col("k")), lit(m)).cast("int")
-    val keys = (0L until 64L).toDF("k")
-    StateStore.appendBucketed(keys.withColumn("b", bucketOf(4)), p, "b", 4)
-    assert(StateStore.readModulus(spark, p) === Some(4))
-
-    StateStore.ensureBucketed(spark, p, "b", bucketOf(8), 8)
-    assert(StateStore.readModulus(spark, p) === Some(8),
-      "the mismatching marker must trigger a rewrite and be re-stamped")
-    val rows = spark.read.parquet(p)
-    assert(rows.count() === 64)
-    assert(rows.filter(col("b") =!= bucketOf(8)).count() === 0,
-      "every row must sit in the dir its new-modulus hash names")
-    // the probe that used to silently miss: every stored key must now be
-    // recognized as seen under the new modulus
-    val delta = keys.withColumn("b", bucketOf(8))
-    val novel = StateStore.novelAgainst(p, delta, Seq("k"), "b", col("b"), 8)
-    assert(novel.count() === 0,
-      "a pruned probe after the rewrite must see every stored key")
-    // and a match is a no-op fast path (marker agrees — nothing rewritten)
-    StateStore.ensureBucketed(spark, p, "b", bucketOf(8), 8)
-    assert(spark.read.parquet(p).count() === 64)
-  }
-
   test("an empty delta never creates (or wedges) a state layout") {
     import graft.streaming.StateStore
     import spark.implicits._
@@ -107,31 +41,33 @@ class StateStoreSpec extends SparkSpec {
 
     // known-empty (deltaRows == 0): skipped outright
     val p1 = s"$base/known"
-    StateStore.appendBucketed(none, p1, "b", 4, deltaRows = 0L)
+    StateStore.appendBucketed(none, p1, "b", deltaRows = 0L)
     assert(!StateStore.exists(spark, p1),
       "a known-empty append must not create the layout")
 
     // unknown count (-1) on the CREATING fold: probed and skipped
     val p2 = s"$base/unknown"
-    StateStore.appendBucketed(none, p2, "b", 4)
+    StateStore.appendBucketed(none, p2, "b")
     assert(!StateStore.exists(spark, p2),
       "an unknown-count empty append must not create the layout")
 
     // a layout wedged by a pre-fix engine (dir + _SUCCESS + tag, no data
-    // files) reads as ABSENT, so the state self-heals on the next fold
+    // files — the tag-only dir stampBanding leaves before a first append
+    // has the same shape) reads as ABSENT, so the state self-heals on
+    // the next fold
     val p3 = s"$base/wedged"
     val f = new org.apache.hadoop.fs.Path(p3)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.mkdirs(new org.apache.hadoop.fs.Path(p3))
     f.create(new org.apache.hadoop.fs.Path(p3, "_SUCCESS"), true).close()
-    StateStore.writeModulus(spark, p3, 4)
+    StateStore.writeTag(spark, p3, "_banding", "2:2")
     assert(!StateStore.exists(spark, p3),
       "a data-file-less dir must read as absent")
     // novelAgainst on the wedged layout must not try to infer a schema
     assert(StateStore.novelAgainst(p3, some, Seq("k"), "b", col("b"), 4)
       .count() === 16)
     // and a real append then lands and reads normally
-    StateStore.appendBucketed(some, p3, "b", 4, deltaRows = 16L)
+    StateStore.appendBucketed(some, p3, "b", deltaRows = 16L)
     assert(StateStore.exists(spark, p3))
     assert(spark.read.parquet(p3).count() === 16)
   }

@@ -218,39 +218,44 @@ class StreamingSpec extends SparkSpec {
     assert(afterCompact === batch, "a fold against compacted state is unchanged")
   }
 
-  test("wide-banded cluster folds: split == bulk, mismatched fold refused, " +
-      "untagged state adoptable only by a default fold") {
+  test("cluster folds at the default and wide bandings: split == bulk, " +
+      "mismatched fold refused, untagged state refused") {
     import graft.llm.MinHash.Banding
     import graft.streaming.ClusterMaintenance
     val wide = Banding.wide
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
-
-    // split folds == one bulk fold at the same wide setting: fold 2's
-    // delta-vs-corpus probe reads fold 1's PERSISTED wide rows (bpre
-    // column included), so this pins the non-default state schema
-    // round-trip, the general lowest-colliding-band rule on both the
-    // dd and dc paths, and the label fold — end to end
-    val split = Files.createTempDirectory("cmw-split").toString
-    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), split,
-      banding = wide)
-    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), split,
-      banding = wide)
-    val bulk = Files.createTempDirectory("cmw-bulk").toString
-    ClusterMaintenance.foldBatch(docs, bulk, banding = wide)
     def labelsOf(s: String) = ClusterMaintenance.labels(spark, s)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val splitLabels = labelsOf(split)
-    assert(splitLabels.nonEmpty, "fixture must contain wide near-dup pairs")
-    assert(splitLabels === labelsOf(bulk),
-      "split wide folds != one bulk wide fold")
-    assert(graft.streaming.StateStore.readTag(spark, s"$split/bands",
-      "_banding").contains(wide.tag), "wide state must be stamped")
-    assert(spark.read.parquet(s"$split/bands").columns.contains("bpre"),
-      "a non-default store must persist the band-prefix column")
+
+    // split folds == one bulk fold at the same setting: fold 2's
+    // delta-vs-corpus probe reads fold 1's PERSISTED rows (bpre column
+    // included — every store persists it, the default's too), so this
+    // pins the state schema round-trip, the lowest-colliding-band rule
+    // on both the dd and dc paths, and the label fold — end to end
+    val splits = Seq(Banding.default, wide).map { banding =>
+      val split = Files.createTempDirectory("cmw-split").toString
+      ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), split,
+        banding = banding)
+      ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), split,
+        banding = banding)
+      val bulk = Files.createTempDirectory("cmw-bulk").toString
+      ClusterMaintenance.foldBatch(docs, bulk, banding = banding)
+      val splitLabels = labelsOf(split)
+      assert(splitLabels.nonEmpty,
+        s"fixture must contain near-dup pairs at ${banding.tag}")
+      assert(splitLabels === labelsOf(bulk),
+        s"split folds != one bulk fold at ${banding.tag}")
+      assert(graft.streaming.StateStore.readTag(spark, s"$split/bands",
+        "_banding").contains(banding.tag), s"state must be stamped ${banding.tag}")
+      assert(spark.read.parquet(s"$split/bands").columns.contains("bpre"),
+        s"the ${banding.tag} store must persist the band-prefix column")
+      (split, bulk)
+    }
+    val (split, bulk) = splits.last
 
     // exactly-once emission under >2 bands: no candidate pair may
-    // surface from two bands — the lowest-colliding-band rule (the
-    // 2-band b0 rule's generalization) must pick exactly one
+    // surface from two bands — the lowest-colliding-band rule must pick
+    // exactly one
     val bands = spark.read.parquet(s"$bulk/bands")
     val dupEmissions = bands.select(col("doc_id").as("a"), col("band"),
         col("bucket"), col("bpre").as("pa"))
@@ -269,24 +274,19 @@ class StreamingSpec extends SparkSpec {
     assert(refused.getMessage.contains("refusing to fold"),
       s"unexpected refusal message: ${refused.getMessage}")
 
-    // untagged existing state (pre-tag engine) = default-banded: a wide
-    // fold is refused, a default fold adopts and restamps
-    val legacy = Files.createTempDirectory("cmw-legacy").toString
-    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), legacy)
-    graft.streaming.StateStore.deleteTag(spark, s"$legacy/bands", "_banding")
-    val blocked = intercept[IllegalArgumentException] {
-      ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), legacy,
-        banding = wide)
+    // an existing store with no _banding tag was not written by a fold
+    // (each fold stamps before its first append, compaction carries the
+    // tag): refused under every banding, the default included
+    val untagged = splits.head._1
+    graft.streaming.StateStore.deleteTag(spark, s"$untagged/bands", "_banding")
+    Seq(Banding.default, wide).foreach { banding =>
+      val blocked = intercept[IllegalArgumentException] {
+        ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 10), untagged,
+          banding = banding)
+      }
+      assert(blocked.getMessage.contains("has no _banding tag"),
+        s"unexpected message at ${banding.tag}: ${blocked.getMessage}")
     }
-    assert(blocked.getMessage.contains("predates the _banding tag"),
-      s"unexpected message: ${blocked.getMessage}")
-    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), legacy)
-    assert(graft.streaming.StateStore.readTag(spark, s"$legacy/bands",
-      "_banding").contains(Banding.default.tag))
-    assert(labelsOf(legacy) === SparkEntry.queries("q82_incremental_clusters")(
-      spark, "/root/testdata/sf0.01")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
-      "adopted legacy state diverged from the oracle labeling")
   }
 
   test("rebandTo rebuilds the clustering under the new banding; folds " +
@@ -445,6 +445,54 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed === batch,
       "the absorbed labeling must equal the full batch re-cluster")
+  }
+
+  test("switching back to rename mode absorbs and retires the marker-era labeling") {
+    import graft.streaming.ClusterMaintenance
+    // the reverse move: marker-mode folds publish through a version
+    // pointer, which the reader prefers over the partitioned layout —
+    // the first rename fold must move that labeling into the layout and
+    // retire the pointer, or the reader would serve it forever
+    val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
+    val state = Files.createTempDirectory("cm-unswitch-state").toString
+    val lp = s"$state/labels"
+    spark.conf.set("spark.graft.swap", "marker")
+    try ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), state)
+    finally spark.conf.unset("spark.graft.swap")
+    assert(graft.sinks.Sinks.versionPointerExists(spark, lp),
+      "precondition: the marker fold publishes through the version pointer")
+    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), state)
+    assert(!graft.sinks.Sinks.versionPointerExists(spark, lp),
+      "the marker-era pointer must be retired")
+    assert(graft.streaming.StateStore.isBucketed(spark, lp, "ib"))
+    val streamed = ClusterMaintenance.labels(spark, state)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val batch = graft.operators.Components
+      .connected(graft.llm.MinHash.jaccardEdgesOf(docs), "doc_a", "doc_b")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(streamed === batch,
+      "the absorbed labeling must equal the full batch re-cluster")
+  }
+
+  test("a crash inside a state compaction's rename window heals on the next fold") {
+    import graft.streaming.ClusterMaintenance
+    val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
+    def labelsOf(s: String) = ClusterMaintenance.labels(spark, s)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val clean = Files.createTempDirectory("cm-heal-ref").toString
+    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), clean)
+    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), clean)
+    val state = Files.createTempDirectory("cm-heal").toString
+    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") < 250), state)
+    // the swap's rename window in both compacted stores: the live dir
+    // retired to __old, the compacted copy not yet promoted
+    Seq("bands", "toks").foreach { d =>
+      assert(new java.io.File(s"$state/$d")
+        .renameTo(new java.io.File(s"$state/${d}__old")))
+    }
+    ClusterMaintenance.foldBatch(docs.filter(col("doc_id") >= 250), state)
+    assert(labelsOf(state) === labelsOf(clean),
+      "a fold after the crash must see the restored stores")
   }
 
   test("sink-scheduled compaction keeps the state file count bounded") {
