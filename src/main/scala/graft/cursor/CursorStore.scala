@@ -4,7 +4,9 @@ import java.sql.Timestamp
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
+import graft.core.FooterSchema
 import graft.functions.Retry
 
 /** Watermark (cursor) store — the incremental-sync checkpoint every
@@ -20,6 +22,11 @@ import graft.functions.Retry
   * Scale note: the table grows one row per run per object — trivially
   * small forever. The `latest` aggregate is the single permissible
   * driver-side scalar in the engine (everything else stays distributed).
+  *
+  * Cost: `latest` takes the table's schema from one footer read on the
+  * driver (graft.core.FooterSchema) instead of an inference job, so it
+  * runs only the aggregate's jobs; `advance` writes its one row in one
+  * job, one file.
   */
 final class CursorStore(spark: SparkSession, path: String) {
 
@@ -33,13 +40,21 @@ final class CursorStore(spark: SparkSession, path: String) {
     * this is a DRIVER-side read, outside Spark's task-retry umbrella, and
     * a transient storage error here would fail the whole run before any
     * work started (the reference retries its warehouse/GCS reads the same
-    * way, ref: config/gcs/gcs.py:204-229).
+    * way, ref: config/gcs/gcs.py:204-229). A store whose `cursor_date`
+    * is not a TIMESTAMP fails, whichever object is asked for: an
+    * aggregate over the wrong type would read as "no cursor yet" for an
+    * object with no rows and start a full re-sync.
     */
   def latest(obj: String): Option[Timestamp] =
     Retry.withBackoff(maxRetries = 3, baseDelayMs = 200) {
       if (!exists) None
       else {
-        val row = spark.read.parquet(path)
+        val schema = FooterSchema.read(spark, path)
+        val found = schema.find(_.name == "cursor_date").map(_.dataType)
+        if (!found.contains(TimestampType))
+          throw new IllegalStateException(s"cursor store '$path': cursor_date is " +
+            s"${found.fold("missing")(_.sql)}, expected TIMESTAMP")
+        val row = spark.read.schema(schema).parquet(path)
           .filter(col("object") === obj)
           .agg(max(col("cursor_date")).as("c"))
           .head()
@@ -59,7 +74,7 @@ final class CursorStore(spark: SparkSession, path: String) {
     Retry.withBackoff(maxRetries = 3, baseDelayMs = 200) {
       Seq((runId, emittedAt, cursorDate, obj))
         .toDF("emitted_id", "emitted_at", "cursor_date", "object")
-        .repartition(1)
+        .coalesce(1) // the one-row local relation has one partition already
         .write.mode("append").parquet(path)
     }
   }

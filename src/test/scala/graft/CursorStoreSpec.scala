@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.core.JobTrace
 import graft.cursor.CursorStore
 
 class CursorStoreSpec extends SparkSpec {
@@ -32,5 +33,33 @@ class CursorStoreSpec extends SparkSpec {
     val cs = newStore()
     cs.advance("orders", ts("2024-01-05 00:00:00"), "r", ts("2024-01-05 00:00:00"))
     assert(cs.latest("companies").isEmpty)
+  }
+
+  test("latest reads the schema from a footer; advance writes one file in one job") {
+    val dir = Files.createTempDirectory("cursor-spec").toString + "/cursor"
+    val cs = new CursorStore(spark, dir)
+    val (_, adv) = JobTrace.measure(spark) {
+      cs.advance("orders", ts("2024-01-01 00:00:00"), "run1", ts("2024-01-01 01:00:00"))
+    }
+    assert(adv.jobs.size === 1, s"advance jobs: ${adv.jobs.map(_.site)}")
+    assert(TestFiles.parquetFileCount(dir) === 1)
+    val (got, lat) = JobTrace.measure(spark)(cs.latest("orders"))
+    assert(got.contains(ts("2024-01-01 00:00:00")))
+    assert(!lat.jobs.exists(_.site.startsWith("parquet at CursorStore")),
+      s"latest ran a schema-inference job: ${lat.jobs.map(_.site)}")
+    assert(lat.jobs.size === 2, s"latest jobs: ${lat.jobs.map(_.site)}")
+  }
+
+  test("a cursor_date stored as STRING fails latest loudly, for any object") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cursor-spec").toString + "/cursor"
+    Seq(("run1", ts("2024-01-01 01:00:00"), "2024-01-01 00:00:00", "orders"))
+      .toDF("emitted_id", "emitted_at", "cursor_date", "object")
+      .write.parquet(dir)
+    val cs = new CursorStore(spark, dir)
+    Seq("orders", "companies").foreach { obj =>
+      val e = intercept[IllegalStateException](cs.latest(obj))
+      assert(e.getMessage.contains("cursor_date is STRING"), e.getMessage)
+    }
   }
 }

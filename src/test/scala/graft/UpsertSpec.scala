@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, substring, year}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StringType
 import graft.core.JobTrace
 import graft.operators.Upsert
@@ -13,6 +14,14 @@ class UpsertSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Jobs of a partitioned MERGE of a small local-relation source into
+    * existing partitions: the touched-value probe; the query stages AQE
+    * runs as jobs — the source's dedup shuffle (twice, once per
+    * projection of the applied rows), the broadcast of the target's
+    * cursors, the broadcast of the applied keys, and the repartition by
+    * partition; and the write. */
+  private val JobsPerMerge = 7
 
   private def target: DataFrame = Seq(
     ("a", ts("2024-01-01 00:00:00"), 1.0),
@@ -224,16 +233,20 @@ class UpsertSpec extends SparkSpec {
   // ---- touched-partition reads ------------------------------------------
 
   /** Runs the partitioned MERGE and checks the snapshot it leaves equals
-    * the pure MERGE over a whole-table read taken just before it. */
+    * the pure MERGE over a whole-table read taken just before it.
+    * @return what the partitioned MERGE's own jobs cost */
   private def mergeMatchesWholeTable(snap: String, batch: DataFrame,
-                                     partCol: String, partOf: Column): Unit = {
+                                     partCol: String, partOf: Column): JobTrace.Record = {
     val whole = spark.read.parquet(snap)
     val expected = Upsert(whole, batch.withColumn(partCol, partOf), Seq("id"), "updated_at")
       .collect().toSet
-    Upsert.partitioned(snap, batch, Seq("id"), "updated_at", partCol, partOf)
+    val (_, rec) = JobTrace.measure(spark) {
+      Upsert.partitioned(snap, batch, Seq("id"), "updated_at", partCol, partOf)
+    }
     val got = spark.read.parquet(snap).select(whole.columns.toIndexedSeq.map(col): _*)
       .collect().toSet
     assert(got === expected)
+    rec
   }
 
   private def yearSeed(snap: String): Unit =
@@ -283,11 +296,72 @@ class UpsertSpec extends SparkSpec {
     val snap = java.nio.file.Files.createTempDirectory("graft-partempty").toString + "/snap"
     yearSeed(snap)
     val before = partFileHashes(snap)
+    val manifests = new java.io.File(s"$snap/_graft_manifest").list().toSet
     // the archived pass of a batch with no tombstones
     val empty = Seq(("z", ts("2022-07-01 00:00:00"), 9.0)).toDF("id", "updated_at", "v")
       .filter(lit(false))
-    mergeMatchesWholeTable(snap, empty, "y", year($"updated_at"))
+    val rec = mergeMatchesWholeTable(snap, empty, "y", year($"updated_at"))
     assert(partFileHashes(snap) === before)
+    // the touched-value probe is the only job: no plan, no write
+    assert(rec.jobs.size === 1, s"jobs: ${rec.jobs.map(_.site)}")
+    assert(new java.io.File(s"$snap/_graft_manifest").list().toSet === manifests,
+      "an empty merge records no manifest")
+  }
+
+  test("partitioned upsert writes each touched partition in its own task, schema from a footer") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partwide").toString + "/snap"
+    val partOf = substring($"id", 2, 1).cast("int") // "k3x" -> p=3
+    Upsert.partitioned(snap, (0 until 8).flatMap(p => (0 until 4).map(r =>
+      (s"k$p$r", ts("2024-01-01 00:00:00"), (10 * p + r).toDouble)))
+      .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
+    val before = partFileHashes(snap)
+    // touches 3 of the 8 partitions: two updates and one insert each
+    val batch = Seq(1, 4, 6).flatMap(p => Seq(
+      (s"k${p}0", ts("2024-02-01 00:00:00"), -1.0),
+      (s"k${p}2", ts("2024-02-01 00:00:00"), -2.0),
+      (s"k${p}9", ts("2024-02-01 00:00:00"), -9.0))).toDF("id", "updated_at", "v")
+    val rec = mergeMatchesWholeTable(snap, batch, "p", partOf)
+
+    assert(!rec.jobs.exists(_.site.startsWith("parquet at Upsert.scala")),
+      s"the target schema must come from a footer, not an inference job: ${rec.jobs.map(_.site)}")
+    assert(rec.stages.last.tasks === 3, s"the write stage: ${rec.stages.last}")
+    assert(rec.jobs.size === JobsPerMerge, s"jobs: ${rec.jobs.map(j => j.site -> j.maxTasks)}")
+    Seq(1, 4, 6).foreach(p => assert(TestFiles.parquetFileCount(s"$snap/p=$p") === 1, s"p=$p"))
+    val after = partFileHashes(snap)
+    val untouched = (k: String) => !Seq("p=1/", "p=4/", "p=6/").exists(k.startsWith)
+    assert(before.filter(kv => untouched(kv._1)) === after.filter(kv => untouched(kv._1)))
+  }
+
+  test("write layout: one key per touched partition up to the advisory size, salted above it") {
+    val mb = 1L << 20
+    // small slice: one task per touched partition, capped at the parallelism
+    assert(Upsert.writeLayout(3, BigInt(5 * mb), 64 * mb, 4) === (3, 1))
+    assert(Upsert.writeLayout(17, BigInt(5 * mb), 64 * mb, 4) === (4, 1))
+    assert(Upsert.writeLayout(3, BigInt(3 * 64 * mb), 64 * mb, 4) === (3, 1))
+    assert(Upsert.writeLayout(1, BigInt(0), 64 * mb, 4) === (1, 1))
+    // one huge partition spreads over ⌈bytes / advisory⌉ sub-keys and tasks
+    assert(Upsert.writeLayout(1, BigInt(1000 * mb), 64 * mb, 4) === (16, 16))
+    assert(Upsert.writeLayout(2, BigInt(3 * 64 * mb + 1), 64 * mb, 4) === (4, 2))
+    // a 100 TB slice over 10 partitions: 64 MB per sub-key
+    val (tasks, salt) = Upsert.writeLayout(10, BigInt(100L << 40), 64 * mb, 4)
+    assert(salt === 163840 && tasks === 1638400)
+  }
+
+  test("a slice above the advisory size per partition spreads each partition over salted files") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partsalt").toString + "/snap"
+    val partOf = substring($"id", 2, 1).cast("int")
+    Upsert.partitioned(snap, (0 until 2).flatMap(p => (0 until 200).map(r =>
+      (s"k$p$r", ts("2024-01-01 00:00:00"), r.toDouble)))
+      .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
+    val key = SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "64")
+    try mergeMatchesWholeTable(snap, Seq(("k05", ts("2024-02-01 00:00:00"), -5.0),
+      ("k1x", ts("2024-02-01 00:00:00"), -1.0)).toDF("id", "updated_at", "v"), "p", partOf)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // each touched partition's rows spread over several files
+    Seq(0, 1).foreach(p => assert(TestFiles.parquetFileCount(s"$snap/p=$p") > 1, s"p=$p"))
+    assert(spark.read.parquet(snap).count() === 401)
   }
 
   test("partitioned upsert keeps a string partition column's type and dir names") {
