@@ -86,7 +86,7 @@ object Staging {
         .computeIfAbsent(spark, _ => java.util.Collections.synchronizedList(
           new java.util.ArrayList[String]()))
         .add(path)
-      spark.read.parquet(path)
+      FooterSchema.load(spark, path)
     } else df.localCheckpoint(eager = true)
   }
 

@@ -28,9 +28,9 @@ object Tables {
     * which deliberately ignores nullability — parquet footers don't
     * carry the registry's NOT NULL, that's the write path's job — and
     * undeclared extra columns pass (additive evolution is not drift).
-    * Cost: the comparison itself is driver-side, but the `df.schema` it
-    * reads comes from `spark.read.parquet`'s schema inference, which runs
-    * one Spark job per load. */
+    * Cost: none beyond the load's: the `df.schema` it reads is the
+    * footer schema [[FooterSchema.load]] decoded on the driver, so a load
+    * runs no Spark job. */
   private def validateAgainstRegistry(name: String, df: DataFrame): DataFrame = {
     SchemaRegistry.default.get(name).foreach { spec =>
       val actual = df.schema.map(f => f.name -> f.dataType).toMap
@@ -65,10 +65,11 @@ object Tables {
       // this guarded set is the fallback for externally-owned sessions —
       // harmless for micros files, required before the scan for nanos
       // files ("was it explicitly set?" is unknowable here anyway:
-      // getOption surfaces the registered default, not absence).
+      // getOption surfaces the registered default, not absence). It must
+      // be set before the footer is decoded: the converter reads it.
       if (!spark.conf.getOption(NanosConf).contains("true"))
         spark.conf.set(NanosConf, "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = FooterSchema.load(spark, s"$dir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
@@ -90,7 +91,7 @@ object Tables {
             s"events.ts shipped as unexpected physical type $other — " +
               "extend Tables.loadRaw's normalization for this generation")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else FooterSchema.load(spark, s"$dir/$name.parquet")
 
   /** Register every table as a temp view — the stand-in for the reference's
     * remote-SQL (Redash) source, S10 (ref: config/redash/Redash.py:46-78):
@@ -98,7 +99,8 @@ object Tables {
     * registered views, planned and optimized by Catalyst.
     *
     * Memoized per (session, dir): registration reads ten parquet footers
-    * driver-side, and the remote-SQL queries call this per invocation — at
+    * driver-side (one per table, no Spark job), and the remote-SQL
+    * queries call this per invocation — at
     * cluster scale a session runs thousands of statements, so the catalog
     * must be populated once, not per query. A session re-pointed at a
     * different dir re-registers (views are replaced); sessions are tracked

@@ -43,18 +43,20 @@ final class CursorStore(spark: SparkSession, path: String) {
     * way, ref: config/gcs/gcs.py:204-229). A store whose `cursor_date`
     * is not a TIMESTAMP fails, whichever object is asked for: an
     * aggregate over the wrong type would read as "no cursor yet" for an
-    * object with no rows and start a full re-sync.
+    * object with no rows and start a full re-sync. That failure, like a
+    * store dir with no data file, is deterministic, so it is not
+    * retried.
     */
   def latest(obj: String): Option[Timestamp] =
     Retry.withBackoff(maxRetries = 3, baseDelayMs = 200) {
       if (!exists) None
       else {
-        val schema = FooterSchema.read(spark, path)
-        val found = schema.find(_.name == "cursor_date").map(_.dataType)
+        val store = FooterSchema.load(spark, path)
+        val found = store.schema.find(_.name == "cursor_date").map(_.dataType)
         if (!found.contains(TimestampType))
           throw new IllegalStateException(s"cursor store '$path': cursor_date is " +
             s"${found.fold("missing")(_.sql)}, expected TIMESTAMP")
-        val row = spark.read.schema(schema).parquet(path)
+        val row = store
           .filter(col("object") === obj)
           .agg(max(col("cursor_date")).as("c"))
           .head()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, StructType}
 
+import graft.core.FooterSchema
 import graft.sinks.Sinks
 
 /** Small-file compaction for a partitioned snapshot (beyond-reference
@@ -139,7 +140,7 @@ object Compact {
 
   /** Grouping key for batch assembly: exact schemas that differ only in
     * nullability or field metadata describe logically identical dirs and
-    * must share a batch — the census's single-footer fast path derives
+    * must share a batch — the census's footer path derives
     * nullability from parquet repetition while the mergeSchema fallback
     * reports Spark read semantics (everything nullable), and splitting
     * on that difference would cost extra write jobs for nothing. */
@@ -160,65 +161,42 @@ object Compact {
                           snapshotPath: String, dirNames: Seq[String],
                           targetFileBytes: Long, maxFilesPerPartition: Int,
                           batchSize: Int): Seq[String] = {
-    // driver-side partition census: (dir name, data file paths, bytes)
+    // driver-side partition census: (dir name, data files, bytes); a
+    // dir's data files are its own entries under the shared data-file
+    // rule (graft.core.FooterSchema.isData)
     val candidates = dirNames
       .map { name =>
         val files = fs.listStatus(new Path(s"$snapshotPath/$name"))
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        (name, files.map(_.getPath).toSeq, files.map(_.getLen).sum)
+          .filter(f => f.isFile && FooterSchema.isData(f.getPath.getName)).toSeq
+        (name, files, files.map(_.getLen).sum)
       }
       .filter { case (_, files, _) => files.length > maxFilesPerPartition }
 
     // Schema handling, two layers. WITHIN a dir: incremental appends can
-    // straddle a schema evolution inside ONE partition, and a
-    // single-footer inferred schema would silently drop the newer files'
-    // columns from the rewrite (data loss, since the originals are
-    // swapped away). ACROSS dirs: a batch unions its partitions into one
-    // frame, so dirs whose (merged) schemas differ must not share a
-    // batch — group by schema; each partition is rewritten with exactly
-    // its own merged layout, never another group's. Footers are read on
-    // the DRIVER via parquet-hadoop (metadata-priced RPCs, the same
-    // category as the directory listing above) and preferentially
-    // decoded from the Spark schema JSON the writer embedded in the
-    // footer key-value metadata (the same source Spark's own inference
-    // prefers — the raw MessageType conversion would silently strip
-    // UDTs, char/varchar and column metadata from the rewrite), falling
-    // back to the parquet→Catalyst converter for files without it. A
-    // per-candidate mergeSchema read would schedule one distributed
-    // schema-inference JOB per fragmented partition, re-creating at
-    // census time the per-partition job overhead the batched rewrite
-    // below exists to avoid. Only a dir whose footers genuinely
-    // DISAGREE (straddling an evolution — rare) pays the one mergeSchema
-    // job for Spark's exact merge semantics. Only the SCHEMA is retained
-    // from this pass — batch reads below re-open their dirs with the
-    // schema passed explicitly (the parquet reader nulls a file's
-    // missing columns), so neither a second footer walk nor 10⁵ live
-    // DataFrames/file indexes ever accumulate on the driver.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // the SQLConf-based constructor — the bare-Configuration one expects
-    // session-prepared keys (binaryAsString etc.) and throws on a raw
-    // sparkContext hadoopConfiguration
-    val toCatalyst =
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
-        org.apache.spark.sql.internal.SQLConf.get)
-    val sparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+    // straddle a schema evolution inside ONE partition, and one file's
+    // schema would silently drop the newer files' columns from the
+    // rewrite (data loss, since the originals are swapped away) — so
+    // every data file's footer is decoded on the driver
+    // (FooterSchema.ofFile: metadata-priced reads, the same category as
+    // the listing above, and the Spark schema the writer embedded wins,
+    // so UDTs, char/varchar and column metadata survive the rewrite).
+    // Only a dir whose footers genuinely DISAGREE (straddling an
+    // evolution — rare) pays one mergeSchema read, the one inferred
+    // schema in the engine, for Spark's exact merge semantics. ACROSS
+    // dirs: a batch unions its partitions into one frame, so dirs whose
+    // (merged) schemas differ must not share a batch — group by schema;
+    // each partition is rewritten with exactly its own merged layout,
+    // never another group's. Only the SCHEMA is retained from this pass
+    // — batch reads below re-open their dirs with the schema passed
+    // explicitly (the parquet reader nulls a file's missing columns), so
+    // neither a second footer walk nor 10⁵ live DataFrames/file indexes
+    // ever accumulate on the driver.
     val withSchemas = candidates
       .map { case (dirName, files, bytes) =>
-        val footers = files.map { p =>
-          val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, hconf))
-          try {
-            val md = in.getFileMetaData
-            (Option(md.getKeyValueMetaData.get(sparkSchemaKey)), md.getSchema)
-          } finally in.close()
-        }.distinct
+        val schemas = files.map(FooterSchema.ofFile(spark, _)).distinct
         val schema =
-          if (footers.lengthCompare(1) == 0) {
-            val (sparkJson, messageType) = footers.head
-            sparkJson.flatMap(json =>
-              scala.util.Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
-              .getOrElse(toCatalyst.convert(messageType))
-          } else spark.read.option("mergeSchema", true)
+          if (schemas.lengthCompare(1) == 0) schemas.head
+          else spark.read.option("mergeSchema", true)
             .parquet(s"$snapshotPath/$dirName").schema
         (schema, (dirName, files.length, bytes))
       }

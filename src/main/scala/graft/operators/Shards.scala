@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** Training-shard export — the TERMINAL stage of the corpus pipeline:
   * the prepared corpus ships as size-balanced, reproducibly-ordered
   * shard files a training loader streams sequentially. Requirements at
@@ -98,11 +100,11 @@ object Shards {
 
   /** Read shards back in global order (shard asc, in-file order). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).orderBy(col("shard"), col("graft_rank"))
+    FooterSchema.load(spark, path).orderBy(col("shard"), col("graft_rank"))
 
   /** The committed manifest (one row per shard). */
   def manifest(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(manifestPath(path))
+    FooterSchema.load(spark, manifestPath(path))
 
   /** Verify the export against its manifest by replaying the census
     * over the shard files: every shard present, no extras, and rows /
@@ -114,23 +116,17 @@ object Shards {
     * than die on PATH_NOT_FOUND.
     * @return mismatch descriptions, empty when the export is intact */
   def verify(spark: SparkSession, path: String): Seq[String] = {
-    val mp = new org.apache.hadoop.fs.Path(manifestPath(path))
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a crash DURING the manifest write leaves the dir present but with
     // no committed parquet (only the commit protocol's _temporary) —
     // the same incomplete-export shape as a fully absent manifest
-    val committed = fs.exists(mp) && fs.listStatus(mp).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".") && n.endsWith(".parquet")
-    }
-    if (!committed)
+    if (!FooterSchema.hasData(spark, manifestPath(path)))
       return Seq("manifest missing — export incomplete (crash between " +
         "shard write and manifest write, or not a manifested export)")
     val m = manifest(spark, path)
       .select(col("shard"), col("rows").as("m_rows"),
         col("min_rank").as("m_min"), col("max_rank").as("m_max"),
         col("content_hash").as("m_hash"))
-    val c = census(spark.read.parquet(path))
+    val c = census(FooterSchema.load(spark, path))
     m.join(c, Seq("shard"), "full_outer")
       .filter(col("m_rows").isNull || col("rows").isNull ||
         col("m_rows") =!= col("rows") || col("m_min") =!= col("min_rank") ||

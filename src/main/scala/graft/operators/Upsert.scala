@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -38,9 +38,14 @@ object Upsert {
 
   /** Pure-plan upsert: returns the post-MERGE snapshot DataFrame. */
   def apply(target: DataFrame, source: DataFrame,
-            pk: Seq[String], cursor: String): DataFrame = {
+            pk: Seq[String], cursor: String): DataFrame =
+    merge(target, Dedup.latestWins(source, pk, cursor), pk, cursor)
+
+  /** The MERGE body of [[apply]] over a source with one row per pk. */
+  private def merge(target: DataFrame, deduped: DataFrame,
+                    pk: Seq[String], cursor: String): DataFrame = {
     val keyCols = pk.map(col)
-    val dedupedSrc = Dedup.latestWins(source, pk, cursor)
+    val dedupedSrc = deduped
       .select(target.columns.toIndexedSeq.map(col): _*) // align column order with target
     // WHEN MATCHED AND t.cursor != s.cursor / WHEN NOT MATCHED:
     // keep only source rows that are new, or whose cursor changed. The
@@ -93,16 +98,20 @@ object Upsert {
     * takes the source's type instead of one inferred from the touched
     * directory names, which could differ from the whole table's (a subset
     * of numeric-looking string values would read back as integers), and
-    * its other columns come from one touched dir's footer, read on the
-    * driver (graft.core.FooterSchema), not from an inference job.
+    * its other columns come from one footer read on the driver
+    * (graft.core.FooterSchema), not from an inference job: a touched
+    * dir's, or, when no touched dir exists yet, the snapshot's first data
+    * file, and the target is then an empty frame of that schema.
     *
-    * Jobs per merge: the SOURCE is staged lazily (graft.core.Staging), and
-    * the touched-value probe — a map-only per-partition distinct plus
-    * collect — is the one action that materializes it, so staging and
-    * probe share one job (plus any shuffle stage of the source's own
-    * plan) and the merge reads the staged blocks instead of re-running
-    * the upstream extract. A source that touches no partition returns
-    * right after the probe: no footer read, no plan, no write. Otherwise
+    * Jobs per merge: the SOURCE is deduplicated once (latest cursor wins)
+    * and staged lazily (graft.core.Staging), and the touched-value probe
+    * — a map-only per-partition distinct plus collect — is the one action
+    * that materializes it, so staging and probe share one job (plus the
+    * dedup's shuffle stage, which a source already partitioned by `pk`
+    * does not add) and the merge reads the staged, deduplicated blocks
+    * instead of re-running the upstream extract or the dedup. A source
+    * that touches no partition returns right after the probe: no footer
+    * read, no plan, no write. Otherwise
     * the merged slice is repartitioned by `partCol` into one task per
     * touched partition (at most `defaultParallelism`; see [[writeLayout]])
     * before the partitioned write, so the touched dirs are written in
@@ -133,10 +142,12 @@ object Upsert {
     val checkedPart = when(partOf.isNull,
       raise_error(lit(s"NULL partition value ('$partCol') in partitioned upsert source")))
       .otherwise(partOf)
-    // staged lazily: the first action below (the touched-value probe, or
-    // the bootstrap write) materializes it, and every later read of the
-    // source scans the staged blocks instead of the upstream extract
-    val src = Staging.stageLazy(source.withColumn(partCol, checkedPart))
+    // deduplicated once, then staged lazily: the first action below (the
+    // touched-value probe, or the bootstrap write) materializes it, and
+    // every later read of the source scans the staged blocks instead of
+    // the upstream extract or the dedup
+    val src = Staging.stageLazy(
+      Dedup.latestWins(source.withColumn(partCol, checkedPart), pk, cursor))
     val fs = new Path(snapshotPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the partitioned MERGE manages the partition-dir layout; a snapshot
@@ -148,8 +159,7 @@ object Upsert {
         "layout (snapshotSwapMarker); the partitioned MERGE requires the partition-dir layout")
     if (!fs.exists(new Path(snapshotPath))) {
       // bootstrap: no target yet — the deduped source IS the snapshot
-      Sinks.overwritePartitions(Dedup.latestWins(src, pk, cursor), snapshotPath,
-        Seq(partCol))
+      Sinks.overwritePartitions(src, snapshotPath, Seq(partCol))
       // seed the write-side manifest from the bootstrap's own output (a
       // one-time root listing at table creation, when the listing is the
       // write we just did) so manifest-driven compaction sees the
@@ -175,8 +185,9 @@ object Upsert {
     }
   }
 
-  /** The non-bootstrap MERGE of a staged source that touches the
-    * partitions named by `touched` (the writer's string form). */
+  /** The non-bootstrap MERGE of a staged, deduplicated source that
+    * touches the partitions named by `touched` (the writer's string
+    * form). */
   private def mergeTouched(snapshotPath: String, src: DataFrame, pk: Seq[String],
                            cursor: String, partCol: String, touched: IndexedSeq[String],
                            fs: FileSystem): Unit = {
@@ -185,14 +196,15 @@ object Upsert {
     val existing = touched
       .map(v => s"$snapshotPath/${getPartitionPathString(partCol, v)}")
       .filter(d => fs.exists(new Path(d)))
-    // the target's columns come from one partition dir's footer (the
-    // root only if no partition dir exists, which fails as before)
-    val probe = existing.headOption.getOrElse(anyPartitionDir(fs, snapshotPath, partCol))
-    val schema = FooterSchema.read(spark, probe).add(src.schema(partCol))
-    val reader = spark.read.schema(schema).option("basePath", snapshotPath)
+    // the target's columns come from one footer: a touched dir's, else
+    // the first data file of the snapshot's walk; a merge that touches
+    // no existing dir merges into an empty frame of that schema
+    val schema = FooterSchema.read(spark, existing.headOption.getOrElse(snapshotPath))
+      .add(src.schema(partCol))
     val target =
-      if (existing.nonEmpty) reader.parquet(existing: _*)
-      else reader.parquet(probe).limit(0)
+      if (existing.nonEmpty)
+        spark.read.schema(schema).option("basePath", snapshotPath).parquet(existing: _*)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     // the target slice's file bytes, from the file index the read above
     // already listed (no job)
     val (tasks, salt) = writeLayout(touched.size,
@@ -202,7 +214,7 @@ object Upsert {
     val keys = if (salt == 1) Seq(col(partCol))
       else Seq(col(partCol), pmod(xxhash64(pk.map(col): _*), lit(salt)))
     val stagedPath = s"${snapshotPath}__stage-${java.util.UUID.randomUUID()}"
-    apply(target, src, pk, cursor)
+    merge(target, src, pk, cursor)
       .repartition(tasks, keys: _*)
       .write.partitionBy(partCol).mode("error").parquet(stagedPath)
     // write-side manifest for the compaction census: the staged dir
@@ -238,16 +250,5 @@ object Upsert {
     val perSalt = BigInt(advisoryBytes.max(1)) * touched
     val salt = ((sliceBytes + perSalt - 1) / perSalt).max(1).min(Int.MaxValue / touched).toInt
     if (salt == 1) (touched.min(parallelism), 1) else (touched * salt, salt)
-  }
-
-  /** The first partition dir found under `root` (stopping there, not
-    * listing the rest), or `root` itself when it holds none. */
-  private def anyPartitionDir(fs: FileSystem, root: String, partCol: String): String = {
-    val it = fs.listStatusIterator(new Path(root))
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isDirectory && st.getPath.getName.startsWith(s"$partCol=")) return st.getPath.toString
-    }
-    root
   }
 }

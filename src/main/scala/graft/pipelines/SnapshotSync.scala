@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{SchemaRegistry, Tables}
+import graft.core.{FooterSchema, SchemaRegistry, Tables}
 import graft.cursor.CursorStore
 import graft.lineage.{Lineage, RunTelemetry}
 import graft.operators.{Dedup, Upsert}
@@ -94,7 +94,7 @@ object SnapshotSync {
       // cursor bump so the MERGE cursor-change guard applies the tombstone
       .withColumn(cursorCol, col(cursorCol) + expr("INTERVAL 1 SECOND"))
     Upsert.partitioned(snapPath, archived, pk, cursorCol, partCol, partOf)
-    val finalSnapshot = spark.read.parquet(snapPath)
+    val finalSnapshot = FooterSchema.load(spark, snapPath)
 
     cursorStore.advance("orders", batchTs, runId, batchTs)
 
@@ -108,7 +108,7 @@ object SnapshotSync {
       .write.mode("overwrite").parquet(eventsDir)
     val sessionsTable = "entry_sessions_" + runId.replace("-", "")
     val stream = spark.readStream
-      .schema(spark.read.parquet(eventsDir).schema)
+      .schema(FooterSchema.read(spark, eventsDir))
       .parquet(eventsDir)
     val sq = Sessionize.sessions(stream, gapMs = 5 * 60 * 1000, watermarkDelay = "1 minute")
       .writeStream

@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
+import graft.core.FooterSchema
+
 /** Sinks (SURVEY.md §2.2). The reference's loads are BigQuery jobs; here
   * they are parquet-directory writes with the same delivery semantics.
   */
@@ -114,8 +116,8 @@ object Sinks {
     * version; otherwise the plain path (rename-mode layout). */
   def readSnapshot(spark: SparkSession, path: String): DataFrame =
     currentVersion(spark, path) match {
-      case Some(v) => spark.read.parquet(s"${path}__versions/$v")
-      case None => spark.read.parquet(path)
+      case Some(v) => FooterSchema.load(spark, s"${path}__versions/$v")
+      case None => FooterSchema.load(spark, path)
     }
 
   /** Does a published snapshot exist under either protocol? */

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.FooterSchema
+
 /** File sources beyond the plain table registry (SURVEY.md §2.1).
   *
   * S14 — the reference enumerates year directories by hand
@@ -21,7 +23,7 @@ object Sources {
     * partition columns (e.g. `year`) become PartitionFilters — verify with
     * `.explain` — so a year-scoped query touches one directory, not all. */
   def partitioned(spark: SparkSession, basePath: String): DataFrame =
-    spark.read.option("basePath", basePath).parquet(basePath)
+    FooterSchema.load(spark, basePath)
 
   /** Write a year-partitioned copy of a frame (the reference's GCS layout,
     * gcs.py:143-167) — partitioning column becomes the directory key. */

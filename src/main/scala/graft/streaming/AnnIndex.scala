@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.FooterSchema
 import graft.llm.TopK
 
 /** Streaming IVF ANN index maintenance — the similarity-search analog of
@@ -164,7 +165,7 @@ object AnnIndex {
       // it unstaged would hand later folds a frame that re-derives
       // different centroids from the REASSIGNED layout
       val newCents = graft.core.Staging.stage(
-        retrain(spark.read.parquet(cellsPath(statePath))
+        retrain(FooterSchema.load(spark, cellsPath(statePath))
           .select("vec_id", "v", "norm")))
       // the retrained set is LAYOUT, so it persists WITH the layout
       // (cents/ under statePath): a restart that folded with the
@@ -192,7 +193,7 @@ object AnnIndex {
     * layout contract until then. */
   def centroids(spark: SparkSession, statePath: String): Option[DataFrame] =
     if (StateStore.exists(spark, centsPath(statePath)))
-      Some(spark.read.parquet(centsPath(statePath)))
+      Some(FooterSchema.load(spark, centsPath(statePath)))
     else None
 
   /** Heal an interrupted retrain: a `_rebalancing` marker means a crash

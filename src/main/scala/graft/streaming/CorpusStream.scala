@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.Staging
+import graft.core.{FooterSchema, Staging}
 import graft.pipelines.CorpusPipeline
 
 /** Streaming corpus preparation — `CorpusPipeline.run` as a foreachBatch
@@ -155,7 +155,7 @@ object CorpusStream {
     val docsP = docsPath(statePath)
     if (fs.exists(new Path(docsP)))
       graft.sinks.Sinks.snapshotSwap(
-        spark.read.parquet(docsP).distinct().repartition(fileBudget(docsP)), docsP)
+        FooterSchema.load(spark, docsP).distinct().repartition(fileBudget(docsP)), docsP)
     // the hash store keeps its hb partitioning through the rewrite —
     // one file per touched bucket (bucket = the compaction granule)
     StateStore.compactBucketed(spark, hashesPath(statePath), "hb",

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.core.Staging
+import graft.core.{FooterSchema, Staging}
 import graft.sinks.Sinks
 
 /** Streaming cohort-retention and rolling-WAU — q108/q109 as
@@ -104,12 +104,12 @@ object EventReports {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(cohortsPath(statePath))))
       Sinks.snapshotSwap(
-        spark.read.parquet(cohortsPath(statePath))
+        FooterSchema.load(spark, cohortsPath(statePath))
           .groupBy("user_id").agg(min("cohort").as("cohort")),
         cohortsPath(statePath))
     if (fs.exists(new Path(daysPath(statePath))))
       Sinks.snapshotSwap(
-        spark.read.parquet(daysPath(statePath)).distinct()
+        FooterSchema.load(spark, daysPath(statePath)).distinct()
           .repartition(col("d")),
         daysPath(statePath), Seq("d"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.FooterSchema
 import graft.llm.Pca
 import graft.sinks.Sinks
 
@@ -52,7 +53,7 @@ object PcaStream {
     val spark = batch.sparkSession
     val hasState = StateStore.exists(spark, momPath(statePath))
     val old =
-      if (hasState) spark.read.parquet(momPath(statePath)) else null
+      if (hasState) FooterSchema.load(spark, momPath(statePath)) else null
     if (hasState && !old.filter(col("kind") === "batch" &&
         col("bid") === batchId).isEmpty) return
     // ONE corpus-sized pass: the typed Aggregator; only its buffer
@@ -84,7 +85,7 @@ object PcaStream {
     val g = new Array[Double](d * d)
     val s = new Array[Double](d)
     var n = 0L
-    spark.read.parquet(momPath(statePath))
+    FooterSchema.load(spark, momPath(statePath))
       .filter(col("kind") =!= "batch").collect().foreach { r =>
         r.getString(0) match {
           case "g" => g(r.getInt(1) * d + r.getInt(2)) = r.getDouble(3)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** The bucketed-state probe discipline, in ONE place: streaming state
   * tables (content hashes, band indexes, token sets, activity pairs)
   * are partitioned by a stable hash bucket of their probe key so a
@@ -29,20 +31,15 @@ object StateStore {
     * crash shape. */
   def exists(spark: SparkSession, path: String): Boolean = {
     graft.sinks.Sinks.recoverSwap(spark, path)
-    val f = fs(spark, path)
-    val p = new Path(path)
-    // A dir holding ONLY hidden entries (_SUCCESS, layout tags, tmp tags) is
-    // NOT state: a partitionBy write of an empty delta creates exactly
+    // A dir holding no data file (only _SUCCESS, layout tags, tmp tags)
+    // is NOT state: a partitionBy write of an empty delta creates exactly
     // that shape (the dynamic-partition writer opens files only when a
     // row arrives), and treating it as present would send every later
-    // reader into spark.read.parquet on a schema-less layout ("Unable to
-    // infer schema") — permanently wedging the fold. One listStatus, no
-    // schema inference; data-bearing layouts short-circuit on their
-    // first bucket dir / part file.
-    f.exists(p) && f.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+    // reader into the footer read of a layout with no footer — which
+    // throws, permanently wedging the fold. The probe is the shared
+    // data-file walk (graft.core.FooterSchema), which stops at the first
+    // data file: a bucketed layout costs two listings, no job.
+    FooterSchema.hasData(spark, path)
   }
 
   /** Does `path` hold the bucketed (partition-dir) layout? One listing,
@@ -157,27 +154,13 @@ object StateStore {
     * driver — no Spark job. The per-fold sizing decisions (bulk-ingest
     * escape ratios) need the count every micro-batch, and a footer walk
     * over the layout's files costs milliseconds where a count() job pays
-    * scheduling overhead each time. Hidden/underscore entries (tags,
-    * retired partition dirs) are skipped. At a scale where the file
-    * census itself is large, the count is only steering a ratio test —
-    * callers tolerate the listing cost or precompute. */
-  def parquetRowCount(spark: SparkSession, path: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val f = fs(spark, path)
-    def walk(p: Path): Iterator[Path] =
-      f.listStatus(p).iterator.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(".") || n.startsWith("_")) Iterator.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else if (n.endsWith(".parquet")) Iterator.single(st.getPath)
-        else Iterator.empty
-      }
-    walk(new Path(path)).map { p =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+    * scheduling overhead each time. The files are the shared data-file
+    * walk's (graft.core.FooterSchema: tags and hidden entries skipped).
+    * At a scale where the file census itself is large, the count is only
+    * steering a ratio test — callers tolerate the listing cost or
+    * precompute. */
+  def parquetRowCount(spark: SparkSession, path: String): Long =
+    FooterSchema.dataFiles(spark, path).map(FooterSchema.rowCount(spark, _)).sum
 
   /** Delta row count below which a bucketed append writes through a
     * FIXED small task count (8, hash-partitioned by the bucket column)
@@ -248,7 +231,7 @@ object StateStore {
         (bytes + targetFileBytes - 1) / targetFileBytes).toInt
       val kept = preserveTags.flatMap(t => readTag(spark, path, t).map((t, _)))
       graft.sinks.Sinks.snapshotSwap(
-        spark.read.parquet(path).distinct().repartition(files, col(bucketCol)),
+        FooterSchema.load(spark, path).distinct().repartition(files, col(bucketCol)),
         path, Seq(bucketCol),
         staged = tmp => kept.foreach { case (t, v) => writeTag(spark, tmp, t, v) })
     }
@@ -281,9 +264,11 @@ object StateStore {
     * changes; filters and column pruning push through a Repartition
     * node, so bucket-pruned probes keep their PartitionFilters). One
     * getContentSummary call on the driver (bytes AND file count), no
-    * job. Large layouts keep byte-proportional parallelism and
-    * many-file layouts keep ≥ 1 task per 32 files (parallel file
-    * opens); only the tasks-with-no-bytes fixed cost is removed. */
+    * job; the schema is one footer's (graft.core.FooterSchema), so no
+    * inference job either. Large layouts keep byte-proportional
+    * parallelism and many-file layouts keep ≥ 1 task per 32 files
+    * (parallel file opens); only the tasks-with-no-bytes fixed cost is
+    * removed. */
   def readPacked(spark: SparkSession, path: String): DataFrame = {
     val cs = fs(spark, path).getContentSummary(new Path(path))
     val byBytes =
@@ -291,7 +276,7 @@ object StateStore {
     val byFiles =
       (cs.getFileCount + readPackFilesPerTask - 1) / readPackFilesPerTask
     val parts = math.max(1L, math.max(byBytes, byFiles))
-    spark.read.parquet(path)
+    FooterSchema.load(spark, path)
       .coalesce(math.min(parts, Int.MaxValue.toLong).toInt)
   }
 

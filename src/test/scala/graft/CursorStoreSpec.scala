@@ -62,4 +62,25 @@ class CursorStoreSpec extends SparkSpec {
       assert(e.getMessage.contains("cursor_date is STRING"), e.getMessage)
     }
   }
+
+  test("a deterministic error fails latest at once; an IOException is still retried") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("cursor-spec").toString + "/cursor"
+    Seq(("run1", ts("2024-01-01 01:00:00"), "2024-01-01 00:00:00", "orders"))
+      .toDF("emitted_id", "emitted_at", "cursor_date", "object")
+      .write.parquet(dir)
+    val cs = new CursorStore(spark, dir)
+    intercept[IllegalStateException](cs.latest("orders")) // warm the footer path
+    val t0 = System.nanoTime()
+    intercept[IllegalStateException](cs.latest("orders"))
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(ms < 100, s"the STRING store failed after $ms ms: retried with backoff")
+
+    var attempts = 0
+    val got = graft.functions.Retry.withBackoff(maxRetries = 3, baseDelayMs = 1, jitterMs = 1) {
+      attempts += 1
+      if (attempts < 3) throw new java.io.IOException("transient") else attempts
+    }
+    assert(got === 3 && attempts === 3)
+  }
 }

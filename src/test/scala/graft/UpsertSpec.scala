@@ -16,12 +16,12 @@ class UpsertSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   /** Jobs of a partitioned MERGE of a small local-relation source into
-    * existing partitions: the touched-value probe; the query stages AQE
-    * runs as jobs — the source's dedup shuffle (twice, once per
-    * projection of the applied rows), the broadcast of the target's
-    * cursors, the broadcast of the applied keys, and the repartition by
-    * partition; and the write. */
-  private val JobsPerMerge = 7
+    * existing partitions: the source's dedup shuffle, which the
+    * touched-value probe stages, and the probe itself; the query stages
+    * AQE runs as jobs — the broadcast of the target's cursors, the
+    * broadcast of the applied keys, and the repartition by partition;
+    * and the write. */
+  private val JobsPerMerge = 6
 
   private def target: DataFrame = Seq(
     ("a", ts("2024-01-01 00:00:00"), 1.0),
