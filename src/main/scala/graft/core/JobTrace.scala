@@ -2,10 +2,11 @@ package graft.core
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd,
-  SparkListenerTaskStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** What the Spark jobs of one block of driver code cost: the jobs it ran
   * (call site, times, width), the stages they completed, and the task
@@ -18,9 +19,14 @@ import org.apache.spark.sql.SparkSession
   * otherwise land after the caller reads the totals. */
 object JobTrace {
 
-  /** `endMs` is None for a job still running at the wait's deadline. */
-  final case class Job(id: Int, site: String, startMs: Long, endMs: Option[Long],
-                       maxTasks: Int)
+  /** `site` is the first stage's name. `frame` is the innermost `graft.`
+    * frame of the job's call site: the first stage's own, else — for a
+    * query stage that adaptive execution submits from its own thread
+    * pool, whose stack holds no engine frame — that of the action that
+    * started the job's SQL execution; "" when neither holds one.
+    * `endMs` is None for a job still running at the wait's deadline. */
+  final case class Job(id: Int, site: String, frame: String, startMs: Long,
+                       endMs: Option[Long], maxTasks: Int)
 
   /** `wallMs` is -1 when Spark reported no submission/completion time. */
   final case class Stage(name: String, tasks: Int, wallMs: Long,
@@ -77,9 +83,25 @@ object JobTrace {
     private val stages = mutable.ArrayBuffer.empty[Stage]
     private var cpuNs, inputBytes, inputRecords, shuffleBytes, shuffleRecords = 0L
     private var seen = 0L
+    private val executionFrames = mutable.HashMap.empty[Long, String]
+
+    private def graftFrame(callSite: String): String =
+      callSite.split("\n").iterator.map(_.trim).find(_.startsWith("graft.")).getOrElse("")
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized(executionFrames(s.executionId) = graftFrame(s.details))
+      case _ => ()
+    }
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      jobs(e.jobId) = Job(e.jobId, e.stageInfos.headOption.map(_.name).getOrElse("?"),
+      val stage = e.stageInfos.headOption
+      val execution = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+      val own = graftFrame(stage.map(_.details).getOrElse(""))
+      val frame = if (own.nonEmpty) own
+        else execution.flatMap(executionFrames.get).getOrElse("")
+      jobs(e.jobId) = Job(e.jobId, stage.map(_.name).getOrElse("?"), frame,
         e.time, None, e.stageInfos.map(_.numTasks).maxOption.getOrElse(0))
       seen += 1
     }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
@@ -23,16 +24,14 @@ import graft.sinks.Sinks
   * duplicate source pks (pre-checked at bigquery.py:227-229); we instead
   * dedup source latest-cursor-wins deterministically (SURVEY.md §7.4.1).
   *
-  * Scale design: two joins keyed on pk, no driver-side collect, no
-  * all-string coercion (the reference's `astype(str)` at
-  * bigquery.py:165 is a bug we do not port). What runs, as traced on a
-  * sync cycle whose touched target slice is ~0.5 MB: the source is
-  * shuffled by pk for its dedup; the first join broadcasts the target's
-  * (pk, cursor) projection, one job with a task per file split of the
-  * target; the anti-join shuffles the target by pk, a second job of that
-  * width. So the target IS shuffled: `partitioned` bounds that to the
-  * touched partitions, and a target too large to broadcast is shuffled
-  * by both joins.
+  * Scale design: one pass over target ∪ source, no join, no
+  * driver-side collect, no all-string coercion (the reference's
+  * `astype(str)` at bigquery.py:165 is a bug we do not port). The
+  * target is scanned once and shuffled once, together with the
+  * source, and one unordered window per pk group decides which row
+  * survives — the shape of BigQuery's one-pass MERGE. `partitioned`
+  * bounds the target to the touched partitions and makes its write
+  * layout's repartition that one shuffle.
   */
 object Upsert {
 
@@ -41,26 +40,41 @@ object Upsert {
             pk: Seq[String], cursor: String): DataFrame =
     merge(target, Dedup.latestWins(source, pk, cursor), pk, cursor)
 
-  /** The MERGE body of [[apply]] over a source with one row per pk. */
-  private def merge(target: DataFrame, deduped: DataFrame,
-                    pk: Seq[String], cursor: String): DataFrame = {
-    val keyCols = pk.map(col)
-    val dedupedSrc = deduped
-      .select(target.columns.toIndexedSeq.map(col): _*) // align column order with target
-    // WHEN MATCHED AND t.cursor != s.cursor / WHEN NOT MATCHED:
-    // keep only source rows that are new, or whose cursor changed. The
-    // __matched marker distinguishes "not matched" (insert) from "matched
-    // with NULL target cursor" (t.cursor != s.cursor is unknown -> no
-    // update), exactly like the SQL MERGE.
-    val targetCursors = target.select(
-      (keyCols :+ col(cursor).as("__t_cursor") :+ lit(true).as("__matched")): _*)
-    val applied = dedupedSrc
-      .join(targetCursors, pk, "left")
-      .filter(col("__matched").isNull || col("__t_cursor") =!= col(cursor))
-      .drop("__t_cursor", "__matched")
-    // Target rows not superseded + applied source rows = new snapshot.
-    target.join(applied.select(keyCols: _*), pk, "left_anti")
-      .unionByName(applied)
+  /** The MERGE body over a source with one row per pk, in one window
+    * over target ∪ source. Each pk group holds at most one target row
+    * and one source row; the window tells each row whether its group
+    * is matched, holds a source row, and carries a changed cursor:
+    *
+    *   WHEN NOT MATCHED                        -> keep the source row
+    *   WHEN MATCHED AND t.cursor != s.cursor   -> keep the source row
+    *   otherwise                               -> keep the target row
+    *
+    * A NULL cursor on either side makes `t.cursor != s.cursor` unknown,
+    * so the target row stays, and a row with a NULL pk column matches
+    * nothing, exactly like the SQL MERGE.
+    *
+    * `layout` is the partitioned path's write layout, `(tasks, keys)`:
+    * the union is repartitioned by `keys` into `tasks` and the window is
+    * partitioned by `keys ++ pk`, so that one exchange serves both the
+    * window and the write. Without a layout the window's own exchange
+    * (by pk) is the one shuffle. */
+  private def merge(target: DataFrame, deduped: DataFrame, pk: Seq[String], cursor: String,
+                    layout: Option[(Int, Seq[Column])] = None): DataFrame = {
+    val cols = target.columns.toIndexedSeq.map(col) // align the source with target
+    val union = target.select(cols :+ lit(false).as("__src"): _*)
+      .union(deduped.select(cols :+ lit(true).as("__src"): _*))
+    val placed = layout.fold(union) { case (tasks, keys) => union.repartition(tasks, keys: _*) }
+    val w = Window.partitionBy(layout.fold(Seq.empty[Column])(_._2) ++ pk.map(col): _*)
+    val src = col("__src")
+    val keyed = !pk.map(col(_).isNull).reduce(_ || _)
+    val matched = keyed && max(!src).over(w)
+    val hasSrc = keyed && max(src).over(w)
+    val changed = coalesce(
+      max(when(!src, col(cursor))).over(w) =!= max(when(src, col(cursor))).over(w), lit(false))
+    placed
+      .withColumn("__keep", when(src, !matched || changed).otherwise(!hasSrc || !changed))
+      .filter(col("__keep"))
+      .drop("__src", "__keep")
   }
 
   /** Partition-scoped incremental MERGE — the 100 TB shape of `apply`.
@@ -80,9 +94,11 @@ object Upsert {
     *  - `partOf` must be STABLE per pk (derived from the pk or an
     *    immutable attribute, or a cursor whose partition projection never
     *    changes for a given row): a row "moving" partitions would leave
-    *    its superseded version alive in the old partition, because that
-    *    partition is never read. This is the standard contract of
-    *    partition-granular MERGE on non-transactional storage.
+    *    its superseded version alive in the old partition, because the
+    *    MERGE matches rows within one partition (its window is
+    *    partitioned by `partCol`), and an untouched partition is never
+    *    read. This is the standard contract of partition-granular MERGE
+    *    on non-transactional storage.
     *  - `partOf` must be non-null (a null partition value lands in the
     *    Hive default partition and escapes the touched-partition pruning).
     *    ENFORCED: a null partition value fails the run via a distributed
@@ -103,23 +119,25 @@ object Upsert {
     * dir's, or, when no touched dir exists yet, the snapshot's first data
     * file, and the target is then an empty frame of that schema.
     *
-    * Jobs per merge: the SOURCE is deduplicated once (latest cursor wins)
-    * and staged lazily (graft.core.Staging), and the touched-value probe
-    * — a map-only per-partition distinct plus collect — is the one action
-    * that materializes it, so staging and probe share one job (plus the
-    * dedup's shuffle stage, which a source already partitioned by `pk`
-    * does not add) and the merge reads the staged, deduplicated blocks
-    * instead of re-running the upstream extract or the dedup. A source
-    * that touches no partition returns right after the probe: no footer
-    * read, no plan, no write. Otherwise
-    * the merged slice is repartitioned by `partCol` into one task per
-    * touched partition (at most `defaultParallelism`; see [[writeLayout]])
-    * before the partitioned write, so the touched dirs are written in
-    * parallel, still one file each. The repartition costs one shuffle
-    * stage of the merged slice; without it AQE coalesced the join output
-    * into one task that wrote every touched dir in turn (traced on a
-    * 4-core box with 18 touched dirs: 222 ms in 4 tasks, against 529 ms
-    * in one).
+    * Jobs per merge: four. (1) The SOURCE is deduplicated once (latest
+    * cursor wins) and staged lazily (graft.core.Staging); the dedup's
+    * shuffle-map stage runs as its own job (a source already
+    * partitioned by `pk` does not add it). (2) The touched-value probe
+    * — a map-only per-partition distinct plus collect — is the one
+    * action that materializes the staged blocks, so the merge reads
+    * them instead of re-running the upstream extract or the dedup. A
+    * source that touches no partition returns right after the probe:
+    * no footer read, no plan, no write. (3) Otherwise the touched
+    * target slice and the staged source are shuffled together, once,
+    * by the write layout's keys ([[writeLayout]]: `partCol`, salted
+    * above the advisory size), into one task per touched partition (at
+    * most `defaultParallelism`), and the MERGE window is partitioned by
+    * those keys plus `pk`, so it needs no exchange of its own. (4) The
+    * partitioned write then writes the touched dirs in parallel, one
+    * file each below the advisory size (without the repartition, AQE
+    * coalesced the merge output into one task that wrote every touched
+    * dir in turn: traced on a 4-core box with 18 touched dirs, 222 ms
+    * in 4 tasks against 529 ms in one).
     *
     * Crash consistency: the merged slice is written to a private staging
     * directory beside the snapshot (which also keeps the write plan's
@@ -214,8 +232,7 @@ object Upsert {
     val keys = if (salt == 1) Seq(col(partCol))
       else Seq(col(partCol), pmod(xxhash64(pk.map(col): _*), lit(salt)))
     val stagedPath = s"${snapshotPath}__stage-${java.util.UUID.randomUUID()}"
-    merge(target, src, pk, cursor)
-      .repartition(tasks, keys: _*)
+    merge(target, src, pk, cursor, Some((tasks, keys)))
       .write.partitionBy(partCol).mode("error").parquet(stagedPath)
     // write-side manifest for the compaction census: the staged dir
     // names ARE the touched partitions, already in Spark's escaped

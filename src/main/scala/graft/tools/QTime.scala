@@ -49,7 +49,7 @@ object QTime {
         if (traced) {
           for (j <- rec.jobs; end <- j.endMs)
             println(f"[job] @${(j.startMs - passStartMs) / 1e3}%7.2f " +
-              f"${(end - j.startMs) / 1e3}%6.2f s  ${j.site}")
+              f"${(end - j.startMs) / 1e3}%6.2f s  ${j.site}  ${j.frame}")
           for (st <- rec.stages if st.wallMs >= 200)
             println(f"[stage]   ${st.wallMs / 1e3}%6.2f s  ${st.tasks}%4d tasks  ${st.name}")
         }

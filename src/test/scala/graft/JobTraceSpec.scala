@@ -58,6 +58,20 @@ class JobTraceSpec extends SparkSpec {
     }
   }
 
+  test("jobs that adaptive execution submits carry the frame of the action that started them") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1") // a sort-merge join: AQE submits both sides' shuffles as jobs
+    val (n, rec) = try JobTrace.measure(spark) {
+      spark.range(0, 2000).selectExpr("id % 97 as k")
+        .join(spark.range(0, 500).selectExpr("id % 89 as k"), "k").count()
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(n > 0)
+    assert(rec.jobs.size >= 3, s"jobs: ${rec.jobs}")
+    assert(rec.jobs.forall(_.frame.startsWith("graft.JobTraceSpec")),
+      s"jobs without the spec's frame: ${rec.jobs.map(j => j.site -> j.frame)}")
+  }
+
   test("the listener is detached when the body throws") {
     val l = new JobTrace.Listener
     val e = intercept[IllegalStateException] {

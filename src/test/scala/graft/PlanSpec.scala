@@ -164,10 +164,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q14 upsert keeps unioned branches partitioned, no driver collect") {
-    // executes distributed: two joins on the pk + union; presence of the
-    // final sort is the query's own ORDER BY, not a collect
+    // executes distributed: one window over target ∪ source, partitioned
+    // by the pk, and no join; presence of the final sort is the query's
+    // own ORDER BY, not a collect
     val p = planOf(q("q14_upsert_orders"))
-    assert(p.contains("Join") && p.contains("Union"), s"upsert must be join+union:\n$p")
+    assert(p.contains("Union") && p.contains("Window [max("),
+      s"upsert must be one window over a union:\n$p")
+    assert(!p.contains("Join"), s"upsert must not join:\n$p")
   }
 
   test("q76 incremental dedup joins bands by key, never a cartesian") {

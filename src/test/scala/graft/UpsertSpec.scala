@@ -17,11 +17,10 @@ class UpsertSpec extends SparkSpec {
 
   /** Jobs of a partitioned MERGE of a small local-relation source into
     * existing partitions: the source's dedup shuffle, which the
-    * touched-value probe stages, and the probe itself; the query stages
-    * AQE runs as jobs — the broadcast of the target's cursors, the
-    * broadcast of the applied keys, and the repartition by partition;
-    * and the write. */
-  private val JobsPerMerge = 6
+    * touched-value probe stages; the probe itself; the merge's one
+    * shuffle-map stage, target and source repartitioned together by the
+    * write layout's keys, which AQE runs as a job; and the write. */
+  private val JobsPerMerge = 4
 
   private def target: DataFrame = Seq(
     ("a", ts("2024-01-01 00:00:00"), 1.0),
@@ -362,6 +361,34 @@ class UpsertSpec extends SparkSpec {
     // each touched partition's rows spread over several files
     Seq(0, 1).foreach(p => assert(TestFiles.parquetFileCount(s"$snap/p=$p") > 1, s"p=$p"))
     assert(spark.read.parquet(snap).count() === 401)
+  }
+
+  test("a salted-layout merge shuffles once: the window is partitioned by the layout's keys") {
+    val snap = java.nio.file.Files.createTempDirectory("graft-partsalt1").toString + "/snap"
+    val partOf = substring($"id", 2, 1).cast("int")
+    Upsert.partitioned(snap, (0 until 2).flatMap(p => (0 until 200).map(r =>
+      (s"k$p$r", ts("2024-01-01 00:00:00"), r.toDouble)))
+      .toDF("id", "updated_at", "v"), Seq("id"), "updated_at", "p", partOf)
+    val key = SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "64")
+    val rec = try mergeMatchesWholeTable(snap, Seq(("k05", ts("2024-02-01 00:00:00"), -5.0),
+      ("k1x", ts("2024-02-01 00:00:00"), -1.0)).toDF("id", "updated_at", "v"), "p", partOf)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // shuffle-map stages: the source's dedup and the merge's one exchange
+    assert(rec.stages.count(_.shuffleWriteRecords > 0) === 2, s"stages: ${rec.stages}")
+    assert(rec.jobs.size === JobsPerMerge, s"jobs: ${rec.jobs.map(j => j.frame -> j.maxTasks)}")
+    assert(rec.stages.last.tasks > 2, s"the write stage is not salted: ${rec.stages.last}")
+  }
+
+  test("a row with a NULL pk column matches nothing: target and source rows both stay") {
+    val t = Seq((null.asInstanceOf[String], ts("2024-01-01 00:00:00"), 1.0),
+      ("a", ts("2024-01-01 00:00:00"), 2.0)).toDF("id", "updated_at", "v")
+    val src = Seq((null.asInstanceOf[String], ts("2024-02-01 00:00:00"), 10.0))
+      .toDF("id", "updated_at", "v")
+    val out = Upsert(t, src, Seq("id"), "updated_at").collect()
+      .map(r => (Option(r.getString(0)), r.getDouble(2))).toSet
+    assert(out === Set((None, 1.0), (Some("a"), 2.0), (None, 10.0)))
   }
 
   test("partitioned upsert keeps a string partition column's type and dir names") {
