@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.core.GraftSession
+import graft.core.{GraftSession, JobTrace}
 
 /** Driver-run benchmark: times every registered query at the given scale
   * factor and prints ONE JSON metric line.
@@ -23,6 +23,15 @@ import graft.core.GraftSession
   * that measures 30 s idle — e.g. q33 7.88 s recorded vs 0.51 s real).
   * The median of three absorbs a one-pass spike while staying honest
   * about persistent slowness.
+  *
+  * Every timed pass runs inside [[graft.core.JobTrace.measure]], so each
+  * query's entry also records what its median pass's Spark jobs cost:
+  * `jobs` and task-CPU `cpu_s` in BENCH_DETAIL.json (task CPU is the
+  * comparison that holds up on a loaded box; the suite is bound by
+  * per-job fixed cost). The listener's quiet wait after each pass counts
+  * in neither the pass time nor the section's wall clock. This is the
+  * engine's one per-query measuring loop: `tools.QTime` runs the same
+  * warm-up and timed section over a name filter.
   *
   * Two defenses against SUSTAINED contention (a co-tenant that stays for
   * the whole run, which per-query medians and spike retries cannot
@@ -63,9 +72,12 @@ object Bench {
     * fastest valid pass times ascending, padded with the -1.0 failure
     * sentinel at the END (a flake must neither displace a valid time nor
     * hide); `spiky` marks a >3× max/min spread that triggered the extra
-    * retry pass; `error` is the first failing pass's [[causeOf]]. */
+    * retry pass; `error` is the first failing pass's [[causeOf]];
+    * `record` is what the Spark jobs of the pass that gives `med` cost
+    * (None when `med` is the sentinel). */
   private[graft] final case class QueryStats(name: String, times: Seq[Double], spiky: Boolean,
-                                             error: Option[String] = None) {
+                                             error: Option[String] = None,
+                                             record: Option[JobTrace.Record] = None) {
     def min: Double = times.head
     def med: Double = times(1)
     def max: Double = times(2)
@@ -95,7 +107,7 @@ object Bench {
     * plan). Dropping them between passes keeps each measurement
     * isolated; the call sits OUTSIDE the timed window and
     * unpersist(blocking = false) costs microseconds. */
-  private[graft] def releaseQueryScratch(spark: SparkSession): Unit =
+  private def releaseQueryScratch(spark: SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
 
@@ -105,21 +117,44 @@ object Bench {
     e.getClass.getName + ": " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 
-  /** One timed pass of one query: its seconds, or the -1.0 failure
-    * sentinel with the failure's cause, which also goes to stderr. */
+  /** One pass of one query: its seconds, or the -1.0 failure sentinel
+    * with the failure's cause (also printed to stderr); what its Spark
+    * jobs cost; and the seconds the listener's quiet wait added after
+    * it, which count in neither the pass time nor a section's wall. */
+  private final case class Pass(seconds: Double, error: Option[String],
+                                record: JobTrace.Record, listenerSec: Double)
+
+  /** One timed pass: the time is taken around `fn(spark, sfDir).count()`
+    * only, inside [[JobTrace.measure]]; the scratch release follows. */
   private def timedPass(name: String,
                         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                        spark: SparkSession, sfDir: String): (Double, Option[String]) = {
-    val t0 = System.nanoTime()
-    val r = try { fn(spark, sfDir).count(); ((System.nanoTime() - t0) / 1e9, None) }
-            catch { case e: Throwable =>
-              val cause = causeOf(e)
-              System.err.println(s"[bench] $name failed: $cause")
-              (-1.0, Some(cause))
-            }
+                        spark: SparkSession, sfDir: String): Pass = {
+    val m0 = System.nanoTime()
+    val ((cause, ranNs), rec) = JobTrace.measure(spark) {
+      val t0 = System.nanoTime()
+      val cause = try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable =>
+          val c = causeOf(e)
+          System.err.println(s"[bench] $name failed: $c")
+          Some(c)
+        }
+      (cause, System.nanoTime() - t0)
+    }
+    val listenerSec = (System.nanoTime() - m0 - ranNs) / 1e9
     releaseQueryScratch(spark)
-    r
+    Pass(if (cause.isEmpty) ranNs / 1e9 else -1.0, cause, rec, listenerSec)
   }
+
+  /** The untimed warm-up: every query once at the smallest scale factor
+    * (see the object doc), failures ignored, scratch released after
+    * each. */
+  private[graft] def warmUp(
+      sorted: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
+      spark: SparkSession, warmDir: String): Unit =
+    sorted.foreach { case (_, fn) =>
+      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      releaseQueryScratch(spark)
+    }
 
   /** One full timed section: 3 passes per query (4 when spiky), plus the
     * machine-context sampling that makes the section self-adjudicating.
@@ -133,15 +168,17 @@ object Bench {
       loadPreSampled: Option[Double]): Section = {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val sectionStart = System.nanoTime()
+    var listenerSec = 0.0
     val stats = sorted.map { case (name, fn) =>
       // a failing pass records -1.0, not its time-to-fail: sorted, a single
       // flake doesn't poison the median, while a consistently broken query
       // surfaces as a negative number in the JSON instead of a fake win
       var error: Option[String] = None
-      def pass(): Double = {
-        val (t, cause) = timedPass(name, fn, spark, sfDir)
-        if (error.isEmpty) error = cause
-        t
+      def pass(): Pass = {
+        val p = timedPass(name, fn, spark, sfDir)
+        if (error.isEmpty) error = p.error
+        listenerSec += p.listenerSec
+        p
       }
       val first = Seq.fill(3)(pass())
       // a >3× max/min spread within one query's passes is a co-tenant
@@ -151,18 +188,24 @@ object Bench {
       // three fastest: a transient spike is discarded, while genuinely
       // slow queries stay slow in all four passes.
       val spiky = {
-        val valid = first.filter(_ > 0)
+        val valid = first.map(_.seconds).filter(_ > 0)
         valid.nonEmpty && valid.max / valid.min > 3.0
       }
       val passes = if (spiky) first :+ pass() else first
-      QueryStats(name, passes.filter(_ >= 0).sorted.take(3).padTo(3, -1.0), spiky, error)
+      val valid = passes.filter(_.seconds >= 0).sortBy(_.seconds)
+      QueryStats(name, valid.map(_.seconds).take(3).padTo(3, -1.0), spiky, error,
+        valid.lift(1).map(_.record))
     }
     val loadEnd = os.getSystemLoadAverage
     // spike-retries on SLOW queries corroborate contention; sub-half-second
     // queries spread >3× from GC/JIT noise even on an idle box (round 6:
     // q30 0.13→0.74 s idle) and must not trip the flag by themselves
     val slowSpikes = stats.count(s => s.spiky && s.min >= 0.5)
-    val wallClock = (System.nanoTime() - sectionStart) / 1e9
+    // the listener's quiet waits are the measurement's own cost, not the
+    // box's: the contention rule and the re-run budget must not read them
+    val wallClock = (System.nanoTime() - sectionStart) / 1e9 - listenerSec
+    System.err.println(s"[bench] listener waits ${f(listenerSec)} s, " +
+      "outside every pass time and the section wall")
     // the flag the adjudicator reads: a run that STARTED on a loaded box
     // (pre-warmup loadavg over 1/16 of the cores), spiked on multiple
     // slow queries, or — on a short-burst run, where the bench's own
@@ -186,15 +229,18 @@ object Bench {
   private[graft] def probeSection(
       sorted: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
       spark: SparkSession, sfDir: String): Map[String, Double] =
-    sorted.map { case (name, fn) => name -> timedPass(name, fn, spark, sfDir)._1 }.toMap
+    sorted.map { case (name, fn) => name -> timedPass(name, fn, spark, sfDir).seconds }.toMap
 
   // Locale.ROOT: default-locale format renders a comma decimal
   // separator on comma-locale JVMs, which breaks the JSON line
   private def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** One `query_stats` entry of BENCH_DETAIL.json. */
+  /** One `query_stats` entry of BENCH_DETAIL.json; an entry with a valid
+    * median also carries its median pass's job count and task CPU. */
   private[graft] def statJson(s: QueryStats): String =
     s"""${Verify.jsonString(s.name)}:{"min":${f(s.min)},"med":${f(s.med)},"max":${f(s.max)}""" +
+      s.record.map(r => s""","jobs":${r.jobs.size},"cpu_s":${f(r.totals.cpuNs / 1e9)}""")
+        .getOrElse("") +
       (if (s.spiky) ""","retried":true""" else "") +
       s.error.map(e => s""","error":${Verify.jsonString(e)}""").getOrElse("") + "}"
 
@@ -302,10 +348,7 @@ object Bench {
     // one ordering for both passes: the warmup set and the timed set must
     // never diverge
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    sorted.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      releaseQueryScratch(spark)
-    }
+    warmUp(sorted, spark, warmDir)
 
     val first = timedSection(sorted, spark, sfDir, cpus, Some(loadStart))
     // sustained contention defense: medians of a fully-contended section

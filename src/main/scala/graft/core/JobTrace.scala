@@ -11,7 +11,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 /** What the Spark jobs of one block of driver code cost: the jobs it ran
   * (call site, times, width), the stages they completed, and the task
   * metric totals. One listener serves every caller that attributes cost
-  * to a block — the QTime/ScaleSanity tools and the scaling specs.
+  * to a block — Bench's timed pass (and so QTime, which is Bench's
+  * section over a name filter), the ScaleSanity tool and the scaling
+  * specs.
   *
   * Listener events arrive on Spark's async listener bus, so [[measure]]
   * waits after `body` until every job it saw start has ended and the
@@ -35,8 +37,9 @@ object JobTrace {
   final case class Totals(cpuNs: Long, inputBytes: Long, inputRecords: Long,
                           shuffleWriteBytes: Long, shuffleWriteRecords: Long)
 
-  /** Jobs in start order, stages in completion order. */
-  final case class Record(jobs: Seq[Job], stages: Seq[Stage], totals: Totals)
+  /** `startMs` is when the listener attached, on the clock of the job
+    * times. Jobs in start order, stages in completion order. */
+  final case class Record(startMs: Long, jobs: Seq[Job], stages: Seq[Stage], totals: Totals)
 
   private val QuietMs = 200L
   private val DeadlineMs = 30000L
@@ -79,6 +82,7 @@ object JobTrace {
 
   /** Events arrive on one bus thread; `record` is read from another. */
   private[graft] final class Listener extends SparkListener {
+    private val startMs = System.currentTimeMillis()
     private val jobs = mutable.LinkedHashMap.empty[Int, Job]
     private val stages = mutable.ArrayBuffer.empty[Stage]
     private var cpuNs, inputBytes, inputRecords, shuffleBytes, shuffleRecords = 0L
@@ -144,7 +148,7 @@ object JobTrace {
     def allEnded: Boolean = synchronized(jobs.values.forall(_.endMs.isDefined))
 
     def record: Record = synchronized {
-      Record(jobs.values.toSeq, stages.toSeq,
+      Record(startMs, jobs.values.toSeq, stages.toSeq,
         Totals(cpuNs, inputBytes, inputRecords, shuffleBytes, shuffleRecords))
     }
   }

@@ -71,40 +71,6 @@ object Kmeans {
       .select(col("vec_id"), col("m.cent_id").as("cent_id"),
         col("m.d2").as("d2"), col("m.v").as("v"))
 
-  /** Stream-safe per-row assignment against a BOUNDED centroid table:
-    * the k centroids fold into the projection as one literal (a
-    * bounded-scalar collect — k rows by construction, the engine's
-    * broadcast-planes discipline), and each row picks its nearest cell
-    * with an in-row `array_min` over (d2, cent_id) structs. Map-only —
-    * no join, no aggregation state — so it runs unchanged under
-    * `readStream` (the streaming topic labeler) and is the batch scale
-    * path when even [[assign]]'s one-row-per-vector shuffle is unwanted.
-    * Bit-parity with [[assign]] (KmeansSpec-pinned): d2 is the same dot
-    * identity through the same left-to-right folds (`vector_dot` and
-    * `aggregate(zip_with(...))` both accumulate `s += x*y` in index
-    * order, and the additions associate identically), and array_min's
-    * lexicographic struct ordering IS the (d2, cent_id) tie-break.
-    * @return (vec_id, cent_id, d2) */
-  def assignLiteral(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents: Seq[(Int, Seq[Double], Double)] = centroids.collect().toSeq
-      .map { r =>
-        val cv = r.getSeq[Double](r.fieldIndex("cv"))
-        var cc = 0.0
-        cv.foreach(x => cc += x * x) // same fold order as vector_dot(cv, cv)
-        (r.getInt(r.fieldIndex("cent_id")), cv, cc)
-      }.sortBy(_._1)
-    vecs(vectors)
-      .withColumn("cents", typedlit(cents))
-      .withColumn("vv",
-        expr("aggregate(zip_with(v, v, (x, y) -> x * y), 0D, (a, p) -> a + p)"))
-      .withColumn("m", expr(
-        """array_min(transform(cents, c -> struct(
-             vv - 2 * aggregate(zip_with(v, c._2, (x, y) -> x * y),
-                                0D, (a, p) -> a + p) + c._3 AS d2,
-             c._1 AS cent_id)))"""))
-      .select(col("vec_id"), col("m.cent_id").as("cent_id"), col("m.d2").as("d2"))
-  }
-
   /** Train `k` centroids with `iters` Lloyd iterations.
     * @param observe training telemetry hook `(stage, rows) => Unit`
     *   (the Components discipline: counted off STAGED frames, zero cost

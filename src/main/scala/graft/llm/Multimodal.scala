@@ -304,18 +304,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Frame-sample stub: emit every k-th byte offset as a "frame" marker —
-    * the plumbing for video frame extraction (one row per sampled frame,
-    * ordinal + offset), minus the codec (video containers don't expose
-    * frames at fixed offsets the way PNG/JPEG expose dimensions). */
-  def sampleFrames(media: Dataset[MediaRow], everyNBytes: Int): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { r =>
-      (0 until r.payload.length by everyNBytes).zipWithIndex.map {
-        case (offset, ordinal) => (r.media_id, ordinal, offset.toLong)
-      }
-    }.toDF("media_id", "frame_ordinal", "byte_offset")
-  }
 }

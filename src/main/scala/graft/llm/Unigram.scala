@@ -154,6 +154,37 @@ object Unigram {
                ELSE acc END).ps"""))
       .select(col("word"), col("cnt"), col("pieces"))
 
+  /** The one EM loop every unigram trainer runs: the histogram is staged
+    * ONCE (the seed's substring pass and every iteration's DP re-scan the
+    * materialization, never the corpus), the [[inventory]] of the top
+    * `seedS` substrings seeds it, and each iteration is
+    *  - `eStep(staged, inv)` — the (piece, pcnt) counts under the current
+    *    inventory, collected bounded (≤ inventory-sized): the
+    *    iteration's ONE Spark job (the map-only DP + the piece-sized
+    *    aggregation);
+    *  - `mStep(inv, counts)` — driver-side, the count list the next
+    *    inventory keeps (default: all of it);
+    *  - the shared 6 dp renormalization ([[normalizedLocal]]).
+    * @return (piece, pcnt, logp) */
+  private def em(words: DataFrame, maxLen: Int, seedS: Int, iters: Int,
+                 eStep: (DataFrame, DataFrame) => DataFrame,
+                 mStep: (DataFrame, Seq[(String, Long)]) => Seq[(String, Long)] =
+                   (_, use) => use): DataFrame = {
+    val wh = Staging.stage(words)
+    var inv = inventory(wh, maxLen, seedS)
+    for (_ <- 1 to iters)
+      inv = normalizedLocal(words.sparkSession, mStep(inv, collectCounts(eStep(wh, inv))))
+    inv
+  }
+
+  /** Hard-EM's E-step: Viterbi usage counts — each word re-segmented
+    * ([[segments]]), its pieces weighted by the word count.
+    * @return (piece, pcnt) */
+  private def viterbiCounts(words: DataFrame, inv: DataFrame, maxLen: Int): DataFrame =
+    segments(words, inv, maxLen)
+      .select(col("cnt"), explode(col("pieces")).as("piece"))
+      .groupBy("piece").agg(sum(col("cnt")).as("pcnt"))
+
   /** Hard-EM inventory refinement (Viterbi-EM, the deterministic form
     * of SentencePiece's trainer): each iteration re-segments the word
     * histogram under the current inventory (the E-step IS [[segments]]),
@@ -164,58 +195,12 @@ object Unigram {
     * iteration i survives into iteration i+1, so each word's previous
     * segmentation stays feasible and coverage never breaks. Per
     * iteration the corpus is untouched — one map-only DP over the
-    * vocabulary plus a piece-sized count aggregation, the [[Bpe]] cost
-    * model.
+    * vocabulary plus a piece-sized count aggregation ([[em]]), the
+    * [[Bpe]] cost model.
     * @return (piece, pcnt, logp) — the refined inventory */
-  def emTrain(words: DataFrame, maxLen: Int, topS: Int, iters: Int): DataFrame = {
-    // the histogram is staged ONCE: the seed's substring pass and every
-    // iteration's DP re-scan the materialization, never the corpus
-    val wh = Staging.stage(words)
-    var inv = inventory(wh, maxLen, topS)
-    for (_ <- 1 to iters) {
-      // ONE job per iteration: the map-only DP + usage aggregation,
-      // collected as the (bounded, ≤ inventory-sized) count list; the
-      // M-step renormalization happens driver-side through the shared
-      // normalizedLocal, replacing two staging jobs + a broadcast build
-      val use = collectCounts(
-        segments(wh, inv, maxLen)
-          .select(col("cnt"), explode(col("pieces")).as("piece"))
-          .groupBy("piece").agg(sum(col("cnt")).as("pcnt")))
-      inv = normalizedLocal(words.sparkSession, use)
-    }
-    inv
-  }
+  def emTrain(words: DataFrame, maxLen: Int, topS: Int, iters: Int): DataFrame =
+    em(words, maxLen, topS, iters, viterbiCounts(_, _, maxLen))
 
-  /** The FULL SentencePiece outer loop (Kudo 2018 §3.2) in its
-    * deterministic hard-EM form: alternate EM with LOSS-RANKED pruning
-    * of the piece inventory down toward a target vocabulary size.
-    *
-    * Per outer iteration:
-    *  1. E-step — re-segment the word histogram ([[segments]], q115's
-    *     DP);
-    *  2. M-step — weighted usage counts;
-    *  3. prune — rank MULTI-char pieces by attributed log-likelihood
-    *     mass, `loss = pcnt × logp` (under Viterbi counts, the
-    *     likelihood the corpus loses if the piece's occurrences must
-    *     re-segment — the paper's lattice-marginal loss collapses to
-    *     this attributed mass in the hard-EM limit; most-negative =
-    *     most valuable, ties lexicographic on piece) and KEEP
-    *     `max(targetS − |alphabet|, ceil(n_multi × keepFrac))` of them
-    *     — the bottom slice re-segments via surviving pieces;
-    *  4. renormalize (the shared 6 dp rounding).
-    *
-    * Single-character pieces are NEVER pruned: they are the coverage
-    * guarantee that every word stays segmentable after any multi-char
-    * piece disappears. An alphabet piece Viterbi stopped using keeps a
-    * floor count of 1 (a Laplace floor confined to the coverage
-    * alphabet — without it, ln(0) would eject the piece and an
-    * unlucky prune could strand a character with no path at all).
-    *
-    * Scale shape is [[emTrain]]'s: per iteration one map-only DP over
-    * the staged vocabulary + piece-sized aggregations; the loss rank is
-    * a TakeOrdered over the (bounded) multi-piece set, never a global
-    * sort of anything corpus-sized.
-    * @return (piece, pcnt, logp) — the pruned, refined inventory */
   /** Quantized log-sum-exp forward pass as ONE column expression: the
     * array `a` with `a[i+1]` = α(i) = log Σ over segmentations of
     * `word[1..i]` of their probability. SOFT-EM's lattice marginal — the
@@ -394,25 +379,42 @@ object Unigram {
     * histogram.
     * @return (piece, pcnt, logp) — pcnt in 1e-6 expected-count units */
   def softEmTrain(words: DataFrame, maxLen: Int, topS: Int,
-                  iters: Int): DataFrame = {
-    val wh = Staging.stage(words)
-    var inv = inventory(wh, maxLen, topS)
-    for (_ <- 1 to iters) {
-      // ONE job per iteration (the forward/backward DPs + the exact
-      // fixed-point expectation aggregate), collected bounded — see
-      // emTrain
-      val use = collectCounts(expectedCounts(wh, inv, maxLen)
-        .select(col("piece"), col("pcm").as("pcnt")))
-      inv = normalizedLocal(words.sparkSession, use)
-    }
-    inv
-  }
+                  iters: Int): DataFrame =
+    em(words, maxLen, topS, iters, (wh, inv) =>
+      expectedCounts(wh, inv, maxLen).select(col("piece"), col("pcm").as("pcnt")))
 
+  /** The FULL SentencePiece outer loop (Kudo 2018 §3.2) in its
+    * deterministic hard-EM form: alternate EM with LOSS-RANKED pruning
+    * of the piece inventory down toward a target vocabulary size.
+    *
+    * Per outer iteration:
+    *  1. E-step — re-segment the word histogram ([[segments]], q115's
+    *     DP);
+    *  2. M-step — weighted usage counts;
+    *  3. prune — rank MULTI-char pieces by attributed log-likelihood
+    *     mass, `loss = pcnt × logp` (under Viterbi counts, the
+    *     likelihood the corpus loses if the piece's occurrences must
+    *     re-segment — the paper's lattice-marginal loss collapses to
+    *     this attributed mass in the hard-EM limit; most-negative =
+    *     most valuable, ties lexicographic on piece) and KEEP
+    *     `max(targetS − |alphabet|, ceil(n_multi × keepFrac))` of them
+    *     — the bottom slice re-segments via surviving pieces;
+    *  4. renormalize (the shared 6 dp rounding).
+    *
+    * Single-character pieces are NEVER pruned: they are the coverage
+    * guarantee that every word stays segmentable after any multi-char
+    * piece disappears. An alphabet piece Viterbi stopped using keeps a
+    * floor count of 1 (a Laplace floor confined to the coverage
+    * alphabet — without it, ln(0) would eject the piece and an
+    * unlucky prune could strand a character with no path at all).
+    *
+    * Scale shape is [[emTrain]]'s: per iteration one map-only DP over
+    * the staged vocabulary + piece-sized aggregations; the loss rank is
+    * a TakeOrdered over the (bounded) multi-piece set, never a global
+    * sort of anything corpus-sized.
+    * @return (piece, pcnt, logp) — the pruned, refined inventory */
   def emTrainPruned(words: DataFrame, maxLen: Int, seedS: Int, targetS: Int,
                     iters: Int, keepFrac: Double = 0.8): DataFrame = {
-    val spark = words.sparkSession
-    val wh = Staging.stage(words)
-    var inv = inventory(wh, maxLen, seedS)
     // The whole M-step below runs on the DRIVER over bounded lists (the
     // usage counts are ≤ inventory-sized): per iteration the only Spark
     // job is the DP + usage aggregation the collect materializes, where
@@ -439,24 +441,18 @@ object Unigram {
             b._1.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
       }
-    // the inventory frame is a local relation — its collect is jobless
-    def invRows(df: DataFrame): Seq[(String, Double)] =
-      df.collect().toSeq.map { r =>
-        (r.getString(r.fieldIndex("piece")),
-          r.getDouble(r.fieldIndex("logp")))
+    em(words, maxLen, seedS, iters, viterbiCounts(_, _, maxLen), (inv, use) => {
+      // the inventory frame is a local relation — its collect is jobless
+      val invRows: Seq[(String, Double)] = inv.collect().toSeq.map { r =>
+        (r.getString(r.fieldIndex("piece")), r.getDouble(r.fieldIndex("logp")))
       }
-    // the coverage alphabet: every single-char piece of the SEED
-    // inventory (= every character of the corpus), fixed across
-    // iterations
-    val alphabet: Seq[String] =
-      invRows(inv).collect { case (p, _) if nChars(p) == 1 => p }
-    val targetMulti = math.max(0L, targetS.toLong - alphabet.size)
-    for (_ <- 1 to iters) {
-      val invMap: Map[String, Double] = invRows(inv).toMap
-      val use = collectCounts(
-        segments(wh, inv, maxLen)
-          .select(col("cnt"), explode(col("pieces")).as("piece"))
-          .groupBy("piece").agg(sum(col("cnt")).as("pcnt")))
+      val invMap = invRows.toMap
+      // the coverage alphabet: the single-char pieces of the SEED
+      // inventory (= every character of the corpus). Each iteration keeps
+      // exactly those, in the same order, so the current inventory's
+      // single-char pieces are the seed's
+      val alphabet: Seq[String] = invRows.collect { case (p, _) if nChars(p) == 1 => p }
+      val targetMulti = math.max(0L, targetS.toLong - alphabet.size)
       val useMap = use.toMap
       // coverage floor: alphabet pieces survive at max(usage, 1)
       val singles: Seq[(String, Long)] =
@@ -468,10 +464,7 @@ object Unigram {
           invMap.get(p).map(lp => (p, c, c.toDouble * lp))
         }
       val k = math.max(targetMulti, math.ceil(multi.size * keepFrac).toLong)
-      val kept: Seq[(String, Long)] =
-        multi.sorted(lossOrd).take(k.toInt).map(t => (t._1, t._2))
-      inv = normalizedLocal(spark, kept ++ singles)
-    }
-    inv
+      multi.sorted(lossOrd).take(k.toInt).map(t => (t._1, t._2)) ++ singles
+    })
   }
 }

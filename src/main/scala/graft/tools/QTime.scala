@@ -1,67 +1,58 @@
 package graft.tools
 
 import graft.{Bench, SparkEntry}
-import graft.core.{GraftSession, JobTrace}
+import graft.core.GraftSession
 
-/** One-off per-query timing harness for local iteration: run the named
-  * queries (all of them when none are named) N passes each against an
-  * sf dir, after one untimed warmup pass per query at sf0.001, and
-  * print min/med times. The hygiene matches Bench (per-pass scratch
-  * release) so numbers are comparable with BENCH_QUIET medians without
-  * paying a full 3-pass 144-query section while iterating on one
-  * operator. Not part of Verify/Bench; run by hand:
+/** Per-query timing for local iteration. It is Bench's section: Bench's
+  * warm-up and timed section, run over the queries whose names start
+  * with one of the given prefixes (all of them when none are given), so
+  * its numbers are Bench's — the same passes, spike retry, scratch
+  * release, failure `error` and per-pass job record — without paying a
+  * full section while iterating on one operator. Prints one
+  * `[qtime] name min= med= max= cpu=` line per query (`cpu=` is the
+  * median pass's task CPU seconds, -1 when the median failed). With
+  * `-trace`, each line follows the median pass's jobs (`[job] @start
+  * wall site frame`, `@` from the pass start) and the stages that took
+  * at least 0.2 s. Not part of Verify/Bench; run by hand:
   *
-  *   runMain graft.tools.QTime /root/testdata/sf0.1 q131_pagerank q144_incremental_pagerank
+  *   runMain graft.tools.QTime /root/testdata/sf0.01 q144 q129 -trace
   */
 object QTime {
+
+  /** The queries of `all` whose names start with one of `prefixes`, in
+    * name order; every query when `prefixes` is empty. */
+  def pick[A](all: Map[String, A], prefixes: Seq[String]): Seq[(String, A)] =
+    all.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
 
   def main(args: Array[String]): Unit = {
     val doTrace = args.contains("-trace")
     val sfDir = args.filterNot(_ == "-trace").headOption
       .getOrElse("/root/testdata/sf0.1")
     val names = args.filterNot(_ == "-trace").drop(1).toSeq
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val picked = if (names.isEmpty) all
-      else all.filter { case (n, _) => names.exists(n.startsWith) }
-    picked.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-      Bench.releaseQueryScratch(spark)
-    }
-    picked.foreach { case (name, fn) =>
-      val passes = (1 to 3).map { pass =>
-        val traced = doTrace && pass == 3
-        if (traced) println(s"[job] ==== $name pass 3 ====")
-        val passStartMs = System.currentTimeMillis()
-        val (t, rec) = JobTrace.measure(spark) {
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            System.err.println(s"[qtime] $name failed: ${e.getMessage}"); -1.0 }
-        }
-        Bench.releaseQueryScratch(spark)
-        // -trace: per-job wall times on the LAST timed pass (call site +
-        // elapsed, @ from the pass start), for attributing a slow query to
-        // its jobs; then the stages that cost >= 0.2 s, for the jobs the
-        // [job] lines can't explain
-        if (traced) {
-          for (j <- rec.jobs; end <- j.endMs)
-            println(f"[job] @${(j.startMs - passStartMs) / 1e3}%7.2f " +
-              f"${(end - j.startMs) / 1e3}%6.2f s  ${j.site}  ${j.frame}")
-          for (st <- rec.stages if st.wallMs >= 200)
-            println(f"[stage]   ${st.wallMs / 1e3}%6.2f s  ${st.tasks}%4d tasks  ${st.name}")
-        }
-        // CPU attribution: co-tenant load inflates wall-clock but barely
-        // touches the task CPU sum, so cpu= is the comparison-stable signal
-        // on a shared box (wall minus cpu/cores ≈ driver gaps + contention)
-        (t, rec.totals.cpuNs / 1e9)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
+    val picked = pick(SparkEntry.queries, names)
+    Bench.warmUp(picked, spark, "/root/testdata/sf0.001")
+    val section = Bench.timedSection(picked, spark, sfDir, cpus, None)
+    section.stats.foreach { s =>
+      // -trace: the median pass's jobs (call site + elapsed), for
+      // attributing a slow query to its jobs; then the stages that cost
+      // >= 0.2 s, for the jobs the [job] lines can't explain
+      if (doTrace) s.record.foreach { rec =>
+        println(s"[job] ==== ${s.name} median pass ====")
+        for (j <- rec.jobs; end <- j.endMs)
+          println(f"[job] @${(j.startMs - rec.startMs) / 1e3}%7.2f " +
+            f"${(end - j.startMs) / 1e3}%6.2f s  ${j.site}  ${j.frame}")
+        for (st <- rec.stages if st.wallMs >= 200)
+          println(f"[stage]   ${st.wallMs / 1e3}%6.2f s  ${st.tasks}%4d tasks  ${st.name}")
       }
-      val ts = passes.map(_._1).sorted
-      val cpu = passes.map(_._2).sorted.apply(1)
-      println(f"[qtime] $name%-32s min=${ts.head}%.2f med=${ts(1)}%.2f " +
-        f"max=${ts(2)}%.2f cpu=$cpu%.2f")
+      // cpu=: co-tenant load inflates wall-clock but barely touches the
+      // task CPU sum, so it is the comparison-stable signal on a shared
+      // box (wall minus cpu/cores ≈ driver gaps + contention)
+      val cpu = s.record.fold(-1.0)(_.totals.cpuNs / 1e9)
+      println(f"[qtime] ${s.name}%-32s min=${s.min}%.2f med=${s.med}%.2f " +
+        f"max=${s.max}%.2f cpu=$cpu%.2f")
     }
     spark.stop()
   }

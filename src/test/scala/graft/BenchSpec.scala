@@ -109,4 +109,38 @@ class BenchSpec extends SparkSpec {
         "\"error\":\"java.lang.IllegalStateException: bad \\\"plan\\\"\\tat\\\\root\"}")
     assert(!Bench.statJson(byName("q_ok")).contains("error"))
   }
+
+  test("a timed entry carries its median pass's jobs and task CPU") {
+    val range: (SparkSession, String) => DataFrame = (s, _) => s.range(0, 1000, 1, 4).toDF("n")
+    val sec = Bench.timedSection(Seq("q_range" -> range), spark, "unused",
+      cpus = 1, loadPreSampled = None)
+    val st = sec.stats.head
+    val rec = st.record.get
+    assert(rec.jobs.size >= 1)
+    assert(rec.totals.cpuNs >= 0)
+    val json = Bench.statJson(st)
+    assert(json.contains(s""""jobs":${rec.jobs.size},"""), json)
+    assert(""""cpu_s":[0-9]+\.[0-9]{3}""".r.findFirstIn(json).nonEmpty, json)
+  }
+
+  test("a pass's time leaves out the listener's quiet wait") {
+    // JobTrace.measure waits at least 200 ms for a quiet bus after each
+    // pass; a trivial query counted inside that wait could not time under it
+    val tiny: (SparkSession, String) => DataFrame = (s, _) => s.range(0, 10, 1, 1).toDF("n")
+    Bench.warmUp(Seq("q_tiny" -> tiny), spark, "unused")
+    val st = Bench.timedSection(Seq("q_tiny" -> tiny), spark, "unused",
+      cpus = 1, loadPreSampled = None).stats.head
+    assert(st.med >= 0 && st.med < 0.2, s"median ${st.med} s")
+  }
+
+  test("QTime picks queries by name prefix") {
+    val all = SparkEntry.queries
+    def picked(prefixes: String*) = tools.QTime.pick(all, prefixes).map(_._1)
+    val q14 = picked("q14")
+    assert(q14.contains("q14_upsert_orders"))
+    assert(q14.filterNot(_ == "q14_upsert_orders").map(_.take(4)) === (140 to 149).map(n => s"q$n"))
+    assert(picked("q14_") === Seq("q14_upsert_orders"))
+    assert(picked() === all.keys.toSeq.sorted)
+    assert(picked().size === 149)
+  }
 }

@@ -129,36 +129,4 @@ class KmeansSpec extends SparkSpec {
     assert(plan.contains("partial_avg"),
       s"per-(cent, dim) means must combine before the shuffle:\n$plan")
   }
-
-  test("literal assignment is bit-parity with the aggregate assignment") {
-    val cb = Kmeans.train(df(fixture), k, iters = 2)
-    def key(rows: Array[org.apache.spark.sql.Row]) = rows
-      .map(r => (r.getAs[Long]("vec_id"),
-        (r.getAs[Int]("cent_id"), r.getAs[Double]("d2")))).toMap
-    val viaAgg = key(Kmeans.assign(df(fixture), cb)
-      .select("vec_id", "cent_id", "d2").collect())
-    val viaLit = key(Kmeans.assignLiteral(df(fixture), cb).collect())
-    assert(viaLit === viaAgg) // d2 compared EXACTLY: same folds, same bits
-  }
-
-  test("literal assignment runs unchanged on a stream (map-only, no state)") {
-    val dir = java.nio.file.Files.createTempDirectory("kmeans-stream-in").toString
-    df(fixture).select("vec_id", "embedding").write.mode("overwrite").parquet(dir)
-    val cb = Kmeans.train(df(fixture), k, iters = 2)
-    val schema = spark.read.parquet(dir).schema
-    val q = Kmeans.assignLiteral(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir), cb)
-      .writeStream.format("memory").queryName("kmeans_topics_stream")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("kmeans-ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("kmeans_topics_stream").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    val batch = Kmeans.assignLiteral(df(fixture), cb).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
-    assert(streamed === batch)
-  }
 }

@@ -239,16 +239,4 @@ class MultimodalSpec extends SparkSpec {
     assert(plan.contains("ReadSchema") && !plan.contains("payload"),
       s"payload must be pruned from the scan:\n$plan")
   }
-
-  test("frame sampling emits ordinal+offset rows per payload") {
-    val docs = Tables.load(spark, sf, "documents").limit(5)
-    val frames = Multimodal.sampleFrames(Multimodal.asMediaTable(docs), everyNBytes = 64)
-    val byDoc = frames.collect().groupBy(_.getLong(0))
-    assert(byDoc.nonEmpty)
-    byDoc.values.foreach { rows =>
-      val ords = rows.map(_.getInt(1)).sorted
-      assert(ords.toSeq === (0 until rows.length))
-      assert(rows.map(_.getLong(2)).forall(_ % 64 === 0))
-    }
-  }
 }
